@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Registry of persisted frames shared across the query registry (e.g. the
   * dedup shingle scan and MinHash pair graph, consumed by several queries
@@ -8,17 +8,15 @@ import org.apache.spark.sql.DataFrame
   * try/finally scoping can't bound a cache's life inside the query
   * function — instead every cross-query `persist()` registers here and a
   * host with a long-lived session calls [[releaseAll]] when the batch of
-  * queries is done (the driver mains do). Registered release hooks let
-  * modules also drop their memo tables so a later call rebuilds cleanly.
+  * queries is done (the Verify/Bench mains do).
   *
   * Thread contract: map/buffer access runs under the object monitor, but
   * a memoized BUILD runs outside it — a build can span multiple Spark
   * jobs (the Components iterative loop, KMeans training), and holding the
   * global monitor for its whole duration would block every concurrent
-  * register/memoized/releaseAll caller for seconds. A build that raced
-  * another builder of the same key defers to the winner already in the
-  * map (the loser's frame is unpersisted on the spot). A build that
-  * raced a [[releaseAll]] re-registers its frame at the post-release
+  * register/memoized/releaseAll caller for seconds. Builders of the same
+  * key serialize on a per-key mutex, so only one of them builds. A build
+  * that raced a [[releaseAll]] re-registers its frame at the post-release
   * state: the frame was built FRESH and never entered the released map,
   * so inserting it resurrects nothing — while handing it back uncached
   * (the previous design) silently re-ran the whole build once per
@@ -29,10 +27,9 @@ import org.apache.spark.sql.DataFrame
   * shingles) nest fine — no lock is held across the recursion.
   */
 object Caches {
+  private type Key = (SparkSession, String, String)
   private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-  private val hooks  = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-  private val memo = scala.collection.mutable.HashMap
-    .empty[(org.apache.spark.sql.SparkSession, String, String), DataFrame]
+  private val memo = scala.collection.mutable.HashMap.empty[Key, DataFrame]
 
   /** Bench instrumentation (r7 verdict ask 4): when set, the observer
     * receives each freshly built memo's key plus the build's EXCLUSIVE
@@ -48,23 +45,15 @@ object Caches {
     */
   @volatile private[graft] var buildObserver: Option[(String, Double) => Unit] = None
 
-  /** Hypervisor-steal probe for build windows (r12 verdict task 3): when
-    * a host sets this (Bench does, to the /proc/stat steal reader), each
-    * memo build ALSO reports the steal ticks that fell inside its own
-    * wall window via [[buildStealObserver]], so a contended build row
-    * can be recognized and re-timed instead of publishing a poisoned
-    * number. None (the default) costs nothing.
-    */
-  @volatile private[graft] var stealProbe: Option[() => Long] = None
-
-  /** Companion to [[buildObserver]]:
-    * (key, stealTicksInBuildWindow, fullWindowWallSec). The steal delta
-    * spans the build's WHOLE closure — nested child builds included —
-    * so the matching wall time here is the full window too, NOT the
-    * exclusive seconds the time observer reports (flagging exclusive
-    * time against full-window steal over-flagged parents of long build
-    * chains). Fired just before the time observer for the same build;
-    * only when [[stealProbe]] is set.
+  /** Companion to [[buildObserver]] (r12 verdict task 3):
+    * (key, stealTicksInBuildWindow, fullWindowWallSec), so a contended
+    * build row can be recognized and re-timed instead of publishing a
+    * poisoned number. The steal delta spans the build's WHOLE closure —
+    * nested child builds included — so the matching wall time here is the
+    * full window too, NOT the exclusive seconds the time observer reports
+    * (flagging exclusive time against full-window steal over-flagged
+    * parents of long build chains). Fired just before the time observer
+    * for the same build; steal is read only while this is set.
     */
   @volatile private[graft] var buildStealObserver: Option[(String, Long, Double) => Unit] = None
 
@@ -73,9 +62,7 @@ object Caches {
     * to report exclusive time (nested ledger rows must not double-count
     * into their parent, or the bench would over-subtract from consumers).
     */
-  private val childBuildSec = new ThreadLocal[java.lang.Double] {
-    override def initialValue: java.lang.Double = 0.0
-  }
+  private val childBuildSec = ThreadLocal.withInitial[Double](() => 0.0)
 
   /** Plan-audit escape hatch: truncation makes a memoized frame's plan an
     * opaque LogicalRDD leaf, which would also blind the plan-lint specs to
@@ -86,17 +73,7 @@ object Caches {
   @volatile private[graft] var truncateLineage: Boolean = true
 
   def register(df: DataFrame): DataFrame = synchronized { frames += df; df }
-  def onRelease(hook: () => Unit): Unit = synchronized { hooks += hook }
 
-  /** Cross-query memo: build-and-persist a frame once per
-    * (session, dir, key) so every registry query consuming it in one
-    * Verify/Bench run shares the same cached copy. Keyed on the session
-    * OBJECT (reference equality) — NOT identityHashCode, which a new
-    * session can reuse after the old one is GC'd, resurrecting frames
-    * bound to a dead session. The strong key reference adds no lifetime:
-    * the memoized DataFrames themselves pin their session until
-    * [[releaseAll]] clears both.
-    */
   /** Mutual exclusion between memo builds and the plan-audit bracket
     * (PlanAuditSpec.withTransparentMemos): the bracket flips the
     * process-global [[truncateLineage]] flag and clears the memo map,
@@ -117,31 +94,31 @@ object Caches {
     try body finally auditLock.writeLock().unlock()
   }
 
-  def memoized(spark: org.apache.spark.sql.SparkSession, dir: String, key: String)
-              (build: => DataFrame): DataFrame = {
-    auditLock.readLock().lock()
-    try memoizedLocked(spark, dir, key)(build)
-    finally auditLock.readLock().unlock()
-  }
-
   /** Per-key build mutex (r13 verdict task 2): under a CONCURRENT host
     * (Bench's parallel prebuild phase), two threads requesting the same
-    * cold memo must not both run the build — the insert-race fallback
-    * below keeps correctness but duplicates whole Spark jobs and books
-    * the loser's seconds on a `discarded:` ledger row. The second
-    * requester instead waits on the key's monitor and reads the
-    * winner's entry. Monitors are reentrant (a build recursing into its
+    * cold memo must not both run the build (it would duplicate whole
+    * Spark jobs). The second requester waits on the key's monitor and
+    * reads the winner's entry; only the lock holder ever inserts the
+    * key. Monitors are reentrant (a build recursing into its
     * own key re-enters), the memo dependency graph is a DAG (recursive
     * child builds take CHILD keys only — no lock cycles), and the map
     * is bounded by the number of distinct memo keys.
     */
-  private val keyLocks = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, String), Object]()
+  private val keyLocks = new java.util.concurrent.ConcurrentHashMap[Key, Object]()
 
-  private def memoizedLocked(spark: org.apache.spark.sql.SparkSession, dir: String, key: String)
-              (build: => DataFrame): DataFrame = {
+  /** Cross-query memo: build-and-persist a frame once per
+    * (session, dir, key) so every registry query consuming it in one
+    * Verify/Bench run shares the same cached copy. Keyed on the session
+    * OBJECT (reference equality) — NOT identityHashCode, which a new
+    * session can reuse after the old one is GC'd, resurrecting frames
+    * bound to a dead session. The strong key reference adds no lifetime:
+    * the memoized DataFrames themselves pin their session until
+    * [[releaseAll]] clears both.
+    */
+  def memoized(spark: SparkSession, dir: String, key: String)(build: => DataFrame): DataFrame = {
     val k = (spark, dir, key)
-    synchronized(memo.get(k)) match {
+    auditLock.readLock().lock()
+    try synchronized(memo.get(k)) match {
       case Some(df) => df
       case None =>
         val keyLock = keyLocks.computeIfAbsent(k, _ => new Object)
@@ -159,116 +136,88 @@ object Caches {
             case None => buildAndInsert(k, key)(build)
           }
         }
-    }
+    } finally auditLock.readLock().unlock()
   }
 
-  private def buildAndInsert(
-      k: (org.apache.spark.sql.SparkSession, String, String), key: String)
-      (build: => DataFrame): DataFrame = {
-        // Truncate the build's lineage to a LogicalRDD leaf BEFORE
-        // persisting. A memoized frame is an index by contract — its
-        // consumers reach it only through this accessor, never by
-        // re-deriving the plan — but Spark's CacheManager canonicalizes
-        // EVERY cached plan and compares it against EVERY new query
-        // plan. With a registry of 120+ queries and ~30 memo entries
-        // whose build plans are deep (inflated-corpus shingle scans,
-        // trained-quantizer chains), that per-query scan grew to
-        // SECONDS by mid-run: pipeline_curate measured 8.2 s inside the
-        // full bench vs 1.0 s isolated on identical code, pr_components
-        // 3× as soon as three fat memos existed. A leaf plan makes
-        // canonicalization O(#entries) with tiny constants. The trades
-        // are one internal-row copy pass at materialization (the
-        // localCheckpoint technique — NOT the external-Row round-trip,
-        // which measured ~2× on array-heavy frames) and losing
-        // structural cache-substitution for independently re-derived
-        // plans — which no consumer relies on: every consumer reaches a
-        // memo through this accessor. Cached-batch stat pruning is
-        // unaffected (the persist above still builds an
-        // InMemoryRelation; only its CHILD became a leaf).
-        val parentChildSec = childBuildSec.get()
-        childBuildSec.set(0.0)
-        val t0 = System.nanoTime()
-        val steal0 = stealProbe.map(_.apply())
-        var totalSec = 0.0
-        def reportSteal(): Unit =
-          for (p <- stealProbe; obs <- buildStealObserver)
-            obs(key, p() - steal0.getOrElse(0L), (System.nanoTime() - t0) / 1e9)
-        try {
-          val built = build // outside the lock — build may recurse here
-          val df =
-            (if (truncateLineage) org.apache.spark.sql.GraftExpr.truncated(built)
-             else built).persist()
-          val (result, inserted) = synchronized {
-            memo.get(k) match {
-              // another builder of the same key won (possibly after an
-              // interleaved releaseAll) — defer to the cached winner
-              // rather than handing back an uncached duplicate
-              case Some(winner) => df.unpersist(); (winner, false)
-              // no winner: insert — even if a releaseAll ran mid-build.
-              // This frame never entered the released map and its persist
-              // was never registered, so inserting resurrects nothing;
-              // see the object scaladoc for why returning it uncached
-              // instead amplifies recomputes for multi-reference callers
-              case None => frames += df; memo.update(k, df); (df, true)
-            }
+  private def buildAndInsert(k: Key, key: String)(build: => DataFrame): DataFrame = {
+    // Truncate the build's lineage to a LogicalRDD leaf BEFORE
+    // persisting. A memoized frame is an index by contract — its
+    // consumers reach it only through this accessor, never by
+    // re-deriving the plan — but Spark's CacheManager canonicalizes
+    // EVERY cached plan and compares it against EVERY new query
+    // plan. With a registry of 120+ queries and ~30 memo entries
+    // whose build plans are deep (inflated-corpus shingle scans,
+    // trained-quantizer chains), that per-query scan grew to
+    // SECONDS by mid-run: pipeline_curate measured 8.2 s inside the
+    // full bench vs 1.0 s isolated on identical code, pr_components
+    // 3× as soon as three fat memos existed. A leaf plan makes
+    // canonicalization O(#entries) with tiny constants. The trades
+    // are one internal-row copy pass at materialization (the
+    // localCheckpoint technique — NOT the external-Row round-trip,
+    // which measured ~2× on array-heavy frames) and losing
+    // structural cache-substitution for independently re-derived
+    // plans — which no consumer relies on: every consumer reaches a
+    // memo through this accessor. Cached-batch stat pruning is
+    // unaffected (the persist above still builds an
+    // InMemoryRelation; only its CHILD became a leaf).
+    val parentChildSec = childBuildSec.get()
+    childBuildSec.set(0.0)
+    val t0 = System.nanoTime()
+    val steal0 = buildStealObserver.map(_ => Sensors.stealJiffies())
+    var totalSec = 0.0
+    try {
+      val built = build // outside the lock — build may recurse here
+      val df =
+        (if (truncateLineage) org.apache.spark.sql.GraftExpr.truncated(built)
+         else built).persist()
+      // insert even if a releaseAll ran mid-build: this frame never
+      // entered the released map and its persist was never
+      // registered, so inserting resurrects nothing; see the object
+      // scaladoc for why returning it uncached instead amplifies
+      // recomputes for multi-reference callers
+      synchronized { frames += df; memo.update(k, df) }
+      // outside the monitor: materialization is an action spanning
+      // Spark jobs and must never run under the lock.
+      //
+      // MEMOIZED-LEAF STATISTICS DISCIPLINE (r11 verdict ask 2, the
+      // pr_hits r9 / pr_triangles join-flap bug class): a lazy memo
+      // hands its FIRST consumer an unmaterialized InMemoryRelation,
+      // which reports the build plan's ESTIMATE stats (a LogicalRDD
+      // leaf carrying optimizedPlan.stats — for builds containing
+      // joins, a product estimate off by orders of magnitude), while
+      // every LATER consumer plans against the materialized cache's
+      // MEASURED batch sizes. Same query, two different physical
+      // plans depending on consumption order. Counting here — once,
+      // at build, through the just-persisted plan the first consumer
+      // would have materialized anyway — means every consumer
+      // including the first plans against measured stats, and two
+      // consecutive invocations of a memo-fed query plan
+      // identically (asserted by PlanAuditSpec).
+      df.count() // materialize the persisted plan into the cache
+      // Serve consumers a frame rooted at the cache entry's
+      // InMemoryRelation (r15, see GraftExpr.servedFromCache):
+      // plan-substitution misses the DEDUPLICATED references of a
+      // self-joining consumer when the truncated leaf advertises a
+      // hash placement (its partitioning field keeps the old
+      // exprIds), so those references re-scanned the build RDD per
+      // rep instead of the cache. Skipped in the audit bracket —
+      // transparent mode exists to SEE the build plan.
+      val out =
+        if (!truncateLineage) df
+        else {
+          val served = org.apache.spark.sql.GraftExpr.servedFromCache(df)
+          if (served ne df) synchronized {
+            if (memo.get(k).exists(_ eq df)) memo.update(k, served)
           }
-          // outside the monitor: materialization is an action spanning
-          // Spark jobs and must never run under the lock.
-          //
-          // MEMOIZED-LEAF STATISTICS DISCIPLINE (r11 verdict ask 2, the
-          // pr_hits r9 / pr_triangles join-flap bug class): a lazy memo
-          // hands its FIRST consumer an unmaterialized InMemoryRelation,
-          // which reports the build plan's ESTIMATE stats (a LogicalRDD
-          // leaf carrying optimizedPlan.stats — for builds containing
-          // joins, a product estimate off by orders of magnitude), while
-          // every LATER consumer plans against the materialized cache's
-          // MEASURED batch sizes. Same query, two different physical
-          // plans depending on consumption order. Counting here — once,
-          // at build, through the just-persisted plan the first consumer
-          // would have materialized anyway — means every consumer
-          // including the first plans against measured stats, and two
-          // consecutive invocations of a memo-fed query plan
-          // identically (asserted by PlanAuditSpec).
-          var out = result
-          if (inserted) {
-            result.count() // materialize the persisted plan into the cache
-            // Serve consumers a frame rooted at the cache entry's
-            // InMemoryRelation (r15, see GraftExpr.servedFromCache):
-            // plan-substitution misses the DEDUPLICATED references of a
-            // self-joining consumer when the truncated leaf advertises a
-            // hash placement (its partitioning field keeps the old
-            // exprIds), so those references re-scanned the build RDD per
-            // rep instead of the cache. Skipped in the audit bracket —
-            // transparent mode exists to SEE the build plan.
-            if (truncateLineage) {
-              val served = org.apache.spark.sql.GraftExpr.servedFromCache(result)
-              if (served ne result) synchronized {
-                if (memo.get(k).exists(_ eq result)) memo.update(k, served)
-              }
-              out = served
-            }
-            buildObserver.foreach { obs =>
-              totalSec = (System.nanoTime() - t0) / 1e9
-              reportSteal()
-              obs(key, totalSec - childBuildSec.get())
-            }
-          } else buildObserver.foreach { obs =>
-            // a build that LOST the insert race still spent real wall
-            // time (its closure ran to completion before deferring), and
-            // that time is subtracted from the consuming query's elapsed
-            // via childBuildSec below — report it under a distinguishing
-            // key so the ledger stays closed instead of the loser's
-            // seconds silently vanishing from both sides (harmless while
-            // Bench runs serially; load-bearing under a parallel host)
-            totalSec = (System.nanoTime() - t0) / 1e9
-            obs(s"discarded:$key", totalSec - childBuildSec.get())
-          }
-          if (totalSec == 0.0) totalSec = (System.nanoTime() - t0) / 1e9
-          out
-        } finally {
-          // the parent (if any) sees this build's FULL time as child time
-          childBuildSec.set(parentChildSec + totalSec)
+          served
         }
+      totalSec = (System.nanoTime() - t0) / 1e9
+      for (obs <- buildStealObserver; s0 <- steal0)
+        obs(key, Sensors.stealJiffies() - s0, totalSec)
+      buildObserver.foreach(_(key, totalSec - childBuildSec.get()))
+      out
+    } finally // the parent (if any) sees this build's FULL time as child time
+      childBuildSec.set(parentChildSec + totalSec)
   }
 
   /** Write-once-per-(session, dir) Parquet ARTIFACT: builds `src`,
@@ -283,7 +232,7 @@ object Caches {
     * Parquet bit-exactly, so persisted-index queries share their
     * in-session twins' oracles.
     */
-  def parquetArtifact(spark: org.apache.spark.sql.SparkSession, dir: String, name: String)
+  def parquetArtifact(spark: SparkSession, dir: String, name: String)
                      (src: => DataFrame): DataFrame =
     memoized(spark, dir, s"artifact:$name") {
       val path = artifactBase(dir).resolve(name).toString
@@ -319,7 +268,6 @@ object Caches {
     frames.foreach(_.unpersist())
     frames.clear()
     memo.clear()
-    hooks.foreach(_.apply())
   }
 
   /** Test introspection (CachesSpec lifecycle assertions): the currently

@@ -32,7 +32,10 @@ object Sessions {
     spark
   }
 
-  private def builder(cpus: String) = SparkSession.builder()
+  /** The shared builder, for a host that adds its own static confs
+    * before the session starts (the test session's warehouse dir).
+    */
+  private[graft] def builder(cpus: String): SparkSession.Builder = SparkSession.builder()
     .master(s"local[$cpus]")
     .config("spark.sql.shuffle.partitions", cpus)
     .config("spark.sql.session.timeZone", "UTC")

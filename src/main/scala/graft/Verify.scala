@@ -1,9 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** oracle_sql.json. json4s escapes quotes, backslashes and ALL control
+    * chars: a tab or CR in hand-written SQL must not make the oracle
+    * runner's json.load fail and silently zero the round's correctness.
+    */
+  private[graft] def oracleJson: String = org.json4s.jackson.JsonMethods.compact(
+    org.json4s.JObject(SparkEntry.oracleSql.toList.map { case (k, v) => k -> org.json4s.JString(v) }))
+
   def main(args: Array[String]): Unit = {
     // args: sfDir outDir [comma-separated query subset]. The driver
     // passes two args, so driver runs always dump the full registry;
@@ -25,21 +31,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
     Caches.releaseAll()
     spark.stop()
   }

@@ -90,16 +90,13 @@ object IterativeLoop {
     var prevProbe = initialProbe
     var round = 0
     var done = false
-    val trace = sys.env.contains("GRAFT_LOOP_TRACE")
     while (!done) {
       round += 1
       require(round <= maxRounds,
         s"$what exceeded $maxRounds rounds — the oracle's unroll depth would diverge")
-      val t0 = if (trace) System.nanoTime() else 0L
       val next = graft.Caches.register(
         org.apache.spark.sql.GraftExpr.truncated(step(cur, round)).persist())
       val p = probe(next)
-      if (trace) println(f"[loop-trace] $what round $round: ${(System.nanoTime() - t0) / 1e9}%.3f s probe=$p")
       done = onRound(prevProbe, p, cur, next)
       prevProbe = Some(p)
       if (owned && dropSuperseded) cur.unpersist()

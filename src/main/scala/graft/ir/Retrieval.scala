@@ -65,14 +65,7 @@ object Retrieval {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Retrieval <fixtureDir> [postfix query...]")
     val dir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")
     val queries: Iterator[String] =
       if (args.length > 1) args.drop(1).iterator

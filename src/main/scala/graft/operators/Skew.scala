@@ -28,13 +28,6 @@ object Skew {
       .groupBy(col("k"), col("salt")).agg(count(lit(1)).as("c"))
       .groupBy(col("k")).agg(sum(col("c")).as("cnt"))
 
-  /** Two-stage salted sum; identical to groupBy(key).sum(v). */
-  def saltedSum(df: DataFrame, key: Column, v: Column, salts: Int = 16): DataFrame =
-    df.select(key.as("k"), v.as("v"))
-      .withColumn("salt", pmod(spark_partition_id() + monotonically_increasing_id(), lit(salts)))
-      .groupBy(col("k"), col("salt")).agg(sum(col("v")).as("s"))
-      .groupBy(col("k")).agg(sum(col("s")).as("sum_v"))
-
   /** Word count through the salted path — hash-checked against the same
     * oracle as the direct text_wordcount, proving the rewrite is exact.
     */

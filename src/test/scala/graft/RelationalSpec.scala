@@ -4,21 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = Sessions.builder("4")
     .appName("graft-test")
     .config("spark.sql.warehouse.dir", "target/test-warehouse")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    // status-store retention capped (see Bench.scala): the 200-test
-    // suite shares this one session and accumulates thousands of
-    // executions' plan graphs otherwise
-    .config("spark.sql.ui.retainedExecutions", "20")
-    .config("spark.ui.retainedJobs", "100")
-    .config("spark.ui.retainedStages", "100")
-    .config("spark.ui.retainedTasks", "1000")
     .getOrCreate()
   val sf = "/root/testdata/sf0.001"
 }
