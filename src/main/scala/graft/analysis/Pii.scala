@@ -18,7 +18,7 @@ import graft.Tables
   * hash-gated, not rows-only.
   *
   * The fixture corpus carries no PII, so the demonstration tier INJECTS
-  * deterministic doc_id-keyed spans first (the minhashBig perturbation
+  * deterministic doc_id-keyed spans first (the ×10-tier perturbation
   * pattern): every doc_id divisible by 5 / 7 / 11 gains an email / phone
   * / IP derived arithmetically from the id, and the oracle rebuilds the
   * same corpus in SQL. Detection and redaction are therefore exercised

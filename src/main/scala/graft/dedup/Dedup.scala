@@ -40,10 +40,11 @@ object Dedup {
   def shingles(text: Column): Column =
     graft.functions.ArrayExprs.wordShingles(Text.tokenize(text), 3)
 
-  /** Cross-query memo (now the shared [[graft.Caches.memoized]], keyed
-    * on sessionUUID): the shingle scan feeds dedup_ngram_jaccard,
-    * dedup_minhash AND dedup_groups, and the MinHash pair graph feeds the
-    * latter two — a full registry run should pay for each once.
+  /** Cross-query memo (the shared [[graft.Caches.memoized]], keyed on
+    * the session object, dir and key): the shingle scan feeds
+    * dedup_ngram_jaccard, dedup_minhash AND dedup_groups, and the
+    * MinHash pair graph feeds the latter two — a full registry run
+    * should pay for each once.
     */
   private def memoized(spark: SparkSession, dir: String, key: String)
                       (build: => DataFrame): DataFrame =
@@ -59,30 +60,50 @@ object Dedup {
         .filter(size(col("sh")) > 0)
     }
 
-  /** The corpus's exploded hashed shingle inverted index — (doc_id,
-    * xxhash64(shingle), length(shingle)) — memoized once per run and
-    * PRE-PLACED on the join key (r14 optimization): ngram_jaccard,
-    * ngram_capped and overlap_pairs each re-ran the explode+hash pass
-    * per rep and then exchanged the index for their (s, sl)-keyed
-    * self-join and df aggregate. The memo's repartition advertises
-    * hash(s, sl) through the truncated leaf (GraftExpr.truncated
-    * rewrites the build's partitioning onto the cached plan), so every
-    * consumer's self-join sides and df aggregate plan ZERO exchanges
-    * over the corpus-sized index — the skew tier's skew_ex memo pattern,
-    * promoted to the fixture tier.
+  /** The exploded hashed shingle inverted index of a (doc_id, sh) frame
+    * — (doc_id, xxhash64(shingle), length(shingle)) — memoized under
+    * `key` and PRE-PLACED on the join key (r14 optimization): before,
+    * every consumer re-ran the explode+hash pass per rep and then
+    * exchanged the index for its (s, sl)-keyed self-join and df
+    * aggregate. The memo's repartition advertises hash(s, sl) through
+    * the truncated leaf (GraftExpr.truncated rewrites the build's
+    * partitioning onto the cached plan), so every consumer's self-join
+    * sides, df aggregate and cap anti-join plan ZERO exchanges over the
+    * index. One builder serves all three tiers: the fixture corpus
+    * ([[docShingleIndex]]), the skew corpus ([[skewIndex]]) and the ×10
+    * corpus ([[ngramCappedBig]]).
+    *
+    * Keyed on (xxhash64, length) of the shingle, not the string: smaller
+    * shuffle rows and cheaper key compares. A spurious intersection would
+    * need two distinct shingles in one corpus to collide on BOTH the
+    * 64-bit hash and their length — the length guard keeps the collision
+    * odds negligible even at 100 TB shingle cardinality, where hash-only
+    * keying's ~|shingles|²/2⁶⁴ birthday bound starts to bite.
     */
-  private def docShingleIndex(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "ngram_ex") {
-      docShingles(spark, dir)
-        .select(col("doc_id"), explode(col("sh")).as("s"))
+  private def shingleIndex(spark: SparkSession, dir: String, key: String)
+                          (sh: => DataFrame): DataFrame =
+    memoized(spark, dir, key) {
+      sh.select(col("doc_id"), explode(col("sh")).as("s"))
         .select(col("doc_id"), xxhash64(col("s")).as("s"), length(col("s")).as("sl"))
-        // explicit count (r15): a bare repartition(cols) is
-        // AQE-coalescible and a coalesced final stage truncates to
-        // UnknownPartitioning — the placement silently vanished; see the
-        // skewShingles memo for the full mechanism
+        // EXPLICIT partition count (r15 fix): a bare repartition(cols) is
+        // AQE-coalescible, and the coalesced read reports
+        // CoalescedHashPartitioning — which GraftExpr.truncated can only
+        // map to UnknownPartitioning (advertising plain hash(k, n) over
+        // merged-adjacent buckets would mis-co-partition consumers), so
+        // the memo silently lost its placement and every consumer
+        // re-exchanged the index per rep. Pinning numPartitions to the
+        // session's shuffle-partition conf (scale-adaptive, never a
+        // constant) keeps the final stage a plain HashPartitioning that
+        // survives truncation.
         .repartition(spark.sessionState.conf.numShufflePartitions,
           col("s"), col("sl"))
     }
+
+  /** The fixture corpus's shingle index (see [[shingleIndex]]), shared by
+    * ngram_jaccard, ngram_capped and overlap_pairs.
+    */
+  private def docShingleIndex(spark: SparkSession, dir: String): DataFrame =
+    shingleIndex(spark, dir, "ngram_ex")(docShingles(spark, dir))
 
   /** Exact dedup: md5 content fingerprint; canonical = min doc_id per
     * fingerprint. Output keeps every doc so the query is non-empty even on
@@ -252,8 +273,8 @@ object Dedup {
   /** Exact n-gram Jaccard near-dup pairs via shingle inverted index:
     * explode distinct shingles, self-join on shingle, count shared, then
     * |A∩B| / (|A|+|B|−|A∩B|) ≥ minJaccard.
-    */
-  /** @param maxShingleDf optional "stop shingle" cap — the documented
+    *
+    * @param maxShingleDf optional "stop shingle" cap — the documented
     *   100 TB skew guard: a shingle occurring in more than this many
     *   documents is dropped from the inverted index BEFORE the self-join
     *   (boilerplate headers/footers otherwise put ~df² candidate rows
@@ -267,11 +288,10 @@ object Dedup {
     *   additionally asserted pairwise in DedupSpec.
     */
   def ngramJaccardPairs(spark: SparkSession, dir: String, minJaccard: Double = 0.2,
-                        maxShingleDf: Option[Long] = None): DataFrame = {
-    val sh = docShingles(spark, dir)
-    jaccardFromIndex(docShingleIndex(spark, dir),
-      sh.select(col("doc_id"), size(col("sh")).as("n_sh")), minJaccard, maxShingleDf)
-  }
+                        maxShingleDf: Option[Long] = None): DataFrame =
+    jaccardFromIndex(docShingles(spark, dir), docShingleIndex(spark, dir), maxShingleDf)
+      .select(col("d1"), col("d2"), pairJaccard.as("jaccard"))
+      .where(col("jaccard") >= minJaccard)
 
   /** ASYMMETRIC near-dup pairs by overlap coefficient
     * |A∩B| / min(|A|,|B|) — the subset-inclusion class symmetric Jaccard
@@ -282,48 +302,26 @@ object Dedup {
     * applies identically at scale); both scores emitted so the gap the
     * operator exists for is visible per pair.
     */
-  def overlapPairs(spark: SparkSession, dir: String, minOverlap: Double = 0.9): DataFrame = {
-    val sh = docShingles(spark, dir)
-    val counts = sh.select(col("doc_id"), size(col("sh")).as("n_sh"))
-    val ex = docShingleIndex(spark, dir) // shared pre-placed memo (r14)
-    val inter = ex.toDF("d1", "s", "sl").join(ex.toDF("d2", "s2", "sl2"),
-        col("s") === col("s2") && col("sl") === col("sl2") && col("d1") < col("d2"))
-      .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("inter"))
-    inter.join(counts.toDF("d1", "n1"), "d1").join(counts.toDF("d2", "n2"), "d2")
+  def overlapPairs(spark: SparkSession, dir: String, minOverlap: Double = 0.9): DataFrame =
+    jaccardFromIndex(docShingles(spark, dir), docShingleIndex(spark, dir), None)
       .select(col("d1"), col("d2"),
         round(col("inter").cast("double") /
           least(col("n1"), col("n2")).cast("double"), 6).as("overlap"),
-        round(col("inter").cast("double") /
-          (col("n1") + col("n2") - col("inter")).cast("double"), 6).as("jaccard"))
+        pairJaccard.as("jaccard"))
       .where(col("overlap") >= minOverlap)
-  }
 
-  /** The inverted-index Jaccard core over an arbitrary (doc_id, sh) frame
-    * — shared by the fixture-tier [[ngramJaccardPairs]] and the skewed
-    * measurement tier [[ngramSkew]]. Callers pass a persisted/memoized
-    * frame: it is referenced 4× (both self-join sides + both count
-    * sides).
-    */
-  private def indexJaccardPairs(sh: DataFrame, minJaccard: Double,
-                                maxShingleDf: Option[Long]): DataFrame = {
-    val counts = sh.select(col("doc_id"), size(col("sh")).as("n_sh"))
-    // join on (xxhash64, length) of the shingle, not the string: smaller
-    // shuffle rows and cheaper key compares. A spurious intersection would
-    // need two distinct shingles in one corpus to collide on BOTH the
-    // 64-bit hash and their length — the length guard keeps the collision
-    // odds negligible even at 100 TB shingle cardinality, where hash-only
-    // keying's ~|shingles|²/2⁶⁴ birthday bound starts to bite.
-    val exAll = sh.select(col("doc_id"), explode(col("sh")).as("s"))
-      .select(col("doc_id"), xxhash64(col("s")).as("s"), length(col("s")).as("sl"))
-    jaccardFromIndex(exAll, counts, minJaccard, maxShingleDf)
-  }
+  /** Round-6 Jaccard of a [[jaccardFromIndex]] row: |A∩B| / (|A|+|B|−|A∩B|). */
+  private val pairJaccard: Column =
+    round(col("inter").cast("double") /
+      (col("n1") + col("n2") - col("inter")).cast("double"), 6)
 
-  /** Pair generation from a PREBUILT hashed inverted index (doc_id, s,
-    * sl) plus per-doc shingle counts — split from [[indexJaccardPairs]]
-    * so the skew tier can feed its memoized index instead of re-deriving
-    * it per branch.
-    */
-  /** @param dfTable optional PRECOMPUTED (s, sl, df) document-frequency
+  /** The ONE inverted-index pair core of every tier: from a shingle frame
+    * `sh` (doc_id, sh) and its [[shingleIndex]] `exAll`, every doc pair
+    * sharing ≥1 (kept) shingle key as (d1, d2, inter, n1, n2) — shared
+    * key count and both docs' FULL shingle counts, unfiltered. Callers
+    * add only their own score, filter or summary aggregate.
+    *
+    * @param dfTable optional PRECOMPUTED (s, sl, df) document-frequency
     *   table for the cap branch — callers that already aggregate the df
     *   spectrum for their own output ([[ngramSkew]]'s stats row) pass it
     *   so the capped join derives its keep-set from the same subplan
@@ -331,10 +329,10 @@ object Dedup {
     *   fewer map-side pass over the corpus-sized index per rep, and
     *   ReuseExchange dedupes the shuffle between the stats and the cap).
     */
-  private def jaccardFromIndex(exAll: DataFrame, counts: DataFrame,
-                               minJaccard: Double,
+  private def jaccardFromIndex(sh: DataFrame, exAll: DataFrame,
                                maxShingleDf: Option[Long],
                                dfTable: Option[DataFrame] = None): DataFrame = {
+    val counts = sh.select(col("doc_id"), size(col("sh")).as("n_sh"))
     val ex = maxShingleDf.fold(exAll) { cap =>
       // df per shingle key, then ANTI-join the index against the HOT
       // keys (r15, guide §3.1): semi-joining against the keepers made
@@ -365,19 +363,15 @@ object Dedup {
     // scale-adaptive via the session conf. The uncapped fixture tier
     // keeps its measured broadcast election (r14).
     val right = ex.toDF("d2", "s2", "sl2")
-    val inter = ex.toDF("d1", "s", "sl")
+    ex.toDF("d1", "s", "sl")
       .join(if (maxShingleDf.isDefined) right.hint("shuffle_hash") else right,
         col("s") === col("s2") && col("sl") === col("sl2"))
       .where(col("d1") < col("d2"))
       .groupBy(col("d1"), col("d2"))
       .agg(count(lit(1)).as("inter"))
-    inter
       .join(counts.toDF("d1", "n1"), "d1")
       .join(counts.toDF("d2", "n2"), "d2")
-      .select(col("d1"), col("d2"),
-        round(col("inter").cast("double") /
-          (col("n1") + col("n2") - col("inter")).cast("double"), 6).as("jaccard"))
-      .where(col("jaccard") >= minJaccard)
+      .select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"))
   }
 
   private val NumHashes = 64
@@ -392,11 +386,6 @@ object Dedup {
   def minhashSignature(sh: Column): Column =
     graft.functions.ArrayExprs.minhashSig(sh, NumHashes)
 
-  /** MinHash+LSH near-dup pairs: band the signature, bucket-join candidate
-    * pairs, verify with exact Jaccard ≥ minJaccard. With the 16×4 banding,
-    * recall at j≥0.9 is 1−4e-8 — the declared oracle (all exact-Jaccard
-    * pairs) is safe for the fixture corpus, whose planted dups are ≥0.9.
-    */
   /** (doc_id, band, key) LSH bucket rows for a shingle frame — the
     * banded-signature derivation shared by [[minhashPairs]] (self-join),
     * [[incremental]] (batch⋈corpus join), and the streaming-curation
@@ -411,52 +400,51 @@ object Dedup {
         .as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
 
-  def minhashPairs(spark: SparkSession, dir: String, minJaccard: Double = 0.5): DataFrame =
-    minhashPairsOn(docShingles(spark, dir), minJaccard)
-
-  /** The LSH pipeline over an arbitrary (doc_id, sh) frame — shared by
-    * the fixture-tier [[minhashPairs]] (hash-gated) and the measurement
-    * tier [[minhashBig]].
+  /** The ONE LSH candidate + exact-verify block: DISTINCT band-bucket
+    * candidate pairs (d1 < d2) of a (doc_id, band, key) table, joined
+    * back to both docs' sets in `sets` (doc_id, array), each with its
+    * exact, unrounded set Jaccard — (d1, d2, j). Shared by
+    * [[minhashPairs]] (rounds and filters), [[minhashBigPortable]]
+    * (aggregates it per rep — the tier measures this join) and
+    * [[bigPortablePairs]] (filters it once into the curate composition's
+    * pair graph), so a threshold or join-shape change can never apply to
+    * one and silently miss another.
     */
-  private def minhashPairsOn(sh: DataFrame, minJaccard: Double): DataFrame = {
-    val bands = bandBuckets(sh)
+  private def candJaccard(sets: DataFrame, bands: DataFrame): DataFrame = {
     val cand = bands.toDF("d1", "band", "key")
       .join(bands.toDF("d2", "band2", "key2"),
         col("band") === col("band2") && col("key") === col("key2"))
       .where(col("d1") < col("d2"))
       .select(col("d1"), col("d2")).distinct()
     cand
-      .join(sh.toDF("d1", "sh1"), "d1")
-      .join(sh.toDF("d2", "sh2"), "d2")
+      .join(sets.toDF("d1", "h1"), "d1")
+      .join(sets.toDF("d2", "h2"), "d2")
       .select(col("d1"), col("d2"),
-        round(size(array_intersect(col("sh1"), col("sh2"))).cast("double") /
-          size(array_union(col("sh1"), col("sh2"))).cast("double"), 6).as("jaccard"))
+        (size(array_intersect(col("h1"), col("h2"))).cast("double") /
+          size(array_union(col("h1"), col("h2"))).cast("double")).as("j"))
+  }
+
+  /** MinHash+LSH near-dup pairs: band the signature, bucket-join candidate
+    * pairs, verify with exact Jaccard ≥ minJaccard. With the 16×4 banding,
+    * recall at j≥0.9 is 1−4e-8 — the declared oracle (all exact-Jaccard
+    * pairs) is safe for the fixture corpus, whose planted dups are ≥0.9.
+    */
+  def minhashPairs(spark: SparkSession, dir: String, minJaccard: Double = 0.5): DataFrame = {
+    val sh = docShingles(spark, dir)
+    candJaccard(sh, bandBuckets(sh))
+      .select(col("d1"), col("d2"), round(col("j"), 6).as("jaccard"))
       .where(col("jaccard") >= minJaccard)
   }
 
-  /** Measurement tier for the MinHash+LSH pipeline (the pr_toprank_10k
-    * pattern): the documents corpus inflated ×`replicas` with perturbed
-    * copies (replica r > 0 appends one distinct token, so each group of
-    * 10 forms a genuine near-dup cluster), pushed through the identical
-    * band → candidate → exact-verify pipeline as dedup_minhash, at 10×
-    * the docs and ~45× the true pair count of the fixture tier. Output
-    * is the one-row measurement summary — corpus size, LSH candidate
-    * count (the quantity the banding exists to bound), verified pair
-    * count — not the pair set, so the bench measures the join, not a
-    * giant result write. Rows-only by necessity: the ×10 corpus squares
-    * the DuckDB exact-Jaccard oracle (the logic itself is hash-gated at
-    * fixture scale through dedup_minhash).
-    */
-  /** The big-tier corpus prep, shared by [[minhashBig]] and
-    * [[minhashBigPortable]]: the ×replicas inflated corpus, tokenized
-    * and shingled. Memoized like the fixture-tier docShingles (same
-    * semantics the bench documents: rep 1 carries the build, the median
-    * measures the steady state): the 50k-doc tokenize+shingle scan is
-    * corpus prep, not LSH machinery, and each tier references it 3×
-    * (banding + both exact-verify sides) — uncached it re-ran three
+  /** The big-tier corpus prep, shared by [[minhashBigPortable]],
+    * [[ngramCappedBig]] and the ×10 curate composition: the ×replicas
+    * inflated corpus, tokenized and shingled. Memoized like the
+    * fixture-tier docShingles (same semantics the bench documents: rep 1
+    * carries the build, the median measures the steady state): the
+    * 50k-doc tokenize+shingle scan is corpus prep, not LSH machinery, and
+    * each tier references it several times — uncached it re-ran three
     * times per invocation (measured: 6.9 s of the 14.9 s cold total at
-    * sf0.1). The per-rep measurement keeps the LSH-specific work:
-    * signatures, band join, candidate distinct, exact verify.
+    * sf0.1). The per-rep measurement keeps the tier-specific work.
     */
   private[graft] def bigShingles(spark: SparkSession, dir: String, replicas: Int): DataFrame =
     memoized(spark, dir, s"big_shingles_$replicas") {
@@ -470,43 +458,6 @@ object Dedup {
           graft.functions.ArrayExprs.wordShingles(col("tokens"), 3).as("sh"))
         .filter(size(col("sh")) > 0)
     }
-
-  def minhashBig(spark: SparkSession, dir: String, replicas: Int = 10,
-                 minJaccard: Double = 0.5): DataFrame = {
-    val sh = bigShingles(spark, dir, replicas)
-    // the banded signatures are memoized too: per-row corpus prep, like
-    // the shingle scan — what this tier MEASURES per rep is the LSH
-    // machinery itself (band self-join, candidate distinct, exact
-    // verify), which is also what dominates at 100 TB where signatures
-    // are computed once at ingest and stored
-    val bands = memoized(spark, dir, s"big_bands_$replicas")(bandBuckets(sh))
-    // exact-verify on HASHED shingles (one xxhash64 long per shingle) —
-    // the at-scale verify form this repo already uses for the
-    // ngram-Jaccard index: set Jaccard is hash-invariant (modulo 64-bit
-    // collisions), long-array intersect/union compares 8-byte values
-    // instead of shingle strings, and the two verify-side joins shuffle
-    // ~8× fewer bytes. Memoized as corpus prep like the raw shingles.
-    val sh64 = memoized(spark, dir, s"big_shingles64_$replicas") {
-      sh.select(col("doc_id"),
-        array_distinct(transform(col("sh"), s => xxhash64(s))).as("sh"))
-    }
-    val cand = bands.toDF("d1", "band", "key")
-      .join(bands.toDF("d2", "band2", "key2"),
-        col("band") === col("band2") && col("key") === col("key2"))
-      .where(col("d1") < col("d2"))
-      .select(col("d1"), col("d2")).distinct()
-    // candidate count and verified-pair count in ONE pass over the
-    // verify join (count + conditional count), so the measurement adds
-    // no second traversal of the candidate set
-    val verified = cand
-      .join(sh64.toDF("d1", "sh1"), "d1")
-      .join(sh64.toDF("d2", "sh2"), "d2")
-      .select((size(array_intersect(col("sh1"), col("sh2"))).cast("double") /
-        size(array_union(col("sh1"), col("sh2"))).cast("double")).as("j"))
-      .agg(count(lit(1)).as("n_candidates"),
-        count(when(col("j") >= minJaccard, 1)).as("n_pairs"))
-    sh.agg(count(lit(1)).as("n_docs")).crossJoin(verified)
-  }
 
   /** Mod-p universal-hash constants for the PORTABLE big-tier MinHash
     * family ([[graft.functions.ArrayExprs.MinHashPermSig]]): p = 2^31−1
@@ -528,25 +479,6 @@ object Dedup {
       s"(($acc) * $PortM + ${elem(k)}) % $PortP"
     }
 
-  /** PORTABLE measurement tier for MinHash+LSH — the registered
-    * `dedup_minhash_big`: the same inflated ×replicas corpus, banding
-    * geometry (16×4 of 64), candidate bucket-join, and exact set-Jaccard
-    * verify as [[minhashBig]], with every hash replaced by an
-    * md5-derived portable form: base shingle hash = 60-bit md5 nibble
-    * slice (the [[simhash]] pattern), signature = mod-p permutation
-    * family over it, band key = mod-p Horner over the band slice.
-    * [[minhashBig]]'s seeded-xxhash64 family remains the documented
-    * production form (better diffusion, one hash per element×seed,
-    * no base-hash collision layer) and stays spec-pinned
-    * (ExtensionsSpec "minhash measurement tier"); this tier exists so
-    * the at-scale LSH JOIN SHAPE itself sits behind the DuckDB hash
-    * gate — the whole pipeline (inflation arithmetic → shingles → md5
-    * base hashes → permutations → bands → bucket join → verify) replays
-    * as a chained CTE, like dedup_ngram_skew.
-    *
-    * Same one-row summary schema as [[minhashBig]]:
-    * (n_docs, n_candidates, n_pairs).
-    */
   /** Distinct 60-bit md5 shingle hashes of the ×replicas corpus: feeds
     * the signature AND both exact-verify sides (set Jaccard is
     * hash-invariant, and any 60-bit collision is applied identically by
@@ -575,7 +507,7 @@ object Dedup {
         .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
         // pre-placed on the candidate-join key (the ngram_ex pattern,
         // r14); explicit count so AQE can't coalesce the placement away
-        // (r15, see skewShingles)
+        // (r15, see shingleIndex)
         .repartition(spark.sessionState.conf.numShufflePartitions,
           col("band"), col("key"))
     }
@@ -592,38 +524,41 @@ object Dedup {
                                       replicas: Int = 10,
                                       minJaccard: Double = 0.5): DataFrame =
     memoized(spark, dir, s"big_portable_pairs_${replicas}_$minJaccard") {
-      portableCandJaccard(
-        bigH60(spark, dir, replicas), bigPermBands(spark, dir, replicas))
+      candJaccard(bigH60(spark, dir, replicas), bigPermBands(spark, dir, replicas))
         .where(col("j") >= minJaccard)
         .select(col("d1"), col("d2"))
     }
 
-  /** The ONE portable cand + exact-verify block: DISTINCT band-bucket
-    * candidate pairs joined back to their 60-bit hash sets, each with
-    * its exact set Jaccard — (d1, d2, j). Shared by
-    * [[minhashBigPortable]] (aggregates it per rep — the tier measures
-    * this join) and [[bigPortablePairs]] (filters it once into the
-    * curate composition's pair graph), so a threshold or join-shape
-    * change can never apply to one and silently miss the other.
+  /** Measurement tier for the MinHash+LSH pipeline (the pr_toprank_10k
+    * pattern) — the registered `dedup_minhash_big`: the documents corpus
+    * inflated ×`replicas` with perturbed copies (replica r > 0 appends
+    * one distinct token, so each group of 10 forms a genuine near-dup
+    * cluster), pushed through the same banding geometry (16×4 of 64),
+    * candidate bucket-join and exact set-Jaccard verify as
+    * dedup_minhash, at 10× the docs and ~45× the true pair count of the
+    * fixture tier. Output is the one-row measurement summary
+    * (n_docs, n_candidates, n_pairs) — corpus size, LSH candidate count
+    * (the quantity the banding exists to bound), verified pair count —
+    * not the pair set, so the bench measures the join, not a giant
+    * result write.
+    *
+    * Every hash is an md5-derived PORTABLE form: base shingle hash =
+    * 60-bit md5 nibble slice (the [[simhash]] pattern), signature =
+    * mod-p permutation family over it, band key = mod-p Horner over the
+    * band slice. The seeded-xxhash64 family ([[minhashPairs]]) stays the
+    * production form (better diffusion, one hash per element×seed, no
+    * base-hash collision layer) and is hash-gated at fixture scale
+    * through dedup_minhash; this tier exists so the at-scale LSH JOIN
+    * SHAPE itself sits behind the DuckDB hash gate — the whole pipeline
+    * (inflation arithmetic → shingles → md5 base hashes → permutations
+    * → bands → bucket join → verify) replays as a chained CTE, like
+    * dedup_ngram_skew, where the ×10 pair SET's exact-Jaccard oracle
+    * would be quadratic.
     */
-  private def portableCandJaccard(hs: DataFrame, bands: DataFrame): DataFrame = {
-    val cand = bands.toDF("d1", "band", "key")
-      .join(bands.toDF("d2", "band2", "key2"),
-        col("band") === col("band2") && col("key") === col("key2"))
-      .where(col("d1") < col("d2"))
-      .select(col("d1"), col("d2")).distinct()
-    cand
-      .join(hs.toDF("d1", "h1"), "d1")
-      .join(hs.toDF("d2", "h2"), "d2")
-      .select(col("d1"), col("d2"),
-        (size(array_intersect(col("h1"), col("h2"))).cast("double") /
-          size(array_union(col("h1"), col("h2"))).cast("double")).as("j"))
-  }
-
   def minhashBigPortable(spark: SparkSession, dir: String, replicas: Int = 10,
                          minJaccard: Double = 0.5): DataFrame = {
     val sh = bigShingles(spark, dir, replicas)
-    val verified = portableCandJaccard(
+    val verified = candJaccard(
       bigH60(spark, dir, replicas), bigPermBands(spark, dir, replicas))
       .agg(count(lit(1)).as("n_candidates"),
         count(when(col("j") >= minJaccard, 1)).as("n_pairs"))
@@ -633,54 +568,28 @@ object Dedup {
   /** ×10 measurement tier for the CAPPED n-gram Jaccard index (the
     * dedup_ngram_capped pipeline at the scaling-slope gate): the same
     * inflated corpus as [[minhashBigPortable]] pushed through the
-    * identical hashed-inverted-index machinery — df-cap semi-join,
-    * shingle-key self-join, per-doc-count denominators — with the cap
-    * scaled ×replicas: inflation multiplies every shingle's df by
+    * identical [[shingleIndex]] + [[jaccardFromIndex]] machinery — df-cap
+    * anti-join, shingle-key self-join, per-doc-count denominators — with
+    * the cap scaled ×replicas: inflation multiplies every shingle's df by
     * ~replicas (each source doc's shingles recur across its whole
     * near-dup family), so an unscaled cap would discard the content
-    * keys themselves instead of the hot tail. Output is the minhashBig
-    * one-row summary (n_docs, n_candidates, n_pairs): pairs sharing ≥1
-    * kept shingle, and pairs verified on the round-6 Jaccard grid — the
-    * bench measures the index join, not a giant pair write. Hash-gated:
-    * inflation, tokenize+shingle, cap, join, and Jaccard replay as a
-    * chained CTE (the skewOracle pattern; the oracle intersects raw
-    * shingle strings where this side joins (xxhash64, length) keys —
-    * identical sets modulo a 64-bit+length collision, the documented
-    * [[indexJaccardPairs]] trade).
+    * keys themselves instead of the hot tail. Output is the
+    * [[minhashBigPortable]] one-row summary (n_docs, n_candidates,
+    * n_pairs): pairs sharing ≥1 kept shingle, and pairs verified on the
+    * round-6 Jaccard grid — the bench measures the index join, not a
+    * giant pair write. Hash-gated: inflation, tokenize+shingle, cap,
+    * join, and Jaccard replay as a chained CTE (the skewOracle pattern;
+    * the oracle intersects raw shingle strings where this side joins
+    * (xxhash64, length) keys — identical sets modulo a 64-bit+length
+    * collision, the documented [[shingleIndex]] trade).
     */
   def ngramCappedBig(spark: SparkSession, dir: String, replicas: Int = 10,
                      minJaccard: Double = 0.2,
                      cap: Long = StopShingleDf * 10): DataFrame = {
     val sh = bigShingles(spark, dir, replicas)
-    val ex = memoized(spark, dir, s"big_ngram_ex_$replicas") {
-      sh.select(col("doc_id"), explode(col("sh")).as("s"))
-        .select(col("doc_id"), xxhash64(col("s")).as("s"), length(col("s")).as("sl"))
-        // pre-placed on the join key like the fixture-tier ngram_ex memo
-        // (r14): the df agg, the cap semi-join and both self-join sides
-        // all key on (s, sl) — zero per-rep exchanges of the ×10 index;
-        // explicit count so AQE can't coalesce the placement away (r15,
-        // see skewShingles)
-        .repartition(spark.sessionState.conf.numShufflePartitions,
-          col("s"), col("sl"))
-    }
-    // anti-join against the hot head + shuffled-hash self-join (r15):
-    // same rewrite as the [[jaccardFromIndex]] cap branch — "key ∉ hot"
-    // ≡ "df ≤ cap" since every index key is in the df table, and the
-    // hash joins avoid sorting the ×10 index twice per rep.
-    val hot = ex.groupBy(col("s"), col("sl")).agg(count(lit(1)).as("df"))
-      .where(col("df") > cap).select(col("s"), col("sl"))
-    val exk = ex.join(hot.hint("shuffle_hash"), Seq("s", "sl"), "left_anti")
-      .select(col("doc_id"), col("s"), col("sl"))
-    val inter = exk.toDF("d1", "s", "sl")
-      .join(exk.toDF("d2", "s2", "sl2").hint("shuffle_hash"),
-        col("s") === col("s2") && col("sl") === col("sl2") && col("d1") < col("d2"))
-      .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("n_int"))
-    val counts = sh.select(col("doc_id"), size(col("sh")).as("n_sh"))
-    val verified = inter
-      .join(counts.toDF("d1", "n1"), "d1")
-      .join(counts.toDF("d2", "n2"), "d2")
-      .select(round(col("n_int").cast("double") /
-        (col("n1") + col("n2") - col("n_int")).cast("double"), 6).as("j"))
+    val ex = shingleIndex(spark, dir, s"big_ngram_ex_$replicas")(sh)
+    val verified = jaccardFromIndex(sh, ex, Some(cap))
+      .select(pairJaccard.as("j"))
       .agg(count(lit(1)).as("n_candidates"),
         count(when(col("j") >= minJaccard, 1)).as("n_pairs"))
     sh.agg(count(lit(1)).as("n_docs")).crossJoin(verified)
@@ -691,13 +600,13 @@ object Dedup {
     * footers, license banners, sponsor tags) put identical shingles into
     * thousands of documents, and an UNCAPPED inverted-index self-join
     * puts C(df, 2) candidate rows through each such key. This tier
-    * inflates the corpus ×`replicas` (near-dup families, the minhashBig
-    * pattern) and then appends: template A to every even source doc,
-    * template B to every fifth, and one of 200 sponsor-tag variants to
-    * all of them — giving a df spectrum with a hot head (df in the
-    * thousands at sf0.1, far above `cap`), a mid tail (sponsor groups,
-    * df ≈ 3·n_docs/200, below `cap`), and the content base (df ≈
-    * replicas).
+    * inflates the corpus ×`replicas` (near-dup families, the
+    * [[minhashBigPortable]] pattern) and then appends: template A to
+    * every even source doc, template B to every fifth, and one of 200
+    * sponsor-tag variants to all of them — giving a df spectrum with a
+    * hot head (df in the thousands at sf0.1, far above `cap`), a mid
+    * tail (sponsor groups, df ≈ 3·n_docs/200, below `cap`), and the
+    * content base (df ≈ replicas).
     *
     * Output is ONE summary row that shows the cap doing its job:
     *  - cand_uncapped — Σ C(df,2) over ALL shingle keys: the exact row
@@ -709,7 +618,7 @@ object Dedup {
     *    the capped join actually processes;
     *  - n_hot_keys — how many keys the cap removed;
     *  - n_pairs — verified ≥ minJaccard pairs from REALLY RUNNING the
-    *    capped pipeline ([[indexJaccardPairs]]), proving the near-dup
+    *    capped pipeline ([[jaccardFromIndex]]), proving the near-dup
     *    families still surface once boilerplate mass is gone.
     *
     * Hash-gated, not rows-only: the whole construction (inflation
@@ -727,8 +636,8 @@ object Dedup {
       sum(expr("df * (df - 1) DIV 2")).as("cand_uncapped"),
       sum(when(col("df") <= cap, expr("df * (df - 1) DIV 2"))
         .otherwise(lit(0L))).as("cand_capped"))
-    val counts = sh.select(col("doc_id"), size(col("sh")).as("n_sh"))
-    val pairs = jaccardFromIndex(ex, counts, minJaccard, Some(cap), dfTable = Some(dft))
+    val pairs = jaccardFromIndex(sh, ex, Some(cap), dfTable = Some(dft))
+      .where(pairJaccard >= minJaccard)
       .agg(count(lit(1)).as("n_pairs"))
     sh.agg(count(lit(1)).as("n_docs")).crossJoin(stats).crossJoin(pairs)
   }
@@ -744,31 +653,13 @@ object Dedup {
         .filter(size(col("sh")) > 0)
     }
 
-  /** The skew corpus's exploded hashed shingle index — feeds the df
-    * stats AND the capped join (cap semi-join + both self-join sides);
-    * memoized like the shingles so one explode+hash pass serves every
-    * reference (and the AQE cross-check spec).
+  /** The skew corpus's [[shingleIndex]] — feeds the df stats AND the
+    * capped join (cap anti-join + both self-join sides), and the AQE
+    * cross-check spec.
     */
   private[graft] def skewIndex(spark: SparkSession, dir: String,
                                replicas: Int = 3): DataFrame =
-    memoized(spark, dir, s"skew_ex_$replicas") {
-      skewShingles(spark, dir, replicas)
-        .select(col("doc_id"), explode(col("sh")).as("s"))
-        .select(col("doc_id"), xxhash64(col("s")).as("s"), length(col("s")).as("sl"))
-        // pre-placed on the join key (the ngram_ex pattern, r14) with an
-        // EXPLICIT partition count (r15 fix): a bare repartition(cols) is
-        // AQE-coalescible, and the coalesced read reports
-        // CoalescedHashPartitioning — which GraftExpr.truncated can only
-        // map to UnknownPartitioning (advertising plain hash(k, n) over
-        // merged-adjacent buckets would mis-co-partition consumers), so
-        // the memo silently lost its placement and every consumer
-        // re-exchanged the index per rep. Pinning numPartitions to the
-        // session's shuffle-partition conf (scale-adaptive, never a
-        // constant) keeps the final stage a plain HashPartitioning that
-        // survives truncation.
-        .repartition(spark.sessionState.conf.numShufflePartitions,
-          col("s"), col("sl"))
-    }
+    shingleIndex(spark, dir, s"skew_ex_$replicas")(skewShingles(spark, dir, replicas))
 
   /** The skewed corpus: ×replicas near-dup inflation plus deterministic
     * boilerplate appends keyed on the SOURCE doc_id (so replicas of one
@@ -1462,7 +1353,7 @@ object Dedup {
         FROM ver"""
   }
 
-  /** Full replay of [[ngramCappedBig]]: the minhashBig inflation CTE,
+  /** Full replay of [[ngramCappedBig]]: the ×10 inflation CTE,
     * tokenize+shingle, df cap, inverted-index self-join on the raw
     * shingle string, round-6 Jaccard, all folded to the one summary row.
     */
@@ -1715,7 +1606,7 @@ object Dedup {
     "dedup_ngram_skew"    -> ((s, d) => ngramSkew(s, d)),
     // measurement tier at 10× corpus, HASH-GATED via the portable md5
     // mod-p family (chained-CTE oracle); the xxhash64 production family
-    // stays spec-pinned in ExtensionsSpec — see minhashBigPortable
+    // is gated at fixture scale as dedup_minhash — see minhashBigPortable
     "dedup_minhash_big"   -> ((s, d) => minhashBigPortable(s, d)),
     // scaling-slope tier: the capped inverted-index Jaccard at ×10,
     // cap scaled with the inflation (see ngramCappedBig)

@@ -35,47 +35,21 @@ import org.apache.spark.sql.functions._
   * |E ∪ E'| ≥ max(|E|,|E'|) ≥ (|E|+|E'|)/2 with equality only when
   * E = E').
   *
-  * ==Two physical shapes, one round semantics==
+  * ==Physical shape==
   *
-  * The per-node minimum each star phase needs is computable two ways,
-  * and the right one is a function of DATA SHAPE, not taste — so both
-  * are implemented, dispatch is a parameter, and a spec holds them
-  * hash-equal on the same graph:
-  *
-  *  - [[Shape.CoPartitioned]] (default): `min(dst) OVER (PARTITION BY
-  *    src)` — ONE hash exchange on the phase key and the min is joined
-  *    back "for free" because the window reads the same partition it
-  *    aggregated. No broadcast, no node-count ceiling: this is the
-  *    billion-node shape, and at fixture scale it is ALSO the faster
-  *    one because a round is 3 stages instead of ~13 (measured on the
-  *    10k tier: 0.58 s vs 1.4 s per round — the r10 broadcast shape
-  *    paid two broadcast-build jobs plus their agg exchanges per round,
-  *    and at 10k rows per-stage scheduling latency dominates all data
-  *    cost).
-  *  - [[Shape.BroadcastMin]] (the r10 shape): aggregate the node-sized
-  *    min table, broadcast it into the edge-sized join. The edge set
-  *    crosses the wire ONCE per round (small-star's closing distinct)
-  *    instead of the window shape's twice — the right trade when edges
-  *    vastly outnumber nodes AND the node table fits the broadcast
-  *    budget (~10 MB per million nodes). On a billion-node graph the
-  *    broadcast is impossible and this shape is invalid — which is why
-  *    it is the opt-in, not the default.
+  * The per-node minimum each star phase needs is a window,
+  * `min(dst) OVER (PARTITION BY src)`: ONE hash exchange on the phase
+  * key, and the min is joined back "for free" because the window reads
+  * the same partition it aggregated. No broadcast, no node-count
+  * ceiling: this is the billion-node shape, and at fixture scale it is
+  * ALSO the faster one because a round is 3 stages instead of ~13
+  * (measured on the 10k tier: 0.58 s vs 1.4 s per round against the
+  * r10 shape that broadcast node-sized min tables into the edge join —
+  * it paid two broadcast-build jobs plus their agg exchanges per
+  * round, and at 10k rows per-stage scheduling latency dominates all
+  * data cost).
   */
 object Components {
-
-  /** Physical shape of the per-round min computation — see class doc. */
-  sealed trait Shape
-  object Shape {
-    /** Window min over the phase key: co-partitioned, broadcast-free,
-      * valid at any node count. The scale-path default.
-      */
-    case object CoPartitioned extends Shape
-    /** Node-sized min tables broadcast into the edge join: one
-      * edge-sized exchange per round, valid only while the node set
-      * fits the broadcast budget.
-      */
-    case object BroadcastMin extends Shape
-  }
 
   /** Width-pinning hook: repartition on the downstream grouping columns
     * so the groupBy / window / distinct that follows reuses the
@@ -108,8 +82,7 @@ object Components {
     */
   def labels(nodes: DataFrame, pairs: DataFrame,
              partitions: Option[Int] = None,
-             prepared: Boolean = false,
-             shape: Shape = Shape.CoPartitioned): DataFrame = {
+             prepared: Boolean = false): DataFrame = {
     val idCol = nodes.columns.head
     val pw: Pin = (df, cols) =>
       partitions.fold(df)(n => df.repartition(n, cols: _*))
@@ -141,7 +114,7 @@ object Components {
       e0, maxRounds = 64, what = "components star loop",
       initialProbe = Some(fingerprint(e0)),
       initOwned = !prepared)(
-      (cur, _) => round(cur, pw, shape))(
+      (cur, _) => round(cur, pw))(
       fingerprint)(
       (prevFp, fp, cur, next) =>
         prevFp.contains(fp) && {
@@ -171,31 +144,21 @@ object Components {
     (r.getLong(0), r.getLong(1))
   }
 
-  /** One full large-star + small-star round in the requested shape,
-    * closed by the round's ONE set-semantics exchange: pin the width on
-    * the edge key pair and distinct (the distinct reuses the pinned
-    * partitioning, so it costs one exchange, not two).
+  /** One full large-star + small-star round, closed by the round's ONE
+    * set-semantics exchange: pin the width on the edge key pair and
+    * distinct (the distinct reuses the pinned partitioning, so it costs
+    * one exchange, not two).
     */
-  private def round(e: DataFrame, pw: Pin, shape: Shape): DataFrame = {
-    val ss = shape match {
-      case Shape.CoPartitioned => smallStarWin(largeStarWin(e, pw), pw)
-      case Shape.BroadcastMin  => smallStarBc(largeStarBc(e, pw), pw)
-    }
-    pw(ss, Seq(col("src"), col("dst"))).distinct()
-  }
+  private def round(e: DataFrame, pw: Pin): DataFrame =
+    pw(smallStar(largeStar(e, pw), pw), Seq(col("src"), col("dst"))).distinct()
 
-  /** One full round in each shape over an oriented edge frame — exposed
-    * for the physical-plan audit (PlanAuditSpec asserts the round is
+  /** One full round over an oriented edge frame — exposed for the
+    * physical-plan audit (PlanAuditSpec asserts the round is
     * window/equi-join/aggregate-shaped, never a cross product).
     */
-  private[graft] def auditRound(e: DataFrame, shape: Shape = Shape.CoPartitioned): DataFrame = {
-    val id: Pin = (df, _) => df
-    round(e, id, shape)
-  }
+  private[graft] def auditRound(e: DataFrame): DataFrame = round(e, (df, _) => df)
 
-  // ---- co-partitioned (window) shape -------------------------------
-
-  /** Large-star, window shape: symmetrize, hash-partition on src once
+  /** Large-star: symmetrize, hash-partition on src once
     * (the pw pin keeps the width on the working set), and read
     * m = min(Γ(u) ∪ {u}) straight off the partition — the "join back to
     * the min table" is free because every row already sits next to its
@@ -206,7 +169,7 @@ object Components {
     * duplicate-insensitive, small-star's closing distinct restores set
     * semantics for the round).
     */
-  private def largeStarWin(e: DataFrame, pw: Pin): DataFrame = {
+  private def largeStar(e: DataFrame, pw: Pin): DataFrame = {
     val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
     pw(sym, Seq(col("src")))
       .withColumn("m", least(col("src"), min(col("dst")).over(Window.partitionBy(col("src")))))
@@ -214,51 +177,22 @@ object Components {
       .select(col("dst").as("src"), col("m").as("dst"))
   }
 
-  /** Small-star, window shape: input already oriented large→small
-    * (duplicates tolerated — see [[largeStarWin]]), so Γ(v) here is
-    * exactly the smaller-neighbor set and m = min(dst) over the src
-    * partition. Each row emits BOTH (u, m) and (v, m) — the self edge
-    * once per input row rather than once per node, which the round's
-    * one distinct collapses (trading ≤|E| duplicate rows for not
-    * needing a row_number sort or a second pass). The distinct is the
-    * round's one edge-sized set-semantics exchange in this shape too.
+  /** Small-star: input already oriented large→small (duplicates
+    * tolerated — see [[largeStar]]), so Γ(v) here is exactly the
+    * smaller-neighbor set and m = min(dst) over the src partition. Each
+    * row emits BOTH (u, m) and (v, m) — the self edge once per input row
+    * rather than once per node, which the round's one distinct collapses
+    * (trading ≤|E| duplicate rows for not needing a row_number sort or a
+    * second pass). The distinct is the round's one edge-sized
+    * set-semantics exchange.
     */
-  private def smallStarWin(e: DataFrame, pw: Pin): DataFrame = {
+  private def smallStar(e: DataFrame, pw: Pin): DataFrame = {
     pw(e, Seq(col("src")))
       .withColumn("m", min(col("dst")).over(Window.partitionBy(col("src"))))
       .select(explode(array(
         struct(col("dst").as("src"), col("m").as("dst")),
         struct(col("src"), col("m").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .where(col("src") =!= col("dst"))
-  }
-
-  // ---- broadcast-min shape ------------------------------------------
-
-  /** Large-star, broadcast shape (see [[Shape.BroadcastMin]] for when
-    * this wins): the per-node min table is NODE-sized and BROADCAST
-    * into the edge-sized join (the pr_hits finding: a truncated round
-    * leaf has no stats, so the unhinted join planned a SortMergeJoin
-    * that re-sorted the edge relation every round).
-    */
-  private def largeStarBc(e: DataFrame, pw: Pin): DataFrame = {
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-    val mn = sym.groupBy(col("src")).agg(min(col("dst")).as("mn"))
-      .select(col("src").as("u"), least(col("src"), col("mn")).as("m"))
-    sym.join(broadcast(mn), col("src") === col("u"))
-      .where(col("dst") > col("src"))
-      .select(col("dst").as("src"), col("m").as("dst"))
-  }
-
-  /** Small-star, broadcast shape: the one distinct per round lives in
-    * the shared closing pin ([[largeStarBc]]'s broadcast note: this
-    * distinct is the round's one edge-sized exchange in this shape).
-    */
-  private def smallStarBc(e: DataFrame, pw: Pin): DataFrame = {
-    val mn = e.groupBy(col("src")).agg(min(col("dst")).as("m"))
-    e.join(broadcast(mn), "src")
-      .select(col("dst").as("src"), col("m").as("dst"))
-      .union(mn.select(col("src"), col("m")))
       .where(col("src") =!= col("dst"))
   }
 }

@@ -327,10 +327,10 @@ object PageRank {
     else full.repartition(n, col("id"))
   }
 
-  /** Physical shape of the triangle count's two adjacency joins — the
-    * Components.Shape pattern applied to [[triangles]] (what used to be
-    * an in-code comment "at billions of edges the hint is the line to
-    * drop" is now a dispatched parameter, both shapes gate-equal).
+  /** Physical shape of the triangle count's two adjacency joins (what
+    * used to be an in-code comment "at billions of edges the hint is the
+    * line to drop" is now a dispatched parameter, both shapes
+    * gate-equal).
     */
   sealed trait TriShape
   object TriShape {
@@ -349,9 +349,8 @@ object PageRank {
 
   /** Node budget under which [[triangles]] defaults to the broadcast
     * shape: adjacency rows are node-count-bounded, and 1M nodes ≈
-    * |E| longs ≲ tens of MB — the same envelope Components documents
-    * for its BroadcastMin opt-in. Above it the default flips to the
-    * shuffle shape with no caller change.
+    * |E| longs ≲ tens of MB of broadcast. Above it the default flips to
+    * the shuffle shape with no caller change.
     */
   val TriangleBroadcastNodeLimit = 1000000L
 
@@ -382,10 +381,10 @@ object PageRank {
   def triangles(spark: SparkSession, dir: String, mod: Long = 100,
                 shape: Option[TriShape] = None): DataFrame = {
     // the canonical degree-ordered edge set: memoized as corpus prep
-    // (the minhashBig contract: derivation computed once at ingest and
-    // stored; what the query measures is the join + intersection
-    // machinery), which also stops the distinct + two degree joins
-    // re-running per reference
+    // (the minhashBigPortable band-memo contract: derivation computed
+    // once at ingest and stored; what the query measures is the join +
+    // intersection machinery), which also stops the distinct + two
+    // degree joins re-running per reference
     val und = graft.Caches.memoized(spark, dir, s"graph:und_$mod") {
       // derive from the SHARED plain undirected memo (the link-predict
       // family builds the same distinct edge set — r13: one
@@ -834,8 +833,7 @@ object PageRank {
     * dedup_groups technique); [[componentsSummary]] is the measurement
     * tier.
     */
-  def components(spark: SparkSession, dir: String, mod: Long = 100,
-                 shape: Components.Shape = Components.Shape.CoPartitioned): DataFrame = {
+  def components(spark: SparkSession, dir: String, mod: Long = 100): DataFrame = {
     // the oriented-distinct edge set is corpus prep (the und_$mod
     // contract triangles/linkPredict already follow): memoized per
     // (session, dir, mod) so both components tiers and all bench reps
@@ -852,8 +850,7 @@ object PageRank {
       // the 100-node oracle tier; 8 for the dense 10k tier (~600k
       // edges) — re-swept after the r11 co-partitioned window shape
       // (4/8/16 at sf0.1, 5 reps quiet: 2.89 / 2.39 / 2.51 s)
-      partitions = Some(if (mod <= 1000) 4 else 8), prepared = true,
-      shape = shape)
+      partitions = Some(if (mod <= 1000) 4 else 8), prepared = true)
       .select(col("id"), col("label").as("component_id"))
   }
 
@@ -866,9 +863,8 @@ object PageRank {
     * DuckDB (reach ≈ nodes × component size). The per-node label set is
     * additionally hash-gated at mod=100 through pr_components.
     */
-  def componentsSummary(spark: SparkSession, dir: String, mod: Long = 10000,
-                        shape: Components.Shape = Components.Shape.CoPartitioned): DataFrame =
-    components(spark, dir, mod, shape)
+  def componentsSummary(spark: SparkSession, dir: String, mod: Long = 10000): DataFrame =
+    components(spark, dir, mod)
       .groupBy(col("component_id")).agg(count(lit(1)).as("sz"))
       .agg(count(lit(1)).as("n_components"), max(col("sz")).as("max_size"),
         sum(col("sz")).as("n_nodes"))

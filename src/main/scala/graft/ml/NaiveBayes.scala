@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.text.Text
@@ -122,19 +122,6 @@ object NaiveBayes {
         col("score").cast("double").as("score"))
   }
 
-  /** Sliding character `n`-grams of the raw text, spaces included —
-    * the fastText-style language-ID featurizer (word-boundary grams
-    * carry most of the language signal). In-row transform; rows shorter
-    * than `n` produce an empty array (the explicit guard matters:
-    * Spark's `sequence(1, len-2)` DESCENDS for len < 3 instead of
-    * returning empty, unlike DuckDB's generate_series).
-    */
-  private def charGrams(text: Column, n: Int): Column =
-    when(length(text) >= n,
-      transform(sequence(lit(1), length(text) - (n - 1)),
-        i => text.substr(i, lit(n))))
-      .otherwise(array().cast("array<string>"))
-
   /** Trained char-trigram language ID (r13 verdict task 3) — the
     * fastText-shaped TRAINED classifier next to the ta_langid stopword
     * heuristic (kept as the cheap first-pass twin): multinomial NB over
@@ -155,13 +142,16 @@ object NaiveBayes {
 
   private def langIdTf(spark: SparkSession, dir: String): DataFrame =
     graft.Caches.memoized(spark, dir, "ml:langid_chartf")(
-      // explode the POSITION sequence and substring in the next project
-      // (r14 optimization): the [[charGrams]] transform built ~|text|
-      // substrings per row inside an interpreted higher-order lambda
-      // before the explode — the substr now runs codegen'd per exploded
-      // row. Identical gram stream: positions 1..len−(n−1) on docs with
-      // len ≥ n, no rows otherwise (the transform produced an empty
-      // array there, which explode dropped).
+      // sliding character trigrams of the raw text, spaces included —
+      // the fastText-style language-ID featurizer (word-boundary grams
+      // carry most of the language signal). Explode the POSITION
+      // sequence and substring in the next project (r14 optimization):
+      // an in-row transform built ~|text| substrings per row inside an
+      // interpreted higher-order lambda before the explode — the substr
+      // runs codegen'd per exploded row. Positions 1..len−(n−1) on docs
+      // with len ≥ n only: the guard matters, as Spark's
+      // `sequence(1, len-2)` DESCENDS for len < 3 instead of returning
+      // empty, unlike DuckDB's generate_series.
       Tables.documents(spark, dir)
         .where(length(col("text")) >= LangIdGramN)
         .select(col("doc_id"), col("lang"), col("text"),
@@ -300,9 +290,10 @@ object NaiveBayes {
   private val tokSql =
     graft.text.Text.TokSql
 
-  /** DuckDB char-trigram featurizer — the [[charGrams]] twin (list
-    * comprehension over generate_series, the dedup_passages idiom);
-    * generate_series is empty for len < 3, matching the Spark guard.
+  /** DuckDB char-trigram featurizer — the [[langIdTf]] gram stream's
+    * twin (list comprehension over generate_series, the dedup_passages
+    * idiom); generate_series is empty for len < 3, matching the Spark
+    * guard.
     */
   private val charGramSql =
     s"[substr(text, i, $LangIdGramN) for i in generate_series(1, len(text) - ${LangIdGramN - 1})]"

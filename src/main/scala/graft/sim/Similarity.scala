@@ -376,7 +376,7 @@ object Similarity {
   private val BigIdStride = 1000000L
 
   /** ×[[BigReplicas]] inflated embedding corpus for the similarity
-    * measurement tier (the skewCorpus/minhashBig arithmetic-inflation
+    * measurement tier (the skewCorpus/×10-tier arithmetic-inflation
     * contract: derived by REPLAYABLE arithmetic so the oracle regenerates
     * it): replica `r` of vector `v` gets id `v + r·stride` and its
     * embedding CIRCULARLY SHIFTED by `r` positions — a deterministic

@@ -12,11 +12,9 @@ class ComponentsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def run(nodes: Seq[Long], pairs: Seq[(Long, Long)],
-                  partitions: Option[Int] = None,
-                  shape: Components.Shape = Components.Shape.CoPartitioned): Map[Long, Long] = {
+                  partitions: Option[Int] = None): Map[Long, Long] = {
     import spark.implicits._
-    Components.labels(nodes.toDF("id"), pairs.toDF("a", "b"), partitions,
-      shape = shape)
+    Components.labels(nodes.toDF("id"), pairs.toDF("a", "b"), partitions)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
@@ -56,7 +54,8 @@ class ComponentsSpec extends AnyFunSuite {
   }
 
   test("matches union-find on sparse and dense seeded graphs") {
-    for ((seed, n, m) <- Seq((7, 40, 15), (11, 30, 200), (13, 120, 90))) {
+    for ((seed, n, m) <- Seq((7, 40, 15), (11, 30, 200), (13, 120, 90),
+                             (3, 60, 40), (5, 40, 300), (17, 200, 150))) {
       val rnd = new scala.util.Random(seed)
       val nodes = (0L until n.toLong)
       val pairs = Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
@@ -86,25 +85,6 @@ class ComponentsSpec extends AnyFunSuite {
     assert(run(nodes, pairs) == nodes.map(_ -> 10L).toMap)
   }
 
-  test("both physical shapes are label-identical (co-partitioned vs broadcast-min)") {
-    // the size-switch contract: the co-partitioned window shape (the
-    // billion-node scale path and the fixture-scale default) and the
-    // broadcast-min shape (the edges≫nodes opt-in) must be the SAME
-    // round semantics — checked against union-find and each other on
-    // seeded graphs spanning sparse, dense, and deep-chain regimes
-    for ((seed, n, m) <- Seq((3, 60, 40), (5, 40, 300), (17, 200, 150))) {
-      val rnd = new scala.util.Random(seed)
-      val nodes = (0L until n.toLong)
-      val pairs = Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter { case (a, b) => a != b }
-      val want = unionFind(nodes, pairs)
-      val co = run(nodes, pairs, partitions = Some(3), shape = Components.Shape.CoPartitioned)
-      val bc = run(nodes, pairs, partitions = Some(3), shape = Components.Shape.BroadcastMin)
-      assert(co == want, s"co-partitioned diverged: seed=$seed")
-      assert(bc == want, s"broadcast-min diverged: seed=$seed")
-    }
-  }
-
   test("non-prepared star loop drops its round-0 edge cache once round 1 supersedes it") {
     // the initOwned contract (IterativeLoop.scala): a NON-prepared input
     // derives a loop-owned round-0 edge cache, and that frame must be
@@ -127,18 +107,5 @@ class ComponentsSpec extends AnyFunSuite {
     assert(frames.last.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
       "final round frame should stay cached until releaseAll")
     Caches.releaseAll()
-  }
-
-  test("10k fixture tier runs hash-equal through both shapes") {
-    // the pr_components_10k graph itself (mod-10000 events graph at the
-    // test SF) pushed through both shapes: the one-row structural
-    // summary (n_components, max_size, n_nodes) must match exactly —
-    // the flip is covered by a test, not a scaladoc caveat
-    val co = graft.graph.PageRank.componentsSummary(spark, TestSpark.sf,
-      shape = Components.Shape.CoPartitioned).collect().toSeq
-    val bc = graft.graph.PageRank.componentsSummary(spark, TestSpark.sf,
-      shape = Components.Shape.BroadcastMin).collect().toSeq
-    assert(co == bc, s"shapes diverged on the fixture graph: co=$co bc=$bc")
-    assert(co.head.getLong(2) > 0)
   }
 }

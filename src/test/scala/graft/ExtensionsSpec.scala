@@ -162,7 +162,8 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("minhash measurement tier: replica clusters surface, counts coherent") {
-    val row = Dedup.minhashBig(spark, sf).head()
+    // the registered dedup_minhash_big (portable md5 mod-p family)
+    val row = Dedup.minhashBigPortable(spark, sf).head()
     val (nDocs, nCand, nPairs) =
       (row.getAs[Long]("n_docs"), row.getAs[Long]("n_candidates"), row.getAs[Long]("n_pairs"))
     import org.apache.spark.sql.functions._
@@ -179,17 +180,21 @@ class DedupSpec extends AnyFunSuite {
     // almost completely (45 pairs per cluster at J~0.9+); demand at least
     // half to keep the bound robust to short docs
     assert(nPairs >= base * 45 / 2, s"replica clusters under-recovered: $nPairs")
+  }
 
-    // the PORTABLE (md5 mod-p) tier — the registered, oracle-hash-gated
-    // dedup_minhash_big — sees the identical corpus and must recover the
-    // replica clusters just as well; n_candidates may differ (different
-    // band-collision behavior between hash families), the verified-pair
-    // floor and doc count must not
-    val prow = Dedup.minhashBigPortable(spark, sf).head()
-    assert(prow.getAs[Long]("n_docs") == nDocs, "portable tier doc count drifted")
-    assert(prow.getAs[Long]("n_pairs") <= prow.getAs[Long]("n_candidates"))
-    assert(prow.getAs[Long]("n_pairs") >= base * 45 / 2,
-      s"portable tier under-recovered: ${prow.getAs[Long]("n_pairs")}")
+  test("capped index tiers agree: the x1 big tier equals the fixture capped pairs") {
+    // replica 0 of the inflated corpus IS the base corpus (same doc ids,
+    // same shingles), so at replicas = 1 and the fixture cap the x10
+    // tier's summary must count exactly the fixture tier's pairs: every
+    // pair sharing a kept shingle (n_candidates, i.e. minJaccard 0) and
+    // the verified pairs at the default 0.2 threshold (n_pairs)
+    val cap = Dedup.StopShingleDf
+    val row = Dedup.ngramCappedBig(spark, sf, replicas = 1, cap = cap).head()
+    assert(row.getAs[Long]("n_pairs") ==
+      Dedup.ngramJaccardPairs(spark, sf, maxShingleDf = Some(cap)).count())
+    assert(row.getAs[Long]("n_candidates") ==
+      Dedup.ngramJaccardPairs(spark, sf, minJaccard = 0.0, maxShingleDf = Some(cap)).count())
+    assert(row.getAs[Long]("n_pairs") > 0)
   }
 
   test("duplicated passages match a brute-force sliding-window replay") {

@@ -198,7 +198,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // the minhash measurement tier: band equi-join candidates, exact
     // verify keyed on doc ids; the only nested loop is the final
     // 1-row × 1-row summary crossJoin (bounded by construction)
-    val mb = plan(graft.dedup.Dedup.minhashBig(spark, sf))
+    val mb = plan(graft.dedup.Dedup.minhashBigPortable(spark, sf))
     assert(!mb.contains("CartesianProduct"), s"minhash_big cartesian:\n$mb")
     // capped jaccard: the df cap is a semi-join on the already-shuffled
     // shingle key — keyed end to end
@@ -223,17 +223,9 @@ class PlanAuditSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val e0 = Seq((2L, 1L), (3L, 1L), (4L, 2L)).toDF("src", "dst")
-    // BOTH physical shapes stay join-shaped: the co-partitioned default
-    // AND the broadcast-min opt-in (still live via componentsSummary —
-    // auditing only the default would let a regression in the broadcast
-    // round's join hide behind the shape switch)
-    Seq[graft.graph.Components.Shape](
-      graft.graph.Components.Shape.CoPartitioned,
-      graft.graph.Components.Shape.BroadcastMin).foreach { shape =>
-      val rp = plan(graft.graph.Components.auditRound(e0, shape))
-      assert(!rp.contains("CartesianProduct") && !rp.contains("BroadcastNestedLoopJoin"),
-        s"components round ($shape) not join-shaped:\n$rp")
-    }
+    val rp = plan(graft.graph.Components.auditRound(e0))
+    assert(!rp.contains("CartesianProduct") && !rp.contains("BroadcastNestedLoopJoin"),
+      s"components round not join-shaped:\n$rp")
     // PII scan/redact are narrow per-row regex maps: scan → project,
     // zero exchanges (the embarrassingly-parallel contract the scaladoc
     // claims)
@@ -256,7 +248,7 @@ class PlanAuditSpec extends AnyFunSuite {
     withTransparentMemos {
     // skew tier: inverted index, df semi-join cap, verify joins — all
     // keyed; the only nested loops are the 1-row summary crossJoins
-    // (bounded by construction, the minhashBig shape)
+    // (bounded by construction, the minhashBigPortable shape)
     val sk = plan({
       Caches.releaseAll()
       graft.dedup.Dedup.ngramSkew(spark, sf)
@@ -535,6 +527,25 @@ class PlanAuditSpec extends AnyFunSuite {
     val bhj = "BroadcastHashJoin".r.findAllIn(p).size
     assert(bhj >= 2, s"expected both adjacency joins broadcast, found $bhj:\n$p")
     Caches.releaseAll()
+  }
+
+  test("shingle-index consumers plan no exchange on the pre-placed (s, sl) key") {
+    // production memo mode deliberately (no transparent bracket): the
+    // shingle index memos are repartitioned on (s, sl) with an explicit
+    // count, and the truncated leaf advertises that placement — so every
+    // tier's df aggregate, cap anti-join and self-join sides (the right
+    // side renamed to s2, sl2) must plan ZERO per-rep exchanges keyed on
+    // the index's key. A lost placement re-exchanges the corpus-sized
+    // index every rep (the r15 AQE-coalescing bug).
+    val indexKeyed = "Exchange hashpartitioning\\(s2?#\\d+L?, sl2?#\\d+".r
+    Caches.releaseAll()
+    try {
+      Seq("dedup_ngram_jaccard", "dedup_ngram_capped", "dedup_overlap_pairs",
+        "dedup_ngram_skew", "dedup_ngram_capped_big").foreach { name =>
+        val p = plan(SparkEntry.queries(name)(spark, sf))
+        assert(indexKeyed.findFirstIn(p).isEmpty, s"$name re-exchanges the index:\n$p")
+      }
+    } finally Caches.releaseAll()
   }
 
   test("memo-fed queries plan identically on consecutive invocations (stats discipline)") {
