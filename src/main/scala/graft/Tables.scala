@@ -82,14 +82,31 @@ object Tables {
     */
   def documentsInflated(spark: SparkSession, dir: String, replicas: Int): DataFrame =
     Caches.memoized(spark, dir, s"corpus:docs_big_$replicas") {
-      documents(spark, dir)
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(0), lit(replicas - 1))).as("r"))
+      replicate(documents(spark, dir).select(col("doc_id"), col("text")), replicas)
         .select((col("doc_id") * replicas + col("r")).as("doc_id"),
           when(col("r") === 0, col("text"))
             .otherwise(concat(col("text"), lit(" zz"), expr("repeat('x', r)")))
             .as("text"))
     }
+
+  /** The rows of `base` (which carries a `doc_id`) with a replica index
+    * `r` in `0 until replicas` added: the shared first step of every ×N
+    * scale-tier corpus ([[documentsInflated]], `Text.tokensInflated`,
+    * `Dedup.skewCorpus`), each of which keeps its own
+    * `doc_id * replicas + r` remap and perturbation.
+    *
+    * A fixture table is one small Parquet file, so one scan split: left
+    * there, every per-row kernel downstream of the inflation (tokenize,
+    * shingle, explode, hash) runs in ONE task whatever the core count.
+    * The base rows are therefore hash-placed by their source `doc_id` on
+    * the session's shuffle partitions BEFORE the replica explode — the
+    * exchange moves the fixture-sized corpus, not the ×N one. The count
+    * is explicit so AQE cannot coalesce the placement back to one
+    * partition (the same rule as the dedup shingle index).
+    */
+  def replicate(base: DataFrame, replicas: Int): DataFrame =
+    base.repartition(base.sparkSession.sessionState.conf.numShufflePartitions, col("doc_id"))
+      .withColumn("r", explode(sequence(lit(0), lit(replicas - 1))))
 
   /** `yyyy-MM-dd` rendering of a timestamp column — the reference compares
     * date *strings* (substring containment `Q1.scala:32`, lexicographic

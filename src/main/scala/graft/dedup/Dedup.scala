@@ -443,8 +443,10 @@ object Dedup {
     * carries the build, the median measures the steady state): the
     * 50k-doc tokenize+shingle scan is corpus prep, not LSH machinery, and
     * each tier references it several times — uncached it re-ran three
-    * times per invocation (measured: 6.9 s of the 14.9 s cold total at
-    * sf0.1). The per-rep measurement keeps the tier-specific work.
+    * times per invocation (6.9 s of a 14.9 s cold total at sf0.1, measured
+    * while the inflated corpus still ran in one task; see
+    * [[graft.Tables.replicate]]). The per-rep measurement keeps the
+    * tier-specific work.
     */
   private[graft] def bigShingles(spark: SparkSession, dir: String, replicas: Int): DataFrame =
     memoized(spark, dir, s"big_shingles_$replicas") {
@@ -669,9 +671,7 @@ object Dedup {
     * chr() code (digits would be stripped by the edge-trim).
     */
   private def skewCorpus(spark: SparkSession, dir: String, replicas: Int): DataFrame =
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"),
-        explode(sequence(lit(0), lit(replicas - 1))).as("r"))
+    Tables.replicate(Tables.documents(spark, dir).select(col("doc_id"), col("text")), replicas)
       .select((col("doc_id") * replicas + col("r")).as("doc_id"),
         concat(
           when(col("r") === 0, col("text"))

@@ -64,13 +64,11 @@ object Text {
     */
   def tokensInflated(spark: SparkSession, dir: String, replicas: Int): DataFrame =
     // only the BASE tokenize is memoized: caching the ×10 token arrays
-    // measured 4 s of pure cache materialization (50k array rows),
-    // MORE than the tokenize it saved — while the inflation itself is
-    // an explode + array-concat cheap enough to recompute per consumer
+    // would add a 50k-array-row cache materialization (measured at 4 s
+    // when the whole inflated corpus still ran in one task) to save an
+    // explode + array-concat that is cheap to recompute per consumer
     // (each consumer's own memo materializes its derived index anyway)
-    tokensBase(spark, dir)
-      .select(col("doc_id"), col("tokens"),
-        explode(sequence(lit(0), lit(replicas - 1))).as("r"))
+    Tables.replicate(tokensBase(spark, dir), replicas)
       .select((col("doc_id") * replicas + col("r")).as("doc_id"),
         when(col("r") === 0, col("tokens"))
           .otherwise(concat(col("tokens"),
