@@ -2,19 +2,24 @@
 """Print one traced benchmark pass as an indented span tree.
 
     python3 scripts/span_tree.py <spans.jsonl> [pass]
+    python3 scripts/span_tree.py <spans.jsonl> --query Q
 
 Reads the spans a traced perfbench run writes
 (`.bench_build/perfbench/runs/<workload>-seed<n>-trace1/spans.jsonl`, one
 JSON object per line: id, parent, kind, name, startUs, endUs) and prints
 pass -> call -> construct/execute -> build/job -> stage with each span's
 wall time and its share of the pass. `pass` is the 1-based pass number
-among the file's traced passes (default 1).
+among the file's traced passes (default 1). With `--query Q` it prints,
+for every traced pass in the file, only the subtree of query Q's call
+(shares still of that pass), to compare one call across passes or
+commits.
 
 The tracer parents Spark jobs on the construct or execute span that
 issued them, next to the memo builds of that span; a job that ran inside
 a build's window is shown under that build, so a build's row reads as
 its own jobs and stages.
 """
+import argparse
 import json
 import sys
 
@@ -61,17 +66,34 @@ def show(span, kids, total, depth=0):
 
 
 def main(argv):
-    if len(argv) not in (2, 3):
-        sys.exit(__doc__.strip().splitlines()[2].strip())
-    with open(argv[1]) as f:
+    ap = argparse.ArgumentParser(description=__doc__.strip().splitlines()[0])
+    ap.add_argument("spans", help="spans.jsonl of a traced perfbench run")
+    ap.add_argument("pass_no", nargs="?", type=int, metavar="pass",
+                    help="1-based traced pass to print (default 1)")
+    ap.add_argument("--query", metavar="Q",
+                    help="print only Q's call subtree, from every traced pass")
+    args = ap.parse_args(argv[1:])
+    if args.query and args.pass_no is not None:
+        ap.error("give a pass or --query, not both")
+    with open(args.spans) as f:
         spans = [json.loads(line) for line in f if line.strip()]
     passes = sorted((s for s in spans if s["kind"] == "pass"), key=lambda s: s["startUs"])
-    n = int(argv[2]) if len(argv) == 3 else 1
-    if not 1 <= n <= len(passes):
-        sys.exit(f"{argv[1]}: pass {n} requested, {len(passes)} traced passes in the file")
-    root = passes[n - 1]
     kids = children_of(spans)
-    show(root, kids, dur_s(root))
+    if args.query:
+        found = 0
+        for n, root in enumerate(passes, 1):
+            for call in kids.get(root["id"], []):
+                if call["kind"] == "call" and call["name"] == args.query:
+                    print(f"pass {n} ({dur_s(root):.3f} s)")
+                    show(call, kids, dur_s(root), 1)
+                    found += 1
+        if not found:
+            sys.exit(f"{args.spans}: no call of {args.query} in {len(passes)} traced passes")
+        return
+    n = args.pass_no or 1
+    if not 1 <= n <= len(passes):
+        sys.exit(f"{args.spans}: pass {n} requested, {len(passes)} traced passes in the file")
+    show(passes[n - 1], kids, dur_s(passes[n - 1]))
 
 
 if __name__ == "__main__":

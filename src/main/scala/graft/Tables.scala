@@ -89,24 +89,31 @@ object Tables {
             .as("text"))
     }
 
+  /** `df` (which carries a `doc_id`) hash-placed by `doc_id` on the
+    * session's shuffle partitions.
+    *
+    * A fixture table is one small Parquet file, so one scan split: left
+    * there, every per-row kernel downstream of the scan (tokenize,
+    * shingle, explode, hash) runs in ONE task whatever the core count.
+    * Placing the rows before such a kernel spreads it over every core at
+    * the price of one exchange of the fixture-sized rows, so it pays only
+    * where the kernel outweighs the exchange. The count is explicit so
+    * AQE cannot coalesce the placement back to one partition (the same
+    * rule as the dedup shingle index).
+    */
+  def placeByDocId(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, col("doc_id"))
+
   /** The rows of `base` (which carries a `doc_id`) with a replica index
     * `r` in `0 until replicas` added: the shared first step of every ×N
     * scale-tier corpus ([[documentsInflated]], `Text.tokensInflated`,
     * `Dedup.skewCorpus`), each of which keeps its own
-    * `doc_id * replicas + r` remap and perturbation.
-    *
-    * A fixture table is one small Parquet file, so one scan split: left
-    * there, every per-row kernel downstream of the inflation (tokenize,
-    * shingle, explode, hash) runs in ONE task whatever the core count.
-    * The base rows are therefore hash-placed by their source `doc_id` on
-    * the session's shuffle partitions BEFORE the replica explode — the
-    * exchange moves the fixture-sized corpus, not the ×N one. The count
-    * is explicit so AQE cannot coalesce the placement back to one
-    * partition (the same rule as the dedup shingle index).
+    * `doc_id * replicas + r` remap and perturbation. The base rows are
+    * placed ([[placeByDocId]]) BEFORE the replica explode, so the
+    * exchange moves the fixture-sized corpus, not the ×N one.
     */
   def replicate(base: DataFrame, replicas: Int): DataFrame =
-    base.repartition(base.sparkSession.sessionState.conf.numShufflePartitions, col("doc_id"))
-      .withColumn("r", explode(sequence(lit(0), lit(replicas - 1))))
+    placeByDocId(base).withColumn("r", explode(sequence(lit(0), lit(replicas - 1))))
 
   /** `yyyy-MM-dd` rendering of a timestamp column — the reference compares
     * date *strings* (substring containment `Q1.scala:32`, lexicographic

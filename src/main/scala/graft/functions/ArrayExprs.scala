@@ -223,6 +223,45 @@ object ArrayExprs {
       copy(child = newChild)
   }
 
+  /** Per-element md5 buckets of an array<string>: element i is the
+    * first four md5 bytes of element i as an unsigned big-endian int,
+    * mod `n` — bit-equal to the SQL chain
+    * `CAST(conv(substring(md5(w), 1, 8), 16, 10) AS BIGINT) % n` (and to
+    * DuckDB's `('0x' || substr(md5(w), 1, 8))::BIGINT % n`), in input
+    * order with duplicates kept: one entry per token OCCURRENCE, the
+    * feature-id convention of the ml suite. A null element maps to
+    * null, as md5(null) does. One native md5 per element instead of
+    * rendering the 32-char hex digest, cutting it and re-parsing eight
+    * hex digits through `conv`.
+    */
+  case class Md5BucketArray(child: Expression, n: Int)
+    extends UnaryExpression with CodegenFallback {
+    require(n > 0, s"md5_bucket_array modulus must be positive, got $n")
+    override def dataType: DataType = ArrayType(LongType,
+      child.dataType.asInstanceOf[ArrayType].containsNull)
+    override def prettyName: String = "md5_bucket_array"
+
+    override def nullSafeEval(input: Any): Any = {
+      val arr = input.asInstanceOf[ArrayData]
+      val md = java.security.MessageDigest.getInstance("MD5")
+      val out = new Array[Any](arr.numElements())
+      var j = 0
+      while (j < out.length) {
+        if (!arr.isNullAt(j)) {
+          val d = md.digest(arr.getUTF8String(j).getBytes)
+          val h = ((d(0) & 0xFFL) << 24) | ((d(1) & 0xFFL) << 16) |
+            ((d(2) & 0xFFL) << 8) | (d(3) & 0xFFL)
+          out(j) = h % n
+        }
+        j += 1
+      }
+      new GenericArrayData(out)
+    }
+
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
   /** PORTABLE MinHash signature over an array<long> of base hashes:
     * sig(i) = min over h of `(A_i * (h % p) + B_i) % p` with
     * p = 2^31−1 (prime), A_i = ((i+1) * 2654435761) % p (Knuth's
@@ -716,6 +755,9 @@ object ArrayExprs {
 
   def md5Long60Array(arr: Column): Column =
     GraftExpr.column(Md5Long60Array(GraftExpr.expression(arr)))
+
+  def md5BucketArray(arr: Column, n: Int): Column =
+    GraftExpr.column(Md5BucketArray(GraftExpr.expression(arr), n))
 
   def minhashPermSig(hashes: Column, numHashes: Int): Column =
     GraftExpr.column(MinHashPermSig(GraftExpr.expression(hashes), numHashes))

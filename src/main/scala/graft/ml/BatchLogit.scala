@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.ArrayExprs
 import graft.text.Text
 
 /** Batch-gradient logistic regression — the SET-ORIENTED counterpart of
@@ -49,19 +50,22 @@ object BatchLogit {
   val NumFeatures = 1000
 
   /** Exploded training table: (docid, label, feature) — one row per
-    * token OCCURRENCE. conv(md5-prefix) is codegen'd and replayable in
-    * any engine with md5.
+    * token OCCURRENCE. The documents rows are placed on the session's
+    * shuffle partitions (`Tables.placeByDocId`) before the tokenizer, so
+    * the tokenize and the per-occurrence hash run on every core, not in
+    * the one task of the one-split fixture scan. The feature hash is the
+    * native `md5BucketArray` kernel, bit-equal to the SQL form
+    * `CAST(conv(substring(md5(w), 1, 8), 16, 10) AS BIGINT) % n` the
+    * oracles replay, which renders each token's 32-char hex digest only
+    * to cut and re-parse eight digits of it.
     */
   def occurrences(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
+    Tables.placeByDocId(Tables.documents(spark, dir).select(col("doc_id"), col("text")))
       .withColumn("toks", Text.tokenize(col("text")))
       .select(
         col("doc_id").as("docid"),
         when(array_contains(col("toks"), "spark"), 1).otherwise(0).as("label"),
-        explode(col("toks")).as("w"))
-      .select(col("docid"), col("label"),
-        (expr("CAST(conv(substring(md5(w), 1, 8), 16, 10) AS BIGINT)") % NumFeatures)
-          .as("feature"))
+        explode(ArrayExprs.md5BucketArray(col("toks"), NumFeatures)).as("feature"))
 
   /** Occurrence-count compression of [[occurrences]]: one row per
     * DISTINCT (docid, feature) with its multiplicity. Exact and lossless

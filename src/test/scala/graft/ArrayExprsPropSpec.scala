@@ -111,6 +111,30 @@ class ArrayExprsPropSpec extends AnyFunSuite {
       assert(r.getSeq[Long](0).sorted == r.getSeq[Long](1).sorted))
   }
 
+  test("Md5BucketArray equals the conv(md5) SQL chain element by element") {
+    import spark.implicits._
+    val ascii = Gen.chooseNum(1, 10).flatMap(n => Gen.stringOfN(n, Gen.alphaLowerChar))
+    val unicode = Gen.chooseNum(1, 6).flatMap(n => Gen.stringOfN(n, Gen.oneOf("äöüßéñçøåœ€日本語кириллица")))
+    // a small vocabulary so repeated tokens (kept, not deduplicated) occur
+    val word = Gen.frequency(3 -> Gen.oneOf("spark", "the", "a"), 4 -> ascii, 2 -> unicode)
+    val docs = Gen.listOfN(60, Gen.chooseNum(0, 20).flatMap(Gen.listOfN(_, word))).sample.get
+      .map(Option(_)) ++
+      Seq(Some(Nil), Some(List("spark", "spark", "spark")), Some(List("a", null, "a")), None)
+    Seq(1000, 7).foreach { n =>
+      val df = docs.toDF("t").select(
+        ArrayExprs.md5BucketArray(col("t"), n).as("native"),
+        expr(s"transform(t, w -> CAST(conv(substring(md5(w), 1, 8), 16, 10) AS BIGINT) % $n)")
+          .as("sql"))
+      val rows = df.collect()
+      assert(rows.length == docs.length)
+      assert(rows.count(_.isNullAt(0)) == 1, "the null array must map to null")
+      rows.foreach { r =>
+        assert(r.isNullAt(0) == r.isNullAt(1))
+        if (!r.isNullAt(0)) assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"n=$n")
+      }
+    }
+  }
+
   test("MinHashPermSig equals a scalar mod-p permutation recompute") {
     import spark.implicits._
     val P = 2147483647L

@@ -493,7 +493,7 @@ class SpamSpec extends AnyFunSuite {
     val want = collectedInstances.map { case (d, l, feats) =>
       (d, l) -> feats.map(f => w.getOrElse(f, 0.0)).sum
     }.toMap
-    val got = Spam.applyModel(Spam.instancesShared(spark, sf), Spam.trainShared(spark, sf))
+    val got = Spam.applyModel(Spam.instancesShared(spark, sf), Spam.train(spark, sf))
       .select(org.apache.spark.sql.functions.col("docid"),
         org.apache.spark.sql.functions.col("label"),
         org.apache.spark.sql.functions.round(

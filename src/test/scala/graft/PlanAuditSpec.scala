@@ -548,6 +548,26 @@ class PlanAuditSpec extends AnyFunSuite {
     } finally Caches.releaseAll()
   }
 
+  test("spam_ensemble_seq scores its three models in one aggregate with no sort-merge join") {
+    // one row per feature in each shard model makes the broadcast join
+    // chain exact. Size-based broadcasts are off here: at fixture scale
+    // the planner would broadcast re-joined per-model aggregates anyway
+    // and hide them, where at sf0.1 they plan as sort-merge joins.
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val df = graft.ml.Spam.ensembleSeq(spark, sf)
+      df.collect()
+      val p = plan(df)
+      assert(p.contains("isFinalPlan=true"), p)
+      assert(!p.contains("SortMergeJoin"), s"sort-merge join in spam_ensemble_seq:\n$p")
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
   test("memo-fed queries plan identically on consecutive invocations (stats discipline)") {
     // the pr_hits r9 / pr_triangles r11 bug class: a LAZY memo hands its
     // first consumer estimate stats and every later consumer measured

@@ -3,10 +3,12 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.analysis.Curation
 import graft.dedup.Dedup
+import graft.ml.{BatchLogit, Spam}
 
-/** The ×N scale-tier corpora (`Tables.replicate` and its three callers):
-  * they must spread over the session's shuffle partitions, and what the
-  * tiers answer must not depend on that placement.
+/** The placed corpora (`Tables.placeByDocId`: the ×N scale tiers through
+  * `Tables.replicate`, and the ml occurrence table): they must spread
+  * over the session's shuffle partitions, and what the queries over them
+  * answer must not depend on that placement.
   */
 class ScaleTierSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -14,7 +16,7 @@ class ScaleTierSpec extends AnyFunSuite {
 
   test("scale-tier corpora spread over the session's shuffle partitions") {
     // the fixture documents file is one scan split: without the placement
-    // every inflated corpus (and each per-row kernel over it) is one task
+    // every placed corpus (and each per-row kernel over it) is one task
     val n = spark.sessionState.conf.numShufflePartitions
     assert(n > 1, "the test session must run more than one shuffle partition")
     Caches.releaseAll()
@@ -22,7 +24,8 @@ class ScaleTierSpec extends AnyFunSuite {
       val placed = Seq(
         "documentsInflated" -> Tables.documentsInflated(spark, sf, 4),
         "bigShingles"       -> Dedup.bigShingles(spark, sf, 4),
-        "skewShingles"      -> Dedup.skewShingles(spark, sf, 3))
+        "skewShingles"      -> Dedup.skewShingles(spark, sf, 3),
+        "occurrences"       -> BatchLogit.occurrences(spark, sf))
         .map { case (name, df) => name -> df.rdd.getNumPartitions }
       assert(placed.forall(_._2 == n), s"partitions per tier $placed, want $n each")
     } finally Caches.releaseAll()
@@ -39,7 +42,10 @@ class ScaleTierSpec extends AnyFunSuite {
       Map(
         "ngramCappedBig"     -> Dedup.ngramCappedBig(spark, sf, replicas = 3),
         "minhashBigPortable" -> Dedup.minhashBigPortable(spark, sf, replicas = 3),
-        "curateBig"          -> Curation.curateBig(spark, sf, replicas = 3))
+        "curateBig"          -> Curation.curateBig(spark, sf, replicas = 3),
+        "spam_ensemble_seq"  -> Spam.ensembleSeq(spark, sf),
+        "spam_train_seq"     -> Spam.trainSeqShared(spark, sf),
+        "ml_batch_gd"        -> BatchLogit.train(spark, sf))
         .map { case (q, df) => q -> df.collect().map(_.toString).toSeq.sorted }
     }
     try {
