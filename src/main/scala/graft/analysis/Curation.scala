@@ -247,8 +247,8 @@ object Curation {
     * pipeline runs. All joins key on doc_id; the per-stage scale
     * arguments (broadcast eval set, banded LSH, bounded label
     * propagation) carry over unchanged.
-    */
-  /** `lineDedup = true` appends the optional C4-style line-dedup stage
+    *
+    * `lineDedup = true` appends the optional C4-style line-dedup stage
     * (r13 verdict task 4): per-doc removed-line stats from
     * [[graft.dedup.Dedup.dedupLinesOn]] over the planted multi-line
     * fixture view of the same corpus, gating out docs that are mostly

@@ -633,22 +633,6 @@ object TextAnalysis {
     // build-side: from the shared per-run tokenize memo (r11 ask 3)
     winnowOn(Text.tokensBase(spark, dir).withColumnRenamed("tokens", "toks"))
 
-  /** PRODUCTION-family winnow: same algorithm, gram hash =
-    * `xxhash64(concat_ws(' ', gram))` (one 64-bit mix) instead of the
-    * md5 → hex → conv round the oracle replays — the
-    * minhashBigPortable dual-family split (r12 verdict task 1): the md5
-    * family exists so DuckDB can regenerate every fingerprint (the
-    * ta_winnow / dedup_winnow_pairs gates); a 100 TB ingest keeps this
-    * cheaper family, whose pair-set agreement with the md5 family on
-    * the fixture is spec-pinned (CurationSpec), as is the hash formula
-    * itself against the declarative xxhash64 twin.
-    */
-  def winnowXx(spark: SparkSession, dir: String): DataFrame =
-    graft.Caches.memoized(spark, dir, "ta:winnow_xx") {
-      winnowOn(Text.tokensBase(spark, dir).withColumnRenamed("tokens", "toks"),
-        useMd5 = false)
-    }
-
   /** [[winnow]] over an explicit (doc_id, toks) frame — the
     * frame-parameterized core the guarantee spec drives directly.
     * One NATIVE per-row pass ([[graft.functions.ArrayExprs.WinnowFps]]):
@@ -658,33 +642,32 @@ object TextAnalysis {
     * a doc-keyed window SORT and evaluated
     * `conv(substr(md5(concat_ws(...))))` per gram row — the #1
     * build-ledger cost, 33.9 s in the contended r12 driver run).
-    * Value-equality with the declarative relational form is spec-pinned
-    * (CurationSpec) and the sf0.01 DuckDB gate replays the md5 arithmetic
-    * end-to-end.
+    * The gram hash is the md5 family the oracle replays (the one hash
+    * WinnowFps has); value-equality with the declarative relational form
+    * is spec-pinned (CurationSpec) and the sf0.01 DuckDB gate replays the
+    * md5 arithmetic end-to-end.
     */
-  def winnowOn(docs: DataFrame, useMd5: Boolean = true): DataFrame =
+  def winnowOn(docs: DataFrame): DataFrame =
     docs
       .where(size(col("toks")) >= WinnowK + WinnowW - 1)
       .select(col("doc_id"),
         explode(graft.functions.ArrayExprs.winnowFps(
-          col("toks"), WinnowK, WinnowW, useMd5)).as("pk"))
+          col("toks"), WinnowK, WinnowW)).as("pk"))
       .select(col("doc_id"), col("pk.pos").as("pos"), col("pk.fp").as("fp"))
 
   /** The r12 DECLARATIVE relational winnow — kept as the spec
     * cross-check for [[winnowOn]]'s native expression (CurationSpec asserts
-    * row-set equality on the fixture for both hash families; the sf0.01
-    * oracle gate re-derives the md5 family independently in DuckDB).
+    * row-set equality on the fixture; the sf0.01 oracle gate re-derives
+    * the same md5 hashes independently in DuckDB).
     */
-  private[graft] def winnowDeclarative(docs: DataFrame, useMd5: Boolean = true): DataFrame = {
+  private[graft] def winnowDeclarative(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tk = docs
       .where(size(col("toks")) >= WinnowK + WinnowW - 1)
       .select(col("doc_id"), col("toks"), size(col("toks")).as("n"))
     val hashSql =
-      if (useMd5)
-        s"""CAST(conv(substr(md5(concat_ws(' ', slice(toks, i + 1, $WinnowK))),
-            1, 8), 16, 10) AS BIGINT) % 2147483647"""
-      else s"xxhash64(concat_ws(' ', slice(toks, i + 1, $WinnowK)))"
+      s"""CAST(conv(substr(md5(concat_ws(' ', slice(toks, i + 1, $WinnowK))),
+          1, 8), 16, 10) AS BIGINT) % 2147483647"""
     val grams = tk
       .select(col("doc_id"), col("toks"), col("n"),
         explode(expr(s"sequence(0, n - $WinnowK)")).as("i"))

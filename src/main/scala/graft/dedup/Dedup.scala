@@ -169,6 +169,16 @@ object Dedup {
             .otherwise(lit(""))))
         .otherwise(col("text")).as("text"))
 
+  /** The fixture-tier line-dedup stats table, memoized like its siblings
+    * contamination/boilerplate (corpus-wide membership index + per-doc
+    * stats = build-time corpus prep): consumed by the dedup_lines gate
+    * AND the pipeline_curate_lines composition in one registry run —
+    * unmemoized, both re-ran the full explode + hot-line aggregate per
+    * bench rep.
+    */
+  def dedupLines(spark: SparkSession, dir: String): DataFrame =
+    memoized(spark, dir, "lines_fixture")(dedupLinesOn(linesFixture(spark, dir)))
+
   /** C4/RefinedWeb-style LINE-level dedup (r13 verdict task 4) — the
     * substring-granularity step between document dedup ([[exact]]) and
     * passage dedup ([[dupPassages]]): any exact line occurring in
@@ -188,16 +198,6 @@ object Dedup {
     * verbatim — and ultra-hot lines (df ≫ minDocs) cost nothing extra:
     * the aggregate is per distinct line, never per pair.
     */
-  /** The fixture-tier line-dedup stats table, memoized like its siblings
-    * contamination/boilerplate (corpus-wide membership index + per-doc
-    * stats = build-time corpus prep): consumed by the dedup_lines gate
-    * AND the pipeline_curate_lines composition in one registry run —
-    * unmemoized, both re-ran the full explode + hot-line aggregate per
-    * bench rep.
-    */
-  def dedupLines(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "lines_fixture")(dedupLinesOn(linesFixture(spark, dir)))
-
   def dedupLinesOn(docs: DataFrame, minDocs: Int = 2): DataFrame = {
     val lines = docs.select(col("doc_id"),
       posexplode(split(col("text"), "\n", -1)).as(Seq("pos", "line")))
@@ -816,13 +816,6 @@ object Dedup {
     dfStats.crossJoin(pairs)
   }
 
-  /** Near-dup group resolution: connected components over the
-    * MinHash-pair graph, labels = min doc_id of the component (canonical
-    * doc), via the shared [[graft.graph.Components]] alternating
-    * large-star/small-star module — O(log n) rounds independent of
-    * component diameter (the 100 TB fix for chained-duplicate paths),
-    * one driver scalar per round. All shuffles key on doc id.
-    */
   /** [[minhashPairs]] behind the cross-query memo: dedup_minhash and
     * dedup_groups both consume the pair graph, one LSH join per run.
     */
@@ -839,6 +832,13 @@ object Dedup {
   def dupGroups(spark: SparkSession, dir: String, minJaccard: Double = 0.5): DataFrame =
     memoized(spark, dir, s"groups_$minJaccard")(dupGroupsUncached(spark, dir, minJaccard))
 
+  /** Near-dup group resolution: connected components over the
+    * MinHash-pair graph, labels = min doc_id of the component (canonical
+    * doc), via the shared [[graft.graph.Components]] alternating
+    * large-star/small-star module — O(log n) rounds independent of
+    * component diameter (the 100 TB fix for chained-duplicate paths),
+    * one driver scalar per round. All shuffles key on doc id.
+    */
   private def dupGroupsUncached(spark: SparkSession, dir: String, minJaccard: Double): DataFrame =
     graft.graph.Components.labels(
       Tables.documents(spark, dir).select(col("doc_id")),
@@ -1052,8 +1052,8 @@ object Dedup {
     * previous run), every join is an equi-join keyed on fp / band
     * bucket / doc id, and the exact-verify join touches candidates
     * only. Cost scales with batch × collision rate, not corpus².
-    */
-  /** `bloomExact = true` routes the exact-fingerprint membership check
+    *
+    * `bloomExact = true` routes the exact-fingerprint membership check
     * through a bloom of the corpus fingerprints (the op_bloom_join
     * runtime-filter composition): at 100 TB the corpus fp relation is
     * batch-side-dwarfing, and the bloom — a persistable artifact of the
@@ -1244,12 +1244,6 @@ object Dedup {
           FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
         WHERE jaccard >= $minJ"""
 
-  /** Replay of [[ngramJaccardPairs]] WITH the stop-shingle df cap: the
-    * inverted index drops shingles with df > cap before the self-join
-    * (intersections undercount), while denominators keep the full
-    * per-doc shingle counts — the conservative-undercount semantics the
-    * cap promises.
-    */
   /** Full replay of [[ngramSkew]]: the inflation + boilerplate corpus
     * rebuilt in SQL (identical arithmetic and word-for-word templates),
     * shingled, then the df stats computed analytically and the capped
@@ -1295,14 +1289,6 @@ object Dedup {
         SELECT n_docs, n_shingle_keys, n_hot_keys, cand_uncapped, cand_capped, n_pairs
         FROM d, stats, p"""
 
-  /** Full replay of [[minhashBigPortable]] as a chained CTE: the ×10
-    * inflation arithmetic, tokenize+shingle, 60-bit md5 base hashes,
-    * the 64-permutation mod-p signature, 16×4 Horner band keys, the
-    * band bucket-join with d1 < d2 + DISTINCT, and the exact
-    * set-Jaccard verify — every count in the one summary row is
-    * hash-compared. The Horner key expression is emitted by the SAME
-    * [[hornerKey]] builder the Spark lambda uses.
-    */
   /** The shared CTE chain of the portable-family big tier — inflation
     * arithmetic, tokenize+shingle, 60-bit md5 base hashes, mod-p
     * permutation signature, Horner band keys, and the DISTINCT
@@ -1340,6 +1326,14 @@ object Dedup {
             ON x.b = y.b AND x.key = y.key AND x.doc_id < y.doc_id)"""
   }
 
+  /** Full replay of [[minhashBigPortable]] as a chained CTE: the ×10
+    * inflation arithmetic, tokenize+shingle, 60-bit md5 base hashes,
+    * the 64-permutation mod-p signature, 16×4 Horner band keys, the
+    * band bucket-join with d1 < d2 + DISTINCT, and the exact
+    * set-Jaccard verify — every count in the one summary row is
+    * hash-compared. The Horner key expression is emitted by the SAME
+    * [[hornerKey]] builder the Spark lambda uses.
+    */
   private def minhashBigOracle(minJ: Double, replicas: Int): String = {
     s"""WITH ${portableBandCtes(replicas)},
         ver AS (
@@ -1382,6 +1376,12 @@ object Dedup {
                CAST(count(CASE WHEN j >= $minJ THEN 1 END) AS BIGINT) AS n_pairs
         FROM v"""
 
+  /** Replay of [[ngramJaccardPairs]] WITH the stop-shingle df cap: the
+    * inverted index drops shingles with df > cap before the self-join
+    * (intersections undercount), while denominators keep the full
+    * per-doc shingle counts — the conservative-undercount semantics the
+    * cap promises.
+    */
   private def cappedJaccardOracle(minJ: Double, cap: Long): String =
     s"""WITH $shSql,
         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
@@ -1563,24 +1563,9 @@ object Dedup {
     * memo.
     */
   def winnowPairs(spark: SparkSession, dir: String,
-                  minShared: Int = 3, dfCap: Int = 50): DataFrame =
-    winnowPairsOn(graft.analysis.TextAnalysis.winnow(spark, dir), minShared, dfCap)
-
-  /** [[winnowPairs]] on the PRODUCTION xxhash64 fingerprint family
-    * ([[graft.analysis.TextAnalysis.winnowXx]]) — what a 100 TB ingest
-    * runs. Family agreement is spec-pinned (CurationSpec "winnow hash
-    * families agree"): both families detect every true near-dup pair
-    * exactly (the winnowing guarantee is family-independent); only
-    * n_shared-threshold-boundary pairs may flip, because which gram
-    * wins a window is a hash-order question.
-    */
-  def winnowPairsXx(spark: SparkSession, dir: String,
-                    minShared: Int = 3, dfCap: Int = 50): DataFrame =
-    winnowPairsOn(graft.analysis.TextAnalysis.winnowXx(spark, dir), minShared, dfCap)
-
-  private[graft] def winnowPairsOn(fpsIn: DataFrame,
-                                   minShared: Int, dfCap: Int): DataFrame = {
-    val fps = fpsIn.select(col("doc_id"), col("fp")).distinct()
+                  minShared: Int = 3, dfCap: Int = 50): DataFrame = {
+    val fps = graft.analysis.TextAnalysis.winnow(spark, dir)
+      .select(col("doc_id"), col("fp")).distinct()
     val hot = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
       .where(col("df") > dfCap).select(col("fp"))
     val cold = fps.join(hot, Seq("fp"), "left_anti")

@@ -449,45 +449,12 @@ object ArrayExprs {
   }
 
   /** Random-hyperplane sign sketch over an array<float>: bit j =
-    * [Σ_d v(d)·w(j,d) > 0] with w(j,d) = ±1 derived from xxhash64 of
-    * (j,d) — deterministic pseudo-random planes, one native pass
-    * (bits × dims) instead of interpreted nested HOFs. Output
-    * array<int> of 0/1, matching the declarative form's shape.
-    */
-  case class SignSketch(child: Expression, bits: Int)
-    extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def prettyName: String = "sign_sketch"
-
-    override def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[ArrayData]
-      val dims = v.numElements()
-      val out = new Array[Any](bits)
-      var j = 0
-      while (j < bits) {
-        val seed = XXH64.hashLong(j.toLong, 42L)
-        var acc = 0.0
-        var d = 0
-        while (d < dims) {
-          val w = if ((XXH64.hashLong(d.toLong, seed) & 1L) == 0L) -1.0 else 1.0
-          acc += v.getFloat(d).toDouble * w
-          d += 1
-        }
-        out(j) = if (acc > 0) 1 else 0
-        j += 1
-      }
-      new GenericArrayData(out)
-    }
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** Random-hyperplane sign sketch with md5-DERIVED planes: w(j,d) = ±1
-    * from the low bit of the first digest byte of md5("j:d"). Unlike
-    * [[SignSketch]]'s xxhash64 planes, md5 exists in every SQL engine,
-    * so an oracle can regenerate the exact plane family and replay the
-    * sketch — the property that lets sim_topk_lsh be hash-checked. The
+    * [Σ_d v(d)·w(j,d) > 0], output array<int> of 0/1, one native pass
+    * (bits × dims). The planes are md5-DERIVED: w(j,d) = ±1 from the low
+    * bit of the first digest byte of md5("j:d"). md5 exists in every SQL
+    * engine, so an oracle can regenerate the exact plane family and
+    * replay the sketch — the property that lets sim_topk_lsh be
+    * hash-checked. The
     * (bits × dims) weight matrix is memoized once per shape; per row the
     * eval is the same tight bits × dims loop.
     *
@@ -537,9 +504,6 @@ object ArrayExprs {
         })
       })
   }
-
-  def signSketch(v: Column, bits: Int): Column =
-    GraftExpr.column(SignSketch(GraftExpr.expression(v), bits))
 
   /** All (d1 < d2, hamming ≤ maxHamming) pairs within one LSH band
     * bucket — input array<struct<doc_id:long, simhash:long>> from a
@@ -622,25 +586,18 @@ object ArrayExprs {
     * — the #1 build-ledger row (r12 verdict task 1). This form is
     * per-row and shuffle-free: the 100 TB cost is one scan, no exchange.
     *
-    * Two hash families, selected by `useMd5`:
-    *  - `true` (the ORACLE family): fp = first 8 hex chars of
-    *    md5(space-joined gram) parsed base-16, mod 2147483647 — exactly
-    *    `CAST(conv(substr(md5(concat_ws(' ', gram)), 1, 8), 16, 10) AS
-    *    BIGINT) % 2147483647`, which DuckDB replays token for token
-    *    (the ta_winnow / dedup_winnow_pairs gates).
-    *  - `false` (the PRODUCTION family): fp = xxhash64(space-joined
-    *    gram, seed 42) — identical to Spark's
-    *    `xxhash64(concat_ws(' ', gram))`, one 64-bit mix instead of a
-    *    full md5 round per gram. Spec-pinned against the declarative
-    *    form and against the md5 family's pair set (the
-    *    minhashBigPortable dual-family pattern).
+    * One hash family, the one the oracle replays: fp = first 8 hex
+    * chars of md5(space-joined gram) parsed base-16, mod 2147483647 —
+    * exactly `CAST(conv(substr(md5(concat_ws(' ', gram)), 1, 8), 16, 10)
+    * AS BIGINT) % 2147483647`, which DuckDB replays token for token (the
+    * ta_winnow / dedup_winnow_pairs gates).
     *
     * Tie-break: within a window, equal minimal hashes pick the LATER
     * gram (`<=` while scanning ascending positions), matching the
     * declarative `min(struct(h, -i))` and the oracle's
     * `ORDER BY h ASC, i DESC LIMIT 1`.
     */
-  case class WinnowFps(child: Expression, k: Int, w: Int, useMd5: Boolean)
+  case class WinnowFps(child: Expression, k: Int, w: Int)
     extends UnaryExpression {
     require(k >= 1 && w >= 1)
     override def dataType: DataType = ArrayType(StructType(Seq(
@@ -653,7 +610,7 @@ object ArrayExprs {
       val n = toks.numElements()
       val g = n - k + 1 // gram count
       if (g < w) return new GenericArrayData(Array.empty[Any])
-      val md = if (useMd5) java.security.MessageDigest.getInstance("MD5") else null
+      val md = java.security.MessageDigest.getInstance("MD5")
       val hs = new Array[Long](g)
       var i = 0
       while (i < g) {
@@ -672,16 +629,10 @@ object ArrayExprs {
           off += t.numBytes()
           j += 1
         }
-        hs(i) =
-          if (useMd5) {
-            val d = md.digest(bytes)
-            // first 8 hex chars = first 4 digest bytes, unsigned
-            val v = ((d(0) & 0xFFL) << 24) | ((d(1) & 0xFFL) << 16) |
-              ((d(2) & 0xFFL) << 8) | (d(3) & 0xFFL)
-            v % 2147483647L
-          } else
-            XXH64.hashUnsafeBytes(bytes,
-              org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, len, 42L)
+        val d = md.digest(bytes)
+        // first 8 hex chars = first 4 digest bytes, unsigned
+        hs(i) = (((d(0) & 0xFFL) << 24) | ((d(1) & 0xFFL) << 16) |
+          ((d(2) & 0xFFL) << 8) | (d(3) & 0xFFL)) % 2147483647L
         i += 1
       }
       // slide the w-window; picks dedup via LinkedHashSet (output order
@@ -713,8 +664,6 @@ object ArrayExprs {
       * under this expression stays codegen'd (fallback would interpret
       * it per row) and the stage keeps its WholeStageCodegen span; the
       * gram-hash + window-min loop above is one compiled call per row.
-      * Both hash families share the path (the md5 branch differs only
-      * inside nullSafeEval).
       */
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val ref = ctx.addReferenceObj("winnowFps", this)
@@ -726,8 +675,8 @@ object ArrayExprs {
       copy(child = newChild)
   }
 
-  def winnowFps(toks: Column, k: Int, w: Int, useMd5: Boolean): Column =
-    GraftExpr.column(WinnowFps(GraftExpr.expression(toks), k, w, useMd5))
+  def winnowFps(toks: Column, k: Int, w: Int): Column =
+    GraftExpr.column(WinnowFps(GraftExpr.expression(toks), k, w))
 
   def signSketchMd5(v: Column, bits: Int): Column =
     GraftExpr.column(SignSketchMd5(GraftExpr.expression(v), bits))

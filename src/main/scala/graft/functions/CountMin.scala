@@ -190,12 +190,12 @@ object CountMin {
     "st_countmin" -> ((s, d) => windowedCells(graft.Tables.events(s, d)))
   )
 
-  val oracles: Map[String, String] = Map(
-    // full replay: harmonic keys → d×w cells → min-of-cells estimates;
-    // every cell count and every estimate hash-gated (the sketch is
-    // deterministic given the md5 hash family)
-    "ev_countmin" ->
-      s"""WITH s AS (
+  /** Full replay of [[estimates]]: harmonic keys → d×w cells →
+    * min-of-cells estimates; every cell count and every estimate
+    * hash-gated (the sketch is deterministic given the md5 hash family).
+    */
+  private val estimatesOracle =
+    s"""WITH s AS (
             SELECT CAST(floor(1000.0 / (1 + event_id % 1000)) AS BIGINT) AS key
             FROM events),
           rc AS (
@@ -218,35 +218,14 @@ object CountMin {
             GROUP BY p.key)
           SELECT e.key, e.n_exact, est.cm_est,
                  est.cm_est - e.n_exact AS overestimate
-          FROM exact e JOIN est ON e.key = est.key""",
+          FROM exact e JOIN est ON e.key = est.key"""
+
+  val oracles: Map[String, String] = Map(
+    "ev_countmin" -> estimatesOracle,
     // the merged-artifact tier shares the full-corpus replay VERBATIM:
     // CM linearity makes day₀-cells + day₁-cells ≡ one-pass cells, so
     // the same SQL gates the split + storage round-trip + merge
-    "ev_countmin_merged" ->
-      s"""WITH s AS (
-            SELECT CAST(floor(1000.0 / (1 + event_id % 1000)) AS BIGINT) AS key
-            FROM events),
-          rc AS (
-            SELECT key, r,
-                   ('0x' || substr(md5(r || ':' || CAST(key AS VARCHAR)), 1, 8))::BIGINT
-                     % $Width AS c
-            FROM s, generate_series(0, ${Depth - 1}) AS g(r)),
-          cells AS (
-            SELECT r, c, CAST(count(*) AS BIGINT) AS n FROM rc GROUP BY r, c),
-          exact AS (
-            SELECT key, CAST(count(*) AS BIGINT) AS n_exact FROM s GROUP BY key),
-          probes AS (
-            SELECT e.key, g.r,
-                   ('0x' || substr(md5(g.r || ':' || CAST(e.key AS VARCHAR)), 1, 8))::BIGINT
-                     % $Width AS c
-            FROM exact e, generate_series(0, ${Depth - 1}) AS g(r)),
-          est AS (
-            SELECT p.key, min(cl.n) AS cm_est
-            FROM probes p JOIN cells cl ON p.r = cl.r AND p.c = cl.c
-            GROUP BY p.key)
-          SELECT e.key, e.n_exact, est.cm_est,
-                 est.cm_est - e.n_exact AS overestimate
-          FROM exact e JOIN est ON e.key = est.key""",
+    "ev_countmin_merged" -> estimatesOracle,
     "op_join_estimate" ->
       s"""WITH s AS (SELECT user_id AS key FROM events),
           rc AS (

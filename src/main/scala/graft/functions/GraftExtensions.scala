@@ -48,10 +48,6 @@ object GraftExtensions {
       info("word_shingles", "word_shingles(tokens, n) - distinct word n-gram shingles"),
       (args: Seq[Expression]) => ArrayExprs.WordShingles(args(0),
         args(1).eval().asInstanceOf[Int])),
-    ("sign_sketch",
-      info("sign_sketch", "sign_sketch(vec, bits) - xxhash64-plane sign sketch"),
-      (args: Seq[Expression]) => ArrayExprs.SignSketch(args(0),
-        args(1).eval().asInstanceOf[Int])),
     ("sign_sketch_md5",
       info("sign_sketch_md5", "sign_sketch_md5(vec, bits) - md5-plane sign sketch (SQL-replayable)"),
       (args: Seq[Expression]) => ArrayExprs.SignSketchMd5(args(0),

@@ -475,16 +475,6 @@ object PageRank {
         col("candidate"), col("common_neighbors"))
   }
 
-  /** Shared candidate machinery of [[linkPredict]] and
-    * [[linkPredictAdamicAdar]]: (canonical edge set, scored non-adjacent
-    * candidate pairs). The Adamic-Adar weight — Σ 1/ln(deg(v)) over
-    * common neighbors v, down-weighting promiscuous centers — rides the
-    * SAME wedge rows: the per-center weight joins from a broadcast
-    * degree table, 6-dp-rounded onto the decimal grid and DECIMAL-summed
-    * (order-free — the repo's PMI/BM25 fp protocol), so the oracle
-    * replays scores exactly. Centers always have deg ≥ 2 (a wedge needs
-    * two spokes), so 1/ln(deg) is finite everywhere it is evaluated.
-    */
   /** The plain undirected distinct edge set, memoized once per
     * (session, dir, mod) — the shared base of link prediction, BFS,
     * SSSP, AND the triangles family's degree-ordered edges (r13: four
@@ -500,6 +490,16 @@ object PageRank {
         .distinct()
     }
 
+  /** Shared candidate machinery of [[linkPredict]] and
+    * [[linkPredictAdamicAdar]]: (canonical edge set, scored non-adjacent
+    * candidate pairs). The Adamic-Adar weight — Σ 1/ln(deg(v)) over
+    * common neighbors v, down-weighting promiscuous centers — rides the
+    * SAME wedge rows: the per-center weight joins from a broadcast
+    * degree table, 6-dp-rounded onto the decimal grid and DECIMAL-summed
+    * (order-free — the repo's PMI/BM25 fp protocol), so the oracle
+    * replays scores exactly. Centers always have deg ≥ 2 (a wedge needs
+    * two spokes), so 1/ln(deg) is finite everywhere it is evaluated.
+    */
   private def cnCandidates(spark: SparkSession, dir: String, mod: Long,
                            nQueries: Long): (DataFrame, DataFrame) = {
     val und = undPlain(spark, dir, mod)
@@ -1002,22 +1002,6 @@ object PageRank {
     "pr_triangles_10k" -> trianglesOracle(10000),
   )
 
-  /** DuckDB replay of [[componentsSummary]] — UNROLLED min-label
-    * propagation, not recursive reachability: the recursive-CTE oracle
-    * (pr_components' technique) materializes the full reach set, which on
-    * the dense 10k graph is nodes × component size ≈ 10⁸ rows. Min-label
-    * needs only `rounds ≥ eccentricity of each component's min node`
-    * rounds of `l(v) ← min(l(v), min over in-neighbors l(u))` — one
-    * join+aggregate per round over the symmetrized edge list, each
-    * O(|E|). The fixture graph (random residue pairs) has a
-    * small-diameter giant component: measured convergence ≪ 32 rounds at
-    * both gate tiers (32 vs 40 rounds bit-identical, <1 s total in
-    * DuckDB), so rounds=32 carries a comfortable margin. The label set
-    * (min id per component) is what the Spark side's large-star/
-    * small-star loop converges to — same certificate, different
-    * iteration count, which is exactly why only the SUMMARY is compared:
-    * identical labels, engine-appropriate algorithms.
-    */
   /** [[bfs]] replay: bounded recursive expansion over (id, d) pairs —
     * UNION dedup keeps the working set ≤ nodes × [[MaxHops]]; min(d)
     * per node is the BFS distance.
@@ -1043,14 +1027,12 @@ object PageRank {
           (SELECT id, min(d) AS d FROM reach GROUP BY id) m ON nd.id = m.id"""
   }
 
-  /** [[hits]] replay: the iterate grid unrolled verbatim — per round an
-    * authority sum+max-normalize pair then a hub pair, all sums exact
-    * DECIMAL, the one double division shared textually.
-    */
-  /** [[hits]] replay in lockstep: the same unnormalized exact
-    * DECIMAL(38,6) power iteration (every sum an exact decimal fold, so
-    * the intermediates compare bit-identically), with the single
-    * end-of-loop max normalization applied to the same top-k survivors.
+  /** [[hits]] replay in lockstep: the iterate grid unrolled verbatim —
+    * per round an authority sum then a hub sum, the same unnormalized
+    * exact DECIMAL(38,6) power iteration (every sum an exact decimal
+    * fold, so the intermediates compare bit-identically), with the
+    * single end-of-loop max normalization applied to the same top-k
+    * survivors; the one double division is shared textually.
     */
   private def hitsOracle(mod: Long, iterations: Int, k: Int): String = {
     val sb = new StringBuilder(
@@ -1127,6 +1109,22 @@ object PageRank {
     sb.toString
   }
 
+  /** DuckDB replay of [[componentsSummary]] — UNROLLED min-label
+    * propagation, not recursive reachability: the recursive-CTE oracle
+    * (pr_components' technique) materializes the full reach set, which on
+    * the dense 10k graph is nodes × component size ≈ 10⁸ rows. Min-label
+    * needs only `rounds ≥ eccentricity of each component's min node`
+    * rounds of `l(v) ← min(l(v), min over in-neighbors l(u))` — one
+    * join+aggregate per round over the symmetrized edge list, each
+    * O(|E|). The fixture graph (random residue pairs) has a
+    * small-diameter giant component: measured convergence ≪ 32 rounds at
+    * both gate tiers (32 vs 40 rounds bit-identical, <1 s total in
+    * DuckDB), so rounds=32 carries a comfortable margin. The label set
+    * (min id per component) is what the Spark side's large-star/
+    * small-star loop converges to — same certificate, different
+    * iteration count, which is exactly why only the SUMMARY is compared:
+    * identical labels, engine-appropriate algorithms.
+    */
   private def componentsSummaryOracle(mod: Long, rounds: Int): String = {
     val sb = new StringBuilder(
       s"""WITH e AS MATERIALIZED (
@@ -1153,13 +1151,6 @@ object PageRank {
     sb.toString
   }
 
-  /** DuckDB replay of [[triangles]]: id-canonical wedge enumeration
-    * (a<b<c), which yields the identical per-node counts as the Spark
-    * side's degree-ordered canonicalization — the count is
-    * canonical-order-invariant; degree ordering on the Spark side is
-    * purely the hub-skew guard. Tractable at the t2 gate even for
-    * mod=10000 (~55k edges at sf0.01 → ~360k wedges).
-    */
   /** DuckDB replay of [[linkPredict]]: same wedge enumeration, pair
     * canonicalization, anti-join, and per-endpoint ranking.
     */
@@ -1222,6 +1213,13 @@ object PageRank {
           FROM pn)
         WHERE rank <= $k"""
 
+  /** DuckDB replay of [[triangles]]: id-canonical wedge enumeration
+    * (a<b<c), which yields the identical per-node counts as the Spark
+    * side's degree-ordered canonicalization — the count is
+    * canonical-order-invariant; degree ordering on the Spark side is
+    * purely the hub-skew guard. Tractable at the t2 gate even for
+    * mod=10000 (~55k edges at sf0.01 → ~360k wedges).
+    */
   private def trianglesOracle(mod: Long): String =
     s"""WITH e AS (
           SELECT DISTINCT l_orderkey % $mod AS src, l_partkey % $mod AS dst

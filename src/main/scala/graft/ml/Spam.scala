@@ -1,9 +1,7 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
-import graft.text.Text
 
 /** a6 spam classifier: online SGD logistic regression + ensemble
   * (`TrainSpamClassifier.scala`, `ApplySpamClassifier.scala`,
@@ -15,10 +13,12 @@ import graft.text.Text
   * partition + sortWithinPartitions + a mapPartitions fold — pinning both
   * the partition count and a deterministic row order. The reference's
   * `--shuffle` uses unseeded `Math.random` (`:52`); we replace it with a
-  * deterministic hash key so results are reproducible (SURVEY §5
-  * determinism rule). Scoring (J7) is fully distributed: explode features,
-  * join the weight table, partial-aggregate per doc — no broadcast of an
-  * unbounded model.
+  * deterministic md5 key so results are reproducible (SURVEY §5
+  * determinism rule). Scoring (J7) is set-oriented: explode features,
+  * join the weight table (at most [[BatchLogit.NumFeatures]] rows, so
+  * broadcast), aggregate per doc. One hash family (md5) and one
+  * arithmetic (exact decimal) throughout, the ones the DuckDB oracles
+  * replay.
   *
   * Instances derive from the documents fixture: label = doc contains the
   * token "spark" (a learnable signal), features = per-occurrence token
@@ -26,47 +26,22 @@ import graft.text.Text
   * hashing is the standard replacement).
   */
 object Spam {
-  val Delta = 0.002 // TrainSpamClassifier.scala:41
-  val NumFeatures = 10000
-
-  /** (docid, label, features) derived deterministically from documents. */
-  def instances(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .withColumn("toks", Text.tokenize(col("text")))
-      .select(
-        col("doc_id").as("docid"),
-        when(array_contains(col("toks"), "spark"), 1).otherwise(0).as("label"),
-        transform(col("toks"),
-          w => pmod(xxhash64(w), lit(NumFeatures)).cast("int")).as("features"))
-
   /** Parse the reference's instance-line format
     * (`TrainSpamClassifier.scala:43-55`): whitespace-separated
-    * `docid {spam|ham} f1 f2 ...` with integer feature ids. Output schema
-    * matches [[instances]] (docid, label, features) with string docids
-    * hashed to longs when non-numeric.
+    * `docid {spam|ham} f1 f2 ...` with integer feature ids. Output
+    * (docid, label, features); a non-numeric docid becomes the first 15
+    * hex digits of its md5 (a non-negative long). Exploding `features`
+    * gives the (docid, label, feature) frame [[trainSeqOn]] folds.
     */
   def parseInstances(lines: DataFrame): DataFrame =
     lines
       .select(split(trim(col("value")), "\\s+").as("f"))
       .filter(size(col("f")) >= 2)
       .select(
-        coalesce(expr("try_cast(f[0] AS BIGINT)"),
-          pmod(xxhash64(col("f").getItem(0)), lit(Long.MaxValue))).as("docid"),
+        expr("""coalesce(try_cast(f[0] AS BIGINT),
+          CAST(conv(substring(md5(f[0]), 1, 15), 16, 10) AS BIGINT))""").as("docid"),
         when(col("f").getItem(1) === "spam", 1).otherwise(0).as("label"),
         expr("transform(slice(f, 3, size(f) - 2), x -> CAST(x AS INT))").as("features"))
-
-  /** Sequential SGD fold (`TrainSpamClassifier.scala:68-85`): score with
-    * current weights, sigmoid, update every feature occurrence by
-    * (label − prob)·δ. Returns the weight table (feature, weight).
-    */
-  def train(spark: SparkSession, dir: String, shuffleSeed: Option[Long] = None): DataFrame =
-    trainOn(instances(spark, dir), shuffleSeed)
-
-  /** [[instances]] behind the cross-query memo — shared by spam_apply's
-    * scoring side and [[ensemble]] (same key).
-    */
-  def instancesShared(spark: SparkSession, dir: String): DataFrame =
-    graft.Caches.memoized(spark, dir, "ml:spam_instances")(instances(spark, dir))
 
   /** [[trainSeq]] behind the memo, keyed on the full fold parameters:
     * spam_train_seq, spam_apply_seq and (per shard) spam_ensemble_seq
@@ -78,66 +53,6 @@ object Spam {
       s"ml:spam_seq:$maxDocid:$shardMod:${shuffleSeed.getOrElse(-1L)}")(
       trainSeq(spark, dir, maxDocid, shardMod, shuffleSeed))
 
-  def trainOn(inst: DataFrame, shuffleSeed: Option[Long] = None): DataFrame = {
-    val spark = inst.sparkSession
-    import spark.implicits._
-    val sortKey = shuffleSeed match {
-      // O4 seeded-shuffle replacement: deterministic hash order, not
-      // Math.random — same training order on every run and partitioning.
-      case Some(s) => pmod(xxhash64(col("docid"), lit(s)), lit(Long.MaxValue))
-      case None    => col("docid")
-    }
-    inst.withColumn("k", sortKey)
-      .repartition(1).sortWithinPartitions(col("k"))
-      .mapPartitions { rows =>
-        val w = scala.collection.mutable.HashMap.empty[Int, Double]
-        rows.foreach { r =>
-          val label = r.getAs[Int]("label")
-          val feats = r.getAs[scala.collection.Seq[Int]]("features")
-          var score = 0.0
-          feats.foreach(f => score += w.getOrElse(f, 0.0))
-          val prob = 1.0 / (1.0 + math.exp(-score))
-          feats.foreach(f => w.update(f, w.getOrElse(f, 0.0) + (label - prob) * Delta))
-        }
-        w.iterator.map { case (f, wt) => (f, wt) }
-      }
-      .toDF("feature", "weight")
-  }
-
-  /** Distributed scoring (`ApplySpamClassifier.scala:48-65`): score =
-    * Σ weight(f) over feature occurrences; spam iff score > 0.
-    */
-  def applyModel(inst: DataFrame, model: DataFrame): DataFrame = {
-    val scored = inst
-      .select(col("docid"), col("label"), explode(col("features")).as("feature"))
-      .join(model, Seq("feature"), "left_outer")
-      .groupBy(col("docid"), col("label"))
-      .agg(sum(coalesce(col("weight"), lit(0.0))).as("score"))
-    scored.withColumn("predicted", when(col("score") > 0, "spam").otherwise("ham"))
-  }
-
-  /** 3-model ensemble (`ApplyEnsembleSpamClassifier.scala:76-108`): models
-    * trained on disjoint shards (docid mod 3); combine by score average
-    * and by sign vote.
-    */
-  def ensemble(spark: SparkSession, dir: String): DataFrame = {
-    val inst = instancesShared(spark, dir)
-    val scores = (0 until 3).map { m =>
-      val shard = inst.filter(pmod(col("docid"), lit(3)) === m)
-      applyModel(inst, trainOn(shard))
-        .select(col("docid"), col("label"), col("score").as(s"score_$m"))
-    }
-    val joined = scores.reduce(_.join(_, Seq("docid", "label")))
-    joined
-      .withColumn("avg_score",
-        round((col("score_0") + col("score_1") + col("score_2")) / 3, 6).cast("double"))
-      .withColumn("votes",
-        signum(col("score_0")) + signum(col("score_1")) + signum(col("score_2")))
-      .select(col("docid"), col("label"), col("avg_score"),
-        when(col("avg_score") > 0, "spam").otherwise("ham").as("predicted_avg"),
-        when(col("votes") > 0, "spam").otherwise("ham").as("predicted_vote"))
-  }
-
   /** Bound on the docids [[trainSeq]] folds over — small enough that the
     * per-instance recurrence unrolls into one chained-CTE oracle, large
     * enough that weight trajectories genuinely interact across steps.
@@ -147,42 +62,50 @@ object Spam {
   /** Seed for the oracle-backed O4 shuffled-order fold (spam_train_seq_shuffled). */
   val ShuffleSeed = 42L
 
-  /** The order-dependent sequential SGD fold itself, UNDER A HARD SQL
-    * ORACLE: the same per-instance recurrence as [[trainOn]]
-    * (`TrainSpamClassifier.scala:68-85`), bounded to docid < [[SeqDocs]]
-    * and run in the exact-decimal fp-portability protocol of
-    * [[BatchLogit]] so the DuckDB replay is bit-identical:
+  /** The order-dependent sequential SGD fold of the fixture corpus,
+    * UNDER A HARD SQL ORACLE: [[trainSeqOn]] over the
+    * [[BatchLogit.occurrences]] rows (md5-derived feature ids —
+    * SQL-replayable) with docid < `maxDocid` and, for `shardMod >= 0`,
+    * docid % 3 = shardMod (the ensemble's disjoint shards). The default
+    * bound [[SeqDocs]] is the unrolled chained-CTE oracle's size;
+    * `Long.MaxValue` folds the full corpus (spam_train) under the
+    * recursive-CTE oracle.
+    */
+  def trainSeq(spark: SparkSession, dir: String, maxDocid: Long = SeqDocs,
+               shardMod: Int = -1, shuffleSeed: Option[Long] = None): DataFrame = {
+    val shardFilter =
+      if (shardMod < 0) lit(true) else pmod(col("docid"), lit(3)) === shardMod
+    trainSeqOn(BatchLogit.occurrences(spark, dir)
+      .filter(col("docid") < maxDocid && shardFilter), shuffleSeed)
+  }
+
+  /** The sequential SGD fold (`TrainSpamClassifier.scala:68-85`) over a
+    * (docid: long, label: int, feature: long) occurrence frame: score
+    * each instance with the current weights, sigmoid, update every
+    * feature occurrence by (label − prob)·δ; returns the weight table
+    * (feature, weight). It runs in the exact-decimal fp-portability
+    * protocol of [[BatchLogit]] so the DuckDB replay is bit-identical:
     *
-    *  - instances and features come from [[BatchLogit.occurrences]]
-    *    (md5-derived ids — SQL-replayable), compressed to per-instance
-    *    (feature, cnt) multiplicities;
+    *  - occurrences are compressed to per-instance (feature, cnt)
+    *    multiplicities;
     *  - weights live on an exact decimal grid (scale 9 = prob scale 6 ×
     *    δ scale 3); score_d = Σ cnt·w(f) is an exact order-free decimal
     *    sum; prob = round(sigmoid(score as double), 6) — the one double
     *    step, on a bit-identical input (the ml_batch_gd green contract);
     *  - update: w(f) += cnt · (label − prob) · δ, exact decimal;
-    *  - instances fold in ascending docid order: one partition, sorted —
-    *    the A13 physical shape, shrunk to an oracle-checkable prefix.
-    *
-    * The full-corpus [[train]] keeps the reference's raw-double protocol
-    * and its exact in-test scalar oracle (SpamSpec); this bounded variant
-    * is what puts the ORDER-DEPENDENT fold under the DuckDB hash gate.
+    *  - instances fold in ascending docid order (or the seeded md5 order
+    *    below): one partition, sorted — the A13 physical shape.
     */
-  def trainSeq(spark: SparkSession, dir: String, maxDocid: Long = SeqDocs,
-               shardMod: Int = -1, shuffleSeed: Option[Long] = None): DataFrame = {
+  def trainSeqOn(occurrences: DataFrame, shuffleSeed: Option[Long] = None): DataFrame = {
+    val spark = occurrences.sparkSession
     import spark.implicits._
-    val shardFilter =
-      if (shardMod < 0) lit(true) else pmod(col("docid"), lit(3)) === shardMod
-    val occ = BatchLogit.occurrences(spark, dir)
-      .filter(col("docid") < maxDocid && shardFilter)
+    val occ = occurrences
       .groupBy(col("docid"), col("label"), col("feature"))
       .agg(count(lit(1)).as("cnt"))
-    // O4 seeded shuffle, oracle-replayable: the full-corpus [[trainOn]]
-    // keys its shuffle on xxhash64 (fast, but Spark-only); here the order
-    // key is the repo's cross-engine md5 convention so the chained-CTE
-    // oracle reorders by the IDENTICAL hash (reference
-    // `TrainSpamClassifier.scala:51-61` — unseeded Math.random there,
-    // deterministic seed per SURVEY §5).
+    // O4 seeded shuffle, oracle-replayable: the order key is the repo's
+    // cross-engine md5 convention so the chained-CTE oracle reorders by
+    // the IDENTICAL hash (reference `TrainSpamClassifier.scala:51-61` —
+    // unseeded Math.random there, deterministic seed per SURVEY §5).
     val ordKey = shuffleSeed match {
       case Some(s) => expr(
         s"conv(substring(md5(concat('$s:', CAST(docid AS STRING))), 1, 8), 16, 10)")
@@ -222,8 +145,8 @@ object Spam {
   }
 
   /** Distributed scoring with the [[trainSeq]] model, fully hash-gated:
-    * the J7 explode⋈weights⋈agg shape of [[applyModel]]
-    * (`ApplySpamClassifier.scala:48-65`), run over the FULL corpus (the
+    * the J7 explode⋈weights⋈agg shape of the reference's
+    * `ApplySpamClassifier.scala:48-65`, run over the FULL corpus (the
     * scoring side is set-oriented — only the trained fold needed the
     * docid bound) in the exact-decimal protocol. Weights rebuilt as
     * DECIMAL(18,9) (their doubles sit on the 1e-9 grid, so the cast
@@ -250,6 +173,25 @@ object Spam {
         when(col("score_d") > 0, "spam").otherwise("ham").as("predicted"))
   }
 
+  /** The leakage-free holdout, scored by the [[trainSeqShared]] model in
+    * exact DECIMAL — the shared front half of [[rocAuc]] and
+    * [[calibration]]: (docid, label, score_d).
+    */
+  def holdoutScored(spark: SparkSession, dir: String): DataFrame = {
+    val w = trainSeqShared(spark, dir)
+      .select(col("feature"), col("weight").cast("decimal(18,9)").as("w"))
+    val holdout = BatchLogit.occurrences(spark, dir)
+      .filter(col("docid") >= SeqDocs &&
+        graft.operators.Skew.hashBucket(col("docid")) >= 90)
+      .groupBy(col("docid"), col("label"), col("feature"))
+      .agg(count(lit(1)).as("cnt"))
+    holdout
+      .join(broadcast(w), Seq("feature"), "left_outer")
+      .groupBy(col("docid"), col("label"))
+      .agg(sum(col("cnt").cast("decimal(6,0)") * coalesce(col("w"),
+        lit(java.math.BigDecimal.ZERO).cast("decimal(18,9)"))).as("score_d"))
+  }
+
   /** Classifier QUALITY metric — the reference's grading currency: a6 is
     * scored on 1-ROCA% (area above the ROC curve, in percent;
     * `assignment6.md:3-29` grades x/y/britney/fusion on exactly this).
@@ -272,25 +214,6 @@ object Spam {
     * fold; the only doubles are the final two divisions, on bit-identical
     * integer inputs in both engines. 1-ROCA% = (1 − AUC)·100.
     */
-  /** The leakage-free holdout, scored by the [[trainSeqShared]] model in
-    * exact DECIMAL — the shared front half of [[rocAuc]] and
-    * [[calibration]]: (docid, label, score_d).
-    */
-  def holdoutScored(spark: SparkSession, dir: String): DataFrame = {
-    val w = trainSeqShared(spark, dir)
-      .select(col("feature"), col("weight").cast("decimal(18,9)").as("w"))
-    val holdout = BatchLogit.occurrences(spark, dir)
-      .filter(col("docid") >= SeqDocs &&
-        graft.operators.Skew.hashBucket(col("docid")) >= 90)
-      .groupBy(col("docid"), col("label"), col("feature"))
-      .agg(count(lit(1)).as("cnt"))
-    holdout
-      .join(broadcast(w), Seq("feature"), "left_outer")
-      .groupBy(col("docid"), col("label"))
-      .agg(sum(col("cnt").cast("decimal(6,0)") * coalesce(col("w"),
-        lit(java.math.BigDecimal.ZERO).cast("decimal(18,9)"))).as("score_d"))
-  }
-
   def rocAuc(spark: SparkSession, dir: String): DataFrame = {
     val scored = holdoutScored(spark, dir)
     val perScore = scored.groupBy(col("score_d"))
@@ -382,7 +305,7 @@ object Spam {
     // picks up its weight in every shard model through a chain of
     // left-outer broadcast joins, then one groupBy sums all three. The
     // chain is exact — it neither drops nor duplicates an occurrence —
-    // because each trainSeqShared table has ONE row per feature (trainSeq
+    // because each trainSeqShared table has ONE row per feature (trainSeqOn
     // emits its weight HashMap). Σ over occurrences of w equals the
     // oracle's Σ over distinct (docid, feature) of cnt·w: decimal sums
     // are exact and order-free.
@@ -405,23 +328,22 @@ object Spam {
           .otherwise("ham").as("predicted_vote"))
   }
 
+  private val tokSql =
+    graft.text.Text.TokSql
+
   /** DuckDB replay of [[trainSeq]]: the per-instance recurrence unrolled
     * as one MATERIALIZED CTE per docid step (the ta_bpe_train technique).
     * Types are pinned so every decimal op stays exact (DuckDB silently
     * falls back to DOUBLE past precision 38): cnt DECIMAL(4,0), w
-    * DECIMAL(18,9), prob DECIMAL(9,6), inc DECIMAL(12,9). Steps with no
-    * matching instance (corpus smaller than [[SeqDocs]]) degrade to
-    * no-ops via the coalesce guards.
-    */
-  private val tokSql =
-    graft.text.Text.TokSql
-
-  /** The shared CTE chain replaying [[trainSeq]]: no "WITH" prefix and
-    * no final SELECT, so callers can splice several chains (distinct
-    * `sfx`) into one statement; `shardMod >= 0` restricts the fold to
-    * docid % 3 = shardMod (the ensemble's disjoint shards). The fixed
-    * step count exceeds the shard's instance count — absent steps are
-    * no-ops via the coalesce guards.
+    * DECIMAL(18,9), prob DECIMAL(9,6), inc DECIMAL(12,9).
+    *
+    * This is the shared CTE chain: no "WITH" prefix and no final SELECT,
+    * so callers can splice several chains (distinct `sfx`) into one
+    * statement; `shardMod >= 0` restricts the fold to docid % 3 =
+    * shardMod (the ensemble's disjoint shards). The fixed step count
+    * exceeds the shard's instance count (or the corpus is smaller than
+    * [[SeqDocs]]) — absent steps degrade to no-ops via the coalesce
+    * guards.
     */
   private def trainSeqCtes(steps: Int, numFeatures: Int,
                            sfx: String = "", shardMod: Int = -1,
@@ -644,10 +566,6 @@ object Spam {
           FROM sc0 JOIN sc1 USING (docid, label) JOIN sc2 USING (docid, label)"""
   }
 
-  /** DuckDB replay of [[rocAuc]]: the [[trainSeqCtes]] chain, the
-    * held-out occurrence table (same md5-bucket filter), the exact-decimal
-    * scoring aggregate, and the integer Mann-Whitney fold.
-    */
   /** Shared oracle front half: train CTEs + holdout scoring, ending at
     * `sc(docid, label, score_d)` — the [[holdoutScored]] replay.
     */
@@ -701,6 +619,10 @@ object Spam {
                  round(CAST(2 * tp AS DOUBLE) / CAST(2 * tp + fp + fn AS DOUBLE), 6) AS f1
           FROM cf"""
 
+  /** DuckDB replay of [[rocAuc]]: the [[trainSeqCtes]] chain, the
+    * held-out occurrence table (same md5-bucket filter), the exact-decimal
+    * scoring aggregate, and the integer Mann-Whitney fold.
+    */
   private def rocAucOracle(steps: Int, numFeatures: Int): String =
     holdoutScoredCtes(steps, numFeatures) + s""",
           ps AS (SELECT score_d, CAST(sum(label) AS BIGINT) AS np,
@@ -725,8 +647,7 @@ object Spam {
     // round 8: the exact-decimal fold protocol (proven at 40 unrolled-CTE
     // steps by the _seq twins below) run with no docid bound, replayed by
     // a RECURSIVE DuckDB CTE — one iteration per instance, step count
-    // data-driven. The reference's raw-double fold semantics stay pinned
-    // in SpamSpec (train/applyModel/ensemble vs an in-test scalar fold).
+    // data-driven.
     "spam_train"     -> ((s, d) => trainSeqShared(s, d, Long.MaxValue)),
     "spam_apply"     -> ((s, d) => applySeq(s, d, Long.MaxValue)),
     "spam_ensemble"  -> ((s, d) => ensembleSeq(s, d, Long.MaxValue)),
@@ -750,8 +671,7 @@ object Spam {
   /** Every spam row is hash-gated as of round 8. The full-corpus trio
     * replays through [[trainSeqRecCtes]] (recursive CTE, data-driven step
     * count); the bounded `_seq` twins keep the independent UNROLLED
-    * construction of the same recurrence; the reference's raw-double fold
-    * stays spec-pinned in SpamSpec (scalar in-test fold, exact equality).
+    * construction of the same recurrence.
     */
   val oracles: Map[String, String] = Map(
     "spam_train" -> trainFullOracle(BatchLogit.NumFeatures),

@@ -214,14 +214,6 @@ object KMeans {
 
   // ---------------------------------------------------------------- oracle
 
-  /** Replay of the full protocol as chained MATERIALIZED CTEs (the
-    * pr_toprank technique): per iteration, a cross-join argmax assignment
-    * over round6 cosines and an unnest-by-dim mean re-assembled with
-    * `list(... ORDER BY d)`. Double-summation order differs between
-    * engines; the per-iteration round6 on cosines and centroid
-    * coordinates absorbs the ulp noise, so the recurrence stays in
-    * lockstep.
-    */
   /** The CTE chain alone (no WITH, no final SELECT), ending at the
     * trained centroid table `c$iterations` (cell, cent) — spliced by
     * [[kmeansOracle]] and by the sim_topk_ivf oracle, which replays IVF
@@ -273,6 +265,14 @@ object KMeans {
     sb.toString
   }
 
+  /** Replay of the full protocol as chained MATERIALIZED CTEs (the
+    * pr_toprank technique): per iteration, a cross-join argmax assignment
+    * over round6 cosines and an unnest-by-dim mean re-assembled with
+    * `list(... ORDER BY d)`. Double-summation order differs between
+    * engines; the per-iteration round6 on cosines and centroid
+    * coordinates absorbs the ulp noise, so the recurrence stays in
+    * lockstep.
+    */
   private def kmeansOracle(k: Int, iterations: Int): String =
     "WITH " + kmeansCtes(k, iterations) + s"""
           SELECT c.cell, coalesce(m.n, 0) AS n_members,

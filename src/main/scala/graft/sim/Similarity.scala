@@ -158,12 +158,6 @@ object Similarity {
     selected.toDF("rank", "vec_id", "rel", "mmr")
   }
 
-  /** Measured ANN quality AS DATA: per-query recall@k of the LSH
-    * ranking against the exact top-k — the number an ANN deployment
-    * tracks per index build. Both rankings are already deterministic
-    * exact replays, so recall itself rides the hash gate (the spec-side
-    * recall assertions bound it; this row PINS it).
-    */
   /** The exact top-k reference ranking, memoized (r14): recall_at_k and
     * every row of the recall table join against the SAME exact ranking,
     * and each union branch re-planned and re-ran the n·q brute-force
@@ -176,6 +170,12 @@ object Similarity {
     graft.Caches.memoized(spark, dir, s"sim:exact_topk_${k}_$nQueries")(
       topK(spark, dir, k, nQueries).select(col("query_id"), col("vec_id")))
 
+  /** Measured ANN quality AS DATA: per-query recall@k of the LSH
+    * ranking against the exact top-k — the number an ANN deployment
+    * tracks per index build. Both rankings are already deterministic
+    * exact replays, so recall itself rides the hash gate (the spec-side
+    * recall assertions bound it; this row PINS it).
+    */
   def recallAtK(spark: SparkSession, dir: String,
                 k: Int = 3, nQueries: Int = 10): DataFrame = {
     val ex = exactTopK(spark, dir, k, nQueries)
@@ -228,20 +228,12 @@ object Similarity {
   /** Sign sketch: bit j = sign(Σ_d w(j,d)·v_d) with w(j,d) = ±1 derived
     * from md5 of "j:d" — deterministic pseudo-random hyperplanes from a
     * hash EVERY engine has, computed natively in one pass
-    * ([[graft.functions.ArrayExprs.SignSketchMd5]]). An earlier xxhash64
-    * family ([[graft.functions.ArrayExprs.SignSketch]]) is kept for SQL
-    * registration, but the registered query uses the md5 family so the
-    * oracle can regenerate the planes.
+    * ([[graft.functions.ArrayExprs.SignSketchMd5]]), so the oracle can
+    * regenerate the planes.
     */
   def signSketch(v: Column): Column =
     graft.functions.ArrayExprs.signSketchMd5(v, SketchBits)
 
-  /** LSH-bucketed approximate top-k: candidates share a sketch band with
-    * the query; exact cosine re-rank on candidates. Approximate relative
-    * to exact top-k, but DETERMINISTIC given the md5 plane family — the
-    * SQL oracle replays sketching, banding, and re-rank end to end;
-    * recall vs [[topK]] is additionally asserted in spec.
-    */
   /** Banded sign sketches for every vector, persisted once per
     * (session, dir): band key = the band's 4 bits as an integer
     * (b0 + 2b1 + 4b2 + 8b3), 16 buckets per band, no hashing — the
@@ -271,6 +263,12 @@ object Similarity {
       .select(col("vec_id"), col("embedding"),
         col("bk.band").as("band"), col("bk.key").as("key"))
 
+  /** LSH-bucketed approximate top-k: candidates share a sketch band with
+    * the query; exact cosine re-rank on candidates. Approximate relative
+    * to exact top-k, but DETERMINISTIC given the md5 plane family — the
+    * SQL oracle replays sketching, banding, and re-rank end to end;
+    * recall vs [[topK]] is additionally asserted in spec.
+    */
   def topKLsh(spark: SparkSession, dir: String, k: Int = 3, nQueries: Int = 10): DataFrame =
     topKLshOn(bandedSketches(spark, dir), k, nQueries)
 

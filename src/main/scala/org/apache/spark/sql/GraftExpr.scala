@@ -10,22 +10,6 @@ object GraftExpr {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Replace `df`'s logical plan with a LogicalRDD leaf over its
-    * INTERNAL-row RDD — the plan cut `Dataset.localCheckpoint` performs,
-    * without the checkpoint's block storage (the caller persists the
-    * result instead). Unlike `createDataFrame(df.rdd, schema)` this
-    * skips the external-Row encode/decode round-trip, which measured
-    * ~2× on array-heavy frames. The per-row `copy()` matches Spark's own
-    * checkpoint implementation: `toRdd` may yield a reused mutable row.
-    *
-    * Built through `LogicalRDD.fromDataset` (what checkpoint itself
-    * uses), which REWRITES the origin plan's output partitioning and
-    * ordering onto the leaf's attributes — so a memoized relation built
-    * with a deliberate `repartition(p, key)` (the IR term-clustered
-    * postings, the PageRank co-partitioned edge relation) keeps
-    * advertising hash(key, p) and consumers plan zero re-exchange,
-    * instead of silently re-shuffling what the build already placed.
-    */
   /** The just-persisted frame re-rooted at its cache entry's
     * InMemoryRelation (identity if none exists). Serving memo consumers
     * the IMR node DIRECTLY instead of relying on CacheManager plan
@@ -50,6 +34,22 @@ object GraftExpr {
       .getOrElse(df)
   }
 
+  /** Replace `df`'s logical plan with a LogicalRDD leaf over its
+    * INTERNAL-row RDD — the plan cut `Dataset.localCheckpoint` performs,
+    * without the checkpoint's block storage (the caller persists the
+    * result instead). Unlike `createDataFrame(df.rdd, schema)` this
+    * skips the external-Row encode/decode round-trip, which measured
+    * ~2× on array-heavy frames. The per-row `copy()` matches Spark's own
+    * checkpoint implementation: `toRdd` may yield a reused mutable row.
+    *
+    * Built through `LogicalRDD.fromDataset` (what checkpoint itself
+    * uses), which REWRITES the origin plan's output partitioning and
+    * ordering onto the leaf's attributes — so a memoized relation built
+    * with a deliberate `repartition(p, key)` (the IR term-clustered
+    * postings, the PageRank co-partitioned edge relation) keeps
+    * advertising hash(key, p) and consumers plan zero re-exchange,
+    * instead of silently re-shuffling what the build already placed.
+    */
   def truncated(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, UnknownPartitioning}

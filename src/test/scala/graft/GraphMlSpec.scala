@@ -336,32 +336,31 @@ class SpamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 
-  /** Scalar reference SGD fold (TrainSpamClassifier.scala:68-85 semantics). */
-  private def referenceTrain(inst: Seq[(Long, Int, Seq[Int])]): Map[Int, Double] = {
-    val w = scala.collection.mutable.HashMap.empty[Int, Double]
-    inst.sortBy(_._1).foreach { case (_, label, feats) =>
-      var score = 0.0
-      feats.foreach(f => score += w.getOrElse(f, 0.0))
-      val prob = 1.0 / (1.0 + math.exp(-score))
-      feats.foreach(f => w.update(f, w.getOrElse(f, 0.0) + (label - prob) * Spam.Delta))
+  /** Independent scalar replay of the exact-decimal sequential fold
+    * (TrainSpamClassifier.scala:68-85 semantics) over (docid, label,
+    * feature) occurrences: per docid ascending, score with current
+    * weights, sigmoid rounded to 6 dp, update every occurrence by
+    * (label - prob)*δ.
+    */
+  private def decimalFold(occ: Seq[(Long, Int, Long)]): Map[Long, Double] = {
+    val Half = BigDecimal.RoundingMode.HALF_UP
+    val w = scala.collection.mutable.HashMap.empty[Long, BigDecimal]
+    occ.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (_, rows) =>
+      val label = rows.head._2
+      val feats = rows.map(_._3)
+      val score = feats.map(f => w.getOrElse(f, BigDecimal(0))).sum
+      val prob = BigDecimal(1.0 / (1.0 + math.exp(-score.toDouble))).setScale(6, Half)
+      val inc = (BigDecimal(label) - prob) * BigDecimal("0.002")
+      feats.foreach(f => w.update(f, w.getOrElse(f, BigDecimal(0)) + inc))
     }
-    w.toMap
+    w.map { case (f, wt) => f -> wt.toDouble }.toMap
   }
 
-  private def collectedInstances: Seq[(Long, Int, Seq[Int])] =
-    Spam.instances(spark, sf).collect().map { r =>
-      (r.getLong(0), r.getInt(1), r.getAs[scala.collection.Seq[Int]](2).toSeq)
-    }.toSeq
-
-  test("distributed train reproduces the scalar sequential fold exactly") {
-    val got = Spam.train(spark, sf).collect()
-      .map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    val want = referenceTrain(collectedInstances)
-    assert(got.keySet == want.keySet)
-    got.foreach { case (f, wt) => assert(math.abs(wt - want(f)) < 1e-12, s"feature $f") }
-  }
+  private def weights(model: org.apache.spark.sql.DataFrame): Map[Long, Double] =
+    model.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
   test("reference instance-line format parses and trains to the scalar fold") {
+    import org.apache.spark.sql.functions.{col, explode}
     val path = getClass.getResource("/spam-train.txt").getPath
     val parsed = Spam.parseInstances(spark.read.text(path))
     val rows = parsed.collect().map { r =>
@@ -370,34 +369,18 @@ class SpamSpec extends AnyFunSuite {
     assert(rows.length == 40)
     assert(rows.count(_._2 == 1) == 13) // doc03, 06, ..., 39
     rows.foreach { case (_, _, feats) => assert(feats.length == 7) }
-    val got = Spam.trainOn(parsed).collect()
-      .map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    val want = referenceTrain(rows)
-    assert(got.keySet == want.keySet)
-    got.foreach { case (f, w) => assert(math.abs(w - want(f)) < 1e-12, s"feature $f") }
+    val occ = parsed.select(col("docid"), col("label"),
+      explode(col("features").cast("array<bigint>")).as("feature"))
+    val want = decimalFold(rows.flatMap { case (d, l, feats) =>
+      feats.map(f => (d, l, f.toLong)) })
+    assert(weights(Spam.trainSeqOn(occ)) == want)
   }
 
   test("bounded sequential fold matches a scalar exact-decimal replay") {
-    import graft.ml.BatchLogit
-    val Half = BigDecimal.RoundingMode.HALF_UP
-    val occ = BatchLogit.occurrences(spark, sf)
+    val occ = graft.ml.BatchLogit.occurrences(spark, sf)
       .filter(org.apache.spark.sql.functions.col("docid") < Spam.SeqDocs)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    // independent replay: per docid ascending, score with current weights,
-    // sigmoid rounded to 6 dp, update every occurrence by (label-prob)*δ
-    val w = scala.collection.mutable.HashMap.empty[Long, BigDecimal]
-    occ.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (_, rows) =>
-      val label = rows.head._2
-      val feats = rows.map(_._3)
-      val score = feats.map(f => w.getOrElse(f, BigDecimal(0))).sum
-      val prob = BigDecimal(1.0 / (1.0 + math.exp(-score.toDouble))).setScale(6, Half)
-      val inc = (BigDecimal(label) - prob) * BigDecimal("0.002")
-      feats.foreach(f => w.update(f, w.getOrElse(f, BigDecimal(0)) + inc))
-    }
-    val want = w.map { case (f, wt) => f -> wt.toDouble }.toMap
-    val got = Spam.trainSeq(spark, sf).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(got == want)
+    assert(weights(Spam.trainSeq(spark, sf)) == decimalFold(occ.toSeq))
   }
 
   /** The r8 registry spam_train row — the exact-decimal fold with NO
@@ -405,23 +388,9 @@ class SpamSpec extends AnyFunSuite {
     * scalar replay over the whole corpus.
     */
   test("full-corpus fold (registry spam_train) matches a scalar exact-decimal replay") {
-    import graft.ml.BatchLogit
-    val Half = BigDecimal.RoundingMode.HALF_UP
-    val occ = BatchLogit.occurrences(spark, sf)
+    val occ = graft.ml.BatchLogit.occurrences(spark, sf)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    val w = scala.collection.mutable.HashMap.empty[Long, BigDecimal]
-    occ.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (_, rows) =>
-      val label = rows.head._2
-      val feats = rows.map(_._3)
-      val score = feats.map(f => w.getOrElse(f, BigDecimal(0))).sum
-      val prob = BigDecimal(1.0 / (1.0 + math.exp(-score.toDouble))).setScale(6, Half)
-      val inc = (BigDecimal(label) - prob) * BigDecimal("0.002")
-      feats.foreach(f => w.update(f, w.getOrElse(f, BigDecimal(0)) + inc))
-    }
-    val want = w.map { case (f, wt) => f -> wt.toDouble }.toMap
-    val got = Spam.queries("spam_train")(spark, sf).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(got == want)
+    assert(weights(Spam.queries("spam_train")(spark, sf)) == decimalFold(occ.toSeq))
   }
 
   test("bounded-model scoring matches a scalar decimal replay") {
@@ -471,96 +440,24 @@ class SpamSpec extends AnyFunSuite {
   }
 
   test("seeded shuffle changes training order but stays deterministic") {
-    val a = Spam.train(spark, sf, shuffleSeed = Some(7L)).collect()
-      .map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    val b = Spam.train(spark, sf, shuffleSeed = Some(7L)).collect()
-      .map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    val a = weights(Spam.trainSeq(spark, sf, shuffleSeed = Some(7L)))
+    val b = weights(Spam.trainSeq(spark, sf, shuffleSeed = Some(7L)))
     assert(a == b)
-  }
-
-  /** Pins the reference raw-double scoring semantics (as of r8 the
-    * REGISTRY spam_apply row is the exact-decimal full-corpus form under
-    * the recursive-CTE hash gate; the double form stays spec-pinned here
-    * per the r7 verdict): applyModel over the full train fold must equal
-    * applying the SpamSpec-verified scalar fold model (the one proven
-    * exact against the distributed train above) — a hard in-repo equality
-    * guarantee, not just the AUC bar. Tolerance 1e-9 on the 6-dp-rounded
-    * score absorbs partial-agg double-merge-order ulps without ever
-    * letting a wrong weight (δ = 2e-3 scale) through.
-    */
-  test("double-form apply equals scoring with the spec-verified scalar fold model") {
-    val w = referenceTrain(collectedInstances)
-    val want = collectedInstances.map { case (d, l, feats) =>
-      (d, l) -> feats.map(f => w.getOrElse(f, 0.0)).sum
-    }.toMap
-    val got = Spam.applyModel(Spam.instancesShared(spark, sf), Spam.train(spark, sf))
-      .select(org.apache.spark.sql.functions.col("docid"),
-        org.apache.spark.sql.functions.col("label"),
-        org.apache.spark.sql.functions.round(
-          org.apache.spark.sql.functions.col("score"), 6).as("score"),
-        org.apache.spark.sql.functions.col("predicted"))
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1)) ->
-        (r.getDouble(2), r.getString(3))).toMap
-    assert(got.keySet == want.keySet)
-    got.foreach { case (k, (score, pred)) =>
-      val ws = want(k)
-      val r6 = BigDecimal(ws).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      assert(math.abs(score - r6) < 1e-9, s"doc $k: $score vs $r6")
-      assert(pred == (if (ws > 0) "spam" else "ham"), s"doc $k predicted")
-    }
-  }
-
-  /** Same pin for the double-form ensemble: three scalar shard folds,
-    * scored and combined exactly as [[Spam.ensemble]] declares (the
-    * registry spam_ensemble row is the exact-decimal recursive-gated
-    * form as of r8).
-    */
-  test("double-form ensemble equals combining the three spec-verified shard folds") {
-    val inst = collectedInstances
-    val shardScores = (0 until 3).map { m =>
-      val w = referenceTrain(inst.filter { case (d, _, _) =>
-        java.lang.Math.floorMod(d, 3L) == m })
-      inst.map { case (d, l, feats) =>
-        (d, l) -> feats.map(f => w.getOrElse(f, 0.0)).sum
-      }.toMap
-    }
-    val got = Spam.ensemble(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getInt(1)) ->
-        (r.getDouble(2), r.getString(3), r.getString(4))).toMap
-    assert(got.keySet == shardScores.head.keySet)
-    got.foreach { case (k, (avg, pAvg, pVote)) =>
-      val ss = shardScores.map(_(k))
-      val wantAvg = BigDecimal(ss.sum / 3.0)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      assert(math.abs(avg - wantAvg) < 1e-9, s"doc $k avg: $avg vs $wantAvg")
-      assert(pAvg == (if (wantAvg > 0) "spam" else "ham"), s"doc $k predicted_avg")
-      val votes = ss.map(math.signum).sum
-      assert(pVote == (if (votes > 0) "spam" else "ham"), s"doc $k predicted_vote")
-    }
+    assert(a != weights(Spam.trainSeq(spark, sf)), "seed-7 fold equals the docid-order fold")
   }
 
   test("applyModel separates the training classes (trained-on-data sanity)") {
-    val inst = Spam.instances(spark, sf)
-    val scored = Spam.applyModel(inst, Spam.train(spark, sf)).collect()
-    // one δ=0.002 pass on a tiny corpus doesn't calibrate the 0 threshold;
-    // the meaningful claim is that learning moved scores the right way:
-    // spam docs score strictly higher than ham docs on average
+    // the registry spam_apply row: the full-corpus fold scoring the
+    // corpus it was trained on. One δ=0.002 pass on a tiny corpus doesn't
+    // calibrate the 0 threshold; the meaningful claim is that learning
+    // moved scores the right way: spam docs score strictly higher than
+    // ham docs on average
+    val scored = Spam.queries("spam_apply")(spark, sf).collect()
     val (spam, ham) = scored.partition(_.getAs[Int]("label") == 1)
     assert(spam.nonEmpty && ham.nonEmpty)
     val spamAvg = spam.map(_.getAs[Double]("score")).sum / spam.length
     val hamAvg = ham.map(_.getAs[Double]("score")).sum / ham.length
     assert(spamAvg > hamAvg, s"spam avg $spamAvg not above ham avg $hamAvg")
-  }
-
-  test("ensemble average equals mean of member scores") {
-    val rows = Spam.ensemble(spark, sf).collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      val avg = r.getAs[Double]("avg_score")
-      val pred = r.getAs[String]("predicted_avg")
-      assert(if (avg > 0) pred == "spam" else pred == "ham")
-    }
   }
 }
 
@@ -573,7 +470,9 @@ class SpamQualitySpec extends AnyFunSuite {
   private val sf = TestSpark.sf
 
   test("model ranks spam above ham: AUC well above chance") {
-    val scored = Spam.applyModel(Spam.instances(spark, sf), Spam.train(spark, sf))
+    // the registry spam_apply row: full-corpus decimal fold, scored on
+    // its own training corpus
+    val scored = Spam.queries("spam_apply")(spark, sf)
       .collect().map(r => (r.getAs[Int]("label"), r.getAs[Double]("score")))
     val pos = scored.filter(_._1 == 1).map(_._2)
     val neg = scored.filter(_._1 == 0).map(_._2)

@@ -99,14 +99,26 @@ class GraftExtensionsSpec extends AnyFunSuite {
   test("native expressions are callable from SQL after registration") {
     graft.functions.GraftExtensions.register(spark)
     import spark.implicits._
-    val row = spark.sql(
+    val called = Set("float_dot", "simhash60", "minhash_sig", "word_shingles",
+      "sign_sketch_md5", "bpe_encode")
+    val sql =
       """SELECT float_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
                           array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d,
                 simhash60(array('hello', 'world')) AS sh,
                 size(minhash_sig(array('a b c'), 8)) AS msz,
                 word_shingles(array('a','b','c','d'), 3) AS ws,
                 size(sign_sketch_md5(array(CAST(0.5 AS FLOAT)), 16)) AS sksz,
-                bpe_encode(array('the')) AS bpe""").head()
+                bpe_encode(array('the')) AS bpe"""
+    // every registered graft function is exercised here: a function
+    // cannot be registered without this SQL calling it
+    val registry = spark.sessionState.functionRegistry
+    val registered = registry.listFunction()
+      .filter(id => registry.lookupFunction(id)
+        .exists(_.getClassName == "graft.functions.ArrayExprs"))
+      .map(_.funcName).toSet
+    assert(registered == called)
+    called.foreach(f => assert(sql.contains(s"$f("), s"$f is not called"))
+    val row = spark.sql(sql).head()
     assert(row.getAs[Double]("d") == 11.0)
     assert(row.getAs[Long]("sh") >= 0L)
     assert(row.getAs[Int]("msz") == 8)
