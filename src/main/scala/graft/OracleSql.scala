@@ -4,8 +4,9 @@ package graft
   * that had drifted into verbatim copies across modules' oracle strings
   * — the TokSql-consolidation treatment (text/Text.scala) applied to the
   * next most-copied families (17 inline L2-norm copies, 8 md5-bucket
-  * copies, 5 trigram-shingle copies before the hoist). One definition
-  * each; OracleFragmentsSpec asserts modules REFERENCE these instead of
+  * copies, 5 trigram-shingle copies before the hoist), and the recursive
+  * min-label reachability of every components replay (6 copies across
+  * Similarity, Dedup, Curation and PageRank). One definition each; OracleFragmentsSpec asserts modules REFERENCE these instead of
   * inlining twins, so a semantics fix lands everywhere at once.
   */
 object OracleSql {
@@ -46,4 +47,18 @@ object OracleSql {
   def shingle3(toks: String): String =
     s"""list_distinct([$toks[i] || ' ' || $toks[i+1] || ' ' || $toks[i+2]
                        for i in generate_series(1, len($toks) - 2)])"""
+
+  /** Recursive min-label reachability: `reach(v, r)` holds every node r
+    * reachable from v (v itself included) over `edges(a, b)` (both
+    * directions listed), seeded with every `id` of `nodes` — so
+    * `SELECT v, min(r) FROM reach GROUP BY v` labels each node with its
+    * component's smallest id, the [[graft.graph.Components]] labels.
+    * UNION (not UNION ALL) makes the recursion stop at the fixpoint; the
+    * statement needs `WITH RECURSIVE`.
+    */
+  def minLabelReach(nodes: String, id: String, edges: String): String =
+    s"""reach(v, r) AS (
+            SELECT $id, $id FROM $nodes
+            UNION
+            SELECT reach.v, x.b FROM reach JOIN $edges x ON reach.r = x.a)"""
 }

@@ -555,13 +555,10 @@ object Curation {
             WHERE jaccard >= 0.5),
           edges AS (SELECT d1 AS a, d2 AS b FROM pairs
                     UNION ALL SELECT d2, d1 FROM pairs),
-          reach(doc, r) AS (
-            SELECT doc_id, doc_id FROM documents
-            UNION
-            SELECT reach.doc, e.b FROM reach JOIN edges e ON reach.r = e.a),
+          ${graft.OracleSql.minLabelReach("documents", "doc_id", "edges")},
           nc AS (
             SELECT doc_id FROM (
-              SELECT doc AS doc_id, min(r) AS canonical_id FROM reach GROUP BY doc)
+              SELECT v AS doc_id, min(r) AS canonical_id FROM reach GROUP BY v)
             WHERE doc_id = canonical_id),
           bkt AS (SELECT doc_id, s,
                     ${graft.OracleSql.md5Bucket()}
@@ -736,13 +733,10 @@ object Curation {
             WHERE j >= 0.5),
           edges AS (SELECT d1 AS a, d2 AS b FROM npairs
                     UNION ALL SELECT d2, d1 FROM npairs),
-          reach(doc, r) AS (
-            SELECT doc_id, doc_id FROM inflated
-            UNION
-            SELECT reach.doc, e.b FROM reach JOIN edges e ON reach.r = e.a),
+          ${graft.OracleSql.minLabelReach("inflated", "doc_id", "edges")},
           nc AS (
             SELECT doc_id FROM (
-              SELECT doc AS doc_id, min(r) AS canon FROM reach GROUP BY doc)
+              SELECT v AS doc_id, min(r) AS canon FROM reach GROUP BY v)
             WHERE doc_id = canon),
           tk AS (SELECT doc_id, $tokSql AS toks FROM inflated),
           q AS (

@@ -1229,11 +1229,8 @@ object Dedup {
           WHERE jaccard >= 0.5),
         edges AS (SELECT d1 AS a, d2 AS b FROM pairs
                   UNION ALL SELECT d2, d1 FROM pairs),
-        reach(doc, r) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT reach.doc, e.b FROM reach JOIN edges e ON reach.r = e.a)
-        SELECT doc AS doc_id, min(r) AS canonical_id FROM reach GROUP BY doc"""
+        ${graft.OracleSql.minLabelReach("documents", "doc_id", "edges")}
+        SELECT v AS doc_id, min(r) AS canonical_id FROM reach GROUP BY v"""
 
   private def jaccardOracle(minJ: Double): String =
     s"""WITH $shSql

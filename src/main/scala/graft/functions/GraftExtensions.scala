@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import scala.reflect.{ClassTag, classTag}
 
 /** SparkSessionExtensions injector exposing the native expressions to
   * SQL — install with
@@ -27,34 +28,32 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  private def info(name: String, usage: String) =
+  /** One SQL function: its name, usage text and builder; the
+    * ExpressionInfo names the class of the expression it builds.
+    */
+  private def entry[E <: Expression : ClassTag](name: String, usage: String)
+                                               (build: Seq[Expression] => E)
+      : (String, ExpressionInfo, Seq[Expression] => Expression) =
     // the 11-arg constructor is the non-deprecated way to carry usage
     // text (the 5-arg form is deprecated since 3.0)
-    new ExpressionInfo("graft.functions.ArrayExprs", null, name, usage,
-      "", "", "", "", "", "", "built-in")
+    (name, new ExpressionInfo(classTag[E].runtimeClass.getName, null, name, usage,
+      "", "", "", "", "", "", "built-in"), build)
 
   private val entries: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    ("float_dot",
-      info("float_dot", "float_dot(a, b) - dot product of two float arrays in double"),
-      (args: Seq[Expression]) => ArrayExprs.FloatDot(args(0), args(1))),
-    ("minhash_sig",
-      info("minhash_sig", "minhash_sig(arr, k) - k-hash MinHash signature"),
-      (args: Seq[Expression]) => ArrayExprs.MinHashSig(args(0),
-        args(1).eval().asInstanceOf[Int])),
-    ("simhash60",
-      info("simhash60", "simhash60(tokens) - 60-bit md5-derived SimHash"),
-      (args: Seq[Expression]) => ArrayExprs.SimHash60(args(0))),
-    ("word_shingles",
-      info("word_shingles", "word_shingles(tokens, n) - distinct word n-gram shingles"),
-      (args: Seq[Expression]) => ArrayExprs.WordShingles(args(0),
-        args(1).eval().asInstanceOf[Int])),
-    ("sign_sketch_md5",
-      info("sign_sketch_md5", "sign_sketch_md5(vec, bits) - md5-plane sign sketch (SQL-replayable)"),
-      (args: Seq[Expression]) => ArrayExprs.SignSketchMd5(args(0),
-        args(1).eval().asInstanceOf[Int])),
-    ("bpe_encode",
-      info("bpe_encode", "bpe_encode(tokens) - subword units under the shipped BPE merge table"),
-      (args: Seq[Expression]) => graft.text.Bpe.BpeEncode(args(0), graft.text.Bpe.FrozenMerges)),
+    entry("float_dot", "float_dot(a, b) - dot product of two float arrays in double")(
+      args => ArrayExprs.FloatDot(args(0), args(1))),
+    entry("minhash_sig", "minhash_sig(arr, k) - k-hash MinHash signature")(
+      args => ArrayExprs.MinHashSig(args(0), args(1).eval().asInstanceOf[Int])),
+    entry("simhash60", "simhash60(tokens) - 60-bit md5-derived SimHash")(
+      args => ArrayExprs.SimHash60(args(0))),
+    entry("word_shingles", "word_shingles(tokens, n) - distinct word n-gram shingles")(
+      args => ArrayExprs.WordShingles(args(0), args(1).eval().asInstanceOf[Int])),
+    entry("sign_sketch_md5",
+      "sign_sketch_md5(vec, bits) - md5-plane sign sketch (SQL-replayable)")(
+      args => ArrayExprs.SignSketchMd5(args(0), args(1).eval().asInstanceOf[Int])),
+    entry("bpe_encode",
+      "bpe_encode(tokens) - subword units under the shipped BPE merge table")(
+      args => graft.text.Bpe.BpeEncode(args(0), graft.text.Bpe.FrozenMerges)),
   )
 
   /** Register on an already-built session (test/driver convenience). */

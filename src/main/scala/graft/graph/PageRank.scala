@@ -984,17 +984,14 @@ object PageRank {
     // recursive min-label reachability over the symmetrized edge set —
     // component id = min reachable node (the dedup_groups technique)
     "pr_components" ->
-      """WITH RECURSIVE e AS MATERIALIZED (
+      s"""WITH RECURSIVE e AS MATERIALIZED (
            SELECT DISTINCT l_orderkey % 100 AS src, l_partkey % 100 AS dst
            FROM lineitem WHERE l_orderkey % 100 <> l_partkey % 100),
          ed AS (SELECT src AS a, dst AS b FROM e
                 UNION SELECT dst, src FROM e),
          n AS (SELECT DISTINCT id FROM
                  (SELECT src AS id FROM e UNION SELECT dst FROM e)),
-         reach(v, r) AS (
-           SELECT id, id FROM n
-           UNION
-           SELECT reach.v, ed.b FROM reach JOIN ed ON reach.r = ed.a)
+         ${graft.OracleSql.minLabelReach("n", "id", "ed")}
          SELECT v AS id, min(r) AS component_id FROM reach GROUP BY v""",
     "pr_triangles"     -> trianglesOracle(100),
     "pr_link_predict"  -> linkPredictOracle(10000, 3, 200),

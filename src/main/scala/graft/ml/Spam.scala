@@ -357,21 +357,7 @@ object Spam {
       case None => "doc_id"
     }
     val sb = new StringBuilder(
-      s"""inst$sfx AS MATERIALIZED (
-            SELECT row_number() OVER (ORDER BY $ord) AS rn, doc_id AS docid,
-                   CASE WHEN list_contains(toks, 'spark') THEN 1 ELSE 0 END AS label
-            FROM (SELECT doc_id, $tokSql AS toks FROM documents
-                  WHERE doc_id < $steps AND $shard)),
-          occ$sfx AS MATERIALIZED (
-            SELECT i.rn, f.feature, CAST(count(*) AS DECIMAL(4,0)) AS cnt
-            FROM inst$sfx i JOIN (
-              SELECT doc_id AS docid,
-                     unnest(list_transform(toks,
-                       w -> ('0x' || substr(md5(w), 1, 8))::BIGINT % $numFeatures)) AS feature
-              FROM (SELECT doc_id, $tokSql AS toks FROM documents
-                    WHERE doc_id < $steps AND $shard)) f
-              ON i.docid = f.docid
-            GROUP BY i.rn, f.feature),
+      instOccSql(sfx, numFeatures, s"doc_id < $steps AND $shard", ord) + s""",
           w${sfx}0 AS MATERIALIZED (
             SELECT DISTINCT feature, CAST(0 AS DECIMAL(18,9)) AS w FROM occ$sfx)""")
     for (i <- 1 to steps) sb ++=
@@ -390,6 +376,97 @@ object Spam {
             FROM w$sfx${i - 1} ww
             LEFT JOIN (SELECT feature, cnt FROM occ$sfx WHERE rn = $i) o USING (feature))"""
     sb.toString
+  }
+
+  /** The training instances of the documents passing `where`, numbered
+    * in `ord` order (`inst$sfx`: rn, docid, label), and each instance's
+    * feature counts (`occ$sfx`: rn, feature, cnt) — the fold input of
+    * both the unrolled and the recursive training chains.
+    */
+  private def instOccSql(sfx: String, numFeatures: Int, where: String, ord: String): String =
+    s"""inst$sfx AS MATERIALIZED (
+            SELECT row_number() OVER (ORDER BY $ord) AS rn, doc_id AS docid,
+                   $labelSql AS label
+            FROM (SELECT doc_id, $tokSql AS toks FROM documents WHERE $where)),
+          occ$sfx AS MATERIALIZED (
+            SELECT i.rn, f.feature, CAST(count(*) AS DECIMAL(4,0)) AS cnt
+            FROM inst$sfx i JOIN (
+              SELECT doc_id AS docid, unnest(${featuresSql(numFeatures)}) AS feature
+              FROM (SELECT doc_id, $tokSql AS toks FROM documents WHERE $where)) f
+              ON i.docid = f.docid
+            GROUP BY i.rn, f.feature)"""
+
+  /** The spam label of a `toks` row: 1 iff it holds the token 'spark'. */
+  private val labelSql = "CASE WHEN list_contains(toks, 'spark') THEN 1 ELSE 0 END"
+
+  /** The hashed features of a `toks` row, one per token: the first 8 hex
+    * digits of md5(token) modulo `numFeatures` (BatchLogit's hashing).
+    */
+  private def featuresSql(numFeatures: Int): String =
+    s"list_transform(toks, w -> ('0x' || substr(md5(w), 1, 8))::BIGINT % $numFeatures)"
+
+  /** Per-document feature counts `name`(docid, label, feature, cnt) of
+    * the documents `filter` keeps (a WHERE clause, or "" for all) — the
+    * scoring side's occurrence table.
+    */
+  private def scoreOccSql(name: String, numFeatures: Int, filter: String = ""): String =
+    s"""$name AS MATERIALIZED (
+            SELECT docid, label, feature, CAST(count(*) AS DECIMAL(6,0)) AS cnt
+            FROM (SELECT doc_id AS docid, $labelSql AS label,
+                         unnest(${featuresSql(numFeatures)}) AS feature
+                  FROM (SELECT doc_id, $tokSql AS toks FROM documents $filter))
+            GROUP BY docid, label, feature)"""
+
+  /** `wd`: the model `weights`(feature, w) round-tripped through DOUBLE
+    * exactly as the Spark side does (grid value → same decimal back),
+    * and `sc`(docid, label, score_d): the exact-decimal score of each
+    * document of the occurrence table `occ`.
+    */
+  private def scoreSql(occ: String, weights: String): String =
+    s"""wd AS (SELECT feature, CAST(CAST(w AS DOUBLE) AS DECIMAL(18,9)) AS w
+                 FROM $weights),
+          sc AS (SELECT o.docid, o.label,
+                        sum(o.cnt * coalesce(w.w, CAST(0 AS DECIMAL(18,9)))) AS score_d
+                 FROM $occ o LEFT JOIN wd w USING (feature)
+                 GROUP BY o.docid, o.label)"""
+
+  /** [[applySeq]]'s replay after the training chain `chain` (a WITH
+    * prefix ending in the weight table `weights`): every document scored
+    * by the one model.
+    */
+  private def applyOracle(chain: String, weights: String, numFeatures: Int): String =
+    chain + s""",
+          ${scoreOccSql("occf", numFeatures)},
+          ${scoreSql("occf", weights)}
+          SELECT docid, label, CAST(score_d AS DOUBLE) AS score,
+                 CASE WHEN score_d > 0 THEN 'spam' ELSE 'ham' END AS predicted
+          FROM sc"""
+
+  /** [[ensembleSeq]]'s replay after the three shard chains `chains` (a
+    * WITH prefix; shard m's weights in `weights(m)`): one scoring
+    * aggregate per model over the shared full-corpus occurrence table,
+    * then the average and the sign vote.
+    */
+  private def ensembleOracle(chains: String, weights: Int => String,
+                             numFeatures: Int): String = {
+    val scoring = (0 until 3).map(m => s""",
+          wd$m AS (SELECT feature, CAST(CAST(w AS DOUBLE) AS DECIMAL(18,9)) AS w
+                   FROM ${weights(m)}),
+          sc$m AS MATERIALIZED (
+            SELECT o.docid, o.label,
+                   CAST(sum(o.cnt * coalesce(w.w, CAST(0 AS DECIMAL(18,9))))
+                        AS DECIMAL(18,9)) AS s_$m
+            FROM occf o LEFT JOIN wd$m w USING (feature)
+            GROUP BY o.docid, o.label)""").mkString
+    def sign(c: String) = s"(CASE WHEN $c > 0 THEN 1 WHEN $c < 0 THEN -1 ELSE 0 END)"
+    chains + s""",
+          ${scoreOccSql("occf", numFeatures)}$scoring
+          SELECT docid, label,
+                 CAST(s_0 + s_1 + s_2 AS DOUBLE) / 3.0 AS avg_score,
+                 CASE WHEN s_0 + s_1 + s_2 > 0 THEN 'spam' ELSE 'ham' END AS predicted_avg,
+                 CASE WHEN ${sign("s_0")} + ${sign("s_1")} + ${sign("s_2")} > 0
+                      THEN 'spam' ELSE 'ham' END AS predicted_vote
+          FROM sc0 JOIN sc1 USING (docid, label) JOIN sc2 USING (docid, label)"""
   }
 
   private def trainSeqOracle(steps: Int, numFeatures: Int,
@@ -416,19 +493,7 @@ object Spam {
   private def trainSeqRecCtes(numFeatures: Int, sfx: String = "",
                               shardMod: Int = -1): String = {
     val shard = if (shardMod < 0) "TRUE" else s"doc_id % 3 = $shardMod"
-    s"""inst$sfx AS MATERIALIZED (
-          SELECT row_number() OVER (ORDER BY doc_id) AS rn, doc_id AS docid,
-                 CASE WHEN list_contains(toks, 'spark') THEN 1 ELSE 0 END AS label
-          FROM (SELECT doc_id, $tokSql AS toks FROM documents WHERE $shard)),
-        occ$sfx AS MATERIALIZED (
-          SELECT i.rn, f.feature, CAST(count(*) AS DECIMAL(4,0)) AS cnt
-          FROM inst$sfx i JOIN (
-            SELECT doc_id AS docid,
-                   unnest(list_transform(toks,
-                     w -> ('0x' || substr(md5(w), 1, 8))::BIGINT % $numFeatures)) AS feature
-            FROM (SELECT doc_id, $tokSql AS toks FROM documents WHERE $shard)) f
-            ON i.docid = f.docid
-          GROUP BY i.rn, f.feature),
+    instOccSql(sfx, numFeatures, shard, "doc_id") + s""",
         wr$sfx(it, feature, w) AS (
           SELECT 0, feature, CAST(0 AS DECIMAL(18,9))
           FROM (SELECT DISTINCT feature FROM occ$sfx)
@@ -455,138 +520,30 @@ object Spam {
     "WITH RECURSIVE " + trainSeqRecCtes(numFeatures) + s"""
           SELECT feature, CAST(w AS DOUBLE) AS weight FROM wf"""
 
-  /** [[applySeqOracle]] with the recursive full-corpus chain as the model. */
   private def applyFullOracle(numFeatures: Int): String =
-    "WITH RECURSIVE " + trainSeqRecCtes(numFeatures) + s""",
-          occf AS MATERIALIZED (
-            SELECT docid, label, feature, CAST(count(*) AS DECIMAL(6,0)) AS cnt
-            FROM (SELECT doc_id AS docid,
-                         CASE WHEN list_contains(toks, 'spark') THEN 1 ELSE 0 END AS label,
-                         unnest(list_transform(toks,
-                           w -> ('0x' || substr(md5(w), 1, 8))::BIGINT % $numFeatures)) AS feature
-                  FROM (SELECT doc_id, $tokSql AS toks FROM documents))
-            GROUP BY docid, label, feature),
-          wd AS (SELECT feature,
-                        CAST(CAST(w AS DOUBLE) AS DECIMAL(18,9)) AS w
-                 FROM wf)
-          SELECT docid, label, CAST(score_d AS DOUBLE) AS score,
-                 CASE WHEN score_d > 0 THEN 'spam' ELSE 'ham' END AS predicted
-          FROM (SELECT o.docid, o.label,
-                       sum(o.cnt * coalesce(w.w, CAST(0 AS DECIMAL(18,9)))) AS score_d
-                FROM occf o LEFT JOIN wd w USING (feature)
-                GROUP BY o.docid, o.label)"""
+    applyOracle("WITH RECURSIVE " + trainSeqRecCtes(numFeatures), "wf", numFeatures)
 
-  /** [[ensembleSeqOracle]] with three recursive full-shard chains. */
-  private def ensembleFullOracle(numFeatures: Int): String = {
-    val chains = (0 until 3).map(m =>
-      trainSeqRecCtes(numFeatures, sfx = s"m${m}_", shardMod = m))
-    val scoring = (0 until 3).map(m => s""",
-          wd$m AS (SELECT feature, CAST(CAST(w AS DOUBLE) AS DECIMAL(18,9)) AS w
-                   FROM wfm${m}_),
-          sc$m AS MATERIALIZED (
-            SELECT o.docid, o.label,
-                   CAST(sum(o.cnt * coalesce(w.w, CAST(0 AS DECIMAL(18,9))))
-                        AS DECIMAL(18,9)) AS s_$m
-            FROM occf o LEFT JOIN wd$m w USING (feature)
-            GROUP BY o.docid, o.label)""").mkString
-    def sign(c: String) = s"(CASE WHEN $c > 0 THEN 1 WHEN $c < 0 THEN -1 ELSE 0 END)"
-    "WITH RECURSIVE " + chains.mkString(",\n          ") + s""",
-          occf AS MATERIALIZED (
-            SELECT docid, label, feature, CAST(count(*) AS DECIMAL(6,0)) AS cnt
-            FROM (SELECT doc_id AS docid,
-                         CASE WHEN list_contains(toks, 'spark') THEN 1 ELSE 0 END AS label,
-                         unnest(list_transform(toks,
-                           w -> ('0x' || substr(md5(w), 1, 8))::BIGINT % $numFeatures)) AS feature
-                  FROM (SELECT doc_id, $tokSql AS toks FROM documents))
-            GROUP BY docid, label, feature)$scoring
-          SELECT docid, label,
-                 CAST(s_0 + s_1 + s_2 AS DOUBLE) / 3.0 AS avg_score,
-                 CASE WHEN s_0 + s_1 + s_2 > 0 THEN 'spam' ELSE 'ham' END AS predicted_avg,
-                 CASE WHEN ${sign("s_0")} + ${sign("s_1")} + ${sign("s_2")} > 0
-                      THEN 'spam' ELSE 'ham' END AS predicted_vote
-          FROM sc0 JOIN sc1 USING (docid, label) JOIN sc2 USING (docid, label)"""
-  }
+  private def ensembleFullOracle(numFeatures: Int): String =
+    ensembleOracle("WITH RECURSIVE " + (0 until 3).map(m =>
+        trainSeqRecCtes(numFeatures, sfx = s"m${m}_", shardMod = m)).mkString(",\n          "),
+      m => s"wfm${m}_", numFeatures)
 
-  /** DuckDB replay of [[applySeq]]: the [[trainSeqCtes]] chain, a
-    * full-corpus occurrence-count table, and the scoring join. The
-    * weight round-trips through DOUBLE exactly as the Spark side does
-    * (grid value → same decimal back).
-    */
   private def applySeqOracle(steps: Int, numFeatures: Int): String =
-    "WITH " + trainSeqCtes(steps, numFeatures) + s""",
-          occf AS MATERIALIZED (
-            SELECT docid, label, feature, CAST(count(*) AS DECIMAL(6,0)) AS cnt
-            FROM (SELECT doc_id AS docid,
-                         CASE WHEN list_contains(toks, 'spark') THEN 1 ELSE 0 END AS label,
-                         unnest(list_transform(toks,
-                           w -> ('0x' || substr(md5(w), 1, 8))::BIGINT % $numFeatures)) AS feature
-                  FROM (SELECT doc_id, $tokSql AS toks FROM documents))
-            GROUP BY docid, label, feature),
-          wd AS (SELECT feature,
-                        CAST(CAST(w AS DOUBLE) AS DECIMAL(18,9)) AS w
-                 FROM w$steps)
-          SELECT docid, label, CAST(score_d AS DOUBLE) AS score,
-                 CASE WHEN score_d > 0 THEN 'spam' ELSE 'ham' END AS predicted
-          FROM (SELECT o.docid, o.label,
-                       sum(o.cnt * coalesce(w.w, CAST(0 AS DECIMAL(18,9)))) AS score_d
-                FROM occf o LEFT JOIN wd w USING (feature)
-                GROUP BY o.docid, o.label)"""
+    applyOracle("WITH " + trainSeqCtes(steps, numFeatures), s"w$steps", numFeatures)
 
-  /** DuckDB replay of [[ensembleSeq]]: three suffixed [[trainSeqCtes]]
-    * chains (one per shard), the shared full-corpus occurrence table,
-    * one scoring aggregate per model, and the combine.
-    */
-  private def ensembleSeqOracle(steps: Int, numFeatures: Int): String = {
-    val chains = (0 until 3).map(m =>
-      trainSeqCtes(steps, numFeatures, sfx = s"m${m}_", shardMod = m))
-    val scoring = (0 until 3).map(m => s""",
-          wd$m AS (SELECT feature, CAST(CAST(w AS DOUBLE) AS DECIMAL(18,9)) AS w
-                   FROM wm${m}_$steps),
-          sc$m AS MATERIALIZED (
-            SELECT o.docid, o.label,
-                   CAST(sum(o.cnt * coalesce(w.w, CAST(0 AS DECIMAL(18,9))))
-                        AS DECIMAL(18,9)) AS s_$m
-            FROM occf o LEFT JOIN wd$m w USING (feature)
-            GROUP BY o.docid, o.label)""").mkString
-    def sign(c: String) = s"(CASE WHEN $c > 0 THEN 1 WHEN $c < 0 THEN -1 ELSE 0 END)"
-    "WITH " + chains.mkString(",\n          ") + s""",
-          occf AS MATERIALIZED (
-            SELECT docid, label, feature, CAST(count(*) AS DECIMAL(6,0)) AS cnt
-            FROM (SELECT doc_id AS docid,
-                         CASE WHEN list_contains(toks, 'spark') THEN 1 ELSE 0 END AS label,
-                         unnest(list_transform(toks,
-                           w -> ('0x' || substr(md5(w), 1, 8))::BIGINT % $numFeatures)) AS feature
-                  FROM (SELECT doc_id, $tokSql AS toks FROM documents))
-            GROUP BY docid, label, feature)$scoring
-          SELECT docid, label,
-                 CAST(s_0 + s_1 + s_2 AS DOUBLE) / 3.0 AS avg_score,
-                 CASE WHEN s_0 + s_1 + s_2 > 0 THEN 'spam' ELSE 'ham' END AS predicted_avg,
-                 CASE WHEN ${sign("s_0")} + ${sign("s_1")} + ${sign("s_2")} > 0
-                      THEN 'spam' ELSE 'ham' END AS predicted_vote
-          FROM sc0 JOIN sc1 USING (docid, label) JOIN sc2 USING (docid, label)"""
-  }
+  private def ensembleSeqOracle(steps: Int, numFeatures: Int): String =
+    ensembleOracle("WITH " + (0 until 3).map(m =>
+        trainSeqCtes(steps, numFeatures, sfx = s"m${m}_", shardMod = m)).mkString(",\n          "),
+      m => s"wm${m}_$steps", numFeatures)
 
   /** Shared oracle front half: train CTEs + holdout scoring, ending at
     * `sc(docid, label, score_d)` — the [[holdoutScored]] replay.
     */
   private def holdoutScoredCtes(steps: Int, numFeatures: Int): String =
     "WITH " + trainSeqCtes(steps, numFeatures) + s""",
-          wd AS (SELECT feature, CAST(CAST(w AS DOUBLE) AS DECIMAL(18,9)) AS w
-                 FROM w$steps),
-          occh AS MATERIALIZED (
-            SELECT docid, label, feature, CAST(count(*) AS DECIMAL(6,0)) AS cnt
-            FROM (SELECT doc_id AS docid,
-                         CASE WHEN list_contains(toks, 'spark') THEN 1 ELSE 0 END AS label,
-                         unnest(list_transform(toks,
-                           w -> ('0x' || substr(md5(w), 1, 8))::BIGINT % $numFeatures)) AS feature
-                  FROM (SELECT doc_id, $tokSql AS toks FROM documents
-                        WHERE doc_id >= $steps
-                          AND ${graft.OracleSql.md5Bucket()} >= 90))
-            GROUP BY docid, label, feature),
-          sc AS (SELECT o.docid, o.label,
-                        sum(o.cnt * coalesce(w.w, CAST(0 AS DECIMAL(18,9)))) AS score_d
-                 FROM occh o LEFT JOIN wd w USING (feature)
-                 GROUP BY o.docid, o.label)"""
+          ${scoreOccSql("occh", numFeatures,
+            s"WHERE doc_id >= $steps AND ${graft.OracleSql.md5Bucket()} >= 90")},
+          ${scoreSql("occh", s"w$steps")}"""
 
   private def calibrationOracle(steps: Int, numFeatures: Int): String =
     holdoutScoredCtes(steps, numFeatures) + s""",

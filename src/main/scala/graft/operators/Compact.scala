@@ -35,11 +35,6 @@ object Compact {
                   else f.length()).sum
   }
 
-  private[graft] def parquetFileCount(path: String): Int = {
-    val kids = Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-    kids.count(f => f.getName.endsWith(".parquet"))
-  }
-
   private[graft] def smallPath(dir: String): String =
     graft.Caches.artifactBase(dir).resolve("compact/events_small").toString
   private[graft] def compactedPath(dir: String): String =

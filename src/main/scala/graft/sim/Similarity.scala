@@ -84,15 +84,20 @@ object Similarity {
   def topK(spark: SparkSession, dir: String, k: Int = 3, nQueries: Int = 10): DataFrame = {
     val e = exactInput(spark, dir)
     val q = e.filter(col("vec_id") < nQueries).toDF("query_id", "qe", "qn")
-    val scored = q.join(e.toDF("vec_id", "ce", "cn"), col("query_id") =!= col("vec_id"))
+    topKBy(q.join(e.toDF("vec_id", "ce", "cn"), col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id"),
-        cosinePre(col("qe"), col("qn"), col("ce"), col("cn")).as("cos"))
+        cosinePre(col("qe"), col("qn"), col("ce"), col("cn")).as("cos")), "cos", k)
+  }
+
+  /** The top-`k` rows per `query_id` of `scored`, ranked (`score` desc,
+    * vec_id) into a `rank` column — the one rank window every top-k tail
+    * ends in (the oracles' twin is [[topKSql]]).
+    */
+  private def topKBy(scored: DataFrame, score: String, k: Int): DataFrame =
     scored
       .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
+        Window.partitionBy(col("query_id")).orderBy(col(score).desc, col("vec_id"))))
       .where(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos"), col("rank"))
-  }
 
   /** Maximal Marginal Relevance re-ranking (Carbonell & Goldstein 1998):
     * the diversity pass a retrieval stack runs AFTER top-k — greedily
@@ -237,18 +242,18 @@ object Similarity {
   /** Banded sign sketches for every vector, persisted once per
     * (session, dir): band key = the band's 4 bits as an integer
     * (b0 + 2b1 + 4b2 + 8b3), 16 buckets per band, no hashing — the
-    * oracle rebuilds it verbatim. Shared by [[topKLsh]] (ANN search) and
-    * [[embeddingDedupGroups]] (near-dup detection): one sketch pass
-    * serves both, the build-once/query-many split again.
+    * oracles rebuild it with [[lshBandsSql]]. Shared by [[topKLsh]]
+    * (ANN search) and [[embeddingDedupGroups]] (near-dup detection):
+    * one sketch pass serves both, the build-once/query-many split again.
     */
   private def bandedSketches(spark: SparkSession, dir: String): DataFrame =
     graft.Caches.memoized(spark, dir, "sim:lsh_bands")(
       bandRows(Tables.embeddings(spark, dir)))
 
   /** Sketch → 4-bit band keys over an arbitrary (vec_id, embedding)
-    * frame — the ONE banding block (the fixture memo and the ×10 tier
-    * previously carried verbatim copies; a band-key change applied to
-    * one would have silently desynchronized the tiers and the oracles).
+    * frame — the ONE banding block of the fixture memo and the ×10 tier
+    * (a band-key change must reach both tiers at once), replayed by the
+    * one [[lshBandsSql]].
     */
   private def bandRows(vectors: DataFrame): DataFrame =
     vectors
@@ -313,15 +318,22 @@ object Similarity {
     // vectors come back by key WITH precomputed norms so the re-rank
     // costs 1 dot per pair instead of 3 (cosinePre is bit-identical to
     // cosine — sqrt(dot(v,v)) is the same double per row or per pair)
-    val idPairs = bands.select(col("vec_id").as("query_id"), col("band"), col("key"))
+    val probes = bands.select(col("vec_id").as("query_id"), col("band"), col("key"))
       .where(col("query_id") < nQueries)
+    lshRerank(fetchBack(bandCandidates(probes, bands), bands), k)
+  }
+
+  /** Distinct (query_id, vec_id) pairs whose (band, key) match: the
+    * query-side `probes` (query_id, band, key) joined to the corpus
+    * `bands` — the one band-bucket candidate join of the LSH probes.
+    */
+  private def bandCandidates(probes: DataFrame, bands: DataFrame): DataFrame =
+    probes
       .join(bands.select(col("vec_id"), col("band").as("band2"), col("key").as("key2")),
         col("band") === col("band2") && col("key") === col("key2") &&
           col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id"))
       .distinct()
-    lshRerank(fetchBack(idPairs, bands), k)
-  }
 
   /** Join the deduped (query_id, vec_id) candidates back to their
     * vectors + norms — the fetch-back half of the lean probe shape.
@@ -335,13 +347,8 @@ object Similarity {
   }
 
   private def lshRerank(cand: DataFrame, k: Int): DataFrame =
-    cand
-      .select(col("query_id"), col("vec_id"),
-        cosinePre(col("qe"), col("qn"), col("ce"), col("cn")).as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos"), col("rank"))
+    topKBy(cand.select(col("query_id"), col("vec_id"),
+      cosinePre(col("qe"), col("qn"), col("ce"), col("cn")).as("cos")), "cos", k)
 
   /** MULTI-PROBE LSH (Lv et al., VLDB 2007): each query band probes its
     * own bucket AND the 4 Hamming-1 neighbor buckets (key ⊕ 2^i) —
@@ -360,14 +367,7 @@ object Similarity {
       .select(col("vec_id").as("query_id"), col("band"),
         explode(array((Seq(0) ++ (0 until SketchRows).map(1 << _)).map(m =>
           col("key").bitwiseXOR(lit(m))): _*)).as("key"))
-    val idPairs = probes
-      .join(bands.select(col("vec_id"),
-        col("band").as("band2"), col("key").as("key2")),
-        col("band") === col("band2") && col("key") === col("key2") &&
-          col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id"))
-      .distinct()
-    lshRerank(fetchBack(idPairs, bands), k)
+    lshRerank(fetchBack(bandCandidates(probes, bands), bands), k)
   }
 
   private val BigReplicas = 10
@@ -434,9 +434,18 @@ object Similarity {
       .select(col("v1"), col("v2"))
       .distinct()
     val e = withNorm(Tables.embeddings(spark, dir))
-    val pairs = cand
+    cosineGroups(spark, dir, s"sim:emb_groups_$minCos", cand
       .join(e.toDF("v1", "e1", "n1"), "v1")
-      .join(e.toDF("v2", "e2", "n2"), "v2")
+      .join(e.toDF("v2", "e2", "n2"), "v2"), minCos)
+  }
+
+  /** Duplicate groups (vec_id, canonical_id) of the candidate pairs
+    * `cand` (v1, e1, n1, v2, e2, n2) whose exact cosine reaches
+    * `minCos` — the scoring and labelling tail of both embedding dedups.
+    */
+  private def cosineGroups(spark: SparkSession, dir: String, memoKey: String,
+                           cand: DataFrame, minCos: Double): DataFrame = {
+    val pairs = cand
       .select(col("v1"), col("v2"),
         cosinePre(col("e1"), col("n1"), col("e2"), col("n2")).as("cos"))
       .where(col("cos") >= minCos)
@@ -445,8 +454,8 @@ object Similarity {
     // the large-star/small-star loop is an ITERATIVE build (actions per
     // round) and unmemoized it re-converged per bench rep (~1.7 s/rep)
     // for a label table that is corpus prep by the same argument as
-    // dupGroups'. Cost lands on `build:sim:emb_groups_<cos>`.
-    graft.Caches.memoized(spark, dir, s"sim:emb_groups_$minCos")(
+    // dupGroups'. Cost lands on `build:<memoKey>`.
+    graft.Caches.memoized(spark, dir, memoKey)(
       graft.graph.Components.labels(
         Tables.embeddings(spark, dir).select(col("vec_id")), pairs,
         // tiny pair graph (see dedup.Dedup.dupGroupsUncached)
@@ -494,26 +503,20 @@ object Similarity {
     * baseline in spec). 100 TB shape: band equi-join candidates × an
     * int8 code table 4× smaller than the vectors — the re-rank never
     * touches a float array. Deterministic end to end (md5 plane family +
-    * integer scoring), so the oracle replays sketch → band → quantize →
-    * integer re-rank verbatim.
+    * integer scoring), so the oracle replays sketch → band
+    * ([[lshBandsSql]]) → candidates ([[bandJoinSql]]) → quantize →
+    * integer re-rank ([[topKSql]]).
     */
   def topKSq(spark: SparkSession, dir: String, k: Int = 3, nQueries: Int = 10): DataFrame = {
     val bands = bandedSketches(spark, dir).select(col("vec_id"), col("band"), col("key"))
-    val cand = bands.toDF("query_id", "band", "key")
-      .where(col("query_id") < nQueries)
-      .join(bands.toDF("vec_id", "band2", "key2"),
-        col("band") === col("band2") && col("key") === col("key2") &&
-          col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id"))
-      .distinct()
+    val cand = bandCandidates(
+      bands.toDF("query_id", "band", "key").where(col("query_id") < nQueries), bands)
     val codes = sq8Codes(spark, dir)
-    cand
+    topKBy(cand
       .join(codes.toDF("query_id", "qq"), "query_id")
       .join(codes.toDF("vec_id", "cq"), "vec_id")
-      .select(col("query_id"), col("vec_id"), sqDot(col("qq"), col("cq")).as("score_q8"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("score_q8").desc, col("vec_id"))))
-      .where(col("rank") <= k)
+      .select(col("query_id"), col("vec_id"), sqDot(col("qq"), col("cq")).as("score_q8")),
+        "score_q8", k)
       .select(col("query_id"), col("vec_id"), col("score_q8"),
         round(col("score_q8").cast("double") / lit(16129.0), 6).as("qcos"), col("rank"))
   }
@@ -618,29 +621,43 @@ object Similarity {
     * bit-for-bit.
     */
   def topKPq(spark: SparkSession, dir: String, k: Int = 3, nQueries: Int = 10): DataFrame = {
-    val cb = pqCodebooks(spark, dir)
     val q = Tables.embeddings(spark, dir).where(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         sqrt(dot(col("embedding"), col("embedding"))).as("qn"))
-    val lut = q.join(broadcast(cb))
-      .select(col("query_id"), col("qn"), col("m"), col("cell"),
+    adcTopK(pqCodes(spark, dir), q, pqCodebooks(spark, dir),
+      col("lq") =!= col("vec_id"), k)
+  }
+
+  /** ADC scoring and ranking of PQ-coded `rows` (vec_id, m, code, …):
+    * the lookup table — per (query, subspace, cell) the round-9 dot of
+    * the query's subvector with the cell centroid, plus the cell's
+    * squared norm — broadcast and equi-joined on (m, code) and `onQuery`
+    * (a predicate over the table's query column `lq`), summed per
+    * (query, vec) as exact DECIMAL, one double divide onto the 6-dp
+    * grid. Shared by the exhaustive [[topKPq]] and the cell-pruned
+    * [[ivfPqRank]].
+    */
+  private def adcTopK(rows: DataFrame, queries: DataFrame, cb: DataFrame,
+                      onQuery: Column, k: Int): DataFrame = {
+    // lut columns renamed so the join condition names distinct
+    // attributes outright (a candidate table's query_id descends from the
+    // same scan, and leaning on Spark's self-join disambiguation draws a
+    // trivially-true-predicate warning even when it resolves right)
+    val lut = queries.join(broadcast(cb))
+      .select(col("query_id").as("lq"), col("qn"), col("m").as("lm"),
+        col("cell").as("lcode"),
         round(graft.functions.ArrayExprs.floatDoubleDot(
             slice(col("qe"), col("m") * lit(PqSub) + lit(1), lit(PqSub)), col("ce")), 9)
           .cast("decimal(18,9)").as("term"),
         round(col("cn2"), 9).cast("decimal(18,9)").as("vterm"))
-    val codes = pqCodes(spark, dir)
-    codes.join(broadcast(lut),
-        codes("m") === lut("m") && codes("code") === lut("cell") &&
-          col("query_id") =!= col("vec_id"))
-      .groupBy(col("query_id"), col("vec_id"), col("qn"))
+    topKBy(rows
+      .join(broadcast(lut),
+        onQuery && col("m") === col("lm") && col("code") === col("lcode"))
+      .groupBy(col("lq").as("query_id"), col("vec_id"), col("qn"))
       .agg(sum(col("term")).cast("double").as("s"),
         sum(col("vterm")).cast("double").as("vn2"))
       .select(col("query_id"), col("vec_id"),
-        round(col("s") / (col("qn") * sqrt(col("vn2"))), 6).as("pqcos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("pqcos").desc, col("vec_id"))))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("pqcos"), col("rank"))
+        round(col("s") / (col("qn") * sqrt(col("vn2"))), 6).as("pqcos")), "pqcos", k)
   }
 
   private val IvfCells = 16
@@ -686,19 +703,44 @@ object Similarity {
     val assigned = graft.Caches.memoized(spark, dir, "sim:ivf_assigned") {
       // label rides along from the scan (zero extra cost, no self-join
       // later) — [[topKFiltered]] keys its candidate restriction on it
-      val e = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding"),
-          sqrt(dot(col("embedding"), col("embedding"))).as("norm"), col("label"))
-      e.join(broadcast(cents))
-        .select(col("vec_id"), col("embedding"), col("norm"), col("label"), col("cell"),
-          centCos(col("embedding"), col("norm"), col("ce"), col("cn")).as("ccos"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("cell"))))
-        .where(col("rk") === 1)
-        .select(col("vec_id"), col("embedding"), col("norm"), col("label"), col("cell"))
+      assignCells(Tables.embeddings(spark, dir)
+        .select(col("vec_id"), col("embedding"), col("label")), cents)
     }
     (assigned, cents)
   }
+
+  /** Per vector of `vectors` (vec_id, embedding, carried columns…) its
+    * norm and its cell — the argmax cosine against the broadcast trained
+    * centroids (round6 grid, ties to the lowest cell): (vec_id,
+    * embedding, norm, carried…, cell). The one assignment of
+    * [[ivfAssign]] and [[ivfAssignBig]].
+    */
+  private def assignCells(vectors: DataFrame, cents: DataFrame): DataFrame = {
+    val carried = vectors.columns.filterNot(Set("vec_id", "embedding")).map(col).toSeq
+    val e = vectors.select(Seq(col("vec_id"), col("embedding"),
+      sqrt(dot(col("embedding"), col("embedding"))).as("norm")) ++ carried: _*)
+    e.join(broadcast(cents))
+      .select(e.columns.map(col).toSeq ++ Seq(col("cell"),
+        centCos(col("embedding"), col("norm"), col("ce"), col("cn")).as("ccos")): _*)
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("cell"))))
+      .where(col("rk") === 1)
+      .select(e.columns.map(col).toSeq :+ col("cell"): _*)
+  }
+
+  /** The [[IvfProbes]] cells nearest each of `queries` (query_id, qe,
+    * qn, carried columns…) by centroid cosine (ties to the lowest cell):
+    * the query columns plus `cell` — the one probe of [[ivfTopK]] and
+    * [[ivfPqRank]].
+    */
+  private def probeCells(queries: DataFrame, cents: DataFrame): DataFrame =
+    queries.join(broadcast(cents))
+      .select(queries.columns.map(col).toSeq ++ Seq(col("cell"),
+        centCos(col("qe"), col("qn"), col("ce"), col("cn")).as("ccos")): _*)
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(col("ccos").desc, col("cell"))))
+      .where(col("rk") <= IvfProbes)
+      .select(queries.columns.map(col).toSeq :+ col("cell"): _*)
 
   /** IVF approximate top-k: probe the query's `IvfProbes` nearest cells,
     * exact cosine re-rank on their members only. The candidate join is an
@@ -731,25 +773,14 @@ object Similarity {
     val queries = assigned.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         col("norm").as("qn"), col("label").as("ql"))
-    val probes = queries.join(broadcast(cents))
-      .select(col("query_id"), col("qe"), col("qn"), col("ql"), col("cell"),
-        centCos(col("qe"), col("qn"), col("ce"), col("cn")).as("ccos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("ccos").desc, col("cell"))))
-      .where(col("rk") <= IvfProbes)
-      .select(col("query_id"), col("qe"), col("qn"), col("ql"), col("cell"))
-    val base = probes
+    val base = probeCells(queries, cents)
       .join(assigned.toDF("vec_id", "ce", "cn", "ml", "cell"), Seq("cell"))
       .where(col("query_id") =!= col("vec_id"))
     val cand = if (sameLabel) base.where(col("ql") === col("ml")) else base
-    cand
+    topKBy(cand
       .select(col("query_id"), col("vec_id"),
         cosinePre(col("qe"), col("qn"), col("ce"), col("cn")).as("cos"))
-      .distinct()
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos"), col("rank"))
+      .distinct(), "cos", k)
   }
 
   /** SemDeDup-style semantic dedup (Abbas et al. 2023: cluster the
@@ -774,20 +805,9 @@ object Similarity {
                           minCos: Double = 0.45): DataFrame = {
     val (assigned, _) = ivfAssign(spark, dir)
     val m = assigned.select(col("cell"), col("vec_id"), col("embedding"), col("norm"))
-    val pairs = m.toDF("cell", "v1", "e1", "n1")
+    cosineGroups(spark, dir, s"sim:sem_groups_$minCos", m.toDF("cell", "v1", "e1", "n1")
       .join(m.toDF("cell", "v2", "e2", "n2"), Seq("cell"))
-      .where(col("v1") < col("v2"))
-      .select(col("v1"), col("v2"),
-        cosinePre(col("e1"), col("n1"), col("e2"), col("n2")).as("cos"))
-      .where(col("cos") >= minCos)
-      .select(col("v1"), col("v2"))
-    // memoized label table — the emb_groups rationale above
-    graft.Caches.memoized(spark, dir, s"sim:sem_groups_$minCos")(
-      graft.graph.Components.labels(
-        Tables.embeddings(spark, dir).select(col("vec_id")), pairs,
-        // tiny pair graph (see dedup.Dedup.dupGroupsUncached)
-        partitions = Some(8)))
-      .select(col("vec_id"), col("label").as("canonical_id"))
+      .where(col("v1") < col("v2")), minCos)
   }
 
   /** IVF-PQ — the canonical billion-scale ANN composition (FAISS IVFPQ):
@@ -802,14 +822,20 @@ object Similarity {
     * BOTH quantizer trainings, assignment, probe, encode, and the ADC
     * ranking.
     */
-  def topKIvfPq(spark: SparkSession, dir: String, k: Int = 3, nQueries: Int = 10): DataFrame = {
-    val (assigned, cents) = ivfAssign(spark, dir)
-    val queries = assigned.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("norm").as("qn"))
-    ivfPqRank(queries, cents, pqCodebooks(spark, dir), pqCodes(spark, dir),
+  def topKIvfPq(spark: SparkSession, dir: String, k: Int = 3, nQueries: Int = 10): DataFrame =
+    ivfPqServe(spark, dir, ivfAssign(spark, dir)._1, pqCodes(spark, dir), k, nQueries)
+
+  /** [[ivfPqRank]] over the session's index: the trained quantizers, an
+    * assigned corpus `assigned` (vec_id, embedding, norm, …, cell) and
+    * its PQ `codes`, its first `nQueries` vectors as the queries.
+    */
+  private def ivfPqServe(spark: SparkSession, dir: String, assigned: DataFrame,
+                         codes: DataFrame, k: Int, nQueries: Int): DataFrame =
+    ivfPqRank(assigned.filter(col("vec_id") < nQueries)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
+          col("norm").as("qn")),
+      ivfCentroids(spark, dir), pqCodebooks(spark, dir), codes,
       assigned.select(col("vec_id"), col("cell")), k)
-  }
 
   /** The ×[[BigReplicas]] corpus assigned to the BASE-trained IVF cells —
     * the big tier's inverted lists. Same broadcast-argmax shape as
@@ -818,17 +844,7 @@ object Similarity {
     */
   private def ivfAssignBig(spark: SparkSession, dir: String): DataFrame =
     graft.Caches.memoized(spark, dir, "sim:ivf_assigned_big") {
-      val cents = ivfCentroids(spark, dir)
-      val e = inflatedEmbeddings(spark, dir)
-        .select(col("vec_id"), col("embedding"),
-          sqrt(dot(col("embedding"), col("embedding"))).as("norm"))
-      e.join(broadcast(cents))
-        .select(col("vec_id"), col("embedding"), col("norm"), col("cell"),
-          centCos(col("embedding"), col("norm"), col("ce"), col("cn")).as("ccos"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("cell"))))
-        .where(col("rk") === 1)
-        .select(col("vec_id"), col("embedding"), col("norm"), col("cell"))
+      assignCells(inflatedEmbeddings(spark, dir), ivfCentroids(spark, dir))
     }
 
   /** Measurement tier for IVF-PQ at ×10 (the topKLshBig pattern, r8
@@ -843,14 +859,8 @@ object Similarity {
     * hold), so the chained-CTE oracle extends the fixture replay with
     * one corpus CTE.
     */
-  def topKIvfPqBig(spark: SparkSession, dir: String, k: Int = 3, nQueries: Int = 10): DataFrame = {
-    val assigned = ivfAssignBig(spark, dir)
-    val queries = assigned.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("norm").as("qn"))
-    ivfPqRank(queries, ivfCentroids(spark, dir), pqCodebooks(spark, dir),
-      pqCodesBig(spark, dir), assigned.select(col("vec_id"), col("cell")), k)
-  }
+  def topKIvfPqBig(spark: SparkSession, dir: String, k: Int = 3, nQueries: Int = 10): DataFrame =
+    ivfPqServe(spark, dir, ivfAssignBig(spark, dir), pqCodesBig(spark, dir), k, nQueries)
 
   /** The IVF-PQ query plan over EXPLICIT index relations — the shared
     * core of [[topKIvfPq]] (session-memoized index) and
@@ -860,45 +870,13 @@ object Similarity {
     */
   private def ivfPqRank(queries: DataFrame, cents: DataFrame, cb: DataFrame,
                         codes: DataFrame, cells: DataFrame, k: Int): DataFrame = {
-    val probes = queries.join(broadcast(cents))
-      .select(col("query_id"), col("qe"), col("qn"), col("cell"),
-        centCos(col("qe"), col("qn"), col("ce"), col("cn")).as("ccos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("ccos").desc, col("cell"))))
-      .where(col("rk") <= IvfProbes)
-      .select(col("query_id"), col("cell"))
     // members of probed cells; each vector sits in exactly one cell and
     // probe cells are distinct per query, so (query, vec) is unique
-    val cand = probes
+    val cand = probeCells(queries, cents)
       .join(cells, Seq("cell"))
       .where(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id"))
-    // lut columns renamed so the join condition names distinct
-    // attributes outright (cand's query_id descends from the same scan,
-    // and leaning on Spark's self-join disambiguation draws a
-    // trivially-true-predicate warning even when it resolves right)
-    val lut = queries.join(broadcast(cb))
-      .select(col("query_id").as("lq"), col("qn"), col("m").as("lm"),
-        col("cell").as("lcode"),
-        round(graft.functions.ArrayExprs.floatDoubleDot(
-            slice(col("qe"), col("m") * lit(PqSub) + lit(1), lit(PqSub)), col("ce")), 9)
-          .cast("decimal(18,9)").as("term"),
-        round(col("cn2"), 9).cast("decimal(18,9)").as("vterm"))
-    cand
-      .join(codes, "vec_id")
-      .join(broadcast(lut),
-        col("query_id") === col("lq") && col("m") === col("lm") &&
-          col("code") === col("lcode"))
-      .drop("lq", "lm", "lcode")
-      .groupBy(col("query_id"), col("vec_id"), col("qn"))
-      .agg(sum(col("term")).cast("double").as("s"),
-        sum(col("vterm")).cast("double").as("vn2"))
-      .select(col("query_id"), col("vec_id"),
-        round(col("s") / (col("qn") * sqrt(col("vn2"))), 6).as("pqcos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("pqcos").desc, col("vec_id"))))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("pqcos"), col("rank"))
+    adcTopK(cand.join(codes, "vec_id"), queries, cb, col("query_id") === col("lq"), k)
   }
 
   /** ANN index artifact lifecycle (r7 verdict ask 3): at 100 TB the
@@ -959,13 +937,10 @@ object Similarity {
         sqrt(dot(col("embedding"), col("embedding"))).as("norm"))
     val q = e.where(col("vec_id") < nQueries)
       .toDF("query_id", "true_label", "qe", "qn")
-    val top = q.join(e.toDF("vec_id", "nlabel", "ce", "cn"),
+    val top = topKBy(q.join(e.toDF("vec_id", "nlabel", "ce", "cn"),
         col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("true_label"), col("nlabel"), col("vec_id"),
-        cosinePre(col("qe"), col("qn"), col("ce"), col("cn")).as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
-      .where(col("rank") <= k)
+        cosinePre(col("qe"), col("qn"), col("ce"), col("cn")).as("cos")), "cos", k)
     top.groupBy(col("query_id"), col("true_label"), col("nlabel"))
       .agg(count(lit(1)).as("votes"))
       .withColumn("r", row_number().over(
@@ -1096,6 +1071,189 @@ object Similarity {
     "sim_knn_classify" -> ((s, d) => knnClassify(s, d)),
   )
 
+  /** `SELECT query_id, vec_id, <score>, rank` over `from` (a relation or
+    * a parenthesized subquery): the top-3 rows per query ranked (score
+    * desc, vec_id) — the [[topKBy]] replay, the one ranked tail of every
+    * top-k oracle.
+    */
+  private def topKSql(score: String, from: String): String =
+    s"""SELECT query_id, vec_id, $score, rank FROM (
+            SELECT query_id, vec_id, $score,
+                   row_number() OVER (PARTITION BY query_id
+                                      ORDER BY $score DESC, vec_id) AS rank
+            FROM $from)
+          WHERE rank <= 3"""
+
+  /** 6-dp cosine of two float list columns from precomputed norms — the
+    * [[cosinePre]] replay.
+    */
+  private def cosPreSql(a: String, na: String, b: String, nb: String): String =
+    s"""round(list_sum(list_transform(list_zip($a, $b),
+                 z -> z[1]::DOUBLE * z[2]::DOUBLE)) / ($na * $nb), 6)"""
+
+  /** Dot of a float list with a DOUBLE list (a plane, a centroid) in
+    * list order — the FloatDoubleDot replay.
+    */
+  private def centDotSql(v: String, ce: String): String =
+    s"list_sum(list_transform(list_zip($v, $ce), z -> z[1]::DOUBLE * z[2]))"
+
+  /** [[centCos]] replay against the `c` centroid CTE. */
+  private def centCosSql(v: String, nv: String): String =
+    s"round(${centDotSql(v, "c.ce")} / ($nv * c.cn), 6)"
+
+  /** The LSH index replay over the relation `corpus` (vec_id, embedding):
+    * the md5 plane family (`w`: 16 bits × 64 dims — the fixture
+    * embedding width), norms (`e`), each vector's sign sketch (`sk`) and
+    * its 4-bit integer band keys (`bd`: vec_id, embedding, nrm, b, key)
+    * — the [[bandRows]] replay, shared by every LSH-family oracle.
+    */
+  private def lshBandsSql(corpus: String): String =
+    s"""w AS MATERIALIZED (
+            SELECT j, list(CASE WHEN ('0x' || substr(md5(j::VARCHAR || ':' || d::VARCHAR), 1, 2))::INT & 1 = 1
+                                THEN 1.0 ELSE -1.0 END ORDER BY d) AS wv
+            FROM generate_series(0, 15) t(j), generate_series(0, 63) s(d)
+            GROUP BY j),
+          e AS MATERIALIZED (
+            SELECT vec_id, embedding,
+                   ${graft.OracleSql.l2norm("embedding")} AS nrm
+            FROM $corpus),
+          sk AS MATERIALIZED (
+            SELECT vec_id, any_value(embedding) AS embedding, any_value(nrm) AS nrm,
+                   list(CASE WHEN round(dotv, 6) > 0 THEN 1 ELSE 0 END ORDER BY j) AS sk
+            FROM (SELECT e.vec_id, e.embedding, e.nrm, w.j,
+                         ${centDotSql("e.embedding", "w.wv")} AS dotv
+                  FROM e CROSS JOIN w)
+            GROUP BY vec_id),
+          bd AS MATERIALIZED (
+            SELECT vec_id, embedding, nrm, b,
+                   sk[b*4+1] + 2*sk[b*4+2] + 4*sk[b*4+3] + 8*sk[b*4+4] AS key
+            FROM sk, generate_series(0, 3) g(b))"""
+
+  /** FROM clause of the [[bandCandidates]] replay: the probe-side band
+    * rows `probe` (vec_id, b, key) of the first 10 vectors as `q`, their
+    * same-bucket `bd` rows as `c`.
+    */
+  private def bandJoinSql(probe: String): String =
+    s"""FROM $probe q JOIN bd c
+              ON q.b = c.b AND q.key = c.key AND q.vec_id <> c.vec_id
+            WHERE q.vec_id < 10"""
+
+  /** Exact-cosine top-k of the band candidates of `probe` — the
+    * [[lshRerank]] replay.
+    */
+  private def lshTopKSql(probe: String): String =
+    topKSql("cos", s"""(SELECT DISTINCT q.vec_id AS query_id, c.vec_id,
+                         ${cosPreSql("q.embedding", "q.nrm", "c.embedding", "c.nrm")} AS cos
+            ${bandJoinSql(probe)})""")
+
+  /** The ×[[BigReplicas]] inflation ([[inflatedEmbeddings]]): replica r
+    * = (vec_id + r·[[BigIdStride]], embedding circularly shifted by r).
+    */
+  private val inflatedSql =
+    s"""SELECT vec_id + r * $BigIdStride AS vec_id,
+                 list_concat(embedding[r+1:len(embedding)], embedding[1:r]) AS embedding
+          FROM embeddings, generate_series(0, ${BigReplicas - 1}) t(r)"""
+
+  /** The IVF coarse quantizer's Lloyd's chain (KMeans.kmeansCtes, whose
+    * `e` CTE is the base corpus); centroid coords are round6-grid
+    * DOUBLEs in both engines.
+    */
+  private val ivfTrainSql = KMeans.kmeansCtes(k = IvfCells, iterations = IvfIters)
+
+  /** IVF assignment over the relation `src` (vec_id, embedding,
+    * `carried`…): norms (`en`), the trained centroids (`c`: cell, ce,
+    * cn) and each vector's argmax-cosine cell, ties to the lowest
+    * (`asn`: vec_id, embedding, carried…, nrm, cell) — the
+    * [[assignCells]] replay.
+    */
+  private def ivfAssignSql(src: String, carried: Seq[String] = Nil): String = {
+    val x = carried.map(c => s", $c").mkString
+    s"""en AS MATERIALIZED (
+            SELECT vec_id, embedding$x,
+                   ${graft.OracleSql.l2norm("embedding")} AS nrm
+            FROM $src),
+          c AS MATERIALIZED (
+            SELECT cell, cent AS ce,
+                   sqrt(list_sum(list_transform(cent, x -> x * x))) AS cn
+            FROM c$IvfIters),
+          asn AS MATERIALIZED (
+            SELECT vec_id, embedding$x, nrm, cell FROM (
+              SELECT en.vec_id, en.embedding${carried.map(c => s", en.$c").mkString}, en.nrm, c.cell,
+                     row_number() OVER (PARTITION BY en.vec_id ORDER BY
+                       ${centCosSql("en.embedding", "en.nrm")} DESC, c.cell) AS rk
+              FROM en CROSS JOIN c) WHERE rk = 1)"""
+  }
+
+  /** The [[probeCells]] replay: the first 10 assigned vectors as queries
+    * (`q`: query_id, qe, qn, carried…) and each query's [[IvfProbes]]
+    * nearest cells (`p`: the query columns plus cell).
+    */
+  private def ivfProbeSql(carried: Seq[String] = Nil): String = {
+    val x = carried.map(c => s", $c").mkString
+    s"""q AS (SELECT vec_id AS query_id, embedding AS qe, nrm AS qn$x
+                FROM asn WHERE vec_id < 10),
+          p AS MATERIALIZED (
+            SELECT query_id, qe, qn$x, cell FROM (
+              SELECT q.query_id, q.qe, q.qn${carried.map(c => s", q.$c").mkString}, c.cell,
+                     row_number() OVER (PARTITION BY q.query_id ORDER BY
+                       ${centCosSql("q.qe", "q.qn")} DESC, c.cell) AS rk
+              FROM q CROSS JOIN c) WHERE rk <= $IvfProbes)"""
+  }
+
+  /** Full replay of [[ivfTopK]] FROM TRAINING: the Lloyd's chain,
+    * assignment over `src`, the probe, exact re-rank over the probed
+    * cells' members — restricted to members agreeing with the query on
+    * every `carried` column (the filtered variant's pre-filter).
+    */
+  private def ivfOracle(src: String, carried: Seq[String]): String =
+    s"""WITH $ivfTrainSql,
+          ${ivfAssignSql(src, carried)},
+          ${ivfProbeSql(carried)}
+          """ + topKSql("cos", s"""(SELECT DISTINCT p.query_id, a.vec_id,
+                         ${cosPreSql("p.qe", "p.qn", "a.embedding", "a.nrm")} AS cos
+                  FROM p JOIN asn a ON p.cell = a.cell AND p.query_id <> a.vec_id${
+                    carried.map(c => s" AND p.$c = a.$c").mkString})""")
+
+  /** The four INDEPENDENT per-subspace k-means chains (prefixed s0_..s3_
+    * over embedding slices) that train the PQ codebooks.
+    */
+  private val pqTrainSql = (0 until PqM).map(m =>
+    KMeans.kmeansCtesOn(s"s${m}_",
+      s"embedding[${m * PqSub + 1}:${(m + 1) * PqSub}]", PqK, PqIters)).mkString(", ")
+
+  /** The PQ index replay: the codebook union (`cb`), the codes of the
+    * (vec_id, embedding) subquery `codeSrc` — argmax round6 cosine per
+    * subspace, the [[pqEncode]] replay — and the ADC lookup table of the
+    * caller's `q` CTE (`lut`, the [[adcTopK]] table).
+    */
+  private def pqIndexSql(codeSrc: String): String =
+    s"""cb AS MATERIALIZED (
+            ${(0 until PqM).map(m =>
+              s"""SELECT $m AS m, cell, cent,
+                         list_sum(list_transform(cent, x -> x * x)) AS cn2
+                  FROM s${m}_c$PqIters""").mkString(" UNION ALL ")}),
+          codes AS MATERIALIZED (
+            SELECT vec_id, m, cell AS code FROM (
+              SELECT e2.vec_id, cb.m, cb.cell,
+                     row_number() OVER (PARTITION BY e2.vec_id, cb.m ORDER BY
+                       round(${centDotSql(s"e2.embedding[cb.m*$PqSub+1:(cb.m+1)*$PqSub]", "cb.cent")}
+                         / (${graft.OracleSql.l2norm(s"e2.embedding[cb.m*$PqSub+1:(cb.m+1)*$PqSub]")}
+                            * sqrt(cb.cn2)), 6) DESC,
+                       cb.cell) AS rk
+              FROM ($codeSrc) e2
+                   CROSS JOIN cb) WHERE rk = 1),
+          lut AS MATERIALIZED (
+            SELECT q.query_id, q.qn, cb.m, cb.cell,
+                   CAST(round(${centDotSql(s"q.qe[cb.m*$PqSub+1:(cb.m+1)*$PqSub]", "cb.cent")}, 9)
+                        AS DECIMAL(18,9)) AS term,
+                   CAST(round(cb.cn2, 9) AS DECIMAL(18,9)) AS vterm
+            FROM q CROSS JOIN cb)"""
+
+  /** The DECIMAL-summed reconstruction cosine over grouped `lut l` rows. */
+  private val pqCosSql =
+    """round(CAST(sum(l.term) AS DOUBLE) /
+                         (any_value(l.qn) * sqrt(CAST(sum(l.vterm) AS DOUBLE))), 6) AS pqcos"""
+
   /** The IVF-PQ replay parameterized over the SERVED corpus: the
     * training chains (IVF k=16 x 5 iterations, four prefixed PQ
     * sub-quantizer chains) always read the base `embeddings` table —
@@ -1106,80 +1264,30 @@ object Similarity {
     * not the cap, bounds its candidates).
     */
   private def ivfPqOracle(corpusSql: String, codeFilter: String): String =
-    ("WITH " + KMeans.kmeansCtes(k = 16, iterations = IvfIters) + ", " +
-       (0 until PqM).map(m =>
-         KMeans.kmeansCtesOn(s"s${m}_",
-           s"embedding[${m * PqSub + 1}:${(m + 1) * PqSub}]", PqK, PqIters))
-         .mkString(", ") +
-      s""",
+    s"""WITH $ivfTrainSql, $pqTrainSql,
           corpus AS MATERIALIZED ($corpusSql),
-          en AS MATERIALIZED (
-            SELECT vec_id, embedding,
-                   ${graft.OracleSql.l2norm("embedding")} AS nrm
-            FROM corpus),
-          c AS MATERIALIZED (
-            SELECT cell, cent AS ce,
-                   sqrt(list_sum(list_transform(cent, x -> x * x))) AS cn
-            FROM c$IvfIters),
-          asn AS MATERIALIZED (
-            SELECT vec_id, embedding, nrm, cell FROM (
-              SELECT en.vec_id, en.embedding, en.nrm, c.cell,
-                     row_number() OVER (PARTITION BY en.vec_id ORDER BY
-                       round(list_sum(list_transform(list_zip(en.embedding, c.ce),
-                               z -> z[1]::DOUBLE * z[2])) / (en.nrm * c.cn), 6) DESC,
-                       c.cell) AS rk
-              FROM en CROSS JOIN c) WHERE rk = 1),
-          q AS (SELECT vec_id AS query_id, embedding AS qe, nrm AS qn
-                FROM asn WHERE vec_id < 10),
-          p AS MATERIALIZED (
-            SELECT query_id, cell FROM (
-              SELECT q.query_id, c.cell,
-                     row_number() OVER (PARTITION BY q.query_id ORDER BY
-                       round(list_sum(list_transform(list_zip(q.qe, c.ce),
-                               z -> z[1]::DOUBLE * z[2])) / (q.qn * c.cn), 6) DESC,
-                       c.cell) AS rk
-              FROM q CROSS JOIN c) WHERE rk <= $IvfProbes),
+          ${ivfAssignSql("corpus")},
+          ${ivfProbeSql()},
           cand AS (
             SELECT p.query_id, a.vec_id
             FROM p JOIN asn a ON p.cell = a.cell AND p.query_id <> a.vec_id),
-          cb AS MATERIALIZED (
-            ${(0 until PqM).map(m =>
-              s"""SELECT $m AS m, cell, cent,
-                         list_sum(list_transform(cent, x -> x * x)) AS cn2
-                  FROM s${m}_c$PqIters""").mkString(" UNION ALL ")}),
-          codes AS MATERIALIZED (
-            SELECT vec_id, m, cell AS code FROM (
-              SELECT e2.vec_id, cb.m, cb.cell,
-                     row_number() OVER (PARTITION BY e2.vec_id, cb.m ORDER BY
-                       round(list_sum(list_transform(
-                               list_zip(e2.embedding[cb.m*$PqSub+1:(cb.m+1)*$PqSub], cb.cent),
-                               z -> z[1]::DOUBLE * z[2]))
-                         / (${graft.OracleSql.l2norm(s"e2.embedding[cb.m*$PqSub+1:(cb.m+1)*$PqSub]")}
-                            * sqrt(cb.cn2)), 6) DESC,
-                       cb.cell) AS rk
-              FROM (SELECT vec_id, embedding FROM corpus $codeFilter) e2
-                   CROSS JOIN cb) WHERE rk = 1),
-          lut AS MATERIALIZED (
-            SELECT q.query_id, q.qn, cb.m, cb.cell,
-                   CAST(round(list_sum(list_transform(
-                           list_zip(q.qe[cb.m*$PqSub+1:(cb.m+1)*$PqSub], cb.cent),
-                           z -> z[1]::DOUBLE * z[2])), 9) AS DECIMAL(18,9)) AS term,
-                   CAST(round(cb.cn2, 9) AS DECIMAL(18,9)) AS vterm
-            FROM q CROSS JOIN cb),
+          ${pqIndexSql(s"SELECT vec_id, embedding FROM corpus $codeFilter")},
           sc AS (
-            SELECT cand.query_id, c2.vec_id,
-                   round(CAST(sum(l.term) AS DOUBLE) /
-                         (any_value(l.qn) * sqrt(CAST(sum(l.vterm) AS DOUBLE))), 6) AS pqcos
+            SELECT cand.query_id, c2.vec_id, $pqCosSql
             FROM cand
             JOIN codes c2 ON c2.vec_id = cand.vec_id
             JOIN lut l ON l.query_id = cand.query_id AND l.m = c2.m AND l.cell = c2.code
             GROUP BY cand.query_id, c2.vec_id)
-          SELECT query_id, vec_id, pqcos, rank FROM (
-            SELECT query_id, vec_id, pqcos,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY pqcos DESC, vec_id) AS rank
-            FROM sc)
-          WHERE rank <= 3""")
+          ${topKSql("pqcos", "sc")}"""
+
+  /** Near-dup groups from `pairs(v1, v2)`: both edge directions, then
+    * the shared min-label reachability over all vectors.
+    */
+  private val embGroupsSql =
+    s"""edges AS (SELECT v1 AS a, v2 AS b FROM pairs
+                    UNION ALL SELECT v2, v1 FROM pairs),
+          ${graft.OracleSql.minLabelReach("embeddings", "vec_id", "edges")}
+          SELECT v AS vec_id, min(r) AS canonical_id FROM reach GROUP BY v"""
 
   private val baseOracles: Map[String, String] = Map(
     "sim_knn_classify" ->
@@ -1234,158 +1342,38 @@ object Similarity {
               ON a.vec_id < b.vec_id)
           WHERE cos >= 0.45""",
     "sim_topk" ->
-      s"""SELECT query_id, vec_id, cos, rank FROM (
-            SELECT query_id, vec_id, cos,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cos DESC, vec_id) AS rank
-            FROM (SELECT a.vec_id AS query_id, b.vec_id AS vec_id, $cosSql AS cos
+      topKSql("cos", s"""(SELECT a.vec_id AS query_id, b.vec_id AS vec_id, $cosSql AS cos
                   FROM embeddings a
                   JOIN (SELECT * FROM embeddings WHERE vec_id < 4096) b
                     ON b.vec_id <> a.vec_id
-                  WHERE a.vec_id < 10))
-          WHERE rank <= 3""",
+                  WHERE a.vec_id < 10)"""),
     "sim_mmr" -> mmrOracle(queryId = 3L, nCand = MmrCandidates, k = MmrK),
-    // Full replay of the LSH pipeline: regenerate the md5 plane family
-    // (w CTE: 16 bits × 64 dims — the fixture embedding width), sketch
-    // every vector, band the bits into 4-bit integer bucket keys, then
-    // exact cosine re-rank of same-bucket candidates.
+    // Full replay of the LSH pipeline: regenerate the md5 plane family,
+    // sketch every vector, band the bits into 4-bit integer bucket keys,
+    // then exact cosine re-rank of same-bucket candidates.
     "sim_topk_lsh" ->
-      s"""WITH w AS MATERIALIZED (
-            SELECT j, list(CASE WHEN ('0x' || substr(md5(j::VARCHAR || ':' || d::VARCHAR), 1, 2))::INT & 1 = 1
-                                THEN 1.0 ELSE -1.0 END ORDER BY d) AS wv
-            FROM generate_series(0, 15) t(j), generate_series(0, 63) s(d)
-            GROUP BY j),
-          e AS MATERIALIZED (
-            SELECT vec_id, embedding,
-                   ${graft.OracleSql.l2norm("embedding")} AS nrm
-            FROM embeddings),
-          sk AS MATERIALIZED (
-            SELECT vec_id, any_value(embedding) AS embedding, any_value(nrm) AS nrm,
-                   list(CASE WHEN round(dotv, 6) > 0 THEN 1 ELSE 0 END ORDER BY j) AS sk
-            FROM (SELECT e.vec_id, e.embedding, e.nrm, w.j,
-                         list_sum(list_transform(list_zip(e.embedding, w.wv),
-                           z -> z[1]::DOUBLE * z[2])) AS dotv
-                  FROM e CROSS JOIN w)
-            GROUP BY vec_id),
-          bd AS MATERIALIZED (
-            SELECT vec_id, embedding, nrm, b,
-                   sk[b*4+1] + 2*sk[b*4+2] + 4*sk[b*4+3] + 8*sk[b*4+4] AS key
-            FROM sk, generate_series(0, 3) g(b))
-          SELECT query_id, vec_id, cos, rank FROM (
-            SELECT query_id, vec_id, cos,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cos DESC, vec_id) AS rank
-            FROM (SELECT DISTINCT q.vec_id AS query_id, c.vec_id,
-                         round(list_sum(list_transform(list_zip(q.embedding, c.embedding),
-                                 z -> z[1]::DOUBLE * z[2]::DOUBLE)) / (q.nrm * c.nrm), 6) AS cos
-                  FROM bd q JOIN bd c
-                    ON q.b = c.b AND q.key = c.key AND q.vec_id <> c.vec_id
-                  WHERE q.vec_id < 10))
-          WHERE rank <= 3""",
+      s"""WITH ${lshBandsSql("embeddings")}
+          ${lshTopKSql("bd")}""",
     "sim_topk_lsh_multiprobe" ->
-      s"""WITH w AS MATERIALIZED (
-            SELECT j, list(CASE WHEN ('0x' || substr(md5(j::VARCHAR || ':' || d::VARCHAR), 1, 2))::INT & 1 = 1
-                                THEN 1.0 ELSE -1.0 END ORDER BY d) AS wv
-            FROM generate_series(0, 15) t(j), generate_series(0, 63) s(d)
-            GROUP BY j),
-          e AS MATERIALIZED (
-            SELECT vec_id, embedding,
-                   ${graft.OracleSql.l2norm("embedding")} AS nrm
-            FROM embeddings),
-          sk AS MATERIALIZED (
-            SELECT vec_id, any_value(embedding) AS embedding, any_value(nrm) AS nrm,
-                   list(CASE WHEN round(dotv, 6) > 0 THEN 1 ELSE 0 END ORDER BY j) AS sk
-            FROM (SELECT e.vec_id, e.embedding, e.nrm, w.j,
-                         list_sum(list_transform(list_zip(e.embedding, w.wv),
-                           z -> z[1]::DOUBLE * z[2])) AS dotv
-                  FROM e CROSS JOIN w)
-            GROUP BY vec_id),
-          bd AS MATERIALIZED (
-            SELECT vec_id, embedding, nrm, b,
-                   sk[b*4+1] + 2*sk[b*4+2] + 4*sk[b*4+3] + 8*sk[b*4+4] AS key
-            FROM sk, generate_series(0, 3) g(b))
-          , pq AS (
+      s"""WITH ${lshBandsSql("embeddings")},
+          pq AS (
             SELECT vec_id, embedding, nrm, b, xor(key, m.m) AS key
             FROM bd, (VALUES (0), (1), (2), (4), (8)) m(m)
             WHERE vec_id < 10)
-          SELECT query_id, vec_id, cos, rank FROM (
-            SELECT query_id, vec_id, cos,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cos DESC, vec_id) AS rank
-            FROM (SELECT DISTINCT q.vec_id AS query_id, c.vec_id,
-                         round(list_sum(list_transform(list_zip(q.embedding, c.embedding),
-                                 z -> z[1]::DOUBLE * z[2]::DOUBLE)) / (q.nrm * c.nrm), 6) AS cos
-                  FROM pq q JOIN bd c
-                    ON q.b = c.b AND q.key = c.key AND q.vec_id <> c.vec_id))
-          WHERE rank <= 3""",
+          ${lshTopKSql("pq")}""",
 
-    // The LSH chain over the ×10 arithmetically-inflated corpus:
-    // replica r = (vec_id + r·10⁶, embedding circularly shifted by r),
-    // regenerated by the base CTE; everything after is the sim_topk_lsh
-    // replay verbatim.
+    // The LSH chain over the ×10 arithmetically-inflated corpus
+    // (inflatedSql); bands and re-rank are the sim_topk_lsh builders.
     "sim_topk_lsh_big" ->
-      s"""WITH base AS MATERIALIZED (
-            SELECT vec_id + r * 1000000 AS vec_id,
-                   list_concat(embedding[r+1:len(embedding)], embedding[1:r]) AS embedding
-            FROM embeddings, generate_series(0, 9) t(r)),
-          w AS MATERIALIZED (
-            SELECT j, list(CASE WHEN ('0x' || substr(md5(j::VARCHAR || ':' || d::VARCHAR), 1, 2))::INT & 1 = 1
-                                THEN 1.0 ELSE -1.0 END ORDER BY d) AS wv
-            FROM generate_series(0, 15) t(j), generate_series(0, 63) s(d)
-            GROUP BY j),
-          e AS MATERIALIZED (
-            SELECT vec_id, embedding,
-                   ${graft.OracleSql.l2norm("embedding")} AS nrm
-            FROM base),
-          sk AS MATERIALIZED (
-            SELECT vec_id, any_value(embedding) AS embedding, any_value(nrm) AS nrm,
-                   list(CASE WHEN round(dotv, 6) > 0 THEN 1 ELSE 0 END ORDER BY j) AS sk
-            FROM (SELECT e.vec_id, e.embedding, e.nrm, w.j,
-                         list_sum(list_transform(list_zip(e.embedding, w.wv),
-                           z -> z[1]::DOUBLE * z[2])) AS dotv
-                  FROM e CROSS JOIN w)
-            GROUP BY vec_id),
-          bd AS MATERIALIZED (
-            SELECT vec_id, embedding, nrm, b,
-                   sk[b*4+1] + 2*sk[b*4+2] + 4*sk[b*4+3] + 8*sk[b*4+4] AS key
-            FROM sk, generate_series(0, 3) g(b))
-          SELECT query_id, vec_id, cos, rank FROM (
-            SELECT query_id, vec_id, cos,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cos DESC, vec_id) AS rank
-            FROM (SELECT DISTINCT q.vec_id AS query_id, c.vec_id,
-                         round(list_sum(list_transform(list_zip(q.embedding, c.embedding),
-                                 z -> z[1]::DOUBLE * z[2]::DOUBLE)) / (q.nrm * c.nrm), 6) AS cos
-                  FROM bd q JOIN bd c
-                    ON q.b = c.b AND q.key = c.key AND q.vec_id <> c.vec_id
-                  WHERE q.vec_id < 10))
-          WHERE rank <= 3""",
-    // Full replay of the quantized-search pipeline: the sim_topk_lsh
-    // sketch/band CTEs for candidates, symmetric int8 quantization
+      s"""WITH ${lshBandsSql(s"($inflatedSql)")}
+          ${lshTopKSql("bd")}""",
+    // Full replay of the quantized-search pipeline: the LSH band CTEs and
+    // band join for candidates, symmetric int8 quantization
     // (round(127·v/‖v‖) — the only fp step, bit-identical across
     // engines), then the EXACT integer dot re-rank: no rounding
     // protocol needed downstream of quantization.
     "sim_topk_sq" ->
-      s"""WITH w AS MATERIALIZED (
-            SELECT j, list(CASE WHEN ('0x' || substr(md5(j::VARCHAR || ':' || d::VARCHAR), 1, 2))::INT & 1 = 1
-                                THEN 1.0 ELSE -1.0 END ORDER BY d) AS wv
-            FROM generate_series(0, 15) t(j), generate_series(0, 63) s(d)
-            GROUP BY j),
-          e AS MATERIALIZED (
-            SELECT vec_id, embedding,
-                   ${graft.OracleSql.l2norm("embedding")} AS nrm
-            FROM embeddings),
-          sk AS MATERIALIZED (
-            SELECT vec_id, list(CASE WHEN round(dotv, 6) > 0 THEN 1 ELSE 0 END ORDER BY j) AS sk
-            FROM (SELECT e.vec_id, w.j,
-                         list_sum(list_transform(list_zip(e.embedding, w.wv),
-                           z -> z[1]::DOUBLE * z[2])) AS dotv
-                  FROM e CROSS JOIN w)
-            GROUP BY vec_id),
-          bd AS MATERIALIZED (
-            SELECT vec_id, b,
-                   sk[b*4+1] + 2*sk[b*4+2] + 4*sk[b*4+3] + 8*sk[b*4+4] AS key
-            FROM sk, generate_series(0, 3) g(b)),
+      s"""WITH ${lshBandsSql("embeddings")},
           qv AS MATERIALIZED (
             SELECT vec_id,
                    list_transform(embedding,
@@ -1393,9 +1381,7 @@ object Similarity {
             FROM e),
           cand AS (
             SELECT DISTINCT q.vec_id AS query_id, c.vec_id
-            FROM bd q JOIN bd c
-              ON q.b = c.b AND q.key = c.key AND q.vec_id <> c.vec_id
-            WHERE q.vec_id < 10),
+            ${bandJoinSql("bd")}),
           sc AS (
             SELECT cand.query_id, cand.vec_id,
                    CAST(list_sum(list_transform(list_zip(a.q, b.q),
@@ -1404,149 +1390,43 @@ object Similarity {
             JOIN qv a ON a.vec_id = cand.query_id
             JOIN qv b ON b.vec_id = cand.vec_id)
           SELECT query_id, vec_id, score_q8,
-                 round(score_q8 / 16129.0, 6) AS qcos, rank FROM (
-            SELECT query_id, vec_id, score_q8,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY score_q8 DESC, vec_id) AS rank
-            FROM sc)
-          WHERE rank <= 3""",
-    // Full replay of the embedding near-dup pipeline: the sim_topk_lsh
-    // sketch/band CTEs, candidate pairs from band-bucket equality, exact
-    // cosine at the 0.45 threshold, then recursive min-label reachability
-    // (the dedup_groups technique) over all vectors.
+                 round(score_q8 / 16129.0, 6) AS qcos, rank
+          FROM (${topKSql("score_q8", "sc")})""",
+    // Full replay of the embedding near-dup pipeline: the LSH band CTEs,
+    // candidate pairs from band-bucket equality, exact cosine at the 0.45
+    // threshold, then recursive min-label reachability (the dedup_groups
+    // technique) over all vectors.
     "dedup_embedding" ->
-      s"""WITH RECURSIVE w AS MATERIALIZED (
-            SELECT j, list(CASE WHEN ('0x' || substr(md5(j::VARCHAR || ':' || d::VARCHAR), 1, 2))::INT & 1 = 1
-                                THEN 1.0 ELSE -1.0 END ORDER BY d) AS wv
-            FROM generate_series(0, 15) t(j), generate_series(0, 63) s(d)
-            GROUP BY j),
-          e AS MATERIALIZED (
-            SELECT vec_id, embedding,
-                   ${graft.OracleSql.l2norm("embedding")} AS nrm
-            FROM embeddings),
-          sk AS MATERIALIZED (
-            SELECT vec_id, any_value(embedding) AS embedding, any_value(nrm) AS nrm,
-                   list(CASE WHEN round(dotv, 6) > 0 THEN 1 ELSE 0 END ORDER BY j) AS sk
-            FROM (SELECT e.vec_id, e.embedding, e.nrm, w.j,
-                         list_sum(list_transform(list_zip(e.embedding, w.wv),
-                           z -> z[1]::DOUBLE * z[2])) AS dotv
-                  FROM e CROSS JOIN w)
-            GROUP BY vec_id),
-          bd AS MATERIALIZED (
-            SELECT vec_id, embedding, nrm, b,
-                   sk[b*4+1] + 2*sk[b*4+2] + 4*sk[b*4+3] + 8*sk[b*4+4] AS key
-            FROM sk, generate_series(0, 3) g(b)),
+      s"""WITH RECURSIVE ${lshBandsSql("embeddings")},
           pairs AS MATERIALIZED (
             SELECT v1, v2 FROM (
               SELECT DISTINCT a.vec_id AS v1, b.vec_id AS v2,
-                     round(list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                             z -> z[1]::DOUBLE * z[2]::DOUBLE)) / (a.nrm * b.nrm), 6) AS cos
+                     ${cosPreSql("a.embedding", "a.nrm", "b.embedding", "b.nrm")} AS cos
               FROM bd a JOIN bd b
                 ON a.b = b.b AND a.key = b.key AND a.vec_id < b.vec_id)
             WHERE cos >= 0.45),
-          edges AS (SELECT v1 AS a, v2 AS b FROM pairs
-                    UNION ALL SELECT v2, v1 FROM pairs),
-          reach(v, r) AS (
-            SELECT vec_id, vec_id FROM embeddings
-            UNION
-            SELECT reach.v, e2.b FROM reach JOIN edges e2 ON reach.r = e2.a)
-          SELECT v AS vec_id, min(r) AS canonical_id FROM reach GROUP BY v""",
+          $embGroupsSql""",
     // Full replay of the IVF pipeline FROM TRAINING: the KMeans Lloyd's
-    // chain (k=16, 5 iterations — KMeans.kmeansCtes, whose `e` CTE this
-    // query extends with norms), then assignment (argmax round6 cosine
+    // chain (k=16, 5 iterations), then assignment (argmax round6 cosine
     // to the TRAINED centroids, ties to the lowest cell), probe the
     // query's 4 nearest cells, exact re-rank over probed members.
-    // Centroid coords are round6-grid DOUBLEs in both engines.
-    "sim_topk_ivf" ->
-      ("WITH " + KMeans.kmeansCtes(k = 16, iterations = IvfIters) +
-      s""",
-          en AS MATERIALIZED (
-            SELECT vec_id, embedding,
-                   ${graft.OracleSql.l2norm("embedding")} AS nrm
-            FROM e),
-          c AS MATERIALIZED (
-            SELECT cell, cent AS ce,
-                   sqrt(list_sum(list_transform(cent, x -> x * x))) AS cn
-            FROM c$IvfIters),
-          asn AS MATERIALIZED (
-            SELECT vec_id, embedding, nrm, cell FROM (
-              SELECT en.vec_id, en.embedding, en.nrm, c.cell,
-                     row_number() OVER (PARTITION BY en.vec_id ORDER BY
-                       round(list_sum(list_transform(list_zip(en.embedding, c.ce),
-                               z -> z[1]::DOUBLE * z[2])) / (en.nrm * c.cn), 6) DESC,
-                       c.cell) AS rk
-              FROM en CROSS JOIN c) WHERE rk = 1),
-          q AS (SELECT vec_id AS query_id, embedding AS qe, nrm AS qn
-                FROM asn WHERE vec_id < 10),
-          p AS MATERIALIZED (
-            SELECT query_id, qe, qn, cell FROM (
-              SELECT q.query_id, q.qe, q.qn, c.cell,
-                     row_number() OVER (PARTITION BY q.query_id ORDER BY
-                       round(list_sum(list_transform(list_zip(q.qe, c.ce),
-                               z -> z[1]::DOUBLE * z[2])) / (q.qn * c.cn), 6) DESC,
-                       c.cell) AS rk
-              FROM q CROSS JOIN c) WHERE rk <= 4)
-          SELECT query_id, vec_id, cos, rank FROM (
-            SELECT query_id, vec_id, cos,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cos DESC, vec_id) AS rank
-            FROM (SELECT DISTINCT p.query_id, a.vec_id,
-                         round(list_sum(list_transform(list_zip(p.qe, a.embedding),
-                                 z -> z[1]::DOUBLE * z[2]::DOUBLE)) / (p.qn * a.nrm), 6) AS cos
-                  FROM p JOIN asn a ON p.cell = a.cell AND p.query_id <> a.vec_id))
-          WHERE rank <= 3"""),
-    // Full replay of the PQ pipeline: four INDEPENDENT per-subspace
-    // k-means chains (prefixed s0_..s3_ over embedding slices), the
-    // codebook union, code assignment (argmax round6 cosine per
-    // subspace), the ADC lookup table, and the DECIMAL-summed
-    // reconstruction-cosine ranking.
+    "sim_topk_ivf" -> ivfOracle("e", Nil),
+    // Full replay of the PQ pipeline: the four per-subspace k-means
+    // chains, the codebook union, code assignment, the ADC lookup table,
+    // and the DECIMAL-summed reconstruction-cosine ranking.
     "sim_topk_pq" ->
-      ("WITH " + (0 until PqM).map(m =>
-        KMeans.kmeansCtesOn(s"s${m}_",
-          s"embedding[${m * PqSub + 1}:${(m + 1) * PqSub}]", PqK, PqIters))
-        .mkString(", ") +
-      s""",
-          cb AS MATERIALIZED (
-            ${(0 until PqM).map(m =>
-              s"""SELECT $m AS m, cell, cent,
-                         list_sum(list_transform(cent, x -> x * x)) AS cn2
-                  FROM s${m}_c$PqIters""").mkString(" UNION ALL ")}),
-          codes AS MATERIALIZED (
-            SELECT vec_id, m, cell AS code FROM (
-              SELECT e.vec_id, cb.m, cb.cell,
-                     row_number() OVER (PARTITION BY e.vec_id, cb.m ORDER BY
-                       round(list_sum(list_transform(
-                               list_zip(e.embedding[cb.m*$PqSub+1:(cb.m+1)*$PqSub], cb.cent),
-                               z -> z[1]::DOUBLE * z[2]))
-                         / (${graft.OracleSql.l2norm(s"e.embedding[cb.m*$PqSub+1:(cb.m+1)*$PqSub]")}
-                            * sqrt(cb.cn2)), 6) DESC,
-                       cb.cell) AS rk
-              FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id < $MaxExactVectors) e
-                   CROSS JOIN cb) WHERE rk = 1),
+      s"""WITH $pqTrainSql,
           q AS MATERIALIZED (
             SELECT vec_id AS query_id, embedding AS qe,
                    ${graft.OracleSql.l2norm("embedding")} AS qn
             FROM embeddings WHERE vec_id < 10),
-          lut AS MATERIALIZED (
-            SELECT q.query_id, q.qn, cb.m, cb.cell,
-                   CAST(round(list_sum(list_transform(
-                           list_zip(q.qe[cb.m*$PqSub+1:(cb.m+1)*$PqSub], cb.cent),
-                           z -> z[1]::DOUBLE * z[2])), 9) AS DECIMAL(18,9)) AS term,
-                   CAST(round(cb.cn2, 9) AS DECIMAL(18,9)) AS vterm
-            FROM q CROSS JOIN cb),
+          ${pqIndexSql(s"SELECT vec_id, embedding FROM embeddings WHERE vec_id < $MaxExactVectors")},
           sc AS (
-            SELECT l.query_id, c.vec_id,
-                   round(CAST(sum(l.term) AS DOUBLE) /
-                         (any_value(l.qn) * sqrt(CAST(sum(l.vterm) AS DOUBLE))), 6) AS pqcos
+            SELECT l.query_id, c.vec_id, $pqCosSql
             FROM codes c JOIN lut l
               ON l.m = c.m AND l.cell = c.code AND l.query_id <> c.vec_id
             GROUP BY l.query_id, c.vec_id)
-          SELECT query_id, vec_id, pqcos, rank FROM (
-            SELECT query_id, vec_id, pqcos,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY pqcos DESC, vec_id) AS rank
-            FROM sc)
-          WHERE rank <= 3"""),
+          ${topKSql("pqcos", "sc")}""",
     // Full replay of the IVF-PQ composition: the IVF training chain
     // (unprefixed, k=16 × 5 iterations) AND the four prefixed PQ
     // sub-quantizer chains in one WITH, then assignment → probe →
@@ -1554,91 +1434,27 @@ object Similarity {
     "sim_topk_ivfpq" -> ivfPqOracle("SELECT vec_id, embedding FROM embeddings",
       s"WHERE vec_id < $MaxExactVectors"),
     // The same composition served over the ×10 circular-shift inflation
-    // (the sim_topk_lsh_big corpus CTE), quantizers still trained on the
+    // (the sim_topk_lsh_big corpus), quantizers still trained on the
     // base corpus — train-on-sample, encode/search everything.
-    "sim_topk_ivfpq_big" -> ivfPqOracle(
-      s"""SELECT vec_id + r * $BigIdStride AS vec_id,
-                 list_concat(embedding[r+1:len(embedding)], embedding[1:r]) AS embedding
-          FROM embeddings, generate_series(0, ${BigReplicas - 1}) t(r)""", ""),
+    "sim_topk_ivfpq_big" -> ivfPqOracle(inflatedSql, ""),
     // Full replay of the SemDeDup pipeline: the KMeans training chain
     // (shared with sim_topk_ivf), assignment to trained cells, exact
     // cosine on SAME-CELL pairs, recursive min-label reachability over
     // all vectors (the dedup_embedding components technique).
     "dedup_semantic" ->
-      ("WITH RECURSIVE " + KMeans.kmeansCtes(k = 16, iterations = IvfIters) +
-      s""",
-          en AS MATERIALIZED (
-            SELECT vec_id, embedding,
-                   ${graft.OracleSql.l2norm("embedding")} AS nrm
-            FROM e),
-          c AS MATERIALIZED (
-            SELECT cell, cent AS ce,
-                   sqrt(list_sum(list_transform(cent, x -> x * x))) AS cn
-            FROM c$IvfIters),
-          asn AS MATERIALIZED (
-            SELECT vec_id, embedding, nrm, cell FROM (
-              SELECT en.vec_id, en.embedding, en.nrm, c.cell,
-                     row_number() OVER (PARTITION BY en.vec_id ORDER BY
-                       round(list_sum(list_transform(list_zip(en.embedding, c.ce),
-                               z -> z[1]::DOUBLE * z[2])) / (en.nrm * c.cn), 6) DESC,
-                       c.cell) AS rk
-              FROM en CROSS JOIN c) WHERE rk = 1),
+      s"""WITH RECURSIVE $ivfTrainSql,
+          ${ivfAssignSql("e")},
           pairs AS MATERIALIZED (
             SELECT v1, v2 FROM (
               SELECT a.vec_id AS v1, b.vec_id AS v2,
-                     round(list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                             z -> z[1]::DOUBLE * z[2]::DOUBLE)) / (a.nrm * b.nrm), 6) AS cos
+                     ${cosPreSql("a.embedding", "a.nrm", "b.embedding", "b.nrm")} AS cos
               FROM asn a JOIN asn b ON a.cell = b.cell AND a.vec_id < b.vec_id)
             WHERE cos >= 0.45),
-          edges AS (SELECT v1 AS a, v2 AS b FROM pairs
-                    UNION ALL SELECT v2, v1 FROM pairs),
-          reach(v, r) AS (
-            SELECT vec_id, vec_id FROM embeddings
-            UNION
-            SELECT reach.v, e2.b FROM reach JOIN edges e2 ON reach.r = e2.a)
-          SELECT v AS vec_id, min(r) AS canonical_id FROM reach GROUP BY v"""),
+          $embGroupsSql""",
     // the filtered variant: identical train→assign→probe→re-rank chain,
     // with the label carried through assignment and the same-label
     // pre-filter on the candidate join
-    "sim_topk_filtered" ->
-      ("WITH " + KMeans.kmeansCtes(k = 16, iterations = IvfIters) +
-      s""",
-          en AS MATERIALIZED (
-            SELECT vec_id, embedding, label,
-                   ${graft.OracleSql.l2norm("embedding")} AS nrm
-            FROM embeddings),
-          c AS MATERIALIZED (
-            SELECT cell, cent AS ce,
-                   sqrt(list_sum(list_transform(cent, x -> x * x))) AS cn
-            FROM c$IvfIters),
-          asn AS MATERIALIZED (
-            SELECT vec_id, embedding, label, nrm, cell FROM (
-              SELECT en.vec_id, en.embedding, en.label, en.nrm, c.cell,
-                     row_number() OVER (PARTITION BY en.vec_id ORDER BY
-                       round(list_sum(list_transform(list_zip(en.embedding, c.ce),
-                               z -> z[1]::DOUBLE * z[2])) / (en.nrm * c.cn), 6) DESC,
-                       c.cell) AS rk
-              FROM en CROSS JOIN c) WHERE rk = 1),
-          q AS (SELECT vec_id AS query_id, embedding AS qe, nrm AS qn, label AS ql
-                FROM asn WHERE vec_id < 10),
-          p AS MATERIALIZED (
-            SELECT query_id, qe, qn, ql, cell FROM (
-              SELECT q.query_id, q.qe, q.qn, q.ql, c.cell,
-                     row_number() OVER (PARTITION BY q.query_id ORDER BY
-                       round(list_sum(list_transform(list_zip(q.qe, c.ce),
-                               z -> z[1]::DOUBLE * z[2])) / (q.qn * c.cn), 6) DESC,
-                       c.cell) AS rk
-              FROM q CROSS JOIN c) WHERE rk <= 4)
-          SELECT query_id, vec_id, cos, rank FROM (
-            SELECT query_id, vec_id, cos,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cos DESC, vec_id) AS rank
-            FROM (SELECT DISTINCT p.query_id, a.vec_id,
-                         round(list_sum(list_transform(list_zip(p.qe, a.embedding),
-                                 z -> z[1]::DOUBLE * z[2]::DOUBLE)) / (p.qn * a.nrm), 6) AS cos
-                  FROM p JOIN asn a ON p.cell = a.cell AND p.query_id <> a.vec_id
-                       AND p.ql = a.label))
-          WHERE rank <= 3"""),
+    "sim_topk_filtered" -> ivfOracle("embeddings", Seq("label")),
   )
 
   /** sim_index_persist serves the same IVF-PQ ranking from the reloaded

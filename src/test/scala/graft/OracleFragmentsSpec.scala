@@ -68,6 +68,38 @@ class OracleFragmentsSpec extends AnyFunSuite {
     onlyIn("Dedup.scala", "JOIN corpus co ON c.doc_id = co.doc_id")
   }
 
+  test("min-label reach recursion lives only in OracleSql") {
+    // every components replay (Similarity's two embedding dedups,
+    // Dedup.groupsOracle, both Curation pipelines, pr_components)
+    // references OracleSql.minLabelReach
+    onlyInOracleSql("ON reach.r = ")
+  }
+
+  private def occurrences(text: String, fragment: String): Int =
+    java.util.regex.Pattern.quote(fragment).r.findAllMatchIn(text).size
+
+  private def onceIn(owner: String, fragment: String): Unit = {
+    val hits = mainSources.map { case (path, text) => path -> occurrences(text, fragment) }
+      .filter(_._2 > 0)
+    assert(hits.map(_._1).forall(_.endsWith(owner)) && hits.map(_._2).sum == 1,
+      s"'$fragment' must appear once, in $owner; found: " +
+        hits.map { case (p, n) => s"$p ($n)" }.mkString(", "))
+  }
+
+  test("md5 plane family is rendered once, by Similarity's LSH builder") {
+    // lshBandsSql: sim_topk_lsh, _multiprobe, _big, sim_topk_sq and
+    // dedup_embedding all splice the one band chain
+    onceIn("Similarity.scala", "substr(md5(j::VARCHAR")
+  }
+
+  test("Spam's feature hash is rendered once") {
+    // Spam.featuresSql: both training chains and every scoring table
+    // (BatchLogit keeps its own replay of the same hashing)
+    val spam = mainSources.collect { case (p, t) if p.endsWith("ml/Spam.scala") => t }
+    assert(spam.size == 1)
+    assert(occurrences(spam.head, "substr(md5(w), 1, 8))::BIGINT %") == 1)
+  }
+
   test("the shared definitions render the expected SQL") {
     assert(OracleSql.md5Bucket() ===
       "CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 100")
@@ -75,5 +107,10 @@ class OracleFragmentsSpec extends AnyFunSuite {
       "sqrt(list_sum(list_transform(e.x, x -> x::DOUBLE * x::DOUBLE)))")
     assert(OracleSql.cos6("a", "b").contains(OracleSql.l2norm("a")))
     assert(OracleSql.shingle3("w").contains("generate_series(1, len(w) - 2)"))
+    assert(OracleSql.minLabelReach("n", "id", "ed") ===
+      """reach(v, r) AS (
+            SELECT id, id FROM n
+            UNION
+            SELECT reach.v, x.b FROM reach JOIN ed x ON reach.r = x.a)""")
   }
 }

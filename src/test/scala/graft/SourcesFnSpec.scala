@@ -112,11 +112,13 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // every registered graft function is exercised here: a function
     // cannot be registered without this SQL calling it
     val registry = spark.sessionState.functionRegistry
-    val registered = registry.listFunction()
-      .filter(id => registry.lookupFunction(id)
-        .exists(_.getClassName == "graft.functions.ArrayExprs"))
-      .map(_.funcName).toSet
-    assert(registered == called)
+    val classes = registry.listFunction()
+      .flatMap(id => registry.lookupFunction(id).map(id.funcName -> _.getClassName))
+      .filter(_._2.startsWith("graft.")).toMap
+    assert(classes.keySet == called)
+    // each function names the class of the expression it builds
+    assert(classes("bpe_encode") == "graft.text.Bpe$BpeEncode")
+    assert(classes("float_dot") == "graft.functions.ArrayExprs$FloatDot")
     called.foreach(f => assert(sql.contains(s"$f("), s"$f is not called"))
     val row = spark.sql(sql).head()
     assert(row.getAs[Double]("d") == 11.0)
