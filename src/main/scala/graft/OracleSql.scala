@@ -6,7 +6,10 @@ package graft
   * next most-copied families (17 inline L2-norm copies, 8 md5-bucket
   * copies, 5 trigram-shingle copies before the hoist), and the recursive
   * min-label reachability of every components replay (6 copies across
-  * Similarity, Dedup, Curation and PageRank). One definition each; OracleFragmentsSpec asserts modules REFERENCE these instead of
+  * Similarity, Dedup, Curation and PageRank), the ×N scale-tier corpus
+  * ([[inflatedDocs]]: the IR and dedup big-tier replays) and the bounded
+  * rank tail of the global rankings ([[rankedTop]]). One definition each;
+  * OracleFragmentsSpec asserts modules REFERENCE these instead of
   * inlining twins, so a semantics fix lands everywhere at once.
   */
 object OracleSql {
@@ -61,4 +64,25 @@ object OracleSql {
             SELECT $id, $id FROM $nodes
             UNION
             SELECT reach.v, x.b FROM reach JOIN $edges x ON reach.r = x.a)"""
+
+  /** The ×`replicas` inflated `documents` as a FROM item `(doc_id, src_id,
+    * text)`: copy r of source doc `src_id` is doc `src_id * replicas + r`,
+    * and copies r > 0 append the token `zz` + r×`x` (SQL twin of
+    * [[graft.Tables.documentsInflated]]).
+    */
+  def inflatedDocs(replicas: Int): String =
+    s"""(SELECT doc_id * $replicas + r AS doc_id, doc_id AS src_id,
+               CASE WHEN r = 0 THEN text
+                    ELSE text || ' zz' || repeat('x', CAST(r AS INT)) END AS text
+        FROM documents, generate_series(0, ${replicas - 1}) AS t(r))"""
+
+  /** The top `n` rows of the FROM item `from` by `row_number() OVER
+    * (window)`, numbered into `rank` and projected to `cols` (Spark twin:
+    * [[graft.functions.GroupTopK.rankedTop]]).
+    */
+  def rankedTop(from: String, window: String, n: Int, cols: String,
+                rank: String = "rank"): String =
+    s"""SELECT $cols FROM (
+          SELECT *, row_number() OVER ($window) AS $rank FROM $from)
+        WHERE $rank <= $n"""
 }

@@ -77,8 +77,9 @@ object Tables {
     * memory), not a Parquet artifact: the inflation is replayable
     * arithmetic over the fixture, not a trained index, and an artifact
     * would trade the one cheap explode for re-reading 10× the text bytes
-    * from disk in every consumer. Oracles are unaffected — each big-tier
-    * oracle already replays this exact arithmetic as a SQL CTE.
+    * from disk in every consumer. Oracles are unaffected — every big-tier
+    * oracle replays this exact arithmetic through its one SQL twin,
+    * `OracleSql.inflatedDocs`.
     */
   def documentsInflated(spark: SparkSession, dir: String, replicas: Int): DataFrame =
     Caches.memoized(spark, dir, s"corpus:docs_big_$replicas") {

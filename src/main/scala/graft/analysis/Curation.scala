@@ -490,7 +490,7 @@ object Curation {
     val term = round(
       log((col("cnt_t").cast("double") + lit(1.0)) / (col("t_total") + col("v"))) -
         log((col("cnt_r").cast("double") + lit(1.0)) / (col("r_total") + col("v"))), 6)
-    tok
+    val scored = tok
       .join(broadcast(vocab), "w")
       .crossJoin(broadcast(stats))
       .select(col("doc_id"), term.cast("decimal(18,6)").as("t"))
@@ -498,10 +498,7 @@ object Curation {
       .agg(count(lit(1)).as("n_tokens"),
         round(sum(col("t")).cast("double") / count(lit(1)).cast("double"), 6)
           .as("mean_logratio"))
-      .orderBy(col("mean_logratio").desc, col("doc_id"))
-      .limit(topK)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("mean_logratio").desc, col("doc_id"))))
+    graft.functions.GroupTopK.rankedTop(scored, "mean_logratio", "doc_id", topK)
   }
 
   private val tokSql =
@@ -527,6 +524,29 @@ object Curation {
     "ta_pack_manifest"     -> ((s, d) => packManifest(s, d)),
   )
 
+  /** The contamination stage of both curation-pipeline replays, as CTEs
+    * over a shingle-set CTE `sh(doc_id, s)`: docs md5-bucketed, buckets
+    * ≥ 90 are the eval split whose shingles (`ek`) mark train shingles
+    * dirty, and `ct(doc_id, dirty_frac)` keeps the train docs whose dirty
+    * fraction is below 0.5.
+    */
+  private lazy val contaminationCtes: String =
+    s"""bkt AS (SELECT doc_id, s,
+                    ${graft.OracleSql.md5Bucket()}
+                      AS bucket
+                  FROM sh),
+          ek AS (SELECT DISTINCT unnest(s) AS g FROM bkt WHERE bucket >= 90),
+          tr AS (SELECT doc_id, unnest(s) AS g FROM bkt WHERE bucket < 90),
+          dc AS (SELECT tr.doc_id, count(*) AS n_dirty
+                 FROM tr JOIN ek ON tr.g = ek.g GROUP BY tr.doc_id),
+          ct AS (
+            SELECT doc_id, dirty_frac FROM (
+              SELECT base.doc_id,
+                round(coalesce(n_dirty, 0)::DOUBLE / n_sh, 6) AS dirty_frac
+              FROM (SELECT doc_id, len(s) AS n_sh FROM bkt WHERE bucket < 90) base
+              LEFT JOIN dc ON base.doc_id = dc.doc_id)
+            WHERE dirty_frac < 0.5)"""
+
   /** The pipeline_curate replay, hoisted so compositions that extend
     * the pipeline (pipeline_curate_lines) reference ONE copy instead
     * of inlining a drift-prone duplicate (r13 verdict task 7).
@@ -546,13 +566,7 @@ object Curation {
           sh AS (
             SELECT doc_id, ${graft.OracleSql.shingle3("toks")} AS s
             FROM tk WHERE len(toks) >= 3),
-          pairs AS (
-            SELECT d1, d2 FROM (
-              SELECT a.doc_id AS d1, b.doc_id AS d2,
-                     round(len(list_intersect(a.s, b.s))::DOUBLE /
-                           len(list_distinct(a.s || b.s)), 6) AS jaccard
-              FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-            WHERE jaccard >= 0.5),
+          pairs AS (${graft.dedup.Dedup.jaccardPairsSql(0.5)}),
           edges AS (SELECT d1 AS a, d2 AS b FROM pairs
                     UNION ALL SELECT d2, d1 FROM pairs),
           ${graft.OracleSql.minLabelReach("documents", "doc_id", "edges")},
@@ -560,26 +574,8 @@ object Curation {
             SELECT doc_id FROM (
               SELECT v AS doc_id, min(r) AS canonical_id FROM reach GROUP BY v)
             WHERE doc_id = canonical_id),
-          bkt AS (SELECT doc_id, s,
-                    ${graft.OracleSql.md5Bucket()}
-                      AS bucket
-                  FROM sh),
-          ek AS (SELECT DISTINCT unnest(s) AS g FROM bkt WHERE bucket >= 90),
-          tr AS (SELECT doc_id, unnest(s) AS g FROM bkt WHERE bucket < 90),
-          dc AS (SELECT tr.doc_id, count(*) AS n_dirty
-                 FROM tr JOIN ek ON tr.g = ek.g GROUP BY tr.doc_id),
-          ct AS (
-            SELECT doc_id, dirty_frac FROM (
-              SELECT base.doc_id,
-                round(coalesce(n_dirty, 0)::DOUBLE / n_sh, 6) AS dirty_frac
-              FROM (SELECT doc_id, len(s) AS n_sh FROM bkt WHERE bucket < 90) base
-              LEFT JOIN dc ON base.doc_id = dc.doc_id)
-            WHERE dirty_frac < 0.5),
-          p8 AS (
-            SELECT doc_id,
-                   unnest(list_distinct([array_to_string(toks[i:i+7], ' ')
-                          for i in generate_series(1, len(toks) - 7)])) AS passage
-            FROM tk WHERE len(toks) >= 8),
+          $contaminationCtes,
+          p8 AS (${graft.dedup.Dedup.passagesSql("tk")}),
           hot AS (SELECT passage FROM p8 GROUP BY passage HAVING count(*) >= 2),
           bp AS (
             SELECT doc_id, boiler_frac FROM (
@@ -667,11 +663,7 @@ object Curation {
                    doc_id <> min(doc_id) OVER (PARTITION BY md5(text)) AS is_dup
             FROM documents),
           ct AS (${graft.dedup.Dedup.oracles("dedup_contamination")}),
-          p8 AS (
-            SELECT doc_id,
-                   unnest(list_distinct([array_to_string(toks[i:i+7], ' ')
-                          for i in generate_series(1, len(toks) - 7)])) AS passage
-            FROM tk WHERE len(toks) >= 8),
+          p8 AS (${graft.dedup.Dedup.passagesSql("tk")}),
           hot AS (SELECT passage FROM p8 GROUP BY passage HAVING count(*) >= 2),
           bp AS (
             SELECT p8.doc_id,
@@ -748,21 +740,7 @@ object Curation {
               SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS canon
               FROM inflated)
             WHERE doc_id = canon),
-          bkt AS (SELECT doc_id, s,
-                    ${graft.OracleSql.md5Bucket()}
-                      AS bucket
-                  FROM sh),
-          ek AS (SELECT DISTINCT unnest(s) AS g FROM bkt WHERE bucket >= 90),
-          tr AS (SELECT doc_id, unnest(s) AS g FROM bkt WHERE bucket < 90),
-          dc AS (SELECT tr.doc_id, count(*) AS n_dirty
-                 FROM tr JOIN ek ON tr.g = ek.g GROUP BY tr.doc_id),
-          ct AS (
-            SELECT doc_id FROM (
-              SELECT base.doc_id,
-                round(coalesce(n_dirty, 0)::DOUBLE / n_sh, 6) AS dirty_frac
-              FROM (SELECT doc_id, len(s) AS n_sh FROM bkt WHERE bucket < 90) base
-              LEFT JOIN dc ON base.doc_id = dc.doc_id)
-            WHERE dirty_frac < 0.5),
+          $contaminationCtes,
           pii AS (
             SELECT doc_id FROM inflated
             WHERE len(regexp_extract_all(text, '${Pii.EmailRe}'))

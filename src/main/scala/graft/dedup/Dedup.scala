@@ -580,7 +580,7 @@ object Dedup {
     * n_pairs): pairs sharing ≥1 kept shingle, and pairs verified on the
     * round-6 Jaccard grid — the bench measures the index join, not a
     * giant pair write. Hash-gated: inflation, tokenize+shingle, cap,
-    * join, and Jaccard replay as a chained CTE (the skewOracle pattern;
+    * join, and Jaccard replay as a chained CTE ([[cappedJoinCtes]];
     * the oracle intersects raw shingle strings where this side joins
     * (xxhash64, length) keys — identical sets modulo a 64-bit+length
     * collision, the documented [[shingleIndex]] trade).
@@ -1207,11 +1207,12 @@ object Dedup {
   private val tokSql =
     graft.text.Text.TokSql
 
-  // Shared oracle CTE: distinct word-3-gram shingles per doc.
-  private val shSql =
+  // Shared oracle CTE: distinct word-3-gram shingles per doc of a
+  // (doc_id, text) source.
+  private def shSql(docs: String = "documents"): String =
     s"""sh AS (
           SELECT doc_id, ${graft.OracleSql.shingle3("w")} AS s
-          FROM (SELECT doc_id, $tokSql AS w FROM documents)
+          FROM (SELECT doc_id, $tokSql AS w FROM $docs)
           WHERE len(w) >= 3)"""
 
   /** The dedup_groups replay (recursive min-label reachability over the
@@ -1219,22 +1220,23 @@ object Dedup {
     * and the group-size histogram's nested subquery.
     */
   private val groupsOracle: String =
-    s"""WITH RECURSIVE ${shSql},
-        pairs AS (
-          SELECT d1, d2 FROM (
-            SELECT a.doc_id AS d1, b.doc_id AS d2,
-                   round(len(list_intersect(a.s, b.s))::DOUBLE /
-                         len(list_distinct(a.s || b.s)), 6) AS jaccard
-            FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-          WHERE jaccard >= 0.5),
+    s"""WITH RECURSIVE ${shSql()},
+        pairs AS (${jaccardPairsSql(0.5)}),
         edges AS (SELECT d1 AS a, d2 AS b FROM pairs
                   UNION ALL SELECT d2, d1 FROM pairs),
         ${graft.OracleSql.minLabelReach("documents", "doc_id", "edges")}
         SELECT v AS doc_id, min(r) AS canonical_id FROM reach GROUP BY v"""
 
   private def jaccardOracle(minJ: Double): String =
-    s"""WITH $shSql
-        SELECT d1, d2, jaccard FROM (
+    s"""WITH ${shSql()}
+        ${jaccardPairsSql(minJ)}"""
+
+  /** Every doc pair `(d1 < d2, jaccard)` of a shingle-set CTE
+    * `sh(doc_id, s)` whose round-6 set Jaccard is at least `minJ`: the
+    * exact all-pairs replay under the n-gram, groups and curation oracles.
+    */
+  private[graft] def jaccardPairsSql(minJ: Double): String =
+    s"""SELECT d1, d2, jaccard FROM (
           SELECT a.doc_id AS d1, b.doc_id AS d2,
                  round(len(list_intersect(a.s, b.s))::DOUBLE /
                        len(list_distinct(a.s || b.s)), 6) AS jaccard
@@ -1244,27 +1246,23 @@ object Dedup {
   /** Full replay of [[ngramSkew]]: the inflation + boilerplate corpus
     * rebuilt in SQL (identical arithmetic and word-for-word templates),
     * shingled, then the df stats computed analytically and the capped
-    * join run for real — every number in the one summary row is
-    * hash-compared. Sums over BIGINT go HUGEINT in DuckDB, hence the
-    * explicit casts; `//` is DuckDB's integer division (Spark `DIV`).
+    * join ([[cappedJoinCtes]]) run for real — every number in the one
+    * summary row is hash-compared. Sums over BIGINT go HUGEINT in DuckDB,
+    * hence the explicit casts; `//` is DuckDB's integer division (Spark
+    * `DIV`).
     */
   private def skewOracle(minJ: Double, cap: Long, replicas: Int): String =
     s"""WITH inflated AS (
-          SELECT doc_id * $replicas + r AS doc_id,
-                 (CASE WHEN r = 0 THEN text
-                       ELSE text || ' zz' || repeat('x', r) END) ||
-                 (CASE WHEN doc_id % 2 = 0 THEN '$BoilerA' ELSE '' END) ||
-                 (CASE WHEN doc_id % 5 = 0 THEN '$BoilerB' ELSE '' END) ||
+          SELECT doc_id,
+                 text ||
+                 (CASE WHEN src_id % 2 = 0 THEN '$BoilerA' ELSE '' END) ||
+                 (CASE WHEN src_id % 5 = 0 THEN '$BoilerB' ELSE '' END) ||
                  ' sponsored by partner ' ||
-                 chr(CAST(97 + (doc_id % 200) // 26 AS INTEGER)) ||
-                 chr(CAST(97 + (doc_id % 200) % 26 AS INTEGER)) || ' network' AS text
-          FROM documents, generate_series(0, ${replicas - 1}) AS t(r)),
-        sh AS (
-          SELECT doc_id, ${graft.OracleSql.shingle3("w")} AS s
-          FROM (SELECT doc_id, $tokSql AS w FROM inflated)
-          WHERE len(w) >= 3),
-        ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-        dft AS (SELECT g, count(*) AS df FROM ex GROUP BY g),
+                 chr(CAST(97 + (src_id % 200) // 26 AS INTEGER)) ||
+                 chr(CAST(97 + (src_id % 200) % 26 AS INTEGER)) || ' network' AS text
+          FROM ${graft.OracleSql.inflatedDocs(replicas)}),
+        ${shSql("inflated")},
+        ${cappedJoinCtes(cap)},
         stats AS (
           SELECT CAST(count(*) AS BIGINT) AS n_shingle_keys,
                  CAST(count(CASE WHEN df > $cap THEN 1 END) AS BIGINT) AS n_hot_keys,
@@ -1272,26 +1270,18 @@ object Dedup {
                  CAST(sum(CASE WHEN df <= $cap THEN df * (df - 1) // 2
                                ELSE 0 END) AS BIGINT) AS cand_capped
           FROM dft),
-        keep AS (SELECT g FROM dft WHERE df <= $cap),
-        exk AS (SELECT doc_id, g FROM ex JOIN keep USING (g)),
-        i AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_int
-              FROM exk a JOIN exk b ON a.g = b.g AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id),
-        n AS (SELECT doc_id, len(s) AS n_sh FROM sh),
-        p AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs FROM (
-                SELECT round(n_int::DOUBLE / (n1.n_sh + n2.n_sh - n_int), 6) AS j
-                FROM i JOIN n n1 ON i.d1 = n1.doc_id JOIN n n2 ON i.d2 = n2.doc_id)
-              WHERE j >= $minJ),
+        p AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs FROM v WHERE j >= $minJ),
         d AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM sh)
         SELECT n_docs, n_shingle_keys, n_hot_keys, cand_uncapped, cand_capped, n_pairs
         FROM d, stats, p"""
 
-  /** The shared CTE chain of the portable-family big tier — inflation
-    * arithmetic, tokenize+shingle, 60-bit md5 base hashes, mod-p
-    * permutation signature, Horner band keys, and the DISTINCT
-    * band-candidate join — reused verbatim by [[minhashBigOracle]] and
-    * the pipeline_curate_big oracle (Curation.scala), so the two gates
-    * can never drift apart on the LSH replay.
+  /** The shared CTE chain of the portable-family big tier — the
+    * inflated corpus ([[graft.OracleSql.inflatedDocs]]), tokenize+shingle,
+    * 60-bit md5 base hashes, mod-p permutation signature, Horner band
+    * keys, and the DISTINCT band-candidate join — reused verbatim by
+    * [[minhashBigOracle]] and the pipeline_curate_big oracle
+    * (Curation.scala), so the two gates can never drift apart on the LSH
+    * replay.
     */
   private[graft] def portableBandCtes(replicas: Int): String = {
     val sigExpr =
@@ -1300,15 +1290,8 @@ object Dedup {
               + ((i+1) * 97531) % $PortP) % $PortP))
           for i in generate_series(0, ${NumHashes - 1})]"""
     val keyExpr = hornerKey(k => s"sg[b * $RowsPerBand + $k]")
-    s"""inflated AS (
-          SELECT doc_id * $replicas + r AS doc_id,
-                 CASE WHEN r = 0 THEN text
-                      ELSE text || ' zz' || repeat('x', r) END AS text
-          FROM documents, generate_series(0, ${replicas - 1}) AS t(r)),
-        sh AS (
-          SELECT doc_id, ${graft.OracleSql.shingle3("w")} AS s
-          FROM (SELECT doc_id, $tokSql AS w FROM inflated)
-          WHERE len(w) >= 3),
+    s"""inflated AS (SELECT doc_id, text FROM ${graft.OracleSql.inflatedDocs(replicas)}),
+        ${shSql("inflated")},
         hs AS (
           SELECT doc_id, list_distinct(list_transform(s,
                    g -> CAST('0x' || substr(md5(g), 2, 15) AS BIGINT))) AS hl
@@ -1344,30 +1327,14 @@ object Dedup {
         FROM ver"""
   }
 
-  /** Full replay of [[ngramCappedBig]]: the ×10 inflation CTE,
-    * tokenize+shingle, df cap, inverted-index self-join on the raw
-    * shingle string, round-6 Jaccard, all folded to the one summary row.
+  /** Full replay of [[ngramCappedBig]]: the ×10 inflated corpus,
+    * tokenize+shingle, then the [[cappedJoinCtes]] chain (df cap,
+    * inverted-index self-join on the raw shingle string, round-6
+    * Jaccard), all folded to the one summary row.
     */
   private def ngramCappedBigOracle(minJ: Double, cap: Long, replicas: Int): String =
-    s"""WITH inflated AS (
-          SELECT doc_id * $replicas + r AS doc_id,
-                 CASE WHEN r = 0 THEN text
-                      ELSE text || ' zz' || repeat('x', r) END AS text
-          FROM documents, generate_series(0, ${replicas - 1}) AS t(r)),
-        sh AS (
-          SELECT doc_id, ${graft.OracleSql.shingle3("w")} AS s
-          FROM (SELECT doc_id, $tokSql AS w FROM inflated)
-          WHERE len(w) >= 3),
-        ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-        keep AS (SELECT g FROM (SELECT g, count(*) AS df FROM ex GROUP BY g)
-                 WHERE df <= $cap),
-        exk AS (SELECT doc_id, g FROM ex JOIN keep USING (g)),
-        i AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_int
-              FROM exk a JOIN exk b ON a.g = b.g AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id),
-        n AS (SELECT doc_id, len(s) AS n_sh FROM sh),
-        v AS (SELECT round(n_int::DOUBLE / (n1.n_sh + n2.n_sh - n_int), 6) AS j
-              FROM i JOIN n n1 ON i.d1 = n1.doc_id JOIN n n2 ON i.d2 = n2.doc_id)
+    s"""WITH ${shSql(graft.OracleSql.inflatedDocs(replicas))},
+        ${cappedJoinCtes(cap)}
         SELECT (SELECT CAST(count(*) AS BIGINT) FROM sh) AS n_docs,
                CAST(count(*) AS BIGINT) AS n_candidates,
                CAST(count(CASE WHEN j >= $minJ THEN 1 END) AS BIGINT) AS n_pairs
@@ -1380,20 +1347,57 @@ object Dedup {
     * cap promises.
     */
   private def cappedJaccardOracle(minJ: Double, cap: Long): String =
-    s"""WITH $shSql,
-        ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-        keep AS (SELECT g FROM (SELECT g, count(*) AS df FROM ex GROUP BY g)
-                 WHERE df <= $cap),
+    s"""WITH ${shSql()},
+        ${cappedJoinCtes(cap)}
+        SELECT d1, d2, j AS jaccard FROM v WHERE j >= $minJ"""
+
+  /** The distinct 8-token passages of each doc of a `(doc_id, toks)`
+    * relation with at least 8 tokens — the passage table of the passage,
+    * boilerplate and curation-pipeline replays.
+    */
+  private[graft] def passagesSql(toks: String): String =
+    s"""SELECT doc_id,
+               unnest(list_distinct([array_to_string(toks[i:i+7], ' ')
+                      for i in generate_series(1, len(toks) - 7)])) AS passage
+        FROM $toks WHERE len(toks) >= 8"""
+
+  /** The simhash replay as CTEs: `hs` (each doc's 60-bit md5 token
+    * hashes, duplicates kept) and `sim(doc_id, simhash)` (bit j set iff
+    * the ±1 vote of bit j over the doc's hashes is positive) — shared by
+    * the three simhash oracles.
+    */
+  private lazy val simhashCtes =
+    s"""hs AS (
+          SELECT doc_id, list_transform($tokSql,
+            w -> CAST('0x' || substr(md5(w), 2, 15) AS BIGINT)) AS hl
+          FROM documents),
+        sim AS (
+          SELECT doc_id, CAST(list_sum(
+            [CASE WHEN list_sum(list_transform(hl,
+                    h -> ((h // (2**j)::BIGINT) % 2) * 2 - 1)) > 0
+                  THEN (2**j)::BIGINT ELSE 0 END
+             for j in generate_series(0, ${SimBits - 1})]) AS BIGINT) AS simhash
+          FROM hs)"""
+
+  /** The capped inverted-index self-join over a shingle-set CTE
+    * `sh(doc_id, s)`, as CTEs: `ex` (one row per doc shingle), `dft`
+    * (shingle df), `keep`/`exk` (shingles with df ≤ `cap`), `i` (pair
+    * intersections over the kept shingles), `n` (full per-doc shingle
+    * counts) and `v(d1, d2, j)`, the round-6 Jaccard of every candidate
+    * pair — the replay of [[jaccardFromIndex]] shared by the capped, skew
+    * and ×10 capped oracles.
+    */
+  private def cappedJoinCtes(cap: Long): String =
+    s"""ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
+        dft AS (SELECT g, count(*) AS df FROM ex GROUP BY g),
+        keep AS (SELECT g FROM dft WHERE df <= $cap),
         exk AS (SELECT doc_id, g FROM ex JOIN keep USING (g)),
         i AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_int
               FROM exk a JOIN exk b ON a.g = b.g AND a.doc_id < b.doc_id
               GROUP BY a.doc_id, b.doc_id),
-        n AS (SELECT doc_id, len(s) AS n_sh FROM sh)
-        SELECT d1, d2, jaccard FROM (
-          SELECT d1, d2,
-                 round(n_int::DOUBLE / (n1.n_sh + n2.n_sh - n_int), 6) AS jaccard
-          FROM i JOIN n n1 ON i.d1 = n1.doc_id JOIN n n2 ON i.d2 = n2.doc_id)
-        WHERE jaccard >= $minJ"""
+        n AS (SELECT doc_id, len(s) AS n_sh FROM sh),
+        v AS (SELECT d1, d2, round(n_int::DOUBLE / (n1.n_sh + n2.n_sh - n_int), 6) AS j
+              FROM i JOIN n n1 ON i.d1 = n1.doc_id JOIN n n2 ON i.d2 = n2.doc_id)"""
 
   /** Longest duplicated substring over the corpus (dedup_longest_dup) —
     * the EXACT query the fixed-length passage dedup ([[dupPassages]])
@@ -1697,28 +1701,10 @@ object Dedup {
                  (j.doc_id = b.best_doc) AS keep
           FROM j JOIN best b USING (canonical_id)""",
     "dedup_simhash" ->
-      s"""WITH hs AS (
-            SELECT doc_id, list_transform($tokSql,
-              w -> CAST('0x' || substr(md5(w), 2, 15) AS BIGINT)) AS hl
-            FROM documents)
-          SELECT doc_id, CAST(list_sum(
-            [CASE WHEN list_sum(list_transform(hl,
-                    h -> ((h // (2**j)::BIGINT) % 2) * 2 - 1)) > 0
-                  THEN (2**j)::BIGINT ELSE 0 END
-             for j in generate_series(0, ${SimBits - 1})]) AS BIGINT) AS simhash
-          FROM hs""",
+      s"""WITH $simhashCtes
+          SELECT doc_id, simhash FROM sim""",
     "dedup_simhash_pairs" ->
-      s"""WITH hs AS (
-            SELECT doc_id, list_transform($tokSql,
-              w -> CAST('0x' || substr(md5(w), 2, 15) AS BIGINT)) AS hl
-            FROM documents),
-          sim AS (
-            SELECT doc_id, CAST(list_sum(
-              [CASE WHEN list_sum(list_transform(hl,
-                      h -> ((h // (2**j)::BIGINT) % 2) * 2 - 1)) > 0
-                    THEN (2**j)::BIGINT ELSE 0 END
-               for j in generate_series(0, ${SimBits - 1})]) AS BIGINT) AS simhash
-            FROM hs)
+      s"""WITH $simhashCtes
           SELECT a.doc_id AS d1, b.doc_id AS d2,
                  bit_count(xor(a.simhash, b.simhash)) AS hamming
           FROM sim a JOIN sim b ON a.doc_id < b.doc_id
@@ -1727,17 +1713,7 @@ object Dedup {
     // blocks → bucket df cap → candidate pairs within kept buckets →
     // hamming verify, reduced to the one-row guard summary
     "dedup_simhash_capped" ->
-      s"""WITH hs AS (
-            SELECT doc_id, list_transform($tokSql,
-              w -> CAST('0x' || substr(md5(w), 2, 15) AS BIGINT)) AS hl
-            FROM documents),
-          sim AS (
-            SELECT doc_id, CAST(list_sum(
-              [CASE WHEN list_sum(list_transform(hl,
-                      h -> ((h // (2**j)::BIGINT) % 2) * 2 - 1)) > 0
-                    THEN (2**j)::BIGINT ELSE 0 END
-               for j in generate_series(0, ${SimBits - 1})]) AS BIGINT) AS simhash
-            FROM hs),
+      s"""WITH $simhashCtes,
           blocks AS (
             SELECT doc_id, simhash, j AS blk,
                    (simhash // (2**(6*j))::BIGINT) % 64 AS bval
@@ -1758,7 +1734,7 @@ object Dedup {
                    AS max_kept_bucket,
                  (SELECT count(*) FROM pr) AS n_pairs""",
     "dedup_contamination" ->
-      s"""WITH $shSql,
+      s"""WITH ${shSql()},
           b AS (SELECT doc_id, s,
                   ${graft.OracleSql.md5Bucket()}
                     AS bucket
@@ -1781,7 +1757,7 @@ object Dedup {
     // being ≥ 0.9 (they are); a future planted pair with J in [0.5, 0.9)
     // would flip this row red without any code change.
     "dedup_overlap_pairs" ->
-      s"""WITH $shSql
+      s"""WITH ${shSql()}
           SELECT d1, d2, overlap, jaccard FROM (
             SELECT a.doc_id AS d1, b.doc_id AS d2,
                    round(len(list_intersect(a.s, b.s))::DOUBLE /
@@ -1805,7 +1781,7 @@ object Dedup {
     * OracleFragmentsSpec discipline.
     */
   private[graft] lazy val incrementalCteBody: String =
-      s"""$shSql,
+      s"""${shSql()},
           b AS (SELECT doc_id,
                   ${graft.OracleSql.md5Bucket()}
                     AS bucket
@@ -1860,12 +1836,7 @@ object Dedup {
           SELECT passage, count(*) AS n_docs, min(doc_id) AS first_doc
           FROM chunks GROUP BY passage HAVING count(*) >= 2""",
     "dedup_passages" ->
-      s"""WITH sh8 AS (
-            SELECT doc_id,
-                   unnest(list_distinct([array_to_string(toks[i:i+7], ' ')
-                          for i in generate_series(1, len(toks) - 7)])) AS passage
-            FROM (SELECT doc_id, $tokSql AS toks FROM documents)
-            WHERE len(toks) >= 8)
+      s"""WITH sh8 AS (${passagesSql(s"(SELECT doc_id, $tokSql AS toks FROM documents)")})
           SELECT passage, count(*) AS n_docs, min(doc_id) AS first_doc
           FROM sh8 GROUP BY passage HAVING count(*) >= 2""",
     // line-level dedup: the injection CTE replays [[linesFixture]]
@@ -1875,12 +1846,7 @@ object Dedup {
     // engines (string_agg of zero rows is NULL, array_join of [] is '')
     "dedup_lines" -> linesOracleSql,
     "dedup_boilerplate" ->
-      s"""WITH sh8 AS (
-            SELECT doc_id,
-                   unnest(list_distinct([array_to_string(toks[i:i+7], ' ')
-                          for i in generate_series(1, len(toks) - 7)])) AS passage
-            FROM (SELECT doc_id, $tokSql AS toks FROM documents)
-            WHERE len(toks) >= 8),
+      s"""WITH sh8 AS (${passagesSql(s"(SELECT doc_id, $tokSql AS toks FROM documents)")}),
           hot AS (
             SELECT passage FROM sh8 GROUP BY passage HAVING count(*) >= 2)
           SELECT sh8.doc_id,

@@ -467,10 +467,7 @@ object PageRank {
       .union(cand
         .select(col("w").as("id"), col("u").as("candidate"), col("common_neighbors")))
       .where(col("id") < nQueries)
-    perNode.withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("id"))
-          .orderBy(col("common_neighbors").desc, col("candidate"))))
-      .where(col("rank") <= k)
+    graft.functions.GroupTopK.rankedTopPer(perNode, Seq("id"), "common_neighbors", "candidate", k)
       .select(col("id"), col("rank").cast("int").as("rank"),
         col("candidate"), col("common_neighbors"))
   }
@@ -540,10 +537,7 @@ object PageRank {
         .select(col("w").as("id"), col("u").as("candidate"),
           col("common_neighbors"), col("aa_d")))
       .where(col("id") < nQueries)
-    perNode.withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("id"))
-          .orderBy(col("aa_d").desc, col("candidate"))))
-      .where(col("rank") <= k)
+    graft.functions.GroupTopK.rankedTopPer(perNode, Seq("id"), "aa_d", "candidate", k)
       .select(col("id"), col("rank").cast("int").as("rank"), col("candidate"),
         col("common_neighbors"), col("aa_d").cast("double").as("adamic_adar"))
   }

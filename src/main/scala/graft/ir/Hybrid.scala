@@ -1,8 +1,9 @@
 package graft.ir
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.OracleSql
+import graft.functions.GroupTopK.rankedTop
 
 /** Hybrid retrieval — Reciprocal Rank Fusion (Cormack, Clarke & Büttcher,
   * SIGIR 2009) of a sparse BM25 ranking and a dense embedding-cosine
@@ -18,9 +19,9 @@ import org.apache.spark.sql.functions._
   * at 100 TB the dense leg swaps to the IVF/LSH tiers, which return the
   * same (doc_id, rank) relation and fuse identically); the fusion itself
   * joins two ≤topN-row rankings — driver-free and trivially cheap. Every
-  * ranking step is orderBy.limit (TakeOrderedAndProject) with rank
-  * numbered on the bounded survivors, so no partition-less window ever
-  * sees more than topN (legs) / k (fusion) rows.
+  * ranking step is the bounded [[graft.functions.GroupTopK.rankedTop]],
+  * so no partition-less window ever sees more than topN (legs) / k
+  * (fusion) rows.
   *
   * Determinism: both legs round scores to 6 dp with doc-id tiebreaks
   * (the repo-wide portability contract); `1/(K + rank)` on integer ranks
@@ -49,95 +50,49 @@ object Hybrid {
           .as("norm"))
     val q = e.where(col("vec_id") === queryVec)
       .select(col("embedding").as("qe"), col("norm").as("qn"))
-    // top-k per leg via orderBy.limit (TakeOrderedAndProject — bounded
-    // per-partition heaps, never a partition-less window over the full
-    // candidate set), then rank numbered on the ≤topN survivors: same
-    // total order, so the bounded ranks ARE the global ranks (the bm25
-    // shape — r8 verdict weak-row fix)
-    val dense = e.where(col("vec_id") =!= queryVec)
+    val cos = e.where(col("vec_id") =!= queryVec)
       .crossJoin(broadcast(q)) // 1-row query embedding (the bm25 stats shape)
       .select(col("vec_id").as("doc_id"),
         round(graft.functions.ArrayExprs.floatDot(col("embedding"), col("qe")) /
           (col("norm") * col("qn")), 6).as("cos"))
-      .orderBy(col("cos").desc, col("doc_id")).limit(topN)
-      // partition-less window over the ≤topN survivors of the limit just
-      // above — the shape PlanAuditSpec's window lint enforces registry-
-      // wide (a constant partition key would be folded away by the
-      // optimizer, so the bound lives in the plan shape, not the spec);
-      // the per-execution WindowExec notice is demoted in Sessions.local
-      .withColumn("drank",
-        row_number().over(Window.orderBy(col("cos").desc, col("doc_id"))))
+    val dense = rankedTop(cos, "cos", "doc_id", topN, "drank")
       .select(col("doc_id"), col("drank"))
 
-    sparse.join(dense, Seq("doc_id"), "full_outer")
+    val fused = sparse.join(dense, Seq("doc_id"), "full_outer")
       .select(col("doc_id"), col("srank"), col("drank"),
         round(
           coalesce(lit(1.0) / (lit(RrfK) + col("srank")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(RrfK) + col("drank")), lit(0.0)), 9).as("rrf"))
-      .orderBy(col("rrf").desc, col("doc_id")).limit(k)
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("rrf").desc, col("doc_id"))))
+    rankedTop(fused, "rrf", "doc_id", k)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "ir_hybrid_rrf" -> ((s, d) => rrf(s, d)),
   )
 
-  private val tokSql =
-    graft.text.Text.TokSql
-
   val oracles: Map[String, String] = Map(
-    // Replays both legs end to end: the ir_bm25 pipeline (identical CTE
-    // chain, rank <= 20) and the dense cosine probe around doc 0, then
-    // the full-outer RRF fusion with the canonical k=60.
+    // Replays both legs end to end: the ir_bm25 replay itself (its
+    // rank <= 20 cut is the sparse leg) and the dense cosine probe around
+    // doc 0, then the full-outer RRF fusion with the canonical k=60.
     "ir_hybrid_rrf" ->
-      s"""WITH post AS MATERIALIZED (
-            SELECT term, doc_id, count(*) AS tf
-            FROM (SELECT doc_id, unnest($tokSql) AS term FROM documents)
-            GROUP BY term, doc_id),
-          dl AS MATERIALIZED (
-            SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM post GROUP BY doc_id),
-          st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                        CAST(sum(dl) AS BIGINT) AS sum_dl FROM dl),
-          qt AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM post
-                 WHERE term IN ('spark', 'table', 'merge') GROUP BY term),
-          sp AS (
-            SELECT doc_id, rank AS srank FROM (
-              SELECT doc_id,
-                     row_number() OVER (ORDER BY score_d DESC, doc_id) AS rank
-              FROM (
-                SELECT p.doc_id,
-                       sum(CAST(round(
-                         round(ln((CAST(st.n_docs AS DOUBLE) - q.df + 0.5) / (q.df + 0.5) + 1.0), 6)
-                         * (CAST(p.tf AS DOUBLE) * 2.2 /
-                            (CAST(p.tf AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 *
-                              (CAST(d.dl AS DOUBLE) /
-                               (CAST(st.sum_dl AS DOUBLE) / CAST(st.n_docs AS DOUBLE)))))),
-                         6) AS DECIMAL(18,6))) AS score_d
-                FROM post p JOIN qt q USING (term) JOIN dl d USING (doc_id) CROSS JOIN st
-                GROUP BY p.doc_id))
-            WHERE rank <= 20),
+      s"""WITH sp AS (
+            SELECT doc_id, rank AS srank FROM (${InvertedIndex.bm25OracleSql()})),
           en AS (SELECT vec_id, embedding FROM embeddings
                  WHERE vec_id < ${graft.sim.Similarity.MaxExactVectors}),
           qv AS (SELECT embedding AS qe FROM en WHERE vec_id = 0),
-          dn AS (
-            SELECT doc_id, drank FROM (
-              SELECT doc_id,
-                     row_number() OVER (ORDER BY cos DESC, doc_id) AS drank
-              FROM (
-                SELECT a.vec_id AS doc_id,
-                       ${graft.OracleSql.cos6("a.embedding", "q.qe")} AS cos
-                FROM en a CROSS JOIN qv q
-                WHERE a.vec_id <> 0))
-            WHERE drank <= 20)
-          SELECT doc_id, srank, drank, rrf, rank FROM (
-            SELECT doc_id, srank, drank, rrf,
-                   row_number() OVER (ORDER BY rrf DESC, doc_id) AS rank
-            FROM (
-              SELECT doc_id, srank, drank,
-                     round(coalesce(CAST(1.0 AS DOUBLE) / (60 + srank), 0.0) +
-                           coalesce(CAST(1.0 AS DOUBLE) / (60 + drank), 0.0), 9) AS rrf
-              FROM sp FULL OUTER JOIN dn USING (doc_id)))
-          WHERE rank <= 10""",
+          cs AS (
+            SELECT a.vec_id AS doc_id,
+                   ${OracleSql.cos6("a.embedding", "q.qe")} AS cos
+            FROM en a CROSS JOIN qv q
+            WHERE a.vec_id <> 0),
+          dn AS (${OracleSql.rankedTop("cs", "ORDER BY cos DESC, doc_id", 20,
+                   "doc_id, drank", "drank")}),
+          fu AS (
+            SELECT doc_id, srank, drank,
+                   round(coalesce(CAST(1.0 AS DOUBLE) / (60 + srank), 0.0) +
+                         coalesce(CAST(1.0 AS DOUBLE) / (60 + drank), 0.0), 9) AS rrf
+            FROM sp FULL OUTER JOIN dn USING (doc_id))
+          ${OracleSql.rankedTop("fu", "ORDER BY rrf DESC, doc_id", 10,
+            "doc_id, srank, drank, rrf, rank")}""",
   )
 }

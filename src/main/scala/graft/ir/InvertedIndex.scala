@@ -1,8 +1,9 @@
 package graft.ir
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{OracleSql, Tables}
+import graft.functions.GroupTopK.{rankedTop, rankedTopPer}
 import graft.text.Text
 
 /** a3/a7 IR suite: inverted index construction and boolean retrieval over
@@ -20,14 +21,19 @@ import graft.text.Text
   */
 object InvertedIndex {
 
-  /** Per-(term, doc) term frequency (`BuildInvertedIndexCompressed.java:58-70`:
-    * tokenize, histogram per doc). One explode + one aggregation.
+  /** Per-(term, doc) term frequency of a `(doc_id, text)` source
+    * (`BuildInvertedIndexCompressed.java:58-70`: tokenize, histogram per
+    * doc). One explode + one aggregation: the one tokenize-and-count behind
+    * every postings build, in-session, persisted and per shard.
     */
-  def termDocTf(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(Text.tokenize(col("text"))).as("term"))
+  def termDocTf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(Text.tokenize(col("text"))).as("term"))
       .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
+
+  /** [[termDocTf]] over the whole `documents` table. */
+  def termDocTf(spark: SparkSession, dir: String): DataFrame =
+    termDocTf(Tables.documents(spark, dir))
 
   /** The BUILT index relation, persisted once per (session, dir) — the
     * Spark analog of the reference WRITING its MapFile index once and
@@ -78,30 +84,40 @@ object InvertedIndex {
         count(lit(1)).as("df"),
         sort_array(collect_list(struct(col("doc_id"), col("tf")))).as("postings"))
 
+  /** The postings relation, or its Parquet round-trip when `persisted`. */
+  private def postings(spark: SparkSession, dir: String, persisted: Boolean): DataFrame =
+    if (persisted) postingsRelationPersisted(spark, dir) else postingsRelation(spark, dir)
+
   /** Stack-based postfix boolean query evaluator
     * (`BooleanRetrievalCompressed.java:39-94`): terms push doc-id sets,
     * AND intersects, OR unions. The driver-side interpreter builds a tree
     * of DataFrame set operations — each term is a `term = t` lookup
     * against the PERSISTED index relation (the reference's MapFile
     * point-get, `BooleanRetrievalCompressed.java:109-124`), so the corpus
-    * is scanned once per run, not once per term branch.
+    * is scanned once per run, not once per term branch. A query that
+    * leaves more or fewer than one set, or gives an operator fewer than
+    * two operands, is rejected with an IllegalArgumentException.
     */
   def booleanQuery(spark: SparkSession, dir: String, postfix: String,
                    persisted: Boolean = false): DataFrame = {
-    val rel = if (persisted) postingsRelationPersisted(spark, dir)
-              else postingsRelation(spark, dir)
-    val dw = rel.select(col("term"), col("doc_id"))
+    val dw = postings(spark, dir, persisted).select(col("term"), col("doc_id"))
     var stack = List.empty[DataFrame]
+    // the top two sets (top first), popped
+    def operands(op: String): (DataFrame, DataFrame) = stack match {
+      case a :: b :: rest => stack = rest; (a, b)
+      case _ => throw new IllegalArgumentException(
+        s"malformed postfix query: $postfix ($op needs two operands)")
+    }
     postfix.trim.split("\\s+").foreach {
       case "AND" =>
-        val a :: b :: rest = stack: @unchecked
-        stack = a.intersect(b) :: rest
+        val (a, b) = operands("AND")
+        stack = a.intersect(b) :: stack
       case "OR" =>
-        val a :: b :: rest = stack: @unchecked
-        stack = a.union(b).distinct() :: rest
+        val (a, b) = operands("OR")
+        stack = a.union(b).distinct() :: stack
       case "NOT" => // binary difference: "x y NOT" = x minus y
-        val b :: a :: rest = stack: @unchecked
-        stack = a.except(b) :: rest
+        val (b, a) = operands("NOT")
+        stack = a.except(b) :: stack
       case term =>
         stack = dw.filter(col("term") === term).select(col("doc_id")) :: stack
     }
@@ -131,47 +147,39 @@ object InvertedIndex {
     * ml_batch_gd). Inputs to every double op are exact integers or
     * shared-grid values, so both engines compute identical doubles.
     *
-    * Scale shape (r8 verdict's two `weak` findings, both fixed here):
-    *  - the corpus stats (N, Σdl) are ONE map-side-combined aggregate
-    *    over the index relation — no per-doc doc-length table is ever
-    *    materialized corpus-wide;
-    *  - the per-doc length join is PRUNED to candidate docs by a
-    *    left-semi join on the term-matched postings (only docs matching
-    *    a query term aggregate their length — at 100× corpus scale the
-    *    dl shuffle tracks the candidate set, not the corpus);
-    *  - top-k is `orderBy.limit(topN)` — TakeOrderedAndProject, a
-    *    per-partition bounded heap + driver merge, never a partition-less
-    *    row_number window pushing every candidate through one task's
-    *    sort. `rank` is then numbered on the ≤topN survivors (same total
-    *    order, so ranks 1..topN are the global ranks).
+    * Scale shape (r8 verdict's two `weak` findings, both fixed here): the
+    * corpus stats are [[corpusStats]], the per-doc length join is
+    * [[candidateDocLengths]] over the term-matched docs, and top-k is the
+    * bounded [[graft.functions.GroupTopK.rankedTop]].
     */
   def bm25(spark: SparkSession, dir: String,
            terms: Seq[String] = Seq("spark", "table", "merge"),
            k1: Double = 1.2, b: Double = 0.75, topN: Int = 20,
            persisted: Boolean = false): DataFrame =
-    bm25OverPostings(
-      if (persisted) postingsRelationPersisted(spark, dir)
-      else postingsRelation(spark, dir),
-      terms, k1, b, topN)
+    bm25OverPostings(postings(spark, dir, persisted), terms, k1, b, topN)
 
-  /** [[bm25]]'s ranking core over an EXPLICIT postings relation — shared
-    * by the fixture tier, its persisted twin, and the ×10 measurement
-    * tier ([[bm25Big]]), so all three serve the same audited plan shape.
+  /** Corpus stats of a postings relation: `n_docs` and `sum_dl` (total
+    * tokens) as ONE map-side-combined aggregate over the index relation —
+    * no per-doc doc-length table is materialized corpus-wide.
     */
-  private def bm25OverPostings(post: DataFrame, terms: Seq[String],
-                               k1: Double, b: Double, topN: Int): DataFrame = {
-    // postings rows matching a query term: |terms| point-lookups against
-    // the term-clustered relation — the candidate set everything below
-    // is bounded by
-    val matched = post.filter(col("term").isin(terms: _*))
-    val stats = post.agg(count_distinct(col("doc_id")).as("n_docs"),
-      sum(col("tf")).as("sum_dl"))
-    val dft = matched.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    // per-doc length ONLY for candidate docs: semi-join prunes the
-    // aggregation input before the per-doc shuffle (the op_bloom_join
-    // discipline — candidate set, not corpus, through the exchange)
-    val dl = post.join(matched.select(col("doc_id")), Seq("doc_id"), "left_semi")
+  private def corpusStats(post: DataFrame): DataFrame =
+    post.agg(count_distinct(col("doc_id")).as("n_docs"), sum(col("tf")).as("sum_dl"))
+
+  /** Per-doc length `dl` ONLY for the candidate docs in `ids` (a `doc_id`
+    * frame): the left-semi join prunes the aggregation input before the
+    * per-doc shuffle (the op_bloom_join discipline — at 100× corpus scale
+    * the dl shuffle tracks the candidate set, not the corpus).
+    */
+  private def candidateDocLengths(post: DataFrame, ids: DataFrame): DataFrame =
+    post.join(ids, Seq("doc_id"), "left_semi")
       .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+
+  /** One (term, doc) BM25 contribution over columns `tf`, `df`, `dl`,
+    * `n_docs` and `sum_dl`: the 6-dp idf times the k1/b-normalized tf,
+    * rounded to 6 dp and cast to DECIMAL(18,6) (the fp-portability
+    * contract of [[bm25]]).
+    */
+  private def bm25Contrib(k1: Double, b: Double): Column = {
     val avgdl = col("sum_dl").cast("double") / col("n_docs").cast("double")
     val idf6 = round(
       log((col("n_docs").cast("double") - col("df") + lit(0.5)) /
@@ -181,18 +189,29 @@ object InvertedIndex {
     val tfn = col("tf").cast("double") * lit(k1 + 1.0) /
       (col("tf").cast("double") +
         lit(k1) * (lit(1.0 - b) + lit(b) * (col("dl").cast("double") / avgdl)))
+    round(idf6 * tfn, 6).cast("decimal(18,6)").as("contrib")
+  }
+
+  /** [[bm25]]'s ranking core over an EXPLICIT postings relation — shared
+    * by the fixture tier, its persisted twin, and the ×10 measurement
+    * tier ([[bm25Big]]), so all three serve the same audited plan shape.
+    * All three are gated by the one bm25 oracle chain, `bm25OracleSql`.
+    */
+  private def bm25OverPostings(post: DataFrame, terms: Seq[String],
+                               k1: Double, b: Double, topN: Int): DataFrame = {
+    // postings rows matching a query term: |terms| point-lookups against
+    // the term-clustered relation — the candidate set everything below
+    // is bounded by
+    val matched = post.filter(col("term").isin(terms: _*))
+    val dft = matched.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val scored = matched
       .join(broadcast(dft), "term")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"), round(idf6 * tfn, 6).cast("decimal(18,6)").as("contrib"))
+      .join(candidateDocLengths(post, matched.select(col("doc_id"))), "doc_id")
+      .crossJoin(broadcast(corpusStats(post)))
+      .select(col("doc_id"), bm25Contrib(k1, b))
       .groupBy(col("doc_id"))
       .agg(sum(col("contrib")).as("score_d")) // exact decimal sum, order-free
-    scored
-      .orderBy(col("score_d").desc, col("doc_id")).limit(topN)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("score_d").desc, col("doc_id"))))
+    rankedTop(scored, "score_d", "doc_id", topN)
       .select(col("doc_id"), col("score_d").cast("double").as("score"), col("rank"))
   }
 
@@ -298,11 +317,7 @@ object InvertedIndex {
     */
   def shardPostings(spark: SparkSession, dir: String, parity: Int): DataFrame =
     graft.Caches.parquetArtifact(spark, dir, s"ir_postings_shard$parity")(
-      Tables.documents(spark, dir)
-        .where(pmod(col("doc_id"), lit(2)) === parity)
-        .select(col("doc_id"), explode(Text.tokenize(col("text"))).as("term"))
-        .groupBy(col("term"), col("doc_id"))
-        .agg(count(lit(1)).as("tf"))
+      termDocTf(Tables.documents(spark, dir).where(pmod(col("doc_id"), lit(2)) === parity))
         .repartition(col("term")))
 
   /** The merged view over both persisted shards, term-clustered like
@@ -343,8 +358,8 @@ object InvertedIndex {
     *
     * Same scale shape as [[bm25]]: corpus stats are ONE map-side-combined
     * aggregate; ctf is a per-query-term broadcast; the per-doc length
-    * join is semi-join-pruned to candidates; top-k is orderBy.limit
-    * (TakeOrderedAndProject) with rank numbered on the ≤topN survivors.
+    * join is semi-join-pruned to candidates; top-k is the bounded
+    * [[graft.functions.GroupTopK.rankedTop]].
     * Same fp-portability contract: each term contribution and the
     * doc-length normalizer are 6-dp-rounded DECIMAL(18,6) terms of an
     * exact order-free sum the oracle replays bit-for-bit.
@@ -356,27 +371,22 @@ object InvertedIndex {
     val matched = post.filter(col("term").isin(terms: _*))
     val stats = post.agg(sum(col("tf")).as("c_total"))
     val ctf = matched.groupBy(col("term")).agg(sum(col("tf")).as("ctf"))
-    val dl = post.join(matched.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     val contrib = round(
       log(lit(1.0) + col("tf").cast("double") /
         (lit(mu) * (col("ctf").cast("double") / col("c_total").cast("double")))), 6)
     val norm = round(
       lit(terms.size.toDouble) *
         log(lit(mu) / (col("dl").cast("double") + lit(mu))), 6)
-    matched
+    val scored = matched
       .join(broadcast(ctf), "term")
       .crossJoin(broadcast(stats))
       .select(col("doc_id"), contrib.cast("decimal(18,6)").as("contrib"))
       .groupBy(col("doc_id"))
       .agg(sum(col("contrib")).as("s_match")) // exact decimal sum, order-free
-      .join(dl, "doc_id")
+      .join(candidateDocLengths(post, matched.select(col("doc_id"))), "doc_id")
       .select(col("doc_id"),
         (col("s_match") + norm.cast("decimal(18,6)")).as("score_d"))
-      .orderBy(col("score_d").desc, col("doc_id")).limit(topN)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("score_d").desc, col("doc_id"))))
+    rankedTop(scored, "score_d", "doc_id", topN)
       .select(col("doc_id"), col("score_d").cast("double").as("score"), col("rank"))
   }
 
@@ -399,6 +409,10 @@ object InvertedIndex {
         .repartition(spark.sessionState.conf.numShufflePartitions, col("term"))
     }
 
+  /** The `term = t` positional lookup: per doc holding `t`, its positions as `as`. */
+  private def positionsOf(pos: DataFrame, t: String, as: String): DataFrame =
+    pos.filter(col("term") === t).select(col("doc_id"), col("positions").as(as))
+
   /** Exact phrase query over the positional index: the phrase matches at
     * start position p iff term i sits at p+i for every i, i.e. the
     * intersection of each term's position list shifted left by its
@@ -415,9 +429,8 @@ object InvertedIndex {
   private def phraseOverPositions(pos: DataFrame, phrase: Seq[String]): DataFrame = {
     require(phrase.nonEmpty)
     val shifted = phrase.zipWithIndex.map { case (w, i) =>
-      pos.filter(col("term") === w)
-        .select(col("doc_id"),
-          transform(col("positions"), p => p - i).as(s"p$i"))
+      positionsOf(pos, w, s"p$i")
+        .select(col("doc_id"), transform(col(s"p$i"), p => p - i).as(s"p$i"))
     }
     val starts = phrase.indices.map(i => col(s"p$i"))
       .reduce((a, b) => array_intersect(a, b))
@@ -441,9 +454,7 @@ object InvertedIndex {
                      window: Long): DataFrame = {
     require(a != b, "proximity terms must differ (self-pairs would count dist 0)")
     val pos = positionsRelation(spark, dir)
-    val pa = pos.filter(col("term") === a).select(col("doc_id"), col("positions").as("pa"))
-    val pb = pos.filter(col("term") === b).select(col("doc_id"), col("positions").as("pb"))
-    pa.join(pb, "doc_id")
+    positionsOf(pos, a, "pa").join(positionsOf(pos, b, "pb"), "doc_id")
       .select(col("doc_id"),
         flatten(transform(col("pa"),
           x => filter(transform(col("pb"), y => abs(y - x)),
@@ -469,15 +480,14 @@ object InvertedIndex {
   def snippetWindow(spark: SparkSession, dir: String,
                     a: String, b: String, c: String): DataFrame = {
     val pos = positionsRelation(spark, dir)
-    def look(t: String, as: String) =
-      pos.filter(col("term") === t).select(col("doc_id"), col("positions").as(as))
     val wins = flatten(transform(col("pa"), x =>
       flatten(transform(col("pb"), y =>
         transform(col("pc"), z => {
           val lo = least(x, y, z); val hi = greatest(x, y, z)
           struct((hi - lo + 1).as("len"), lo.as("start"))
         })))))
-    look(a, "pa").join(look(b, "pb"), "doc_id").join(look(c, "pc"), "doc_id")
+    positionsOf(pos, a, "pa").join(positionsOf(pos, b, "pb"), "doc_id")
+      .join(positionsOf(pos, c, "pc"), "doc_id")
       .select(col("doc_id"), array_min(wins).as("w"))
       .select(col("doc_id"),
         col("w.len").as("win_len"), col("w.start").as("win_start"))
@@ -512,7 +522,6 @@ object InvertedIndex {
     */
   def spellSuggest(spark: SparkSession, dir: String,
                    typos: Seq[String], topN: Int = 3): DataFrame = {
-    import org.apache.spark.sql.Column
     def delKeys(c: Column): Column = array_union(
       transform(sequence(lit(1), length(c)),
         i => concat(c.substr(lit(1), i - 1), c.substr(i + 1, lit(999)))),
@@ -526,10 +535,7 @@ object InvertedIndex {
     val cand = indexed.join(broadcast(qs), "key")
       .select(col("typo"), col("term"), col("df")).distinct()
       .where(levenshtein(col("typo"), col("term")) <= 1)
-    cand.withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("typo"))
-          .orderBy(col("df").desc, col("term"))))
-      .where(col("rank") <= topN)
+    rankedTopPer(cand, Seq("typo"), "df", "term", topN)
       .select(col("typo"), col("rank"), col("term"), col("df"))
   }
 
@@ -569,8 +575,9 @@ object InvertedIndex {
     * would dominate the number being measured).
     */
   def indexSizeBytes(spark: SparkSession, dir: String): (Long, Long) = {
-    val out = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-ir-index-${Integer.toHexString(dir.hashCode)}")
+    // under this JVM's artifact root (see Caches.artifactBase): a shared
+    // tmpdir path would be overwritten by a concurrent JVM mid-measurement
+    val out = graft.Caches.artifactBase(dir).resolve("ir_index_size")
     index(spark, dir).coalesce(1).write.mode("overwrite").parquet(out.toString)
     val s = java.nio.file.Files.walk(out)
     val indexBytes =
@@ -597,42 +604,26 @@ object InvertedIndex {
   def moreLikeThis(spark: SparkSession, dir: String,
                    queryDocs: Seq[Long] = Seq(3L, 57L), nTerms: Int = 3,
                    k1: Double = 1.2, b: Double = 0.75, topN: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val post = postingsRelation(spark, dir)
-    val stats = post.agg(count_distinct(col("doc_id")).as("n_docs"),
-      sum(col("tf")).as("sum_dl"))
+    val stats = corpusStats(post)
     val dfAll = post.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val qterms = post.filter(col("doc_id").isin(queryDocs: _*))
+    val tfidf = post.filter(col("doc_id").isin(queryDocs: _*))
       .join(broadcast(dfAll), "term")
       .crossJoin(broadcast(stats.select(col("n_docs"))))
       .withColumn("tfidf",
         expr("CAST(tf AS DOUBLE) * ln(CAST(n_docs AS DOUBLE) / CAST(df AS DOUBLE))"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("tfidf").desc, col("term"))))
-      .where(col("rn") <= nTerms)
+    val qterms = rankedTopPer(tfidf, Seq("doc_id"), "tfidf", "term", nTerms, "rn")
       .select(col("doc_id").as("qdoc"), col("term"))
     val matched = post.join(qterms, Seq("term"))
       .where(col("doc_id") =!= col("qdoc"))
-    val dl = post.join(matched.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-      .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    val avgdl = col("sum_dl").cast("double") / col("n_docs").cast("double")
-    val idf6 = round(
-      log((col("n_docs").cast("double") - col("df") + lit(0.5)) /
-        (col("df") + lit(0.5)) + lit(1.0)), 6)
-    val tfn = col("tf").cast("double") * lit(k1 + 1.0) /
-      (col("tf").cast("double") +
-        lit(k1) * (lit(1.0 - b) + lit(b) * (col("dl").cast("double") / avgdl)))
-    matched
+    val scored = matched
       .join(broadcast(dfAll), "term")
-      .join(dl, "doc_id")
+      .join(candidateDocLengths(post, matched.select(col("doc_id")).distinct()), "doc_id")
       .crossJoin(broadcast(stats))
-      .select(col("qdoc"), col("doc_id"),
-        round(idf6 * tfn, 6).cast("decimal(18,6)").as("contrib"))
+      .select(col("qdoc"), col("doc_id"), bm25Contrib(k1, b))
       .groupBy(col("qdoc"), col("doc_id"))
       .agg(sum(col("contrib")).as("score_d"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qdoc")).orderBy(col("score_d").desc, col("doc_id"))))
-      .where(col("rank") <= topN)
+    rankedTopPer(scored, Seq("qdoc"), "score_d", "doc_id", topN)
       .select(col("qdoc"), col("doc_id"),
         col("score_d").cast("double").as("score"), col("rank"))
   }
@@ -673,7 +664,7 @@ object InvertedIndex {
       round(lit(1.0) /
         min(when(col("is_rel") === 1, col("rank"))).cast("double"), 6).as("mrr"),
       sum(when(col("rank") <= k && col("is_rel") === 1,
-        expr("CAST(round(1.0 / log2(CAST(rank AS DOUBLE) + 1.0), 6) AS DECIMAL(18,6))")))
+        expr(dcgTermSql("rank"))))
         .as("dcg"))
     // Gate the ideal-rank sequence on n_relevant > 0: Spark's
     // sequence(1, 0) yields the DESCENDING [1, 0] (an idcg of 1 after the
@@ -682,12 +673,17 @@ object InvertedIndex {
     // engines instead of relying on dcg's NULL to cancel the mismatch.
     val idcg = nRel.where(col("n_relevant") > 0)
       .select(explode(expr(s"sequence(1, least(n_relevant, ${k}L))")).as("r"))
-      .agg(sum(expr("CAST(round(1.0 / log2(CAST(r AS DOUBLE) + 1.0), 6) AS DECIMAL(18,6))"))
-        .as("idcg"))
+      .agg(sum(expr(dcgTermSql("r"))).as("idcg"))
     nRel.crossJoin(broadcast(metrics)).crossJoin(broadcast(idcg))
       .select(col("n_relevant"), round(col("p_at_k"), 6).as("p_at_k"), col("mrr"),
         round(col("dcg").cast("double") / col("idcg").cast("double"), 6).as("ndcg_at_k"))
   }
+
+  /** The binary-relevance DCG term 1/log2(`rank` + 1), 6-dp decimal:
+    * one SQL text both engines parse (rankEval and its oracle).
+    */
+  private def dcgTermSql(rank: String): String =
+    s"CAST(round(1.0 / log2(CAST($rank AS DOUBLE) + 1.0), 6) AS DECIMAL(18,6))"
 
   // Fixed query over the fixture vocabulary: (spark AND table) OR merge.
   private val demoQuery = "spark table AND merge OR"
@@ -698,10 +694,61 @@ object InvertedIndex {
   private val tokSql =
     graft.text.Text.TokSql
 
+  private def inList(terms: Seq[String]): String = terms.map(t => s"'$t'").mkString(", ")
+
+  /** The `(term, doc_id, tf)` postings of a `(doc_id, text)` source: the
+    * SQL twin of [[termDocTf]], under every postings-fed oracle.
+    */
+  private def postSql(docs: String): String =
+    s"""SELECT term, doc_id, count(*) AS tf
+        FROM (SELECT doc_id, unnest($tokSql) AS term FROM $docs)
+        GROUP BY term, doc_id"""
+
+  /** Distinct `(doc_id, term)` pairs of `documents`: the boolean postings. */
+  private val docTermsSql =
+    s"SELECT DISTINCT doc_id, unnest($tokSql) AS term FROM documents"
+
+  /** One `(doc_id, pos, term)` row per token of a `(doc_id, text)`
+    * source, `pos` 1-based: the positional index before its per-(term,
+    * doc) collect ([[positionsRelation]]).
+    */
+  private def positionsSql(docs: String): String =
+    s"""SELECT doc_id, pos, toks[pos] AS term
+        FROM (SELECT doc_id, toks,
+                unnest(generate_series(1, len(toks))) AS pos
+              FROM (SELECT doc_id, $tokSql AS toks FROM $docs))"""
+
+  /** Replay of [[phraseOverPositions]] for [[demoPhrase]] over a document
+    * source: the phrase starts are the intersection of each word's
+    * positions shifted left by its offset.
+    */
+  private def phraseOracle(docs: String): String = {
+    val shifted = demoPhrase.zipWithIndex.map { case (w, i) =>
+      s"SELECT doc_id, pos - $i AS pos FROM tp WHERE term = '$w'"
+    }
+    s"""WITH tp AS (${positionsSql(docs)}),
+        starts AS (${shifted.mkString("\n          INTERSECT\n          ")})
+        SELECT doc_id, count(*) AS n_matches, min(pos) AS first_pos
+        FROM starts GROUP BY doc_id"""
+  }
+
+  /** One (term, doc) BM25 contribution at k1 = 1.2, b = 0.75 over `p.tf`,
+    * `q.df`, `d.dl` and the corpus stats `st` — the SQL twin of
+    * [[bm25Contrib]], summed per doc by the bm25 and mlt replays.
+    */
+  private val bm25ContribSql =
+    """CAST(round(
+         round(ln((CAST(st.n_docs AS DOUBLE) - q.df + 0.5) / (q.df + 0.5) + 1.0), 6)
+         * (CAST(p.tf AS DOUBLE) * 2.2 /
+            (CAST(p.tf AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 *
+              (CAST(d.dl AS DOUBLE) /
+               (CAST(st.sum_dl AS DOUBLE) / CAST(st.n_docs AS DOUBLE)))))),
+         6) AS DECIMAL(18,6))"""
+
   // shared by the in-session query and its persisted twin: the artifact
   // round-trip must be value-transparent, so one SQL serves both rows
   private lazy val booleanOracleSql =
-    s"""WITH dw AS (SELECT DISTINCT doc_id, unnest($tokSql) AS term FROM documents)
+    s"""WITH dw AS ($docTermsSql)
         SELECT doc_id FROM (
           (SELECT doc_id FROM dw WHERE term = 'spark'
            INTERSECT
@@ -710,54 +757,28 @@ object InvertedIndex {
           SELECT doc_id FROM dw WHERE term = 'merge')"""
 
   /** The bm25 ranking replay parameterized over its document source —
-    * `documents` for the fixture tier, the ×10 inflation subquery for
-    * ir_bm25_big (same ranking SQL either way, so the two tiers are
-    * gated by the identical oracle arithmetic).
+    * `documents` for the fixture tier and its persisted twin, the ×10
+    * inflation for ir_bm25_big (same ranking SQL either way, so the tiers
+    * are gated by the identical oracle arithmetic). Also the ranked leg
+    * of the rank-eval and hybrid RRF replays.
     */
-  private def bm25OracleSqlFrom(docs: String,
+  private[ir] def bm25OracleSql(docs: String = "documents",
                                 terms: Seq[String] = Seq("spark", "table", "merge")) =
-    s"""WITH post AS MATERIALIZED (
-          SELECT term, doc_id, count(*) AS tf
-          FROM (SELECT doc_id, unnest($tokSql) AS term FROM $docs)
-          GROUP BY term, doc_id),
+    s"""WITH post AS MATERIALIZED (${postSql(docs)}),
         dl AS MATERIALIZED (
           SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM post GROUP BY doc_id),
         st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
                       CAST(sum(dl) AS BIGINT) AS sum_dl FROM dl),
         qt AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM post
-               WHERE term IN (${terms.map(t => s"'$t'").mkString(", ")}) GROUP BY term)
-        SELECT doc_id, score, rank FROM (
-          SELECT doc_id, CAST(score_d AS DOUBLE) AS score,
-                 row_number() OVER (ORDER BY score_d DESC, doc_id) AS rank
-          FROM (
-            SELECT p.doc_id,
-                   sum(CAST(round(
-                     round(ln((CAST(st.n_docs AS DOUBLE) - q.df + 0.5) / (q.df + 0.5) + 1.0), 6)
-                     * (CAST(p.tf AS DOUBLE) * 2.2 /
-                        (CAST(p.tf AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 *
-                          (CAST(d.dl AS DOUBLE) /
-                           (CAST(st.sum_dl AS DOUBLE) / CAST(st.n_docs AS DOUBLE)))))),
-                     6) AS DECIMAL(18,6))) AS score_d
-            FROM post p JOIN qt q USING (term) JOIN dl d USING (doc_id) CROSS JOIN st
-            GROUP BY p.doc_id))
-        WHERE rank <= 20"""
-
-  private lazy val bm25OracleSql = bm25OracleSqlFrom("documents")
-
-  /** The ×10 inflated corpus as a pure-SQL source (mirrors
-    * [[bigPostings]]' perturbation token for token).
-    */
-  private val bigDocsSql =
-    """(SELECT doc_id * 10 + r AS doc_id,
-               CASE WHEN r = 0 THEN text
-                    ELSE text || ' zz' || repeat('x', CAST(r AS INT)) END AS text
-        FROM documents, unnest(generate_series(0, 9)) t(r))"""
+               WHERE term IN (${inList(terms)}) GROUP BY term),
+        sc AS (SELECT p.doc_id, sum($bm25ContribSql) AS score_d
+               FROM post p JOIN qt q USING (term) JOIN dl d USING (doc_id) CROSS JOIN st
+               GROUP BY p.doc_id)
+        ${OracleSql.rankedTop("sc", "ORDER BY score_d DESC, doc_id", 20,
+          "doc_id, CAST(score_d AS DOUBLE) AS score, rank")}"""
 
   private lazy val mltOracleSql =
-    s"""WITH post AS MATERIALIZED (
-          SELECT term, doc_id, count(*) AS tf
-          FROM (SELECT doc_id, unnest($tokSql) AS term FROM documents)
-          GROUP BY term, doc_id),
+    s"""WITH post AS MATERIALIZED (${postSql("documents")}),
         st AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
                       CAST(sum(tf) AS BIGINT) AS sum_dl FROM post),
         dfa AS MATERIALIZED (
@@ -775,27 +796,17 @@ object InvertedIndex {
               FROM post p JOIN qt q USING (term) WHERE p.doc_id <> q.qdoc),
         dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM post
                WHERE doc_id IN (SELECT DISTINCT doc_id FROM m) GROUP BY doc_id),
-        sc AS (SELECT m.qdoc, m.doc_id,
-                 sum(CAST(round(
-                   round(ln((CAST(st.n_docs AS DOUBLE) - d.df + 0.5) / (d.df + 0.5) + 1.0), 6)
-                   * (CAST(m.tf AS DOUBLE) * 2.2 /
-                      (CAST(m.tf AS DOUBLE) + 1.2 * (1.0 - 0.75 + 0.75 *
-                        (CAST(l.dl AS DOUBLE) /
-                         (CAST(st.sum_dl AS DOUBLE) / CAST(st.n_docs AS DOUBLE)))))),
-                   6) AS DECIMAL(18,6))) AS score_d
-               FROM m JOIN dfa d USING (term) JOIN dl l USING (doc_id) CROSS JOIN st
-               GROUP BY m.qdoc, m.doc_id)
-        SELECT qdoc, doc_id, CAST(score_d AS DOUBLE) AS score, rank
-        FROM (SELECT *, row_number() OVER
-                (PARTITION BY qdoc ORDER BY score_d DESC, doc_id) AS rank
-              FROM sc)
-        WHERE rank <= 10"""
+        sc AS (SELECT p.qdoc, p.doc_id, sum($bm25ContribSql) AS score_d
+               FROM m p JOIN dfa q USING (term) JOIN dl d USING (doc_id) CROSS JOIN st
+               GROUP BY p.qdoc, p.doc_id)
+        ${OracleSql.rankedTop("sc", "PARTITION BY qdoc ORDER BY score_d DESC, doc_id", 10,
+          "qdoc, doc_id, CAST(score_d AS DOUBLE) AS score, rank")}"""
 
   private def rankEvalOracleSql(terms: Seq[String] = Seq("spark", "table", "merge")) =
-    s"""WITH ranked AS (SELECT * FROM (${bm25OracleSqlFrom("documents", terms)}) t),
-        dw AS (SELECT DISTINCT doc_id, unnest($tokSql) AS term FROM documents),
+    s"""WITH ranked AS (SELECT * FROM (${bm25OracleSql("documents", terms)}) t),
+        dw AS ($docTermsSql),
         rel AS (SELECT doc_id FROM dw
-                WHERE term IN (${terms.map(t => s"'$t'").mkString(", ")})
+                WHERE term IN (${inList(terms)})
                 GROUP BY doc_id HAVING count(DISTINCT term) = ${terms.size}),
         nr AS (SELECT CAST(count(*) AS BIGINT) AS n_relevant FROM rel),
         j AS (SELECT r.doc_id, r.rank,
@@ -805,11 +816,9 @@ object InvertedIndex {
                FROM j WHERE rank <= 10),
         m AS (SELECT round(1.0 / CAST(min(rank) AS DOUBLE), 6) AS mrr
               FROM j WHERE is_rel = 1),
-        d AS (SELECT sum(CAST(round(1.0 / log2(CAST(rank AS DOUBLE) + 1.0), 6)
-                             AS DECIMAL(18,6))) AS dcg
+        d AS (SELECT sum(${dcgTermSql("rank")}) AS dcg
               FROM j WHERE rank <= 10 AND is_rel = 1),
-        i AS (SELECT sum(CAST(round(1.0 / log2(CAST(r AS DOUBLE) + 1.0), 6)
-                             AS DECIMAL(18,6))) AS idcg
+        i AS (SELECT sum(${dcgTermSql("r")}) AS idcg
               FROM nr, unnest(generate_series(1, least(n_relevant, 10))) t(r))
         SELECT n_relevant, round(p_at_k, 6) AS p_at_k, mrr,
                round(CAST(dcg AS DOUBLE) / CAST(idcg AS DOUBLE), 6) AS ndcg_at_k
@@ -818,40 +827,32 @@ object InvertedIndex {
   private lazy val statsOracleSql =
     s"""SELECT term, count(*) AS df, min(doc_id) AS first_doc,
                max(doc_id) AS last_doc, CAST(sum(tf) AS BIGINT) AS total_tf
-        FROM (SELECT term, doc_id, count(*) AS tf
-              FROM (SELECT doc_id, unnest($tokSql) AS term FROM documents)
-              GROUP BY term, doc_id)
+        FROM (${postSql("documents")})
         GROUP BY term"""
 
   private lazy val qlDirichletOracleSql =
-    s"""WITH post AS MATERIALIZED (
-          SELECT term, doc_id, count(*) AS tf
-          FROM (SELECT doc_id, unnest($tokSql) AS term FROM documents)
-          GROUP BY term, doc_id),
+    s"""WITH post AS MATERIALIZED (${postSql("documents")}),
         st AS (SELECT CAST(sum(tf) AS BIGINT) AS c_total FROM post),
         qt AS (SELECT term, CAST(sum(tf) AS BIGINT) AS ctf FROM post
                WHERE term IN ('spark', 'table', 'merge') GROUP BY term),
-        cand AS (SELECT DISTINCT doc_id FROM post
-                 WHERE term IN ('spark', 'table', 'merge')),
         dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM post
-               WHERE doc_id IN (SELECT doc_id FROM cand) GROUP BY doc_id),
+               WHERE doc_id IN (SELECT doc_id FROM post JOIN qt USING (term))
+               GROUP BY doc_id),
         sm AS (
           SELECT p.doc_id,
                  sum(CAST(round(ln(1.0 + CAST(p.tf AS DOUBLE) /
                        (10.0 * (CAST(q.ctf AS DOUBLE) / CAST(st.c_total AS DOUBLE)))),
                      6) AS DECIMAL(18,6))) AS s_match
           FROM post p JOIN qt q USING (term) CROSS JOIN st
-          GROUP BY p.doc_id)
-        SELECT doc_id, score, rank FROM (
-          SELECT doc_id, CAST(score_d AS DOUBLE) AS score,
-                 row_number() OVER (ORDER BY score_d DESC, doc_id) AS rank
-          FROM (
-            SELECT sm.doc_id,
-                   sm.s_match + CAST(round(
-                     3.0 * ln(10.0 / (CAST(d.dl AS DOUBLE) + 10.0)), 6)
-                     AS DECIMAL(18,6)) AS score_d
-            FROM sm JOIN dl d USING (doc_id)))
-        WHERE rank <= 20"""
+          GROUP BY p.doc_id),
+        sc AS (
+          SELECT sm.doc_id,
+                 sm.s_match + CAST(round(
+                   3.0 * ln(10.0 / (CAST(d.dl AS DOUBLE) + 10.0)), 6)
+                   AS DECIMAL(18,6)) AS score_d
+          FROM sm JOIN dl d USING (doc_id))
+        ${OracleSql.rankedTop("sc", "ORDER BY score_d DESC, doc_id", 20,
+          "doc_id, CAST(score_d AS DOUBLE) AS score, rank")}"""
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "ir_postings" -> ((s, d) => postingsRelation(s, d)),
@@ -901,11 +902,8 @@ object InvertedIndex {
       s"""SELECT CAST(count(DISTINCT term) AS BIGINT) AS n_terms,
                  CAST(count(*) AS BIGINT) AS n_postings,
                  TRUE AS compressed_in_envelope
-          FROM (SELECT DISTINCT doc_id, unnest($tokSql) AS term FROM documents)""",
-    "ir_postings" ->
-      s"""SELECT term, doc_id, count(*) AS tf
-          FROM (SELECT doc_id, unnest($tokSql) AS term FROM documents)
-          GROUP BY term, doc_id""",
+          FROM ($docTermsSql)""",
+    "ir_postings" -> postSql("documents"),
     "ir_index_stats" -> statsOracleSql,
     // shard-merge ≡ monolithic rebuild: byte-identical oracle
     "ir_index_merged" -> statsOracleSql,
@@ -913,60 +911,26 @@ object InvertedIndex {
     // persisted twins: storage must be value-transparent, so the SQL is
     // byte-identical to the in-session forms
     "ir_boolean_persisted" -> booleanOracleSql,
-    "ir_bm25" -> bm25OracleSql,
-    "ir_bm25_big" -> bm25OracleSqlFrom(bigDocsSql),
+    "ir_bm25" -> bm25OracleSql(),
+    "ir_bm25_big" -> bm25OracleSql(OracleSql.inflatedDocs(10)),
     "ir_mlt" -> mltOracleSql,
     "ir_rank_eval" -> rankEvalOracleSql(),
     "ir_rank_eval_zerorel" -> rankEvalOracleSql(Seq("spark", "table", "quorum")),
-    "ir_bm25_persisted" -> bm25OracleSql,
+    "ir_bm25_persisted" -> bm25OracleSql(),
     "ir_ql_dirichlet" -> qlDirichletOracleSql,
     "ir_retrieve" ->
-      s"""WITH dw AS (SELECT DISTINCT doc_id, unnest($tokSql) AS term FROM documents),
-          hits AS (SELECT doc_id FROM (
-            (SELECT doc_id FROM dw WHERE term = 'spark'
-             INTERSECT
-             SELECT doc_id FROM dw WHERE term = 'table')
-            UNION
-            SELECT doc_id FROM dw WHERE term = 'merge'))
+      s"""WITH hits AS ($booleanOracleSql)
           SELECT doc_id, text FROM hits JOIN documents USING (doc_id)""",
-    "ir_phrase" ->
-      s"""WITH tp AS (
-            SELECT doc_id, pos, toks[pos] AS term
-            FROM (SELECT doc_id, toks,
-                    unnest(generate_series(1, len(toks))) AS pos
-                  FROM (SELECT doc_id, $tokSql AS toks FROM documents))),
-          p0 AS (SELECT doc_id, pos FROM tp WHERE term = 'table'),
-          p1 AS (SELECT doc_id, pos - 1 AS pos FROM tp WHERE term = 'hash'),
-          starts AS (
-            SELECT doc_id, pos FROM p0
-            INTERSECT
-            SELECT doc_id, pos FROM p1)
-          SELECT doc_id, count(*) AS n_matches, min(pos) AS first_pos
-          FROM starts GROUP BY doc_id""",
-    "ir_phrase_big" ->
-      s"""WITH tp AS (
-            SELECT doc_id, pos, toks[pos] AS term
-            FROM (SELECT doc_id, toks,
-                    unnest(generate_series(1, len(toks))) AS pos
-                  FROM (SELECT doc_id, $tokSql AS toks FROM $bigDocsSql))),
-          p0 AS (SELECT doc_id, pos FROM tp WHERE term = 'table'),
-          p1 AS (SELECT doc_id, pos - 1 AS pos FROM tp WHERE term = 'hash'),
-          starts AS (
-            SELECT doc_id, pos FROM p0
-            INTERSECT
-            SELECT doc_id, pos FROM p1)
-          SELECT doc_id, count(*) AS n_matches, min(pos) AS first_pos
-          FROM starts GROUP BY doc_id""",
+    "ir_phrase" -> phraseOracle("documents"),
+    "ir_phrase_big" -> phraseOracle(OracleSql.inflatedDocs(10)),
     "ir_boolean_not" ->
-      s"""WITH dw AS (SELECT DISTINCT doc_id, unnest($tokSql) AS term FROM documents)
+      s"""WITH dw AS ($docTermsSql)
           SELECT doc_id FROM dw WHERE term = 'spark'
           EXCEPT
           SELECT doc_id FROM dw WHERE term = 'merge'""",
     "ir_prefix" ->
       s"""SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS total_tf
-          FROM (SELECT term, doc_id, count(*) AS tf
-                FROM (SELECT doc_id, unnest($tokSql) AS term FROM documents)
-                GROUP BY term, doc_id)
+          FROM (${postSql("documents")})
           WHERE term LIKE 'me%'
           GROUP BY term""",
     // deletion-index replay: same 1-deletion key space, same equi-join,
@@ -974,7 +938,7 @@ object InvertedIndex {
     "ir_spellfix" ->
       s"""WITH vocab AS MATERIALIZED (
             SELECT term, CAST(count(*) AS BIGINT) AS df
-            FROM (SELECT DISTINCT doc_id, unnest($tokSql) AS term FROM documents)
+            FROM ($docTermsSql)
             GROUP BY term),
           idx AS (
             SELECT term, df,
@@ -998,11 +962,7 @@ object InvertedIndex {
     // replay in (len, start) space: every position triple's window,
     // ranked shortest-then-earliest — identical to the struct array_min
     "ir_snippet" ->
-      s"""WITH tp AS (
-            SELECT doc_id, pos, toks[pos] AS term
-            FROM (SELECT doc_id, toks,
-                    unnest(generate_series(1, len(toks))) AS pos
-                  FROM (SELECT doc_id, $tokSql AS toks FROM documents))),
+      s"""WITH tp AS (${positionsSql("documents")}),
           pa AS (SELECT doc_id, pos FROM tp WHERE term = 'spark'),
           pb AS (SELECT doc_id, pos FROM tp WHERE term = 'table'),
           pc AS (SELECT doc_id, pos FROM tp WHERE term = 'merge'),
@@ -1021,11 +981,7 @@ object InvertedIndex {
     // replay in position space: every (a-pos, b-pos) pair within the
     // window, counted and min'd per doc — identical to the array lambda
     "ir_proximity" ->
-      s"""WITH tp AS (
-            SELECT doc_id, pos, toks[pos] AS term
-            FROM (SELECT doc_id, toks,
-                    unnest(generate_series(1, len(toks))) AS pos
-                  FROM (SELECT doc_id, $tokSql AS toks FROM documents))),
+      s"""WITH tp AS (${positionsSql("documents")}),
           pa AS (SELECT doc_id, pos FROM tp WHERE term = 'spark'),
           pb AS (SELECT doc_id, pos FROM tp WHERE term = 'merge'),
           pr AS (SELECT pa.doc_id, abs(pb.pos - pa.pos) AS dist

@@ -94,10 +94,7 @@ object Similarity {
     * ends in (the oracles' twin is [[topKSql]]).
     */
   private def topKBy(scored: DataFrame, score: String, k: Int): DataFrame =
-    scored
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col(score).desc, col("vec_id"))))
-      .where(col("rank") <= k)
+    graft.functions.GroupTopK.rankedTopPer(scored, Seq("query_id"), score, "vec_id", k)
 
   /** Maximal Marginal Relevance re-ranking (Carbonell & Goldstein 1998):
     * the diversity pass a retrieval stack runs AFTER top-k — greedily

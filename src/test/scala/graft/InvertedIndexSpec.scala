@@ -58,8 +58,12 @@ class InvertedIndexSpec extends AnyFunSuite {
   }
 
   test("malformed postfix query is rejected") {
-    intercept[IllegalArgumentException] {
-      InvertedIndex.booleanQuery(spark, sf, "spark table")
+    // too many operands, and operators short of their two operands
+    Seq("spark table", "spark AND", "NOT", "spark OR merge").foreach { q =>
+      val e = intercept[IllegalArgumentException] {
+        InvertedIndex.booleanQuery(spark, sf, q)
+      }
+      assert(e.getMessage.contains(q), s"message should name the query: ${e.getMessage}")
     }
   }
 
@@ -164,6 +168,15 @@ class IndexPersistenceSpec extends org.scalatest.funsuite.AnyFunSuite {
     info(s"index $indexBytes bytes vs raw text $rawTextBytes bytes " +
       f"(${indexBytes.toDouble / rawTextBytes * 100}%.1f%%)")
     assert(indexBytes > 0L, "index write produced no parquet bytes")
+    // the sized files sit under this JVM's artifact root, not a tmpdir
+    // path shared by every JVM on the host
+    val written = Caches.artifactBase(sf).resolve("ir_index_size")
+    val files = java.nio.file.Files.walk(written)
+    val onDisk =
+      try files.filter(_.toString.endsWith(".parquet"))
+        .mapToLong(java.nio.file.Files.size).sum()
+      finally files.close()
+    assert(onDisk == indexBytes, s"sized parquet files are not under $written")
     assert(indexBytes < rawTextBytes,
       s"parquet postings ($indexBytes B) should compress below the raw text ($rawTextBytes B)")
     // and the registered row agrees with itself

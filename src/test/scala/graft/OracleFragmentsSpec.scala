@@ -100,6 +100,28 @@ class OracleFragmentsSpec extends AnyFunSuite {
     assert(occurrences(spam.head, "substr(md5(w), 1, 8))::BIGINT %") == 1)
   }
 
+  test("BM25 idf is rendered once") {
+    // InvertedIndex.bm25ContribSql: ir_bm25 (and its persisted, ×10,
+    // rank-eval and hybrid RRF uses) and ir_mlt sum the one contribution
+    onceIn("InvertedIndex.scala", "+ 0.5) + 1.0), 6)")
+  }
+
+  test("the positional token table is rendered once, by InvertedIndex") {
+    // InvertedIndex.positionsSql: ir_phrase, ir_phrase_big, ir_snippet
+    // and ir_proximity read the one (doc_id, pos, term) table
+    onceIn("InvertedIndex.scala", "unnest(generate_series(1, len(toks))) AS pos")
+  }
+
+  test("the ×N corpus inflation lives only in OracleSql") {
+    // OracleSql.inflatedDocs: the IR and dedup big-tier replays
+    onlyInOracleSql("' zz' || repeat('x'")
+  }
+
+  test("the capped shingle self-join is rendered once, by Dedup") {
+    // Dedup.cappedJoinCtes: dedup_ngram_capped, _skew and _capped_big
+    onceIn("Dedup.scala", "JOIN exk b ON a.g = b.g")
+  }
+
   test("the shared definitions render the expected SQL") {
     assert(OracleSql.md5Bucket() ===
       "CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 100")
