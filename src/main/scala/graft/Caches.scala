@@ -247,17 +247,38 @@ object Caches {
     * predictable shared /tmp location, so two concurrent JVMs on the same
     * fixture (tests + bench in parallel CI) would mode=overwrite each
     * other's files while the other held a live scan over them, and on a
-    * multi-user host another user could pre-create the directory. Per-pid
-    * roots trade a little /tmp accumulation (bounded: one dir per JVM
-    * run, cleaned by tmp reapers) for full isolation; within one JVM the
-    * memo above still guarantees build-once semantics.
+    * multi-user host another user could pre-create the directory. A
+    * JVM shutdown hook deletes this JVM's own root (and nothing else), so
+    * per-pid roots do not pile up one per finished run; within one JVM
+    * the memo above still guarantees build-once semantics.
     */
-  private lazy val artifactRoot: java.nio.file.Path =
-    sys.env.get("GRAFT_ARTIFACT_DIR")
+  private lazy val artifactRoot: java.nio.file.Path = {
+    val root = sys.env.get("GRAFT_ARTIFACT_DIR")
       .map(java.nio.file.Paths.get(_))
       .getOrElse(java.nio.file.Paths.get(sys.props("java.io.tmpdir")))
       .resolve("graft-artifacts-" + sys.props.getOrElse("user.name", "u") +
         "-" + ProcessHandle.current().pid())
+    sys.addShutdownHook(deleteTree(root))
+    root
+  }
+
+  /** Best-effort recursive delete of `root` (the artifact root's
+    * shutdown hook): entries deepest first, so each directory is empty
+    * when its turn comes. A missing root, or an entry that vanishes or
+    * cannot be deleted meanwhile, is skipped, not thrown: the hook runs
+    * while the JVM exits.
+    */
+  private[graft] def deleteTree(root: java.nio.file.Path): Unit = {
+    import java.nio.file.{Files, Path}
+    try {
+      val walk = Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach { p =>
+        try Files.deleteIfExists(p) catch { case _: java.io.IOException => () }
+      } finally walk.close()
+    } catch {
+      case _: java.io.IOException | _: java.io.UncheckedIOException => ()
+    }
+  }
 
   private[graft] def artifactBase(dir: String): java.nio.file.Path =
     artifactRoot.resolve(

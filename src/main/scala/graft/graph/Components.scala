@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * chain costs d shuffles). The alternating star algorithm contracts
   * whole trees per round and converges in O(log n) rounds regardless of
   * diameter, with the same per-round join shape (equi-joins keyed on
-  * node id). One driver scalar per round (the convergence aggregate).
+  * node id). One driver scalar per round (the star-forest test).
   *
   * Round semantics over an edge set E kept oriented large→small
   * (src > dst throughout):
@@ -28,12 +28,20 @@ import org.apache.spark.sql.functions._
   *    emit (u, m) for u ∈ Γ(v) and (v, m) — smaller neighbors and the
   *    node itself collapse onto the local minimum.
   * Both preserve connectivity (paper, Lemmas 1–2); the unique fixpoint
-  * per component is the star rooted at its minimum id, so stop when a
-  * round leaves the edge set unchanged (the paper's own criterion).
-  * Set equality is certified in ONE aggregate:
-  * |E| + |E'| = 2·|E ∪ E'| ⟺ E = E' (both sides are distinct sets, and
-  * |E ∪ E'| ≥ max(|E|,|E'|) ≥ (|E|+|E'|)/2 with equality only when
-  * E = E').
+  * per component is the star rooted at its minimum id, and the paper
+  * stops when a round leaves the edge set unchanged. The loop tests the
+  * equivalent shape instead, on the round's NEW edge set alone: an
+  * oriented edge set is a star forest rooted at minima iff no node has
+  * two out-edges and no node has both an out-edge and an in-edge.
+  *  - A star forest maps to itself: large-star re-emits each leaf onto
+  *    its centre (the centre is its own minimum), small-star does the
+  *    same, so the test is true only at a fixpoint.
+  *  - The unique fixpoint is such a star forest, so the test is true at
+  *    every fixpoint.
+  * So the loop stops at the first round whose output already IS the
+  * fixpoint — one round sooner than comparing consecutive rounds, with
+  * the same final edge set and so the same labels. The test is ONE
+  * aggregate over the new set's endpoints (no union with the old set).
   *
   * ==Physical shape==
   *
@@ -96,53 +104,44 @@ object Components {
             least(col("x"), col("y")).as("dst")),
           Seq(col("src"), col("dst")))
           .distinct().persist())
-    // per-round fingerprint of the previous round's edge set: (count,
-    // bit_xor of the row hashes) — order-free and exact to compute, a
-    // NECESSARY condition for set equality. The loop's one per-round
-    // action is this probe over the NEW set alone (one plain two-phase
-    // aggregate over the just-persisted cache — no union with the old
-    // set, no count_distinct Expand), and the full set-equality
-    // certificate runs only when two consecutive fingerprints agree —
-    // ~once per run at the fixpoint, plus at most the odd 64-bit
-    // collision (which costs one extra certificate, never a wrong
-    // answer: equality is always CONFIRMED by the exact certificate,
-    // the fingerprint only decides when to bother running it).
+    // The loop's one per-round action is the star-forest test on the
+    // just-persisted new set (it also materializes that cache); see the
+    // object doc for why it stops exactly at the fixpoint.
     // Truncation / cache lifecycle / round cap live in [[IterativeLoop]];
     // the star fixpoint is reached in O(log n) rounds (paper Thm 1), so
     // 64 dominates any feasible input.
-    val e = IterativeLoop.converge[(Long, Long)](
+    val e = IterativeLoop.converge[Long](
       e0, maxRounds = 64, what = "components star loop",
-      initialProbe = Some(fingerprint(e0)),
       initOwned = !prepared)(
       (cur, _) => round(cur, pw))(
-      fingerprint)(
-      (prevFp, fp, cur, next) =>
-        prevFp.contains(fp) && {
-          // fingerprints stable: CONFIRM with the exact set-equality
-          // certificate per the identity above
-          val row = next.union(cur)
-            .agg(count(lit(1)).as("t"),
-              count_distinct(col("src"), col("dst")).as("d"))
-            .head()
-          row.getLong(0) == 2 * row.getLong(1)
-        })
+      nonStarNodes(_, pw))(
+      (_, nonStar, _, _) => nonStar == 0)
     val lab = e.groupBy(col("src").as(idCol)).agg(min(col("dst")).as("label"))
     nodes.select(col(idCol)).join(lab, Seq(idCol), "left_outer")
       .select(col(idCol), coalesce(col("label"), col(idCol)).as("label"))
   }
 
-  /** (row count, bit_xor of per-row xxhash64) over an oriented edge
-    * frame — the order-free exact-to-compute set fingerprint the
-    * convergence probe compares round over round. Also materializes the
-    * frame's cache when it is freshly persisted (it is the round's one
-    * action).
+  /** The nodes of an oriented edge frame that break the star-forest
+    * shape: out-degree > 1, or both an out-edge and an in-edge. One
+    * aggregate over the endpoints grouped by node, width pinned by `pw`;
+    * 0 iff the frame is a star forest rooted at minima, i.e. the star
+    * loop's fixpoint.
     */
-  private def fingerprint(e: DataFrame): (Long, Long) = {
-    val r = e.agg(count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(src, dst))"), lit(0L)).as("fp"))
-      .head()
-    (r.getLong(0), r.getLong(1))
+  private def nonStarNodes(e: DataFrame, pw: Pin): Long = {
+    val ends = e.select(col("src").as("n"), lit(1).as("out"), lit(0).as("in"))
+      .union(e.select(col("dst").as("n"), lit(0).as("out"), lit(1).as("in")))
+    pw(ends, Seq(col("n"))).groupBy(col("n"))
+      .agg(sum(col("out")).as("out"), sum(col("in")).as("in"))
+      .where(col("out") > 1 || (col("out") > 0 && col("in") > 0))
+      .count()
   }
+
+  /** The loop's stop test on its own — exposed for ComponentsSpec, which
+    * checks it against [[auditRound]] (true iff a round leaves `e`
+    * unchanged).
+    */
+  private[graft] def isStarForest(e: DataFrame): Boolean =
+    nonStarNodes(e, (df, _) => df) == 0
 
   /** One full large-star + small-star round, closed by the round's ONE
     * set-semantics exchange: pin the width on the edge key pair and

@@ -20,9 +20,9 @@ import org.apache.spark.sql.DataFrame
   *    df.rdd, schema)` paid an external-Row encode/decode per row per
   *    round).
   *  - '''One driver scalar per round.''' Convergence is decided by a
-  *    single bounded probe (a count, a fingerprint pair) whose
-  *    execution doubles as the round's cache materialization; no
-  *    unbounded data ever reaches the driver.
+  *    single bounded probe (a count) whose execution doubles as the
+  *    round's cache materialization; no unbounded data ever reaches
+  *    the driver.
   *  - '''Round budget.''' Every convergence loop carries a `require`d
   *    cap tied to its oracle's unroll/recursion depth: past the cap the
   *    gate would diverge from the engine, so exceeding it is a hard

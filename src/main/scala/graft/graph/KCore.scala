@@ -26,14 +26,14 @@ import graft.Tables
   * constant (measured: core 176/1001 nodes at sf0.01, 85/1001 at sf0.1;
   * peel depth ≤ 10 rounds across the sweep). k is derived distributively
   * from one (V, E) aggregate row and leaves the cluster as ONE bounded
-  * driver scalar (the Components convergence-certificate budget).
+  * driver scalar (the [[IterativeLoop]] one-scalar-per-round budget).
   *
   * Scale shape: each round is two semi-joins of the edge set against the
   * current survivor set (keyed on the endpoint ids — never a broadcast of
   * a corpus-sized survivor list), one endpoint-explode degree count, one
   * ≥ k filter. Survivor sets shrink monotonically, so the convergence
   * certificate is a count() equality per round (one scalar action, the
-  * Components protocol). Each round's plan is truncated to a LogicalRDD
+  * [[IterativeLoop]] rule). Each round's plan is truncated to a LogicalRDD
   * leaf (the iterative-loop rule: the survivor frame is referenced by two
   * semi-join sides per round, so analyzed plans would grow 2^rounds).
   *
@@ -88,7 +88,7 @@ object KCore {
     val k = math.ceil(factor * 2.0 * row.getLong(0) / row.getLong(1)).toLong
 
     // survivors ⊆ previous survivors each round, so count equality is a
-    // set-equality certificate (the Components monotone protocol);
+    // set-equality certificate;
     // truncation / cache lifecycle / the MaxRounds cap live in
     // [[IterativeLoop]]. State rounds ≥ 1 carry (id, core_deg); the
     // initial all-nodes state enters as core_deg 0 (replaced round 1).

@@ -561,7 +561,7 @@ object PageRank {
     * one distinct, one anti-join against the labeled set; every shuffle
     * keys on node id and the working set only shrinks after the wave
     * peaks. One bounded driver scalar per round (frontier count — the
-    * Components convergence-certificate budget). At 100 TB this is the
+    * [[IterativeLoop]] budget). At 100 TB this is the
     * standard iterative-BFS plan: no per-round driver data, labels
     * accumulate as a union of ≤[[MaxHops]] persisted leaves.
     *

@@ -104,7 +104,7 @@ object Similarity {
     * (the ANN tiers are its scale path), its [[MmrCandidates]]² pairwise
     * cosines are one tiny self-join, and each greedy step is an argmax
     * over ≤ pool-size rows — the per-step 1-row pick is a bounded driver
-    * scalar (the components convergence-certificate budget), never a
+    * scalar (the iterative-loop one-scalar-per-round budget), never a
     * corpus-sized collect. All cosines on the 6-dp grid; the MMR score
     * is one fixed double expression; ties break on vec_id — the oracle
     * unrolls the k greedy steps verbatim.

@@ -222,4 +222,14 @@ class CachesSpec extends AnyFunSuite {
     assert(leaked.isEmpty, s"${leaked.size} frames leaked past releaseAll")
     assert(Caches.snapshot._2 == 0, "memo not emptied")
   }
+
+  test("deleteTree removes a root and all below it, and skips a missing root") {
+    val root = java.nio.file.Files.createTempDirectory("graft-artifacts-spec-")
+    java.nio.file.Files.createDirectories(root.resolve("a/b"))
+    java.nio.file.Files.write(root.resolve("a/b/part-0.parquet"), Array[Byte](1, 2))
+    java.nio.file.Files.write(root.resolve("top.txt"), Array[Byte](3))
+    Caches.deleteTree(root)
+    assert(!java.nio.file.Files.exists(root))
+    Caches.deleteTree(root)
+  }
 }

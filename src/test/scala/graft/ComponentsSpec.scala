@@ -1,5 +1,7 @@
 package graft
 
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import graft.graph.Components
 
@@ -107,5 +109,62 @@ class ComponentsSpec extends AnyFunSuite {
     assert(frames.last.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
       "final round frame should stay cached until releaseAll")
     Caches.releaseAll()
+  }
+
+  test("the star-forest stop test holds exactly when a round leaves the edge set unchanged") {
+    // the loop's one per-round probe must be true on an oriented
+    // (src > dst), distinct edge set iff that set is the star loop's
+    // fixpoint; checked against one real round over the same set
+    import spark.implicits._
+    def oriented(pairs: Seq[(Long, Long)]): Seq[(Long, Long)] =
+      pairs.filter { case (a, b) => a != b }
+        .map { case (a, b) => (math.max(a, b), math.min(a, b)) }.distinct
+    val complete = (n: Int) => for (a <- 1L to n.toLong; b <- 1L until a) yield (a, b)
+    val shapes = Seq(
+      Seq.empty[(Long, Long)],
+      Seq((2L, 1L), (3L, 1L), (4L, 1L)),            // one star
+      Seq((5L, 1L), (6L, 1L), (9L, 7L)),            // two stars
+      Seq((3L, 1L), (3L, 2L)),                      // "V": two roots share a leaf
+      Seq((4L, 2L), (4L, 3L), (5L, 1L)),            // V beside a star
+      Seq((2L, 1L), (3L, 2L), (4L, 3L)),            // path
+      Seq((3L, 2L), (2L, 1L)),                      // path through the root's leaf
+      complete(3), complete(5))
+    // random oriented sets over few nodes (dense enough to hit both
+    // answers), plus random star forests rooted at their minima
+    val randomSet = for {
+      n <- Gen.chooseNum(2, 7)
+      m <- Gen.chooseNum(0, 12)
+      ps <- Gen.listOfN(m, Gen.zip(Gen.chooseNum(1L, n.toLong), Gen.chooseNum(1L, n.toLong)))
+    } yield oriented(ps)
+    val randomForest = for {
+      roots <- Gen.chooseNum(1, 3)
+      leaves <- Gen.listOf(Gen.chooseNum(0, roots - 1)).map(_.take(8))
+    } yield leaves.zipWithIndex.map { case (r, i) => (100L + i, r.toLong + 1) }
+    val sampled = (1 to 24).map(i =>
+      (if (i % 3 == 0) randomForest else randomSet).pureApply(Gen.Parameters.default, Seed(i.toLong)))
+    var stars, nonStars = 0
+    for (edges <- shapes ++ sampled) {
+      val e = edges.toDF("src", "dst")
+      val fixpoint = Components.auditRound(e).as[(Long, Long)].collect().toSet == edges.toSet
+      assert(Components.isStarForest(e) == fixpoint, s"edges=$edges")
+      if (fixpoint) stars += 1 else nonStars += 1
+    }
+    assert(stars >= 5 && nonStars >= 5, s"both answers exercised: $stars / $nonStars")
+  }
+
+  test("a prepared complete graph stops after the one round that reaches its star") {
+    // K6 becomes the star rooted at 1 in round 1; the star-forest test on
+    // that round's output stops the loop there, with no confirming round
+    import spark.implicits._
+    Caches.releaseAll()
+    val k6 = (for (a <- 1L to 6L; b <- 1L until a) yield (a, b)).toDF("src", "dst").persist()
+    try {
+      val got = Components.labels((1L to 6L).toDF("id"), k6, prepared = true).collect()
+      assert(got.map(r => r.getLong(0) -> r.getLong(1)).toMap == (1L to 6L).map(_ -> 1L).toMap)
+      assert(Caches.snapshot._1.size == 1, "one round frame: the loop ran exactly one round")
+    } finally {
+      k6.unpersist()
+      Caches.releaseAll()
+    }
   }
 }
