@@ -51,17 +51,37 @@ object Pii {
 
   private def idStr: Column = col("doc_id").cast("string")
 
+  /** The (email, IP) patterns of a tier; the phone pattern is shared. */
+  private def patterns(strict: Boolean): (String, String) =
+    if (strict) (EmailReStrict, IpReStrict) else (EmailRe, IpRe)
+
   /** The injected demonstration corpus: (doc_id, text) with
     * deterministic PII spans appended for doc_ids divisible by 5 (email),
     * 7 (phone), 11 (IP) — overlaps give multi-kind documents, everything
     * else stays clean. Pure per-row projection; replayed verbatim by
     * [[injectSql]].
     */
-  def injected(spark: SparkSession, dir: String): DataFrame =
+  def injected(spark: SparkSession, dir: String): DataFrame = planted(spark, dir, strict = false)
+
+  /** The planted email's user prefix and domain: lowercase for the
+    * fixture tier, mixed case for the strict tier.
+    */
+  private def emailParts(strict: Boolean): (String, String) =
+    if (strict) (" contact User", "@Example.COM") else (" contact user", "@example.com")
+
+  /** The one planting template behind [[injected]] and
+    * [[injectedStrict]]; the strict tier differs only in the email's
+    * casing and the decoy after the IP.
+    */
+  private def planted(spark: SparkSession, dir: String, strict: Boolean): DataFrame = {
+    val (user, domain) = emailParts(strict)
+    val ipTail =
+      if (strict) Seq(lit(".9 decoy 999.999.999."), pmod(col("doc_id"), lit(1000)).cast("string"))
+      else Seq(lit(".9"))
     Tables.documents(spark, dir).select(col("doc_id"), concat(
       col("text"),
       when(pmod(col("doc_id"), lit(5)) === 0,
-        concat(lit(" contact user"), idStr, lit("@example.com")))
+        concat(lit(user), idStr, lit(domain)))
         .otherwise(lit("")),
       when(pmod(col("doc_id"), lit(7)) === 0,
         concat(lit(" call 555-"),
@@ -70,9 +90,10 @@ object Pii {
           lpad(pmod(col("doc_id") * 13, lit(10000)).cast("string"), 4, "0")))
         .otherwise(lit("")),
       when(pmod(col("doc_id"), lit(11)) === 0,
-        concat(lit(" from 10."), pmod(col("doc_id"), lit(250)).cast("string"),
-          lit("."), pmod(col("doc_id"), lit(100)).cast("string"), lit(".9")))
+        concat(Seq(lit(" from 10."), pmod(col("doc_id"), lit(250)).cast("string"),
+          lit("."), pmod(col("doc_id"), lit(100)).cast("string")) ++ ipTail: _*))
         .otherwise(lit(""))).as("text"))
+  }
 
   /** Per-document PII scan: match counts per kind plus the has_pii flag a
     * filter step keys on. Narrow single-pass regex scan.
@@ -89,23 +110,7 @@ object Pii {
     * and the mixed-case email being counted is what hash-gates `(?i)`.
     */
   def injectedStrict(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir).select(col("doc_id"), concat(
-      col("text"),
-      when(pmod(col("doc_id"), lit(5)) === 0,
-        concat(lit(" contact User"), idStr, lit("@Example.COM")))
-        .otherwise(lit("")),
-      when(pmod(col("doc_id"), lit(7)) === 0,
-        concat(lit(" call 555-"),
-          lpad(pmod(col("doc_id") * 7, lit(1000)).cast("string"), 3, "0"),
-          lit("-"),
-          lpad(pmod(col("doc_id") * 13, lit(10000)).cast("string"), 4, "0")))
-        .otherwise(lit("")),
-      when(pmod(col("doc_id"), lit(11)) === 0,
-        concat(lit(" from 10."), pmod(col("doc_id"), lit(250)).cast("string"),
-          lit("."), pmod(col("doc_id"), lit(100)).cast("string"),
-          lit(".9 decoy 999.999.999."),
-          pmod(col("doc_id"), lit(1000)).cast("string")))
-        .otherwise(lit(""))).as("text"))
+    planted(spark, dir, strict = true)
 
   /** Strict-tier scan, hash-gated: production patterns over the
     * mixed-case/decoy corpus.
@@ -127,7 +132,7 @@ object Pii {
     * way: a single-pass narrow regex projection.
     */
   def scanOn(docs: DataFrame, strict: Boolean = false): DataFrame = {
-    val (em, ip) = if (strict) (EmailReStrict, IpReStrict) else (EmailRe, IpRe)
+    val (em, ip) = patterns(strict)
     docs.select(col("doc_id"),
       regexp_count(col("text"), lit(em)).cast("long").as("n_emails"),
       regexp_count(col("text"), lit(PhoneRe)).cast("long").as("n_phones"),
@@ -148,7 +153,7 @@ object Pii {
     redactOn(injected(spark, dir))
 
   def redactOn(docs: DataFrame, strict: Boolean = false): DataFrame = {
-    val (em, ip) = if (strict) (EmailReStrict, IpReStrict) else (EmailRe, IpRe)
+    val (em, ip) = patterns(strict)
     val red = regexp_replace(
       regexp_replace(
         regexp_replace(col("text"), lit(em), lit("<EMAIL>")),
@@ -231,13 +236,17 @@ object Pii {
   // ---------------------------------------------------------------- oracle
 
   /** The injection replayed in DuckDB — identical arithmetic, identical
-    * concatenation order.
+    * concatenation order, the strict tier's email casing and IP decoy
+    * included.
     */
-  private val injectSql =
-    """SELECT doc_id,
+  private def injectSql(strict: Boolean): String = {
+    val (user, domain) = emailParts(strict)
+    val ipTail =
+      if (strict) "'.9 decoy 999.999.999.' || CAST(doc_id % 1000 AS VARCHAR)" else "'.9'"
+    s"""SELECT doc_id,
          text ||
          CASE WHEN doc_id % 5 = 0
-              THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com'
+              THEN '$user' || CAST(doc_id AS VARCHAR) || '$domain'
               ELSE '' END ||
          CASE WHEN doc_id % 7 = 0
               THEN ' call 555-' ||
@@ -247,37 +256,29 @@ object Pii {
               ELSE '' END ||
          CASE WHEN doc_id % 11 = 0
               THEN ' from 10.' || CAST(doc_id % 250 AS VARCHAR) ||
-                   '.' || CAST(doc_id % 100 AS VARCHAR) || '.9'
+                   '.' || CAST(doc_id % 100 AS VARCHAR) || $ipTail
               ELSE '' END AS text
        FROM documents"""
+  }
 
-  /** The strict injection replayed in DuckDB. */
-  private val injectStrictSql =
-    """SELECT doc_id,
-         text ||
-         CASE WHEN doc_id % 5 = 0
-              THEN ' contact User' || CAST(doc_id AS VARCHAR) || '@Example.COM'
-              ELSE '' END ||
-         CASE WHEN doc_id % 7 = 0
-              THEN ' call 555-' ||
-                   lpad(CAST((doc_id * 7) % 1000 AS VARCHAR), 3, '0') ||
-                   '-' ||
-                   lpad(CAST((doc_id * 13) % 10000 AS VARCHAR), 4, '0')
-              ELSE '' END ||
-         CASE WHEN doc_id % 11 = 0
-              THEN ' from 10.' || CAST(doc_id % 250 AS VARCHAR) ||
-                   '.' || CAST(doc_id % 100 AS VARCHAR) ||
-                   '.9 decoy 999.999.999.' || CAST(doc_id % 1000 AS VARCHAR)
-              ELSE '' END AS text
-       FROM documents"""
-
-  // the same pattern strings serve both engines: DuckDB single-quoted
-  // literals pass backslashes through verbatim, and the patterns stay in
-  // the Java-regex ∩ RE2 subset (inline (?i) and non-capturing groups
-  // included)
-  private val emailSql = EmailRe
-  private val phoneSql = PhoneRe
-  private val ipSql    = IpRe
+  /** [[scanOn]] over the tier's injected corpus, replayed in DuckDB.
+    * The same pattern strings serve both engines: DuckDB single-quoted
+    * literals pass backslashes through verbatim, and the patterns stay
+    * in the Java-regex ∩ RE2 subset (inline (?i) and non-capturing
+    * groups included).
+    */
+  private def scanSql(strict: Boolean): String = {
+    val (em, ip) = patterns(strict)
+    s"""WITH inj AS (${injectSql(strict)})
+        SELECT doc_id,
+               CAST(len(regexp_extract_all(text, '$em')) AS BIGINT) AS n_emails,
+               CAST(len(regexp_extract_all(text, '$PhoneRe')) AS BIGINT) AS n_phones,
+               CAST(len(regexp_extract_all(text, '$ip')) AS BIGINT) AS n_ips,
+               len(regexp_extract_all(text, '$em')) +
+               len(regexp_extract_all(text, '$PhoneRe')) +
+               len(regexp_extract_all(text, '$ip')) > 0 AS has_pii
+        FROM inj"""
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "pii_scan"        -> ((s, d) => scan(s, d)),
@@ -287,26 +288,8 @@ object Pii {
   )
 
   val oracles: Map[String, String] = Map(
-    "pii_scan" ->
-      s"""WITH inj AS ($injectSql)
-          SELECT doc_id,
-                 CAST(len(regexp_extract_all(text, '$emailSql')) AS BIGINT) AS n_emails,
-                 CAST(len(regexp_extract_all(text, '$phoneSql')) AS BIGINT) AS n_phones,
-                 CAST(len(regexp_extract_all(text, '$ipSql')) AS BIGINT) AS n_ips,
-                 len(regexp_extract_all(text, '$emailSql')) +
-                 len(regexp_extract_all(text, '$phoneSql')) +
-                 len(regexp_extract_all(text, '$ipSql')) > 0 AS has_pii
-          FROM inj""",
-    "pii_scan_strict" ->
-      s"""WITH inj AS ($injectStrictSql)
-          SELECT doc_id,
-                 CAST(len(regexp_extract_all(text, '$EmailReStrict')) AS BIGINT) AS n_emails,
-                 CAST(len(regexp_extract_all(text, '$phoneSql')) AS BIGINT) AS n_phones,
-                 CAST(len(regexp_extract_all(text, '$IpReStrict')) AS BIGINT) AS n_ips,
-                 len(regexp_extract_all(text, '$EmailReStrict')) +
-                 len(regexp_extract_all(text, '$phoneSql')) +
-                 len(regexp_extract_all(text, '$IpReStrict')) > 0 AS has_pii
-          FROM inj""",
+    "pii_scan" -> scanSql(strict = false),
+    "pii_scan_strict" -> scanSql(strict = true),
     "pii_luhn" ->
       s"""WITH inj AS (SELECT doc_id, ${injectCardExpr(spark = false)} AS text
                        FROM documents),
@@ -319,15 +302,15 @@ object Pii {
                   ${luhnSum("cand", 16, spark = false)} % 10 = 0) AS luhn_valid
           FROM c""",
     "pii_redact" ->
-      s"""WITH inj AS ($injectSql)
+      s"""WITH inj AS (${injectSql(strict = false)})
           SELECT doc_id,
                  md5(regexp_replace(regexp_replace(regexp_replace(text,
-                   '$emailSql', '<EMAIL>', 'g'),
-                   '$phoneSql', '<PHONE>', 'g'),
-                   '$ipSql', '<IP>', 'g')) AS fp,
-                 CAST(len(regexp_extract_all(text, '$emailSql')) +
-                      len(regexp_extract_all(text, '$phoneSql')) +
-                      len(regexp_extract_all(text, '$ipSql')) AS BIGINT) AS n_redacted
+                   '$EmailRe', '<EMAIL>', 'g'),
+                   '$PhoneRe', '<PHONE>', 'g'),
+                   '$IpRe', '<IP>', 'g')) AS fp,
+                 CAST(len(regexp_extract_all(text, '$EmailRe')) +
+                      len(regexp_extract_all(text, '$PhoneRe')) +
+                      len(regexp_extract_all(text, '$IpRe')) AS BIGINT) AS n_redacted
           FROM inj""",
   )
 }

@@ -226,6 +226,14 @@ object TextAnalysis {
           .otherwise("tail").as("bucket"))
   }
 
+  /** The Kneser-Ney marginals of a bigram type table (w1, w2, cnt):
+    * per w1 its count c(w1·) and distinct continuations N1+(w1·), per w2
+    * its distinct predecessors N1+(·w2).
+    */
+  private def knMarginals(types: DataFrame): (DataFrame, DataFrame) =
+    (types.groupBy(col("w1")).agg(sum(col("cnt")).as("cw1"), count(lit(1)).as("nf")),
+      types.groupBy(col("w2")).agg(count(lit(1)).as("np")))
+
   /** Interpolated Kneser-Ney smoothed bigram LM estimation — the
     * distributed n-gram LM-training job (Brants et al. 2007 "Large
     * Language Models in Machine Translation" is the canonical MapReduce
@@ -254,17 +262,9 @@ object TextAnalysis {
     */
   def kneserNey(spark: SparkSession, dir: String): DataFrame = {
     val types = graft.Caches.memoized(spark, dir, "ta:kn_bigram_types")(
-      Text.tokensBase(spark, dir).withColumnRenamed("tokens", "toks")
-        .select(explode(expr(
-          """CASE WHEN size(toks) < 2 THEN array()
-             ELSE transform(sequence(0, size(toks)-2),
-                            i -> struct(toks[i] AS w1, toks[i+1] AS w2)) END"""))
-          .as("bg"))
-        .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+      Text.bigrams(Text.tokensBase(spark, dir).withColumnRenamed("tokens", "toks"))
         .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cnt")))
-    val byW1 = types.groupBy(col("w1"))
-      .agg(sum(col("cnt")).as("cw1"), count(lit(1)).as("nf"))
-    val byW2 = types.groupBy(col("w2")).agg(count(lit(1)).as("np"))
+    val (byW1, byW2) = knMarginals(types)
     val nb = types.agg(count(lit(1)).as("nb"))
     types
       .join(broadcast(byW1), "w1")
@@ -351,13 +351,7 @@ object TextAnalysis {
     // model from its ledgered build and pays only the scoring join
     val lm = graft.Caches.memoized(spark, dir, "ta:kn_lm")(
       kneserNey(spark, dir).select(col("w1"), col("w2"), col("p_kn")))
-    val bg = withToks(spark, dir)
-      .select(col("doc_id"), explode(expr(
-        """CASE WHEN size(toks) < 2 THEN array()
-           ELSE transform(sequence(0, size(toks)-2),
-                          i -> struct(toks[i] AS w1, toks[i+1] AS w2)) END"""))
-        .as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+    val bg = Text.bigrams(withToks(spark, dir), "doc_id")
     bg.join(lm, Seq("w1", "w2"))
       // micro-unit integer average (see perplexity's note): the double
       // quotient round split between engines at sf0.1 — one doc's mean
@@ -420,20 +414,11 @@ object TextAnalysis {
           concat(col("text"), lit(" kn qz"), col("doc_id").cast("string"),
             lit("qz kn")))
           .otherwise(col("text")).as("text"))
-    val bgAll = injected
-      .withColumn("toks", Text.tokenize(col("text")))
-      .select(col("doc_id"), explode(expr(
-        """CASE WHEN size(toks) < 2 THEN array()
-           ELSE transform(sequence(0, size(toks)-2),
-                          i -> struct(toks[i] AS w1, toks[i+1] AS w2)) END"""))
-        .as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+    val bgAll = Text.bigrams(injected.withColumn("toks", Text.tokenize(col("text"))), "doc_id")
     val types = graft.Caches.memoized(spark, dir, "ta:kn_types_train")(
       bgAll.where(pmod(col("doc_id"), lit(KnHoldoutMod)) =!= 0)
         .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cnt")))
-    val byW1 = types.groupBy(col("w1"))
-      .agg(sum(col("cnt")).as("cw1"), count(lit(1)).as("nf"))
-    val byW2 = types.groupBy(col("w2")).agg(count(lit(1)).as("np"))
+    val (byW1, byW2) = knMarginals(types)
     val consts = types.agg(count(lit(1)).as("nb"))
       .crossJoin(byW2.agg(count(lit(1)).as("vc")))
     val ho = bgAll.where(pmod(col("doc_id"), lit(KnHoldoutMod)) === 0)
@@ -706,8 +691,7 @@ object TextAnalysis {
 
   private lazy val knOracleSql =
     s"""WITH toks AS (SELECT $tokSql AS w FROM documents),
-        bg AS (SELECT w[i] AS w1, w[i+1] AS w2
-               FROM toks, unnest(generate_series(1, len(w)-1)) AS t(i)),
+        bg AS (${Text.bigramsSql("toks")}),
         types AS (SELECT w1, w2, count(*) AS cnt FROM bg GROUP BY w1, w2),
         m1 AS (SELECT w1, CAST(sum(cnt) AS BIGINT) AS cw1, count(*) AS nf
                FROM types GROUP BY w1),
@@ -800,8 +784,7 @@ object TextAnalysis {
     "ta_kn_score" ->
       s"""WITH lm AS ($knOracleSql),
           toksd AS (SELECT doc_id, $tokSql AS w FROM documents),
-          bgd AS (SELECT doc_id, w[i] AS w1, w[i+1] AS w2
-                  FROM toksd, unnest(generate_series(1, len(w)-1)) AS t(i))
+          bgd AS (${Text.bigramsSql("toksd", "doc_id")})
           SELECT doc_id, count(*) AS n_bigrams,
                  CAST((sum(CAST(CAST(round(-ln(p_kn), 6) AS DECIMAL(18,6))
                                 * 1000000 AS BIGINT)) * 2 + count(*))
@@ -818,8 +801,7 @@ object TextAnalysis {
                       ELSE text END AS text
                FROM documents),
           tk AS (SELECT doc_id, $tokSql AS w FROM inj),
-          bgall AS (SELECT doc_id, w[i] AS w1, w[i+1] AS w2
-                    FROM tk, unnest(generate_series(1, len(w)-1)) AS t(i)),
+          bgall AS (${Text.bigramsSql("tk", "doc_id")}),
           types AS (SELECT w1, w2, count(*) AS cnt FROM bgall
                     WHERE doc_id % $KnHoldoutMod <> 0 GROUP BY w1, w2),
           m1 AS (SELECT w1, CAST(sum(cnt) AS BIGINT) AS cw1, count(*) AS nf

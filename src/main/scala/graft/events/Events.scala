@@ -1,6 +1,6 @@
 package graft.events
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -23,8 +23,16 @@ object Events {
     * timestamp types differ in precision, strings don't).
     */
   def hourlyRollup(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+    rollup(Tables.events(spark, dir), window(col("ts"), "1 hour"))
+
+  /** The per-(window, type) rollup behind [[hourlyRollup]] and the
+    * streaming tumbling and sliding rollups: event count and DECIMAL
+    * value sum per window `w` (a `window(...)` column), keyed by the
+    * window start. A streaming caller adds its watermark to `events`.
+    */
+  def rollup(events: DataFrame, w: Column): DataFrame =
+    events
+      .groupBy(w.as("w"), col("event_type"))
       .agg(
         count(lit(1)).as("n"),
         round(sum(col("value").cast("decimal(12,2)")), 2).cast("double").as("sum_value"))

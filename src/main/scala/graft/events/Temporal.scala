@@ -1,6 +1,6 @@
 package graft.events
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -193,16 +193,27 @@ object Temporal {
     * ordering state beyond a min per user), the standard distributed
     * funnel shape.
     */
-  def funnel(spark: SparkSession, dir: String): DataFrame = {
+  def funnel(spark: SparkSession, dir: String): DataFrame = funnelWithin(spark, dir, None)
+
+  /** The one chained-grouped-mins funnel behind [[funnel]] and
+    * [[funnelWindowed]]: a stage counts at or after the previous stage's
+    * earliest event and, given a `bound`, at most `bound` ms after it.
+    * [[funnelSql]] is its DuckDB twin.
+    */
+  private def funnelWithin(spark: SparkSession, dir: String, bound: Option[Long]): DataFrame = {
+    def after(prev: String): Column = {
+      val from = col("t_ms") >= col(prev)
+      bound.fold(from)(w => from && col("t_ms") <= col(prev) + w)
+    }
     val ev = Tables.events(spark, dir)
       .select(col("user_id"), col("event_type"), ms("ts").as("t_ms"))
     val s = ev.filter(col("event_type") === "signup")
       .groupBy(col("user_id")).agg(min(col("t_ms")).as("s_ms"))
     val c = ev.filter(col("event_type") === "click")
-      .join(s, "user_id").where(col("t_ms") >= col("s_ms"))
+      .join(s, "user_id").where(after("s_ms"))
       .groupBy(col("user_id")).agg(min(col("t_ms")).as("c_ms"))
     val p = ev.filter(col("event_type") === "purchase")
-      .join(c, "user_id").where(col("t_ms") >= col("c_ms"))
+      .join(c, "user_id").where(after("c_ms"))
       .groupBy(col("user_id")).agg(min(col("t_ms")).as("p_ms"))
     s.join(c, Seq("user_id"), "left").join(p, Seq("user_id"), "left")
       .select(col("user_id"), col("s_ms"), col("c_ms"), col("p_ms"),
@@ -782,26 +793,8 @@ object Temporal {
     */
   val FunnelWindowMs: Long = 7L * 24 * 3600 * 1000
 
-  def funnelWindowed(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), ms("ts").as("t_ms"))
-    val s = ev.filter(col("event_type") === "signup")
-      .groupBy(col("user_id")).agg(min(col("t_ms")).as("s_ms"))
-    val c = ev.filter(col("event_type") === "click")
-      .join(s, "user_id")
-      .where(col("t_ms") >= col("s_ms") &&
-        col("t_ms") <= col("s_ms") + FunnelWindowMs)
-      .groupBy(col("user_id")).agg(min(col("t_ms")).as("c_ms"))
-    val p = ev.filter(col("event_type") === "purchase")
-      .join(c, "user_id")
-      .where(col("t_ms") >= col("c_ms") &&
-        col("t_ms") <= col("c_ms") + FunnelWindowMs)
-      .groupBy(col("user_id")).agg(min(col("t_ms")).as("p_ms"))
-    s.join(c, Seq("user_id"), "left").join(p, Seq("user_id"), "left")
-      .select(col("user_id"), col("s_ms"), col("c_ms"), col("p_ms"),
-        (lit(1L) + when(col("c_ms").isNotNull, 1L).otherwise(0L)
-          + when(col("p_ms").isNotNull, 1L).otherwise(0L)).as("stage"))
-  }
+  def funnelWindowed(spark: SparkSession, dir: String): DataFrame =
+    funnelWithin(spark, dir, Some(FunnelWindowMs))
 
   /** Set-intersection cardinality from HLL sketches by inclusion-
     * exclusion: |A∩B| ≈ est(A) + est(B) − est(A∪B) — the audience-overlap
@@ -923,6 +916,27 @@ object Temporal {
   // like Spark's unix_millis on the micros-rebuilt column (verified: the
   // fixture has no sub-microsecond components and no duplicate
   // (user_id, ms) pairs, so ordering is identical too).
+  /** DuckDB twin of [[funnelWithin]]. */
+  private def funnelSql(bound: Option[Long]): String = {
+    def within(prev: String) = bound.fold("")(w => s" AND t_ms <= $prev + $w")
+    s"""WITH e AS (SELECT user_id, event_type,
+             epoch_ms(CAST(ts AS TIMESTAMP)) AS t_ms FROM events),
+       s AS (SELECT user_id, min(t_ms) AS s_ms FROM e
+             WHERE event_type = 'signup' GROUP BY user_id),
+       c AS (SELECT e.user_id, min(t_ms) AS c_ms
+             FROM e JOIN s USING (user_id)
+             WHERE event_type = 'click' AND t_ms >= s_ms${within("s_ms")}
+             GROUP BY e.user_id),
+       p AS (SELECT e.user_id, min(t_ms) AS p_ms
+             FROM e JOIN c USING (user_id)
+             WHERE event_type = 'purchase' AND t_ms >= c_ms${within("c_ms")}
+             GROUP BY e.user_id)
+       SELECT s.user_id, s_ms, c_ms, p_ms,
+         CAST(1 + (CASE WHEN c_ms IS NOT NULL THEN 1 ELSE 0 END)
+                + (CASE WHEN p_ms IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS stage
+       FROM s LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)"""
+  }
+
   val oracles: Map[String, String] = Map(
     // identical power-sum widths and double expression order — both
     // engines derive every statistic from the same exact integers
@@ -1071,21 +1085,7 @@ object Temporal {
                  CAST(value AS DECIMAL(12,2)) AS v
                FROM events)
          GROUP BY ROLLUP(event_type, day)""",
-    "ev_funnel" ->
-      """WITH e AS (SELECT user_id, event_type,
-               epoch_ms(CAST(ts AS TIMESTAMP)) AS t_ms FROM events),
-         s AS (SELECT user_id, min(t_ms) AS s_ms FROM e
-               WHERE event_type = 'signup' GROUP BY user_id),
-         c AS (SELECT e.user_id, min(t_ms) AS c_ms
-               FROM e JOIN s USING (user_id)
-               WHERE event_type = 'click' AND t_ms >= s_ms GROUP BY e.user_id),
-         p AS (SELECT e.user_id, min(t_ms) AS p_ms
-               FROM e JOIN c USING (user_id)
-               WHERE event_type = 'purchase' AND t_ms >= c_ms GROUP BY e.user_id)
-         SELECT s.user_id, s_ms, c_ms, p_ms,
-           CAST(1 + (CASE WHEN c_ms IS NOT NULL THEN 1 ELSE 0 END)
-                  + (CASE WHEN p_ms IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS stage
-         FROM s LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)""",
+    "ev_funnel" -> funnelSql(None),
     "ev_ewma" ->
       """WITH daily AS (
            SELECT event_type, strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
@@ -1108,23 +1108,7 @@ object Temporal {
                 (SELECT count(*) FROM b) AS n_b,
                 (SELECT count(*) FROM a WHERE user_id IN (SELECT user_id FROM b)) AS n_both,
                 true AS hll_ok""",
-    "ev_funnel_windowed" ->
-      """WITH e AS (SELECT user_id, event_type,
-               epoch_ms(CAST(ts AS TIMESTAMP)) AS t_ms FROM events),
-         s AS (SELECT user_id, min(t_ms) AS s_ms FROM e
-               WHERE event_type = 'signup' GROUP BY user_id),
-         c AS (SELECT e.user_id, min(t_ms) AS c_ms
-               FROM e JOIN s USING (user_id)
-               WHERE event_type = 'click' AND t_ms >= s_ms
-                 AND t_ms <= s_ms + 604800000 GROUP BY e.user_id),
-         p AS (SELECT e.user_id, min(t_ms) AS p_ms
-               FROM e JOIN c USING (user_id)
-               WHERE event_type = 'purchase' AND t_ms >= c_ms
-                 AND t_ms <= c_ms + 604800000 GROUP BY e.user_id)
-         SELECT s.user_id, s_ms, c_ms, p_ms,
-           CAST(1 + (CASE WHEN c_ms IS NOT NULL THEN 1 ELSE 0 END)
-                  + (CASE WHEN p_ms IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS stage
-         FROM s LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)""",
+    "ev_funnel_windowed" -> funnelSql(Some(FunnelWindowMs)),
     "ev_cohort" ->
       """WITH w AS (SELECT user_id,
                epoch_ms(CAST(ts AS TIMESTAMP)) // 86400000 AS day FROM events),

@@ -910,9 +910,7 @@ object PageRank {
                          mod: Long = 100): String = {
     val srcVals = sources.map(s => s"($s)").mkString(", ")
     val sb = new StringBuilder(
-      s"""WITH e AS MATERIALIZED (
-            SELECT DISTINCT l_orderkey % $mod AS src, l_partkey % $mod AS dst
-            FROM lineitem WHERE l_orderkey % $mod <> l_partkey % $mod),
+      s"""WITH e AS MATERIALIZED (${edgesSql(mod)}),
           deg AS MATERIALIZED (SELECT src, count(*) AS outdeg FROM e GROUP BY src),
           nodes AS (SELECT DISTINCT id FROM
             (SELECT src AS id FROM e UNION ALL SELECT dst AS id FROM e)),
@@ -963,10 +961,7 @@ object PageRank {
 
   val oracles: Map[String, String] = Map(
     "pr_edges_outdeg" ->
-      """SELECT src, count(*) AS outdeg FROM (
-           SELECT DISTINCT l_orderkey % 100 AS src, l_partkey % 100 AS dst
-           FROM lineitem WHERE l_orderkey % 100 <> l_partkey % 100)
-         GROUP BY src""",
+      s"SELECT src, count(*) AS outdeg FROM (${edgesSql(100)}) GROUP BY src",
     "pr_bfs" -> bfsOracle(Seq(1L, 57L), mod = 10000),
     "pr_sssp" -> ssspOracle(Seq(1L, 57L), mod = 10000, rounds = SsspMaxRounds),
     "pr_hits" -> hitsOracle(mod = 10000, iterations = HitsIterations, k = 20),
@@ -978,9 +973,7 @@ object PageRank {
     // recursive min-label reachability over the symmetrized edge set —
     // component id = min reachable node (the dedup_groups technique)
     "pr_components" ->
-      s"""WITH RECURSIVE e AS MATERIALIZED (
-           SELECT DISTINCT l_orderkey % 100 AS src, l_partkey % 100 AS dst
-           FROM lineitem WHERE l_orderkey % 100 <> l_partkey % 100),
+      s"""WITH RECURSIVE e AS MATERIALIZED (${edgesSql(100)}),
          ed AS (SELECT src AS a, dst AS b FROM e
                 UNION SELECT dst, src FROM e),
          n AS (SELECT DISTINCT id FROM
@@ -1001,9 +994,7 @@ object PageRank {
     val anchor = sources
       .map(s => s"SELECT CAST($s AS BIGINT) AS id, CAST(0 AS BIGINT) AS d")
       .mkString(" UNION ALL ")
-    s"""WITH RECURSIVE e AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey % $mod AS src, l_partkey % $mod AS dst
-          FROM lineitem WHERE l_orderkey % $mod <> l_partkey % $mod),
+    s"""WITH RECURSIVE e AS MATERIALIZED (${edgesSql(mod)}),
         sym AS MATERIALIZED (
           SELECT src AS v, dst AS n FROM e UNION SELECT dst, src FROM e),
         nd AS MATERIALIZED (SELECT DISTINCT id FROM
@@ -1027,9 +1018,7 @@ object PageRank {
     */
   private def hitsOracle(mod: Long, iterations: Int, k: Int): String = {
     val sb = new StringBuilder(
-      s"""WITH e AS MATERIALIZED (
-            SELECT DISTINCT l_orderkey % $mod AS src, l_partkey % $mod AS dst
-            FROM lineitem WHERE l_orderkey % $mod <> l_partkey % $mod),
+      s"""WITH e AS MATERIALIZED (${edgesSql(mod)}),
           nodes AS MATERIALIZED (SELECT DISTINCT id FROM
             (SELECT src AS id FROM e UNION ALL SELECT dst AS id FROM e)),
           s0 AS (SELECT id, CAST(1 AS DECIMAL(38,6)) AS h,
@@ -1074,9 +1063,7 @@ object PageRank {
       .map(s => s"SELECT CAST($s AS BIGINT) AS id, CAST(0 AS BIGINT) AS dist")
       .mkString(" UNION ALL ")
     val sb = new StringBuilder(
-      s"""WITH e AS MATERIALIZED (
-            SELECT DISTINCT l_orderkey % $mod AS src, l_partkey % $mod AS dst
-            FROM lineitem WHERE l_orderkey % $mod <> l_partkey % $mod),
+      s"""WITH e AS MATERIALIZED (${edgesSql(mod)}),
           sym AS MATERIALIZED (
             SELECT src AS v, dst AS n FROM e UNION SELECT dst, src FROM e),
           we AS MATERIALIZED (
@@ -1118,9 +1105,7 @@ object PageRank {
     */
   private def componentsSummaryOracle(mod: Long, rounds: Int): String = {
     val sb = new StringBuilder(
-      s"""WITH e AS MATERIALIZED (
-            SELECT DISTINCT l_orderkey % $mod AS src, l_partkey % $mod AS dst
-            FROM lineitem WHERE l_orderkey % $mod <> l_partkey % $mod),
+      s"""WITH e AS MATERIALIZED (${edgesSql(mod)}),
           ed AS MATERIALIZED (SELECT src AS a, dst AS b FROM e
                               UNION SELECT dst, src FROM e),
           l0 AS MATERIALIZED (SELECT DISTINCT id, id AS l FROM
@@ -1142,14 +1127,26 @@ object PageRank {
     sb.toString
   }
 
+  /** The lineitem edge derivation of [[edgesUncached]] in DuckDB: the
+    * distinct (l_orderkey % mod, l_partkey % mod) pairs, self-loops
+    * dropped — the one edge set every graph oracle starts from.
+    */
+  private def edgesSql(mod: Long): String =
+    s"""SELECT DISTINCT l_orderkey % $mod AS src, l_partkey % $mod AS dst
+        FROM lineitem WHERE l_orderkey % $mod <> l_partkey % $mod"""
+
+  /** The edge CTE `e` plus its canonical undirected form `und` (a < b),
+    * shared by the triangle and link-prediction oracles.
+    */
+  private def undirectedCtes(mod: Long): String =
+    s"""e AS (${edgesSql(mod)}),
+        und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM e)"""
+
   /** DuckDB replay of [[linkPredict]]: same wedge enumeration, pair
     * canonicalization, anti-join, and per-endpoint ranking.
     */
   private def linkPredictOracle(mod: Long, k: Int, nQueries: Long): String =
-    s"""WITH e AS (
-          SELECT DISTINCT l_orderkey % $mod AS src, l_partkey % $mod AS dst
-          FROM lineitem WHERE l_orderkey % $mod <> l_partkey % $mod),
-        und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM e),
+    s"""WITH ${undirectedCtes(mod)},
         sym AS (SELECT a AS v, b AS n FROM und UNION ALL SELECT b, a FROM und),
         cn AS (
           SELECT s1.n AS u, s2.n AS w, CAST(count(*) AS BIGINT) AS common_neighbors
@@ -1172,10 +1169,7 @@ object PageRank {
         WHERE rank <= $k"""
 
   private def linkPredictAAOracle(mod: Long, k: Int, nQueries: Long): String =
-    s"""WITH e AS (
-          SELECT DISTINCT l_orderkey % $mod AS src, l_partkey % $mod AS dst
-          FROM lineitem WHERE l_orderkey % $mod <> l_partkey % $mod),
-        und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM e),
+    s"""WITH ${undirectedCtes(mod)},
         sym AS (SELECT a AS v, b AS n FROM und UNION ALL SELECT b, a FROM und),
         degw AS (
           SELECT v, CAST(round(1.0 / ln(count(*)::DOUBLE), 6) AS DECIMAL(12,6)) AS wt
@@ -1212,10 +1206,7 @@ object PageRank {
     * mod=10000 (~55k edges at sf0.01 → ~360k wedges).
     */
   private def trianglesOracle(mod: Long): String =
-    s"""WITH e AS (
-          SELECT DISTINCT l_orderkey % $mod AS src, l_partkey % $mod AS dst
-          FROM lineitem WHERE l_orderkey % $mod <> l_partkey % $mod),
-        und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM e),
+    s"""WITH ${undirectedCtes(mod)},
         tri AS (
           SELECT e1.a, e1.b, e2.b AS c
           FROM und e1 JOIN und e2 ON e1.b = e2.a

@@ -3,10 +3,12 @@ package graft.streaming
 import java.time.format.DateTimeFormatter
 import java.time.{LocalDateTime, ZoneOffset}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.Tables
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
+import graft.{Caches, Tables}
+import graft.events.Events
 
 /** Structured Streaming surface (driver-extension mandate — the reference
   * has no streaming whatsoever, SURVEY.md §2.9).
@@ -32,18 +34,20 @@ object Streaming {
     * batch loader; file-stream source with the batch-inferred schema).
     * The file source needs a directory basePath; the fixture is a single
     * parquet file, so link it into a temp dir (read-only fixtures stay
-    * untouched).
+    * untouched). The link targets the ABSOLUTE path: a relative target
+    * would resolve against the link's temp dir and dangle. The schema
+    * comes from the per-session fixture cache, so no inference job runs.
     */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
     graft.Tables.requireNanosAsLong(spark)
-    val src = java.nio.file.Paths.get(s"$dir/events.parquet")
+    val src = java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath
     val streamDir = java.nio.file.Files.createTempDirectory("graft-events-stream")
     // the dir holds only one symlink: register both for JVM-exit cleanup
     // (deepest-first — deleteOnExit runs in reverse registration order)
     streamDir.toFile.deleteOnExit()
     java.nio.file.Files.createSymbolicLink(streamDir.resolve("events.parquet"), src)
     streamDir.resolve("events.parquet").toFile.deleteOnExit()
-    val schema = spark.read.parquet(src.toString).schema
+    val schema = Tables.table(spark, dir, "events").schema
     graft.Tables.normalizeTs(
       spark.readStream.schema(schema).parquet(streamDir.toString))
   }
@@ -53,14 +57,7 @@ object Streaming {
     * the batch result and oracle are shared).
     */
   def windowedRollup(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(
-        count(lit(1)).as("n"),
-        round(sum(col("value").cast("decimal(12,2)")), 2).cast("double").as("sum_value"))
-      .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-        col("event_type"), col("n"), col("sum_value"))
+    Events.rollup(events.withWatermark("ts", "2 hours"), window(col("ts"), "1 hour"))
 
   /** Sliding 1-hour windows every 30 minutes — each event lands in
     * exactly 2 overlapping windows (Spark expands the slide inside the
@@ -69,14 +66,8 @@ object Streaming {
     * regenerate the window set arithmetically.
     */
   def slidingRollup(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"), col("event_type"))
-      .agg(
-        count(lit(1)).as("n"),
-        round(sum(col("value").cast("decimal(12,2)")), 2).cast("double").as("sum_value"))
-      .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-        col("event_type"), col("n"), col("sum_value"))
+    Events.rollup(events.withWatermark("ts", "2 hours"),
+      window(col("ts"), "1 hour", "30 minutes"))
 
   /** Streaming exact-dedup: emit each distinct (hour-window, user, type)
     * key once — duplicate-event suppression (double-fires, retries), the
@@ -152,6 +143,15 @@ object Streaming {
     }
   }
 
+  /** The typed projection both sessionizers fold ([[Ev]], or [[EvW]]
+    * when `ts` is passed as `extra`): ids as long, event time as epoch
+    * micros, value as double.
+    */
+  private def typedEvents(events: DataFrame, extra: Column*): DataFrame =
+    events.select(Seq(col("user_id").cast("long").as("user_id"),
+        col("event_id").cast("long").as("event_id")) ++ extra ++
+      Seq(unix_micros(col("ts")).as("tsMicros"), col("value").cast("double").as("value")): _*)
+
   /** Stateful sessionization through `flatMapGroupsWithState` — the
     * KeyValueGroupedDataset custom-state API the mandate calls for. On
     * batch input this reproduces Events.sessionize exactly (same oracle);
@@ -162,11 +162,7 @@ object Streaming {
     val spark = events.sparkSession
     import spark.implicits._
     val gapMs = gapMinutes * 60L * 1000L
-    events
-      .select(col("user_id").cast("long").as("user_id"),
-        col("event_id").cast("long").as("event_id"),
-        unix_micros(col("ts")).as("tsMicros"),
-        col("value").cast("double").as("value"))
+    typedEvents(events)
       .as[Ev]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
@@ -277,12 +273,7 @@ object Streaming {
     val spark = events.sparkSession
     import spark.implicits._
     val gapMs = gapMinutes * 60L * 1000L
-    events
-      .select(col("user_id").cast("long").as("user_id"),
-        col("event_id").cast("long").as("event_id"),
-        col("ts"),
-        unix_micros(col("ts")).as("tsMicros"),
-        col("value").cast("double").as("value"))
+    typedEvents(events, col("ts"))
       .withWatermark("ts", watermarkDelay)
       .as[EvW]
       .groupByKey(_.user_id)
@@ -303,21 +294,7 @@ object Streaming {
     * shared DuckDB oracle replays. Exercised as a real AvailableNow
     * stream-stream join in StreamingSpec.
     */
-  def intervalJoin(events: DataFrame): DataFrame = {
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("purchase_id"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", "2 hours")
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "2 hours")
-    purchases.join(clicks,
-        col("user_id") === col("c_user") &&
-        col("c_ts") <= col("p_ts") &&
-        col("c_ts") > col("p_ts") - expr("INTERVAL 6 HOURS"))
-      .select(col("purchase_id"), col("click_id"), col("user_id"),
-        (unix_millis(col("p_ts")) - unix_millis(col("c_ts"))).as("ms_before"))
-  }
+  def intervalJoin(events: DataFrame): DataFrame = purchaseClicks(events, "inner")
 
   /** LEFT OUTER stream-stream interval join — the attribution-pipeline
     * form of [[intervalJoin]]: every purchase emits, null-padded when no
@@ -332,7 +309,12 @@ object Streaming {
     * oracle replays; the real watermark-expiry path runs as an
     * AvailableNow multi-batch stream in StreamingSpec.
     */
-  def intervalJoinLeft(events: DataFrame): DataFrame = {
+  def intervalJoinLeft(events: DataFrame): DataFrame = purchaseClicks(events, "left_outer")
+
+  /** The one purchase/click interval join behind [[intervalJoin]] and
+    * [[intervalJoinLeft]], which differ only in `joinType`.
+    */
+  private def purchaseClicks(events: DataFrame, joinType: String): DataFrame = {
     val purchases = events.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id").as("purchase_id"), col("ts").as("p_ts"))
       .withWatermark("p_ts", "2 hours")
@@ -344,7 +326,7 @@ object Streaming {
         col("user_id") === col("c_user") &&
         col("c_ts") <= col("p_ts") &&
         col("c_ts") > col("p_ts") - expr("INTERVAL 6 HOURS"),
-        "left_outer")
+        joinType)
       .select(col("purchase_id"), col("click_id"), col("user_id"),
         (unix_millis(col("p_ts")) - unix_millis(col("c_ts"))).as("ms_before"))
   }
@@ -448,18 +430,28 @@ object Streaming {
     * the row count unchanged. At 100 TB the shape is identical; dynamic
     * mode only touches partitions present in the incoming batch.
     */
-  def exactlyOnceSink(stream: DataFrame, path: String,
-                      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+  def exactlyOnceSink(stream: DataFrame, path: String, checkpoint: String): StreamingQuery =
+    startAvailableNow(stream, checkpoint)(landBatch(_, _, path))
+
+  /** The landing step of [[exactlyOnceSink]] and both curation sinks:
+    * `df` stamped with `batchId` and written as a dynamic overwrite of
+    * that batch's own partition of `path`.
+    */
+  private def landBatch(df: DataFrame, batchId: Long, path: String): Unit =
+    df.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id")
+      .parquet(path)
+
+  /** Every sink's tail: run `batch` on each micro-batch of `stream` under
+    * an AvailableNow trigger, checkpointed at `checkpoint`.
+    */
+  private def startAvailableNow(stream: DataFrame, checkpoint: String)(
+      batch: (DataFrame, Long) => Unit): StreamingQuery =
     stream.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        df.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(path)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch(batch)
+      .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
       .start()
 
@@ -532,17 +524,11 @@ object Streaming {
     // commit so it can't be half-written on the happy path, but a
     // corrupted byte must degrade to "carrier absent" — the row fence
     // still stands — not wedge every future batch on a parse throw.
-    val sidecar = new java.io.File(path, "_fence")
     val fenced = exists && {
       val fromRows = prior.flatMap(p =>
         Option(p.agg(max(col("batch_id"))).head().get(0))
           .map(_.asInstanceOf[Long]))
-      val fromSidecar =
-        if (sidecar.exists)
-          scala.util.Try(
-            java.nio.file.Files.readString(sidecar.toPath).trim.toLong).toOption
-        else None
-      (fromRows ++ fromSidecar).maxOption.exists(_ >= batchId)
+      (fromRows ++ fenceOf(new java.io.File(path))).maxOption.exists(_ >= batchId)
     }
     if (fenced) return false
     val parts = prior match {
@@ -564,7 +550,7 @@ object Streaming {
     // finishes the promotion before the fence is read, so redelivery of
     // the same batch is then fenced as applied.
     val stage = stageDir(path)
-    deleteTree(stage)
+    Caches.deleteTree(stage.toPath)
     mergeStates(parts)
       .withColumn("batch_id", lit(batchId))
       .write.mode("overwrite").parquet(stage.getPath)
@@ -576,9 +562,15 @@ object Streaming {
 
   private def stageDir(path: String) = new java.io.File(path + ".stage")
 
-  private def deleteTree(f: java.io.File): Unit = if (f.exists) {
-    Option(f.listFiles).getOrElse(Array.empty).foreach(deleteTree)
-    f.delete(); ()
+  /** The `_fence` sidecar of a state or stage dir, if present and
+    * parseable (see [[applyStateBatch]] for why a parse failure reads as
+    * absent).
+    */
+  private def fenceOf(dir: java.io.File): Option[Long] = {
+    val f = new java.io.File(dir, "_fence")
+    if (f.exists)
+      scala.util.Try(java.nio.file.Files.readString(f.toPath).trim.toLong).toOption
+    else None
   }
 
   /** Swap a complete stage over the live state dir. The rename is the
@@ -586,7 +578,7 @@ object Streaming {
     * use a manifest pointer instead — same protocol, different rename).
     */
   private def promoteStage(stage: java.io.File, live: java.io.File): Unit = {
-    deleteTree(live)
+    Caches.deleteTree(live.toPath)
     require(stage.renameTo(live), s"state promote failed: $stage -> $live")
   }
 
@@ -608,13 +600,6 @@ object Streaming {
   private def recoverStage(path: String): Unit = {
     val stage = stageDir(path)
     if (!stage.exists) return
-    def fenceOf(dir: java.io.File): Option[Long] = {
-      val f = new java.io.File(dir, "_fence")
-      if (f.exists)
-        scala.util.Try(
-          java.nio.file.Files.readString(f.toPath).trim.toLong).toOption
-      else None
-    }
     val live = new java.io.File(path)
     // a stage whose _fence exists but doesn't PARSE is incomplete, not
     // committed (r12 ADVICE): promoting it would clobber live state with
@@ -628,19 +613,14 @@ object Streaming {
       (for (s <- stageFence; l <- fenceOf(live)) yield s < l)
         .getOrElse(false)
     if (complete && !stale) promoteStage(stage, live)
-    else deleteTree(stage)
+    else Caches.deleteTree(stage.toPath)
   }
 
   /** The upsert sink: fold every micro-batch into the keyed state table. */
-  def upsertStateSink(stream: DataFrame, path: String,
-                      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        applyStateBatch(df, batchId, path); ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
+  def upsertStateSink(stream: DataFrame, path: String, checkpoint: String): StreamingQuery =
+    startAvailableNow(stream, checkpoint) { (df, batchId) =>
+      applyStateBatch(df, batchId, path); ()
+    }
 
   /** Open the materialized state table in the registry shape. */
   def readUserState(spark: SparkSession, path: String): DataFrame =
@@ -687,12 +667,11 @@ object Streaming {
     * of the same split in several files, one foreachBatch verdict write
     * per trigger — is pinned in StreamingSpec.
     */
-  def curateIngest(spark: SparkSession, dir: String): DataFrame =
-    curateMicroBatch(
-      graft.dedup.Dedup.ingestBatchFrame(spark, dir),
-      graft.dedup.Dedup.corpusFpsFrame(spark, dir),
-      graft.dedup.Dedup.corpusBandsFrame(spark, dir),
-      graft.dedup.Dedup.corpusShFrame(spark, dir))
+  def curateIngest(spark: SparkSession, dir: String): DataFrame = {
+    val batch = graft.dedup.Dedup.ingestBatchFrame(spark, dir)
+    val (fps, bands, sh) = corpusIndex(spark, dir)
+    curateMicroBatch(batch, fps, bands, sh)
+  }
 
   private def corpusIndex(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
@@ -775,34 +754,24 @@ object Streaming {
     * rows (a production compactor folds them, op_compact).
     */
   def curateStatefulSink(stream: DataFrame, indexDir: String, outPath: String,
-                         checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (mb: DataFrame, batchId: Long) =>
-        val spark = mb.sparkSession
-        curateMicroBatch(mb,
-            spark.read.parquet(s"$indexDir/fps"),
-            spark.read.parquet(s"$indexDir/bands"),
-            spark.read.parquet(s"$indexDir/sh"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
-        val kept = mb.join(
-          spark.read.parquet(outPath)
-            .where(col("batch_id") === batchId && col("keep"))
-            .select("doc_id"), "doc_id")
-        kept.select(md5(col("text")).as("fp"))
-          .write.mode("append").parquet(s"$indexDir/fps")
-        val ksh = graft.dedup.Dedup.shinglesOn(kept)
-        ksh.write.mode("append").parquet(s"$indexDir/sh")
-        graft.dedup.Dedup.bandBuckets(ksh)
-          .write.mode("append").parquet(s"$indexDir/bands")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
+                         checkpoint: String): StreamingQuery =
+    startAvailableNow(stream, checkpoint) { (mb, batchId) =>
+      val spark = mb.sparkSession
+      landBatch(curateMicroBatch(mb,
+          spark.read.parquet(s"$indexDir/fps"),
+          spark.read.parquet(s"$indexDir/bands"),
+          spark.read.parquet(s"$indexDir/sh")), batchId, outPath)
+      val kept = mb.join(
+        spark.read.parquet(outPath)
+          .where(col("batch_id") === batchId && col("keep"))
+          .select("doc_id"), "doc_id")
+      kept.select(md5(col("text")).as("fp"))
+        .write.mode("append").parquet(s"$indexDir/fps")
+      val ksh = graft.dedup.Dedup.shinglesOn(kept)
+      ksh.write.mode("append").parquet(s"$indexDir/sh")
+      graft.dedup.Dedup.bandBuckets(ksh)
+        .write.mode("append").parquet(s"$indexDir/bands")
+    }
 
   /** The curation stream: one [[curateMicroBatch]] per trigger, landed
     * under the [[exactlyOnceSink]] contract (dynamic overwrite of the
@@ -810,20 +779,10 @@ object Streaming {
     */
   def curateStreamSink(stream: DataFrame, corpusFps: DataFrame,
                        corpusBands: DataFrame, corpusSh: DataFrame,
-                       path: String, checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (mb: DataFrame, batchId: Long) =>
-        curateMicroBatch(mb, corpusFps, corpusBands, corpusSh)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(path)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .start()
+                       path: String, checkpoint: String): StreamingQuery =
+    startAvailableNow(stream, checkpoint) { (mb, batchId) =>
+      landBatch(curateMicroBatch(mb, corpusFps, corpusBands, corpusSh), batchId, path)
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "st_user_state" -> ((s, d) => userState(Tables.events(s, d))),
@@ -863,6 +822,75 @@ object Streaming {
     "st_curate_seq" -> ((s, d) => curateSequentialIngest(s, d)),
   )
 
+  /** The purchase/click interval join replayed in DuckDB; `join` is
+    * `JOIN` or `LEFT JOIN`, the twin of [[purchaseClicks]]' join type.
+    */
+  private def intervalJoinSql(join: String): String =
+    s"""SELECT p.event_id AS purchase_id, c.event_id AS click_id, p.user_id,
+            epoch_ms(CAST(p.ts AS TIMESTAMP)) - epoch_ms(CAST(c.ts AS TIMESTAMP)) AS ms_before
+       FROM (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts
+             FROM events WHERE event_type = 'purchase') p
+       $join (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts
+             FROM events WHERE event_type = 'click') c
+         ON p.user_id = c.user_id
+        AND c.ts <= p.ts AND c.ts > p.ts - INTERVAL 6 HOUR"""
+
+  /** [[inflateEvents]] at 10 replicas replayed as a cross join, as the
+    * CTE `inflated`: replica r shifted r weeks, ids offset per replica.
+    */
+  private val inflatedEventsCte =
+    """inflated AS (
+         SELECT event_id * 10 + r AS event_id,
+                user_id * 10 + r AS user_id,
+                event_type,
+                CAST(ts AS TIMESTAMP) + to_days(CAST(r * 7 AS INTEGER)) AS ts,
+                value
+         FROM events, generate_series(0, 9) AS t(r))"""
+
+  /** [[slidingRollup]] replayed over the events relation `src`: each event
+    * belongs to the 2 epoch-aligned sliding windows [start, start+1h)
+    * with start = 30-min slot of ts, minus 0 or 1 slots. Over the ×10
+    * inflation only the time shift matters; the id offsets don't reach
+    * the aggregate.
+    */
+  private def slidingRollupSql(src: String): String =
+    s"""SELECT strftime(make_timestamp(start_us), '%Y-%m-%d %H:%M:%S') AS window_start,
+            event_type, count(*) AS n,
+            CAST(round(sum(CAST(value AS DECIMAL(12,2))), 2) AS DOUBLE) AS sum_value
+       FROM (SELECT event_type, value,
+               (epoch_ms(CAST(ts AS TIMESTAMP)) // 1800000 - j) * 1800000000 AS start_us
+             FROM $src, unnest(generate_series(0, 1)) AS u(j))
+       GROUP BY 1, 2"""
+
+  /** The verdict row of one curation step: batch `b` joined to its
+    * quality `q`, exact-dup `ex` and near-dup `nr` relations.
+    */
+  private def verdictsSql(b: String, q: String, ex: String, nr: String): String =
+    s"""SELECT $b.doc_id, $q.pass AS quality_pass,
+              $ex.doc_id IS NOT NULL AS exact_dup,
+              $nr.doc_id IS NOT NULL AS near_dup,
+              ($q.pass AND $ex.doc_id IS NULL AND $nr.doc_id IS NULL) AS keep
+       FROM $b JOIN $q ON $b.doc_id = $q.doc_id
+       LEFT JOIN $ex ON $b.doc_id = $ex.doc_id
+       LEFT JOIN $nr ON $b.doc_id = $nr.doc_id"""
+
+  /** The CTEs of step `i` of `st_curate_seq` (`tk$i`, `q$i`, `sh$i`,
+    * `ex$i`, `nr$i` and the verdicts `v$i`): batch `b` curated against
+    * the fingerprint set `fps` and the shingle sets `shc`, near sets by
+    * exact Jaccard.
+    */
+  private def curateStepCtes(i: Int, b: String, fps: String, shc: String): String =
+    s"""tk$i AS (SELECT doc_id, ${graft.text.Text.TokSql} AS toks FROM $b),
+        q$i AS (${graft.analysis.TextAnalysis.qualityCteSql(s"tk$i")}),
+        sh$i AS (SELECT doc_id, ${graft.OracleSql.shingle3("toks")} AS s
+                FROM tk$i WHERE len(toks) >= 3),
+        ex$i AS (SELECT DISTINCT $b.doc_id FROM $b
+                JOIN $fps f ON md5($b.text) = f.fp),
+        nr$i AS (SELECT DISTINCT a.doc_id FROM sh$i a
+                JOIN $shc c ON round(len(list_intersect(a.s, c.s))::DOUBLE /
+                                     len(list_distinct(a.s || c.s)), 6) >= 0.5),
+        v$i AS (${verdictsSql(b, s"q$i", s"ex$i", s"nr$i")})"""
+
   val oracles: Map[String, String] = Map(
     "st_user_state" ->
       """WITH e AS (SELECT user_id, epoch_ms(CAST(ts AS TIMESTAMP)) AS t_ms,
@@ -900,56 +928,13 @@ object Streaming {
               strftime(date_trunc('hour', CAST(ts AS TIMESTAMP)), '%Y-%m-%d %H:%M:%S') AS hour_start,
               user_id, event_type
          FROM events""",
-    "st_interval_join" ->
-      """SELECT p.event_id AS purchase_id, c.event_id AS click_id, p.user_id,
-              epoch_ms(CAST(p.ts AS TIMESTAMP)) - epoch_ms(CAST(c.ts AS TIMESTAMP)) AS ms_before
-         FROM (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts
-               FROM events WHERE event_type = 'purchase') p
-         JOIN (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts
-               FROM events WHERE event_type = 'click') c
-           ON p.user_id = c.user_id
-          AND c.ts <= p.ts AND c.ts > p.ts - INTERVAL 6 HOUR""",
-    "st_interval_left" ->
-      """SELECT p.event_id AS purchase_id, c.event_id AS click_id, p.user_id,
-              epoch_ms(CAST(p.ts AS TIMESTAMP)) - epoch_ms(CAST(c.ts AS TIMESTAMP)) AS ms_before
-         FROM (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts
-               FROM events WHERE event_type = 'purchase') p
-         LEFT JOIN (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts
-               FROM events WHERE event_type = 'click') c
-           ON p.user_id = c.user_id
-          AND c.ts <= p.ts AND c.ts > p.ts - INTERVAL 6 HOUR""",
-    // each event belongs to the 2 epoch-aligned sliding windows
-    // [start, start+1h) with start = 30-min slot of ts, minus 0 or 1 slots
-    "st_sliding_rollup" ->
-      """SELECT strftime(make_timestamp(start_us), '%Y-%m-%d %H:%M:%S') AS window_start,
-              event_type, count(*) AS n,
-              CAST(round(sum(CAST(value AS DECIMAL(12,2))), 2) AS DOUBLE) AS sum_value
-         FROM (SELECT event_type, value,
-                 (epoch_ms(CAST(ts AS TIMESTAMP)) // 1800000 - j) * 1800000000 AS start_us
-               FROM events, unnest(generate_series(0, 1)) AS u(j))
-         GROUP BY 1, 2""",
-    // the ×10 inflation replayed as a cross join (only the time shift
-    // matters to the rollup; id offsets don't reach the aggregate)
-    // the sessionize replay body over the spliced ×10 inflation CTE —
-    // same arithmetic as the sliding tier's inflation
-    "st_sessions_big" -> graft.events.Events.sessionizeOracleOn("inflated",
-      """inflated AS (
-           SELECT event_id * 10 + r AS event_id,
-                  user_id * 10 + r AS user_id,
-                  event_type,
-                  CAST(ts AS TIMESTAMP) + to_days(CAST(r * 7 AS INTEGER)) AS ts,
-                  value
-           FROM events, generate_series(0, 9) AS t(r)),"""),
-    "st_sliding_rollup_big" ->
-      """SELECT strftime(make_timestamp(start_us), '%Y-%m-%d %H:%M:%S') AS window_start,
-              event_type, count(*) AS n,
-              CAST(round(sum(CAST(value AS DECIMAL(12,2))), 2) AS DOUBLE) AS sum_value
-         FROM (SELECT event_type, value,
-                 (epoch_ms(CAST(ts AS TIMESTAMP) + to_days(CAST(r * 7 AS INTEGER)))
-                   // 1800000 - j) * 1800000000 AS start_us
-               FROM events, generate_series(0, 9) AS t(r),
-                            unnest(generate_series(0, 1)) AS u(j))
-         GROUP BY 1, 2""",
+    "st_interval_join" -> intervalJoinSql("JOIN"),
+    "st_interval_left" -> intervalJoinSql("LEFT JOIN"),
+    "st_sliding_rollup" -> slidingRollupSql("events"),
+    // the sessionize replay body over the spliced ×10 inflation CTE
+    "st_sessions_big" ->
+      graft.events.Events.sessionizeOracleOn("inflated", s"$inflatedEventsCte,"),
+    "st_sliding_rollup_big" -> s"WITH $inflatedEventsCte ${slidingRollupSql("inflated")}",
     // the incremental-ingestion CTE chain (shared with dedup_incremental*)
     // plus the shared quality CTE — the composition's replay references
     // both owners, never inlines (OracleFragmentsSpec)
@@ -957,25 +942,14 @@ object Streaming {
       s"""WITH ${graft.dedup.Dedup.incrementalCteBody},
           q AS (${graft.analysis.TextAnalysis.qualityCteSql(
             s"(SELECT doc_id, ${graft.text.Text.TokSql} AS toks FROM documents)")})
-          SELECT batch.doc_id,
-                 q.pass AS quality_pass,
-                 ex.doc_id IS NOT NULL AS exact_dup,
-                 nr.doc_id IS NOT NULL AS near_dup,
-                 (q.pass AND ex.doc_id IS NULL AND nr.doc_id IS NULL) AS keep
-          FROM batch
-          JOIN q ON batch.doc_id = q.doc_id
-          LEFT JOIN ex ON batch.doc_id = ex.doc_id
-          LEFT JOIN nr ON batch.doc_id = nr.doc_id""",
+          ${verdictsSql("batch", "q", "ex", "nr")}""",
     // chained-CTE replay of BOTH sequential steps: step-0 verdicts over
     // the corpus index, kept-0 derived, the planted clones injected
     // (seeds = 2 smallest kept docs, the seqParts protocol), step-1
     // verdicts over corpus ∪ kept-0 (UNION-folded fp set, shingle-set
     // union); near sets are exact-Jaccard (the LSH-recall-1-on-fixture
     // assumption shared with every dedup_incremental oracle)
-    "st_curate_seq" -> {
-      val jacc = (a: String, c: String) =>
-        s"""round(len(list_intersect($a.s, $c.s))::DOUBLE /
-                  len(list_distinct($a.s || $c.s)), 6) >= 0.5"""
+    "st_curate_seq" ->
       s"""WITH bkt AS (SELECT doc_id, ${graft.OracleSql.md5Bucket()} AS bucket
                        FROM documents),
           corpus AS (SELECT doc_id FROM bkt WHERE bucket < 90),
@@ -989,22 +963,7 @@ object Streaming {
                   FROM documents d JOIN corpus c ON d.doc_id = c.doc_id)
             WHERE len(toks) >= 3),
           b0 AS (SELECT doc_id, text FROM batchd WHERE doc_id % 2 = 0),
-          tk0 AS (SELECT doc_id, ${graft.text.Text.TokSql} AS toks FROM b0),
-          q0 AS (${graft.analysis.TextAnalysis.qualityCteSql("tk0")}),
-          sh0 AS (SELECT doc_id, ${graft.OracleSql.shingle3("toks")} AS s
-                  FROM tk0 WHERE len(toks) >= 3),
-          ex0 AS (SELECT DISTINCT b0.doc_id FROM b0
-                  JOIN corpus_fp f ON md5(b0.text) = f.fp),
-          nr0 AS (SELECT DISTINCT a.doc_id FROM sh0 a
-                  JOIN corpus_sh c ON ${jacc("a", "c")}),
-          v0 AS (SELECT b0.doc_id, q0.pass AS quality_pass,
-                        ex0.doc_id IS NOT NULL AS exact_dup,
-                        nr0.doc_id IS NOT NULL AS near_dup,
-                        (q0.pass AND ex0.doc_id IS NULL
-                         AND nr0.doc_id IS NULL) AS keep
-                 FROM b0 JOIN q0 ON b0.doc_id = q0.doc_id
-                 LEFT JOIN ex0 ON b0.doc_id = ex0.doc_id
-                 LEFT JOIN nr0 ON b0.doc_id = nr0.doc_id),
+          ${curateStepCtes(0, "b0", "corpus_fp", "corpus_sh")},
           kept0 AS (SELECT b0.doc_id, b0.text FROM b0
                     JOIN v0 ON b0.doc_id = v0.doc_id WHERE v0.keep),
           seeds AS (SELECT doc_id, text FROM kept0 ORDER BY doc_id LIMIT 2),
@@ -1017,23 +976,7 @@ object Streaming {
                   JOIN kept0 k ON s0.doc_id = k.doc_id),
           shc1 AS (SELECT doc_id, s FROM corpus_sh
                    UNION ALL SELECT doc_id, s FROM shk),
-          tk1 AS (SELECT doc_id, ${graft.text.Text.TokSql} AS toks FROM b1),
-          q1 AS (${graft.analysis.TextAnalysis.qualityCteSql("tk1")}),
-          sh1 AS (SELECT doc_id, ${graft.OracleSql.shingle3("toks")} AS s
-                  FROM tk1 WHERE len(toks) >= 3),
-          ex1 AS (SELECT DISTINCT b1.doc_id FROM b1
-                  JOIN fps1 f ON md5(b1.text) = f.fp),
-          nr1 AS (SELECT DISTINCT a.doc_id FROM sh1 a
-                  JOIN shc1 c ON ${jacc("a", "c")}),
-          v1 AS (SELECT b1.doc_id, q1.pass AS quality_pass,
-                        ex1.doc_id IS NOT NULL AS exact_dup,
-                        nr1.doc_id IS NOT NULL AS near_dup,
-                        (q1.pass AND ex1.doc_id IS NULL
-                         AND nr1.doc_id IS NULL) AS keep
-                 FROM b1 JOIN q1 ON b1.doc_id = q1.doc_id
-                 LEFT JOIN ex1 ON b1.doc_id = ex1.doc_id
-                 LEFT JOIN nr1 ON b1.doc_id = nr1.doc_id)
-          SELECT * FROM v0 UNION ALL SELECT * FROM v1"""
-    },
+          ${curateStepCtes(1, "b1", "fps1", "shc1")}
+          SELECT * FROM v0 UNION ALL SELECT * FROM v1""",
   )
 }

@@ -123,18 +123,32 @@ object Text {
     * rows and secondary sort disappear entirely.
     */
   def bigramRelFreq(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select(tokenize(col("text")).as("toks"))
-      .select(explode(expr(
-        """CASE WHEN size(toks) < 2 THEN array()
-           ELSE transform(sequence(0, size(toks)-2),
-                          i -> struct(toks[i] AS w1, toks[i+1] AS w2)) END"""))
-        .as("bg"))
-      .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+    bigrams(Tables.documents(spark, dir).select(tokenize(col("text")).as("toks")))
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cnt"))
       .withColumn("relfreq",
         round(col("cnt").cast("double") /
           sum(col("cnt")).over(org.apache.spark.sql.expressions.Window.partitionBy(col("w1"))), 6))
+
+  /** The adjacent-token pairs (w1, w2) of each row's token array `toks`,
+    * one row per bigram, carrying the `keep` columns along: the one
+    * bigram expansion behind [[bigramRelFreq]] and the Kneser-Ney
+    * models. [[bigramsSql]] is its DuckDB twin.
+    */
+  private[graft] def bigrams(toks: DataFrame, keep: String*): DataFrame =
+    toks
+      .select(keep.map(col) :+ explode(expr(
+        """CASE WHEN size(toks) < 2 THEN array()
+           ELSE transform(sequence(0, size(toks)-2),
+                          i -> struct(toks[i] AS w1, toks[i+1] AS w2)) END"""))
+        .as("bg"): _*)
+      .select(keep.map(col) ++ Seq(col("bg.w1").as("w1"), col("bg.w2").as("w2")): _*)
+
+  /** DuckDB twin of [[bigrams]] over a relation `src` whose token list
+    * column is `w`.
+    */
+  private[graft] def bigramsSql(src: String, keep: String*): String =
+    s"""SELECT ${(keep :+ "w[i] AS w1").mkString(", ")}, w[i+1] AS w2
+        FROM $src, unnest(generate_series(1, len(w)-1)) AS t(i)"""
 
   /** a1 pairs/stripes PMI (`CooccurrencePairs.java:56-133`,
     * `PairsPMI.java:53-73`): directed pairs of distinct-per-doc tokens,
@@ -146,7 +160,19 @@ object Text {
     * word-count aggregate, and N rides along as a lazy broadcast cross
     * join (no driver-side collect — scale-safe).
     */
-  def pmiPairs(spark: SparkSession, dir: String, minCooccur: Int = 10): DataFrame = {
+  def pmiPairs(spark: SparkSession, dir: String, minCooccur: Int = 10): DataFrame =
+    cooccurrence(spark, dir, minCooccur)
+      .select(col("w1"), col("w2"), col("npairs"),
+        round(log10(col("npairs").cast("double") /
+          (col("cx") * col("cy")).cast("double") * col("n").cast("double")), 6).as("pmi"))
+
+  /** The co-occurrence front half shared by [[pmiPairs]] and
+    * [[llrPairs]]: one row per directed pair (w1, w2) seen in at least
+    * `minCooccur` documents, with its document count `npairs`, the
+    * document counts `cx`, `cy` of w1 and w2, and `n`, the number of
+    * documents with a token. [[cooccurrenceSql]] is its DuckDB twin.
+    */
+  private def cooccurrence(spark: SparkSession, dir: String, minCooccur: Int): DataFrame = {
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), tokenizeDistinctCapped(col("text")).as("tok"))
       .filter(size(col("tok")) > 0)
@@ -164,9 +190,6 @@ object Text {
       .join(wc.withColumnRenamed("w", "w1").withColumnRenamed("c", "cx"), "w1")
       .join(wc.withColumnRenamed("w", "w2").withColumnRenamed("c", "cy"), "w2")
       .crossJoin(broadcast(n))
-      .select(col("w1"), col("w2"), col("npairs"),
-        round(log10(col("npairs").cast("double") /
-          (col("cx") * col("cy")).cast("double") * col("n").cast("double")), 6).as("pmi"))
   }
 
   /** xlogx with the conventional 0·ln0 = 0 — emitted as SQL TEXT so the
@@ -192,32 +215,15 @@ object Text {
         - ${xlx("k11 + k12")} - ${xlx("k21 + k22")}
         - ${xlx("k11 + k21")} - ${xlx("k12 + k22")} + ${xlx("nn")}), 6)"""
 
-  def llrPairs(spark: SparkSession, dir: String, minCooccur: Int = 10): DataFrame = {
-    val toks = Tables.documents(spark, dir)
-      .select(col("doc_id"), tokenizeDistinctCapped(col("text")).as("tok"))
-      .filter(size(col("tok")) > 0)
-    val dw = graft.Caches.memoized(spark, dir, "text:pmi_dw")(
-      toks.select(col("doc_id"), explode(col("tok")).as("w")))
-    val n  = toks.agg(count(lit(1)).as("nn"))
-    val wc = dw.groupBy(col("w")).agg(count(lit(1)).as("c"))
-    val pairs = dw.as("a").join(dw.as("b"), "doc_id")
-      .where(col("a.w") =!= col("b.w"))
-      .select(col("a.w").as("w1"), col("b.w").as("w2"))
-      .groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).as("npairs"))
-      .where(col("npairs") >= minCooccur)
-    pairs
-      .join(wc.withColumnRenamed("w", "w1").withColumnRenamed("c", "cx"), "w1")
-      .join(wc.withColumnRenamed("w", "w2").withColumnRenamed("c", "cy"), "w2")
-      .crossJoin(broadcast(n))
+  def llrPairs(spark: SparkSession, dir: String, minCooccur: Int = 10): DataFrame =
+    cooccurrence(spark, dir, minCooccur)
       .select(col("w1"), col("w2"), col("npairs"),
         col("npairs").as("k11"),
         (col("cx") - col("npairs")).as("k12"),
         (col("cy") - col("npairs")).as("k21"),
-        (col("nn") - col("cx") - col("cy") + col("npairs")).as("k22"),
-        col("nn"))
+        (col("n") - col("cx") - col("cy") + col("npairs")).as("k22"),
+        col("n").as("nn"))
       .select(col("w1"), col("w2"), col("npairs"), expr(llrSql).as("llr"))
-  }
 
   /** Canonical string form of a stripe map: `k:v,k:v,...` with entries in
     * the map's (key-sorted) order and values pinned through DECIMAL(18,6)
@@ -239,11 +245,7 @@ object Text {
     * on both engines, so the serialized stripes compare deterministically.
     */
   def pmiStripes(spark: SparkSession, dir: String, minCooccur: Int = 10): DataFrame =
-    pmiPairs(spark, dir, minCooccur)
-      .groupBy(col("w1"))
-      .agg(map_from_entries(sort_array(collect_list(struct(col("w2"), col("pmi")))))
-        .as("stripe_map"))
-      .select(col("w1"), stripeString(col("stripe_map")).as("stripe"))
+    stripes(pmiPairs(spark, dir, minCooccur), "pmi")
 
   /** Stripes form of the bigram table
     * (`ComputeBigramRelativeFrequencyStripes.scala:52-69`): one row per w1
@@ -257,9 +259,16 @@ object Text {
     * rows hash-compare exactly at the driver gate.
     */
   def bigramStripes(spark: SparkSession, dir: String): DataFrame =
-    bigramRelFreq(spark, dir)
+    stripes(bigramRelFreq(spark, dir), "relfreq")
+
+  /** The stripes tail of [[pmiStripes]] and [[bigramStripes]]: per w1,
+    * the w2 → `v` map built from key-sorted entries, serialized by
+    * [[stripeString]]. [[stripesSql]] is its DuckDB twin.
+    */
+  private def stripes(pairs: DataFrame, v: String): DataFrame =
+    pairs
       .groupBy(col("w1"))
-      .agg(map_from_entries(sort_array(collect_list(struct(col("w2"), col("relfreq")))))
+      .agg(map_from_entries(sort_array(collect_list(struct(col("w2"), col(v)))))
         .as("stripe_map"))
       .select(col("w1"), stripeString(col("stripe_map")).as("stripe"))
 
@@ -276,6 +285,49 @@ object Text {
     "text_pmi_stripes"    -> ((s, d) => pmiStripes(s, d)),
   )
 
+  /** DuckDB twin of [[cooccurrence]], as CTEs ending in `co`
+    * (w1, w2, npairs, cx, cy, n).
+    */
+  private def cooccurrenceSql: String =
+    s"""toks AS (SELECT doc_id, list_distinct(($tokSql)[1:100]) AS tok FROM documents),
+        dw AS (SELECT doc_id, unnest(tok) AS w FROM toks WHERE len(tok) > 0),
+        n AS (SELECT count(*) AS n FROM toks WHERE len(tok) > 0),
+        wc AS (SELECT w, count(*) AS c FROM dw GROUP BY w),
+        pairs AS (SELECT a.w AS w1, b.w AS w2, count(*) AS npairs
+                  FROM dw a JOIN dw b USING (doc_id)
+                  WHERE a.w <> b.w GROUP BY 1, 2 HAVING count(*) >= 10),
+        co AS (SELECT w1, w2, npairs, cx, cy, n FROM pairs
+               JOIN (SELECT w AS w1, c AS cx FROM wc) USING (w1)
+               JOIN (SELECT w AS w2, c AS cy FROM wc) USING (w2), n)"""
+
+  private def pmiPairsSql: String =
+    s"""WITH $cooccurrenceSql
+        SELECT w1, w2, npairs,
+               round(log10(CAST(npairs AS DOUBLE) / CAST(cx * cy AS DOUBLE) * CAST(n AS DOUBLE)), 6) AS pmi
+        FROM co"""
+
+  private def bigramRelFreqSql: String =
+    s"""WITH toks AS (SELECT $tokSql AS w FROM documents),
+        bg AS (${bigramsSql("toks")}),
+        cnts AS (SELECT w1, w2, count(*) AS cnt FROM bg GROUP BY w1, w2)
+        SELECT w1, w2, cnt,
+               round(CAST(cnt AS DOUBLE) / sum(cnt) OVER (PARTITION BY w1), 6) AS relfreq
+        FROM cnts"""
+
+  /** DuckDB twin of [[stripes]] over the pair relation `rel`: entries
+    * sorted by key, the map built in-plan, then serialized to a
+    * canonical `k:v,...` string (values via DECIMAL(18,6)) — the driver
+    * gate can only hash atomic cells.
+    */
+  private def stripesSql(rel: String, v: String): String =
+    s"""m AS (SELECT w1, map_from_entries(list_sort(list(row(w2, $v)))) AS stripe_map
+              FROM $rel GROUP BY w1)
+        SELECT w1, array_to_string(
+                 list_transform(map_entries(stripe_map),
+                   e -> e.key || ':' || CAST(CAST(e.value AS DECIMAL(18,6)) AS VARCHAR)),
+                 ',') AS stripe
+        FROM m"""
+
   val oracles: Map[String, String] = Map(
     "text_wordcount" ->
       s"""SELECT word, count(*) AS cnt
@@ -286,80 +338,17 @@ object Text {
                  count(*) AS cnt
           FROM (SELECT unnest($tokSql) AS word FROM documents)
           GROUP BY 1""",
-    "text_bigram_relfreq" ->
-      s"""WITH toks AS (SELECT $tokSql AS w FROM documents),
-          bg AS (SELECT w[i] AS w1, w[i+1] AS w2
-                 FROM toks, unnest(generate_series(1, len(w)-1)) AS t(i)),
-          cnts AS (SELECT w1, w2, count(*) AS cnt FROM bg GROUP BY w1, w2)
-          SELECT w1, w2, cnt,
-                 round(CAST(cnt AS DOUBLE) / sum(cnt) OVER (PARTITION BY w1), 6) AS relfreq
-          FROM cnts""",
-    "text_pmi_pairs" ->
-      s"""WITH toks AS (SELECT doc_id, list_distinct(($tokSql)[1:100]) AS tok FROM documents),
-          dw AS (SELECT doc_id, unnest(tok) AS w FROM toks WHERE len(tok) > 0),
-          n AS (SELECT count(*) AS n FROM toks WHERE len(tok) > 0),
-          wc AS (SELECT w, count(*) AS c FROM dw GROUP BY w),
-          pairs AS (SELECT a.w AS w1, b.w AS w2, count(*) AS npairs
-                    FROM dw a JOIN dw b USING (doc_id)
-                    WHERE a.w <> b.w GROUP BY 1, 2 HAVING count(*) >= 10)
-          SELECT w1, w2, npairs,
-                 round(log10(CAST(npairs AS DOUBLE) / CAST(cx * cy AS DOUBLE) * CAST(n AS DOUBLE)), 6) AS pmi
-          FROM pairs
-          JOIN (SELECT w AS w1, c AS cx FROM wc) USING (w1)
-          JOIN (SELECT w AS w2, c AS cy FROM wc) USING (w2), n""",
+    "text_bigram_relfreq" -> bigramRelFreqSql,
+    "text_pmi_pairs" -> pmiPairsSql,
     "text_llr_pairs" ->
-      s"""WITH toks AS (SELECT doc_id, list_distinct(($tokSql)[1:100]) AS tok FROM documents),
-          dw AS (SELECT doc_id, unnest(tok) AS w FROM toks WHERE len(tok) > 0),
-          n AS (SELECT count(*) AS nn FROM toks WHERE len(tok) > 0),
-          wc AS (SELECT w, count(*) AS c FROM dw GROUP BY w),
-          pairs AS (SELECT a.w AS w1, b.w AS w2, count(*) AS npairs
-                    FROM dw a JOIN dw b USING (doc_id)
-                    WHERE a.w <> b.w GROUP BY 1, 2 HAVING count(*) >= 10),
+      s"""WITH $cooccurrenceSql,
           cells AS (
             SELECT w1, w2, npairs,
                    npairs AS k11, cx - npairs AS k12, cy - npairs AS k21,
-                   nn - cx - cy + npairs AS k22, nn
-            FROM pairs
-            JOIN (SELECT w AS w1, c AS cx FROM wc) USING (w1)
-            JOIN (SELECT w AS w2, c AS cy FROM wc) USING (w2), n)
+                   n - cx - cy + npairs AS k22, n AS nn
+            FROM co)
           SELECT w1, w2, npairs, $llrSql AS llr FROM cells""",
-    // stripes: entries sorted by key on both engines, map built in-plan,
-    // then serialized to a canonical `k:v,...` string (values via
-    // DECIMAL(18,6)) — the driver gate can only hash atomic cells
-    "text_bigram_stripes" ->
-      s"""WITH toks AS (SELECT $tokSql AS w FROM documents),
-          bg AS (SELECT w[i] AS w1, w[i+1] AS w2
-                 FROM toks, unnest(generate_series(1, len(w)-1)) AS t(i)),
-          cnts AS (SELECT w1, w2, count(*) AS cnt FROM bg GROUP BY w1, w2),
-          rel AS (SELECT w1, w2,
-                    round(CAST(cnt AS DOUBLE) / sum(cnt) OVER (PARTITION BY w1), 6) AS relfreq
-                  FROM cnts),
-          m AS (SELECT w1, map_from_entries(list_sort(list(row(w2, relfreq)))) AS stripe_map
-                FROM rel GROUP BY w1)
-          SELECT w1, array_to_string(
-                   list_transform(map_entries(stripe_map),
-                     e -> e.key || ':' || CAST(CAST(e.value AS DECIMAL(18,6)) AS VARCHAR)),
-                   ',') AS stripe
-          FROM m""",
-    "text_pmi_stripes" ->
-      s"""WITH toks AS (SELECT doc_id, list_distinct(($tokSql)[1:100]) AS tok FROM documents),
-          dw AS (SELECT doc_id, unnest(tok) AS w FROM toks WHERE len(tok) > 0),
-          n AS (SELECT count(*) AS n FROM toks WHERE len(tok) > 0),
-          wc AS (SELECT w, count(*) AS c FROM dw GROUP BY w),
-          pairs AS (SELECT a.w AS w1, b.w AS w2, count(*) AS npairs
-                    FROM dw a JOIN dw b USING (doc_id)
-                    WHERE a.w <> b.w GROUP BY 1, 2 HAVING count(*) >= 10),
-          pmi AS (SELECT w1, w2,
-                    round(log10(CAST(npairs AS DOUBLE) / CAST(cx * cy AS DOUBLE) * CAST(n AS DOUBLE)), 6) AS pmi
-                  FROM pairs
-                  JOIN (SELECT w AS w1, c AS cx FROM wc) USING (w1)
-                  JOIN (SELECT w AS w2, c AS cy FROM wc) USING (w2), n),
-          m AS (SELECT w1, map_from_entries(list_sort(list(row(w2, pmi)))) AS stripe_map
-                FROM pmi GROUP BY w1)
-          SELECT w1, array_to_string(
-                   list_transform(map_entries(stripe_map),
-                     e -> e.key || ':' || CAST(CAST(e.value AS DECIMAL(18,6)) AS VARCHAR)),
-                   ',') AS stripe
-          FROM m""",
+    "text_bigram_stripes" -> s"WITH rel AS ($bigramRelFreqSql), ${stripesSql("rel", "relfreq")}",
+    "text_pmi_stripes" -> s"WITH pmi AS ($pmiPairsSql), ${stripesSql("pmi", "pmi")}",
   )
 }

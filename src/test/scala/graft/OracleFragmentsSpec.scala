@@ -122,6 +122,57 @@ class OracleFragmentsSpec extends AnyFunSuite {
     onceIn("Dedup.scala", "JOIN exk b ON a.g = b.g")
   }
 
+  test("the purchase/click interval join is rendered once, by Streaming") {
+    // Streaming.intervalJoinSql: st_interval_join and st_interval_left
+    onceIn("Streaming.scala", "c.ts <= p.ts AND c.ts > p.ts - INTERVAL 6 HOUR")
+  }
+
+  test("the ×10 inflated events CTE is rendered once, by Streaming") {
+    // Streaming.inflatedEventsCte: st_sessions_big and st_sliding_rollup_big
+    onceIn("Streaming.scala", "to_days(CAST(r * 7 AS INTEGER))")
+  }
+
+  test("the sliding-window rollup is rendered once, by Streaming") {
+    // Streaming.slidingRollupSql: st_sliding_rollup and its ×10 tier
+    onceIn("Streaming.scala", "// 1800000 - j) * 1800000000 AS start_us")
+  }
+
+  test("the st_curate_seq step is rendered once, by Streaming") {
+    // Streaming.curateStepCtes: both sequential curation steps
+    onceIn("Streaming.scala", ".text) = f.fp")
+  }
+
+  test("the co-occurrence pair count is rendered once, by Text") {
+    // Text.cooccurrenceSql: text_pmi_pairs, text_llr_pairs, text_pmi_stripes
+    onceIn("Text.scala", "WHERE a.w <> b.w GROUP BY 1, 2 HAVING count(*) >= 10")
+  }
+
+  test("the bigram expansion is rendered once, by Text") {
+    // Text.bigramsSql: the bigram relfreq and stripes oracles and the
+    // three Kneser-Ney oracles
+    onceIn("Text.scala", "unnest(generate_series(1, len(w)-1)) AS t(i)")
+  }
+
+  test("the stripe serialization is rendered once, by Text") {
+    // Text.stripesSql: text_bigram_stripes and text_pmi_stripes
+    onceIn("Text.scala", "e -> e.key || ':' || CAST(CAST(e.value AS DECIMAL(18,6)) AS VARCHAR)")
+  }
+
+  test("the planted phone is rendered once, by Pii") {
+    // Pii.injectSql: the fixture and strict injected corpora
+    onceIn("Pii.scala", "lpad(CAST((doc_id * 7) % 1000 AS VARCHAR), 3, '0')")
+  }
+
+  test("the funnel purchase stage is rendered once, by Temporal") {
+    // Temporal.funnelSql: ev_funnel and ev_funnel_windowed
+    onceIn("Temporal.scala", "WHERE event_type = 'purchase' AND t_ms >= c_ms")
+  }
+
+  test("the lineitem edge set is rendered once, by PageRank") {
+    // PageRank.edgesSql: every graph oracle's edge CTE
+    onceIn("PageRank.scala", "FROM lineitem WHERE l_orderkey %")
+  }
+
   test("the shared definitions render the expected SQL") {
     assert(OracleSql.md5Bucket() ===
       "CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 100")

@@ -28,6 +28,32 @@ class StreamingSpec extends AnyFunSuite {
     assert(want.nonEmpty)
   }
 
+  test("streaming windowed rollup reads a fixture dir given as a relative path") {
+    // the stream's symlink must target the absolute path: a relative
+    // target resolves against the link's temp dir and dangles
+    val rel = java.nio.file.Paths.get("").toAbsolutePath
+      .relativize(java.nio.file.Paths.get(sf).toAbsolutePath).toString
+    assert(!java.nio.file.Paths.get(rel).isAbsolute)
+    val qname = "rollup_relative_test"
+    val q = Streaming.windowedRollup(Streaming.readEventStream(spark, rel)).writeStream
+      .format("memory").queryName(qname)
+      .outputMode("complete")
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("st-chk").toString)
+      .start()
+    assert(q.awaitTermination(120000), "stream did not terminate")
+    val want = rollupSet(Streaming.windowedRollup(Tables.events(spark, sf)))
+    assert(rollupSet(spark.table(qname)) == want)
+    assert(want.nonEmpty)
+  }
+
+  test("readEventStream takes the events schema from the session cache: no Spark job") {
+    Tables.events(spark, sf)
+    val jobs = org.apache.spark.SpecBus.jobsOf(spark)(Streaming.readEventStream(spark, sf))
+    assert(jobs == 0, "the stream read inferred the events schema again")
+  }
+
   test("exactly-once sink: a full replay overwrites its partitions, no dups") {
     val out = java.nio.file.Files.createTempDirectory("st-once-out").toString
     def runOnce(): Unit = {

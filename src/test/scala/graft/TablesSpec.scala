@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.SpecBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.SpecBus.jobsOf
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,28 +12,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class TablesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
-  private val Tag = "graft.spec.tables"
-
-  /** The Spark jobs `body` started on this thread. */
-  private def jobsOf(s: SparkSession)(body: => Any): Int = {
-    val sc = s.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(Tag) == tag)) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(Tag, tag)
-    try {
-      body
-      SpecBus.drain(sc)
-      jobs.get
-    } finally {
-      sc.setLocalProperty(Tag, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("building q1_shipdate_count again starts no Spark job") {
     val build = SparkEntry.queries("q1_shipdate_count")
