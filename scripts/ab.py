@@ -24,8 +24,12 @@ change wins, and a verdict by the simplicity-review rule:
                  run beats every parent run;
   no regression  otherwise.
 
-The error rate and golden count of every run are printed too; the full
-record is written to .bench_build/ab/<workload>-<sha12>.json.
+The error rate and golden count of every run are printed too, and the
+per-pass tail: every timed pass's `wall_s` from each run's record
+(.bench_build/perfbench/records/<workload>-seed<n>-trace0.json in that
+side's checkout), pooled per side, as p50, p90 and max. A median can
+hide a few slow passes; the tail shows them. The full record is written
+to .bench_build/ab/<workload>-<sha12>.json.
 """
 import argparse
 import json
@@ -61,9 +65,16 @@ def parent_checkout(rev):
     return sha, path
 
 
+def percentile(xs, p):
+    """Nearest-rank percentile (perfbench/run.py's rule)."""
+    xs = sorted(xs)
+    return xs[max(0, -(-len(xs) * p // 100) - 1)] if xs else 0.0
+
+
 def run_side(path, workload, seed, seconds):
-    """One perfbench run; returns {"metrics", "error_rate", "golden"} or
-    {"error"} when the run did not produce its result line."""
+    """One perfbench run; returns {"metrics", "error_rate", "golden",
+    "pass_wall_s"} or {"error"} when the run did not produce its result
+    line."""
     p = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
          "--seconds", str(seconds), "--trace", "0"],
@@ -73,9 +84,12 @@ def run_side(path, workload, seed, seconds):
         return {"error": (p.stderr.strip() or p.stdout.strip())[-400:]}
     res = json.loads(lines[-1])
     golden = re.search(r"correctness: (\d+)/(\d+)", p.stdout)
+    record = path / ".bench_build" / "perfbench" / "records" / f"{workload}-seed{seed}-trace0.json"
+    passes = json.loads(record.read_text())["result"]["passes"]
     return {"metrics": {k: v["value"] for k, v in res["metrics"].items()},
             "error_rate": res["failed"] / res["attempted"],
-            "golden": f"{golden[1]}/{golden[2]}" if golden else "?"}
+            "golden": f"{golden[1]}/{golden[2]}" if golden else "?",
+            "pass_wall_s": [p["wall_s"] for p in passes]}
 
 
 def quartiles(xs):
@@ -150,6 +164,14 @@ def main():
         print(f"    median {s['median_parent']:.3f} -> {s['median_change']:.3f} "
               f"({100 * s['change_vs_parent']:+.1f}%), parent IQR {s['iqr_parent']:.3f}, "
               f"change wins {s['wins']}/{len(ok)}: {s['verdict']}")
+    for side in ("parent", "change"):
+        walls = [w for r in ok for w in r[side]["pass_wall_s"]]
+        if walls:
+            tail = {f"p{p}": percentile(walls, p) for p in (50, 90)}
+            tail["max"] = max(walls)
+            summary.setdefault("pass_tail", {})[side] = dict(tail, passes=len(walls))
+            print(f"  {side} per-pass wall_s over {len(walls)} passes: "
+                  + " ".join(f"{k} {v:.3f}" for k, v in tail.items()))
     for side in ("parent", "change"):
         rs = [r[side] for r in runs]
         print(f"  {side} error_rate: " + " ".join(

@@ -21,7 +21,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * so inserting it resurrects nothing — while handing it back uncached
   * (the previous design) silently re-ran the whole build once per
   * reference for multi-reference consumers (the triangles edge memo sits
-  * on 3 join sides, ngramSkew's inverted index on 4). The next
+  * on 3 join sides, a shingle index on both self-join sides). The next
   * releaseAll reclaims it like any other entry. Builders that
   * recursively memoize sub-frames (dedup_groups → minhash pairs →
   * shingles) nest fine — no lock is held across the recursion.

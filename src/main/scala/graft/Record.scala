@@ -195,25 +195,25 @@ object Record {
     * comparable across tiers: how much of a pipeline hides behind a memo
     * differs by design (a raw-median pair read as a fake 100× slope in
     * the first r9 run). The *_big tiers are ×10 inflations of the same
-    * corpus; components/toprank name their ~×120 edge factor. Builds
-    * trained on the base and reused by the big tier are charged to BOTH
-    * sides.
+    * corpus; components/toprank name their ~×120 edge factor. Each side
+    * charges exactly the memo keys its cold run builds (asserted by
+    * CachesSpec): builds trained on the base and reused by the big tier
+    * (`corpus:tokens_base` under the inflated corpora, `ir:positions`
+    * under the big positional index) are charged to BOTH sides.
     */
   val ScalingPairs: Seq[(String, (String, Seq[String]), (String, Seq[String]))] = Seq(
-    // "corpus:docs_big_10" is the SHARED ×10 corpus inflation (one memo
-    // serves the dedup big shingles and both IR big index builds); like
-    // train-on-base builds it is charged to every big side that scans it
     ("dedup_minhash_x10",
-      ("dedup_minhash", Seq("dedup:shingles", "dedup:minhash_pairs_0.5")),
+      ("dedup_minhash",
+        Seq("corpus:tokens_base", "dedup:shingles", "dedup:minhash_pairs_0.5")),
       ("dedup_minhash_big",
-        Seq("corpus:docs_big_10", "dedup:big_shingles_10",
+        Seq("corpus:tokens_base", "dedup:big_shingles_10",
           "dedup:big_h60_10", "dedup:big_permbands_10"))),
+    // each side's capped shingle index memo (the df cap applied at build)
     ("ngram_capped_x10",
-      // ngram_ex is the fixture tier's memoized hashed index (r14) —
-      // charged to the base side like big_ngram_ex_10 on the big side
-      ("dedup_ngram_capped", Seq("dedup:shingles", "dedup:ngram_ex")),
+      ("dedup_ngram_capped",
+        Seq("corpus:tokens_base", "dedup:shingles", "dedup:ngram_ex_cap3")),
       ("dedup_ngram_capped_big",
-        Seq("corpus:docs_big_10", "dedup:big_shingles_10", "dedup:big_ngram_ex_10"))),
+        Seq("corpus:tokens_base", "dedup:big_shingles_10", "dedup:big_ngram_ex_10_cap30"))),
     ("ann_lsh_x10",
       ("sim_topk_lsh", Seq("sim:lsh_bands")),
       ("sim_topk_lsh_big", Seq("sim:lsh_bands_big"))),
@@ -227,22 +227,24 @@ object Record {
     ("sessions_x10",
       ("st_sessions_stateful", Seq.empty), ("st_sessions_big", Seq.empty)),
     ("components_x120",
-      ("pr_components", Seq("graph:edges_100", "graph:oriented_100")),
-      ("pr_components_10k", Seq("graph:edges_10000", "graph:oriented_10000"))),
-    // toprank's prep is deliberately INLINE (see topK's scaladoc), so
-    // its cold cost lives entirely in the query median on both sides
+      ("pr_components", Seq("graph:edges_100", "graph:nodes_100", "graph:oriented_100")),
+      ("pr_components_10k",
+        Seq("graph:edges_10000", "graph:nodes_10000", "graph:oriented_10000"))),
     ("toprank_x120",
-      ("pr_toprank", Seq.empty), ("pr_toprank_10k", Seq.empty)),
+      ("pr_toprank", Seq("graph:pr_e_100_4", "graph:pr_n_100_4")),
+      ("pr_toprank_10k", Seq("graph:pr_e_10000_8", "graph:pr_n_10000_8"))),
     // the big BM25 tier serves postings as a PROJECTION of the big
     // positional index (tf = position-list length), so its cold cost is
-    // the shared corpus inflation + the one positional build
+    // the base tokenize and positional builds it inflates + the one big
+    // positional build
     ("ir_bm25_x10",
       ("ir_bm25", Seq("ir:postings")),
       ("ir_bm25_big",
-        Seq("corpus:docs_big_10", "ir:positions_big_10", "ir:postings_big_10"))),
+        Seq("corpus:tokens_base", "ir:positions", "ir:positions_big_10",
+          "ir:postings_big_10"))),
     ("ir_phrase_x10",
       ("ir_phrase", Seq("ir:positions")),
-      ("ir_phrase_big", Seq("corpus:docs_big_10", "ir:positions_big_10"))),
+      ("ir_phrase_big", Seq("corpus:tokens_base", "ir:positions", "ir:positions_big_10"))),
     // the end-to-end composition's ×10 slope (r12 ask 6): cold cost =
     // every stage memo of the chain on each side (quality and PII are
     // per-rep scans on both sides; boilerplate is fixture-tier only)

@@ -60,18 +60,30 @@ object Dedup {
         .filter(size(col("sh")) > 0)
     }
 
-  /** The exploded hashed shingle inverted index of a (doc_id, sh) frame
-    * — (doc_id, xxhash64(shingle), length(shingle)) — memoized under
-    * `key` and PRE-PLACED on the join key (r14 optimization): before,
-    * every consumer re-ran the explode+hash pass per rep and then
-    * exchanged the index for its (s, sl)-keyed self-join and df
-    * aggregate. The memo's repartition advertises hash(s, sl) through
-    * the truncated leaf (GraftExpr.truncated rewrites the build's
-    * partitioning onto the cached plan), so every consumer's self-join
-    * sides, df aggregate and cap anti-join plan ZERO exchanges over the
-    * index. One builder serves all three tiers: the fixture corpus
-    * ([[docShingleIndex]]), the skew corpus ([[skewIndex]]) and the ×10
-    * corpus ([[ngramCappedBig]]).
+  /** The ONE memoized builder of a shingle inverted index: from a
+    * (doc_id, sh) frame, the rows (doc_id, s, sl, n) — s = xxhash64 and
+    * sl = length of each shingle, n = size(sh), the doc's FULL shingle
+    * count taken before any cap (the Jaccard denominator, so consumers
+    * never join the per-doc counts back in).
+    *
+    * With a `cap`, the build drops the "stop shingles" — every key whose
+    * document frequency exceeds the cap — and caches only the kept rows
+    * (the postings-build stop-word cut: retrieval only reads). The cap
+    * is applied ONCE, here, not per rep on each self-join side: at the
+    * ×10 tier the kept rows are ~2% of the full index, so the cache is
+    * that much smaller and no consumer re-aggregates df. The memo key
+    * carries the cap (`<key>_cap<cap>`) on top of the caller's corpus
+    * key (which names the replica count), so every (corpus, cap) is its
+    * own entry.
+    *
+    * PRE-PLACED on the join key (r14 optimization): the memo's
+    * repartition advertises hash(s, sl) through the truncated leaf
+    * (GraftExpr.truncated rewrites the build's partitioning onto the
+    * cached plan), so every consumer's self-join sides plan ZERO
+    * exchanges over the index. One builder serves all three tiers: the
+    * fixture corpus ([[docShingleIndex]], [[ngramJaccardPairs]]), the
+    * skew corpus ([[skewIndex]], [[ngramSkew]]) and the ×10 corpus
+    * ([[ngramCappedBig]]).
     *
     * Keyed on (xxhash64, length) of the shingle, not the string: smaller
     * shuffle rows and cheaper key compares. A spurious intersection would
@@ -80,30 +92,55 @@ object Dedup {
     * odds negligible even at 100 TB shingle cardinality, where hash-only
     * keying's ~|shingles|²/2⁶⁴ birthday bound starts to bite.
     */
-  private def shingleIndex(spark: SparkSession, dir: String, key: String)
-                          (sh: => DataFrame): DataFrame =
-    memoized(spark, dir, key) {
-      sh.select(col("doc_id"), explode(col("sh")).as("s"))
-        .select(col("doc_id"), xxhash64(col("s")).as("s"), length(col("s")).as("sl"))
-        // EXPLICIT partition count (r15 fix): a bare repartition(cols) is
-        // AQE-coalescible, and the coalesced read reports
-        // CoalescedHashPartitioning — which GraftExpr.truncated can only
-        // map to UnknownPartitioning (advertising plain hash(k, n) over
-        // merged-adjacent buckets would mis-co-partition consumers), so
-        // the memo silently lost its placement and every consumer
-        // re-exchanged the index per rep. Pinning numPartitions to the
-        // session's shuffle-partition conf (scale-adaptive, never a
-        // constant) keeps the final stage a plain HashPartitioning that
-        // survives truncation.
-        .repartition(spark.sessionState.conf.numShufflePartitions,
-          col("s"), col("sl"))
+  private def shingleIndex(spark: SparkSession, dir: String, key: String,
+                           cap: Option[Long] = None)(sh: => DataFrame): DataFrame =
+    memoized(spark, dir, key + cap.fold("")(c => s"_cap$c")) {
+      indexOn(sh, cap, spark.sessionState.conf.numShufflePartitions)
     }
 
-  /** The fixture corpus's shingle index (see [[shingleIndex]]), shared by
-    * ngram_jaccard, ngram_capped and overlap_pairs.
+  /** The unmemoized body of [[shingleIndex]] over `parts` partitions. */
+  private[graft] def indexOn(sh: DataFrame, cap: Option[Long], parts: Int): DataFrame = {
+    val ex = sh
+      .select(col("doc_id"), explode(col("sh")).as("s"), size(col("sh")).as("n"))
+      .select(col("doc_id"), xxhash64(col("s")).as("s"), length(col("s")).as("sl"), col("n"))
+    val kept = cap.fold(ex) { c =>
+      // df per key by a map-side partial aggregate (only per-task key
+      // counts shuffle), then the hot keys drop out in a map-side ANTI
+      // join BEFORE the placement shuffle, so only kept rows shuffle.
+      // Every row's key is in the df table, so "key ∉ hot" ≡ "df ≤ cap".
+      // Forced broadcast: the build side is the df spectrum's head above
+      // the cap, |hot| ≤ |index| / cap keys of 12 bytes (26.5k keys
+      // against a 2.65M-row index at the ×10 sf0.1 tier). The form that
+      // scales past a broadcast budget places the full index first and
+      // anti-joins per partition — measured 0.98 s vs 0.57 s per ×10
+      // build, because all 2.65M rows then cross the shuffle.
+      // NB: a USING-column join moves the keys to the front — re-select
+      // into the (doc_id, s, sl, n) order the positional toDF renames
+      // of [[jaccardFromIndex]] expect.
+      val hot = ex.groupBy(col("s"), col("sl")).agg(count(lit(1)).as("df"))
+        .where(col("df") > c).select(col("s"), col("sl"))
+      ex.join(broadcast(hot), Seq("s", "sl"), "left_anti")
+        .select(col("doc_id"), col("s"), col("sl"), col("n"))
+    }
+    // EXPLICIT partition count (r15 fix): a bare repartition(cols) is
+    // AQE-coalescible, and the coalesced read reports
+    // CoalescedHashPartitioning — which GraftExpr.truncated can only
+    // map to UnknownPartitioning (advertising plain hash(k, n) over
+    // merged-adjacent buckets would mis-co-partition consumers), so
+    // the memo silently lost its placement and every consumer
+    // re-exchanged the index per rep. Pinning numPartitions to the
+    // session's shuffle-partition conf (scale-adaptive, never a
+    // constant) keeps the final stage a plain HashPartitioning that
+    // survives truncation.
+    kept.repartition(parts, col("s"), col("sl"))
+  }
+
+  /** The fixture corpus's shingle index (see [[shingleIndex]]), full
+    * (shared by ngram_jaccard and overlap_pairs) or capped (ngram_capped).
     */
-  private def docShingleIndex(spark: SparkSession, dir: String): DataFrame =
-    shingleIndex(spark, dir, "ngram_ex")(docShingles(spark, dir))
+  private def docShingleIndex(spark: SparkSession, dir: String,
+                              cap: Option[Long] = None): DataFrame =
+    shingleIndex(spark, dir, "ngram_ex", cap)(docShingles(spark, dir))
 
   /** Exact dedup: md5 content fingerprint; canonical = min doc_id per
     * fingerprint. Output keeps every doc so the query is non-empty even on
@@ -276,20 +313,21 @@ object Dedup {
     *
     * @param maxShingleDf optional "stop shingle" cap — the documented
     *   100 TB skew guard: a shingle occurring in more than this many
-    *   documents is dropped from the inverted index BEFORE the self-join
+    *   documents is dropped from the inverted index when the capped
+    *   index memo is built ([[shingleIndex]]), BEFORE any self-join
     *   (boilerplate headers/footers otherwise put ~df² candidate rows
     *   through one hot key). Capped shingles still count toward each
-    *   doc's |A| via n_sh, so Jaccard becomes a conservative UNDER-count
-    *   for pairs whose overlap was mostly boilerplate — exactly the
-    *   near-dup definition a training-data pipeline wants. Off (None)
-    *   for dedup_ngram_jaccard (exact-Jaccard oracle); ON and
+    *   doc's |A| via the index's n, so Jaccard becomes a conservative
+    *   UNDER-count for pairs whose overlap was mostly boilerplate —
+    *   exactly the near-dup definition a training-data pipeline wants.
+    *   Off (None) for dedup_ngram_jaccard (exact-Jaccard oracle); ON and
     *   hash-gated as dedup_ngram_capped (cap = [[StopShingleDf]], the
     *   oracle replays the capped index), with the undercount property
     *   additionally asserted pairwise in DedupSpec.
     */
   def ngramJaccardPairs(spark: SparkSession, dir: String, minJaccard: Double = 0.2,
                         maxShingleDf: Option[Long] = None): DataFrame =
-    jaccardFromIndex(docShingles(spark, dir), docShingleIndex(spark, dir), maxShingleDf)
+    jaccardFromIndex(docShingleIndex(spark, dir, maxShingleDf))
       .select(col("d1"), col("d2"), pairJaccard.as("jaccard"))
       .where(col("jaccard") >= minJaccard)
 
@@ -297,13 +335,13 @@ object Dedup {
     * |A∩B| / min(|A|,|B|) — the subset-inclusion class symmetric Jaccard
     * structurally misses: a short document quoted inside a long one has
     * overlap ≈ 1 but Jaccard ≈ |A|/|B| → 0 as the size ratio grows.
-    * Same capped inverted-index machinery as [[ngramJaccardPairs]]
+    * Same inverted-index machinery as [[ngramJaccardPairs]]
     * (equi-join on (xxhash64, length), never n²; the stop-shingle df cap
     * applies identically at scale); both scores emitted so the gap the
     * operator exists for is visible per pair.
     */
   def overlapPairs(spark: SparkSession, dir: String, minOverlap: Double = 0.9): DataFrame =
-    jaccardFromIndex(docShingles(spark, dir), docShingleIndex(spark, dir), None)
+    jaccardFromIndex(docShingleIndex(spark, dir))
       .select(col("d1"), col("d2"),
         round(col("inter").cast("double") /
           least(col("n1"), col("n2")).cast("double"), 6).as("overlap"),
@@ -311,68 +349,34 @@ object Dedup {
       .where(col("overlap") >= minOverlap)
 
   /** Round-6 Jaccard of a [[jaccardFromIndex]] row: |A∩B| / (|A|+|B|−|A∩B|). */
-  private val pairJaccard: Column =
+  private[graft] val pairJaccard: Column =
     round(col("inter").cast("double") /
       (col("n1") + col("n2") - col("inter")).cast("double"), 6)
 
-  /** The ONE inverted-index pair core of every tier: from a shingle frame
-    * `sh` (doc_id, sh) and its [[shingleIndex]] `exAll`, every doc pair
-    * sharing ≥1 (kept) shingle key as (d1, d2, inter, n1, n2) — shared
-    * key count and both docs' FULL shingle counts, unfiltered. Callers
-    * add only their own score, filter or summary aggregate.
+  /** The ONE inverted-index pair core of every tier: from a
+    * [[shingleIndex]] `ex` (doc_id, s, sl, n), full or capped, every doc
+    * pair sharing ≥1 indexed shingle key as (d1, d2, inter, n1, n2) —
+    * shared key count and both docs' FULL shingle counts, unfiltered.
+    * The counts ride on the index rows, so the pair count groups by
+    * (d1, d2, n1, n2) and no per-doc count table is joined back in; a
+    * cap was already applied when the index memo was built. Callers add
+    * only their own score, filter or summary aggregate.
     *
-    * @param dfTable optional PRECOMPUTED (s, sl, df) document-frequency
-    *   table for the cap branch — callers that already aggregate the df
-    *   spectrum for their own output ([[ngramSkew]]'s stats row) pass it
-    *   so the capped join derives its keep-set from the same subplan
-    *   instead of re-aggregating the full index (r14 optimization; one
-    *   fewer map-side pass over the corpus-sized index per rep, and
-    *   ReuseExchange dedupes the shuffle between the stats and the cap).
+    * The self-join builds per-partition hash maps: both sides are the
+    * index memo, pre-placed on (s, sl), so a shuffle-hash join needs no
+    * exchange and no sort, and its build side is |index| / partitions
+    * at every tier. Unhinted, the planner sort-merges any index above
+    * the broadcast threshold (the skew tier's capped index: both
+    * corpus-sized sides sorted per rep) and broadcasts the rest.
     */
-  private def jaccardFromIndex(sh: DataFrame, exAll: DataFrame,
-                               maxShingleDf: Option[Long],
-                               dfTable: Option[DataFrame] = None): DataFrame = {
-    val counts = sh.select(col("doc_id"), size(col("sh")).as("n_sh"))
-    val ex = maxShingleDf.fold(exAll) { cap =>
-      // df per shingle key, then ANTI-join the index against the HOT
-      // keys (r15, guide §3.1): semi-joining against the keepers made
-      // the join's build side the ~whole key set (SortMergeJoin — a
-      // full sort of BOTH the corpus-sized index and the keep set, per
-      // rep, since the co-placed sides give AQE no exchange to
-      // re-optimize). Every index row's key is in the df table by
-      // construction, so "key ∉ hot" ≡ "df ≤ cap" — identical row set —
-      // and the anti build side is the df spectrum's head ABOVE the
-      // cap: smaller than the keep set by construction at every tier
-      // (it is the set the cap exists to excise — |hot| ≤ |index|/cap).
-      // SHUFFLE_HASH on the tiny build side: no sort on either side,
-      // per-partition hash build, placement preserved for the
-      // self-join below.
-      val hot = dfTable
-        .getOrElse(exAll.groupBy(col("s"), col("sl")).agg(count(lit(1)).as("df")))
-        .where(col("df") > cap).select(col("s"), col("sl"))
-      // NB: a USING-column join moves the keys to the front — re-select
-      // into the (doc_id, s, sl) order the positional toDF renames expect.
-      exAll.join(hot.hint("shuffle_hash"), Seq("s", "sl"), "left_anti")
-        .select(col("doc_id"), col("s"), col("sl"))
-    }
-    // the self-join builds per-partition hash maps instead of sorting
-    // both corpus-sized sides when the cap branch is active (the skew
-    // tier's index is too big for AQE's broadcast election and has no
-    // exchange to re-optimize through — initial-plan SortMergeJoin was
-    // final); build-side partitions are |index|/numShufflePartitions,
-    // scale-adaptive via the session conf. The uncapped fixture tier
-    // keeps its measured broadcast election (r14).
-    val right = ex.toDF("d2", "s2", "sl2")
-    ex.toDF("d1", "s", "sl")
-      .join(if (maxShingleDf.isDefined) right.hint("shuffle_hash") else right,
+  private[graft] def jaccardFromIndex(ex: DataFrame): DataFrame =
+    ex.toDF("d1", "s", "sl", "n1")
+      .join(ex.toDF("d2", "s2", "sl2", "n2").hint("shuffle_hash"),
         col("s") === col("s2") && col("sl") === col("sl2"))
       .where(col("d1") < col("d2"))
-      .groupBy(col("d1"), col("d2"))
+      .groupBy(col("d1"), col("d2"), col("n1"), col("n2"))
       .agg(count(lit(1)).as("inter"))
-      .join(counts.toDF("d1", "n1"), "d1")
-      .join(counts.toDF("d2", "n2"), "d2")
       .select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"))
-  }
 
   private val NumHashes = 64
   private val Bands = 16
@@ -570,11 +574,13 @@ object Dedup {
   /** ×10 measurement tier for the CAPPED n-gram Jaccard index (the
     * dedup_ngram_capped pipeline at the scaling-slope gate): the same
     * inflated corpus as [[minhashBigPortable]] pushed through the
-    * identical [[shingleIndex]] + [[jaccardFromIndex]] machinery — df-cap
-    * anti-join, shingle-key self-join, per-doc-count denominators — with
-    * the cap scaled ×replicas: inflation multiplies every shingle's df by
-    * ~replicas (each source doc's shingles recur across its whole
-    * near-dup family), so an unscaled cap would discard the content
+    * identical [[shingleIndex]] + [[jaccardFromIndex]] machinery — the
+    * capped index memo built straight from [[bigShingles]] (df cut once,
+    * at build; no full ×10 index is cached), then the shingle-key
+    * self-join over the kept rows with their per-doc-count denominators
+    * — with the cap scaled ×replicas: inflation multiplies every
+    * shingle's df by ~replicas (each source doc's shingles recur across
+    * its whole near-dup family), so an unscaled cap would discard the content
     * keys themselves instead of the hot tail. Output is the
     * [[minhashBigPortable]] one-row summary (n_docs, n_candidates,
     * n_pairs): pairs sharing ≥1 kept shingle, and pairs verified on the
@@ -589,8 +595,8 @@ object Dedup {
                      minJaccard: Double = 0.2,
                      cap: Long = StopShingleDf * 10): DataFrame = {
     val sh = bigShingles(spark, dir, replicas)
-    val ex = shingleIndex(spark, dir, s"big_ngram_ex_$replicas")(sh)
-    val verified = jaccardFromIndex(sh, ex, Some(cap))
+    val ex = shingleIndex(spark, dir, s"big_ngram_ex_$replicas", Some(cap))(sh)
+    val verified = jaccardFromIndex(ex)
       .select(pairJaccard.as("j"))
       .agg(count(lit(1)).as("n_candidates"),
         count(when(col("j") >= minJaccard, 1)).as("n_pairs"))
@@ -620,8 +626,13 @@ object Dedup {
     *    the capped join actually processes;
     *  - n_hot_keys — how many keys the cap removed;
     *  - n_pairs — verified ≥ minJaccard pairs from REALLY RUNNING the
-    *    capped pipeline ([[jaccardFromIndex]]), proving the near-dup
-    *    families still surface once boilerplate mass is gone.
+    *    capped pipeline ([[jaccardFromIndex]] over the capped index memo
+    *    `skew_ex_<replicas>_cap<cap>`), proving the near-dup families
+    *    still surface once boilerplate mass is gone.
+    *
+    * The stats row aggregates df over the FULL index ([[skewIndex]]);
+    * the pairs read the capped memo, whose build applied the same cap
+    * once — so no per-rep anti-join runs.
     *
     * Hash-gated, not rows-only: the whole construction (inflation
     * arithmetic, templates, df stats, capped join) replays as a chained
@@ -630,15 +641,16 @@ object Dedup {
   def ngramSkew(spark: SparkSession, dir: String, replicas: Int = 3,
                 cap: Long = SkewCap, minJaccard: Double = 0.2): DataFrame = {
     val sh = skewShingles(spark, dir, replicas)
-    val ex = skewIndex(spark, dir, replicas)
-    val dft = ex.groupBy(col("s"), col("sl")).agg(count(lit(1)).as("df"))
+    val dft = skewIndex(spark, dir, replicas)
+      .groupBy(col("s"), col("sl")).agg(count(lit(1)).as("df"))
     val stats = dft.agg(
       count(lit(1)).as("n_shingle_keys"),
       count(when(col("df") > cap, 1)).as("n_hot_keys"),
       sum(expr("df * (df - 1) DIV 2")).as("cand_uncapped"),
       sum(when(col("df") <= cap, expr("df * (df - 1) DIV 2"))
         .otherwise(lit(0L))).as("cand_capped"))
-    val pairs = jaccardFromIndex(sh, ex, Some(cap), dfTable = Some(dft))
+    val pairs = jaccardFromIndex(
+        shingleIndex(spark, dir, s"skew_ex_$replicas", Some(cap))(sh))
       .where(pairJaccard >= minJaccard)
       .agg(count(lit(1)).as("n_pairs"))
     sh.agg(count(lit(1)).as("n_docs")).crossJoin(stats).crossJoin(pairs)
@@ -655,9 +667,8 @@ object Dedup {
         .filter(size(col("sh")) > 0)
     }
 
-  /** The skew corpus's [[shingleIndex]] — feeds the df stats AND the
-    * capped join (cap anti-join + both self-join sides), and the AQE
-    * cross-check spec.
+  /** The skew corpus's full [[shingleIndex]] — feeds the df stats row
+    * of [[ngramSkew]] and the AQE cross-check spec.
     */
   private[graft] def skewIndex(spark: SparkSession, dir: String,
                                replicas: Int = 3): DataFrame =

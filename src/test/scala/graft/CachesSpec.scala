@@ -109,7 +109,7 @@ class CachesSpec extends AnyFunSuite {
     // fresh frame never entered the released map, so re-registering it
     // resurrects nothing — while returning it uncached would re-run the
     // whole build once per reference for multi-reference consumers
-    // (triangles' edge memo on 3 join sides, ngramSkew's index on 4)
+    // (triangles' edge memo on 3 join sides, a shingle index on 2)
     var builds = 0
     val df = Caches.memoized(spark, "caches-spec", "raced") {
       Caches.releaseAll()
@@ -221,6 +221,31 @@ class CachesSpec extends AnyFunSuite {
     val leaked = frames.filter(_.storageLevel != StorageLevel.NONE)
     assert(leaked.isEmpty, s"${leaked.size} frames leaked past releaseAll")
     assert(Caches.snapshot._2 == 0, "memo not emptied")
+  }
+
+  test("every x10 scaling side charges exactly the memo keys its cold run builds") {
+    // Record's scaling slopes add a side's charged build rows to its
+    // median: a key charged but never built reads as a missing row, and
+    // a key built but not charged drops its build from the cold total
+    val sf = TestSpark.sf
+    val saved = Caches.buildObserver
+    try {
+      val wrong = Record.ScalingPairs.flatMap { case (fam, (base, bk), (big, gk)) =>
+        Seq(base -> bk, big -> gk).flatMap { case (q, charged) =>
+          val built = scala.collection.mutable.Set.empty[String]
+          Caches.releaseAll()
+          Caches.buildObserver = Some((k, _) => built.synchronized(built += k))
+          SparkEntry.queries(q)(spark, sf).write.format("noop").mode("overwrite").save()
+          Caches.buildObserver = saved
+          if (built.toSet == charged.toSet) None
+          else Some(s"$fam/$q charges ${charged.sorted} but builds ${built.toSeq.sorted}")
+        }
+      }
+      assert(wrong.isEmpty, wrong.mkString("\n"))
+    } finally {
+      Caches.buildObserver = saved
+      Caches.releaseAll()
+    }
   }
 
   test("deleteTree removes a root and all below it, and skips a missing root") {

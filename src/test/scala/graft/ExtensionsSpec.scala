@@ -197,6 +197,52 @@ class DedupSpec extends AnyFunSuite {
     assert(row.getAs[Long]("n_pairs") > 0)
   }
 
+  test("capped shingle index equals a df-filtered full index; pairs match a brute force") {
+    import org.apache.spark.sql.functions._
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import spark.implicits._
+    // small random corpora over a 12-shingle vocabulary, so the df
+    // spectrum spans 1 .. #docs and every cap cuts something different
+    val vocab = (0 until 12).map(i => s"w$i x$i y$i")
+    val corpus = Gen.choose(2, 9).flatMap(nd => Gen.listOfN(nd,
+      Gen.choose(1, 6).flatMap(k => Gen.pick(k, vocab)).map(_.toSeq.distinct)))
+    for (seed <- 1L to 4L) {
+      val docs = corpus.pureApply(Gen.Parameters.default, Seed(seed))
+        .zipWithIndex.map { case (sh, i) => (i.toLong, sh) }
+      val sh = docs.toDF("doc_id", "sh")
+      val df = docs.flatMap(_._2).groupBy(identity).view.mapValues(_.size).toMap
+      val full = Dedup.indexOn(sh, None, 3)
+      for (cap <- Seq(1L, (df.values.max / 2).max(1).toLong, df.values.max.toLong)) {
+        val capped = Dedup.indexOn(sh, Some(cap), 3)
+        val hot = full.groupBy(col("s"), col("sl")).agg(count(lit(1)).as("df"))
+          .where(col("df") > cap)
+        val want = full.join(hot, Seq("s", "sl"), "left_anti")
+          .select(col("doc_id"), col("s"), col("sl"), col("n"))
+        assert(capped.exceptAll(want).isEmpty && want.exceptAll(capped).isEmpty,
+          s"seed $seed cap $cap: capped memo rows != filtered full index")
+        val sizes = docs.toMap.view.mapValues(_.size).toMap
+        capped.select(col("doc_id"), col("n")).collect().foreach { r =>
+          assert(r.getInt(1) == sizes(r.getLong(0)), s"seed $seed cap $cap: n != size(sh)")
+        }
+        // driver-side brute force over the kept shingles; n stays the
+        // FULL shingle count (the conservative under-count)
+        val kept = docs.map { case (d, s) => d -> s.filter(df(_) <= cap).toSet }
+        val brute = (for {
+          (d1, k1) <- kept; (d2, k2) <- kept if d1 < d2
+          inter = (k1 & k2).size if inter > 0
+          (n1, n2) = (sizes(d1), sizes(d2))
+        } yield (d1, d2, inter.toLong, n1, n2, BigDecimal(inter.toDouble / (n1 + n2 - inter))
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSet
+        val got = Dedup.jaccardFromIndex(capped)
+          .select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"), Dedup.pairJaccard)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3),
+            r.getInt(4), r.getDouble(5))).toSet
+        assert(got == brute, s"seed $seed cap $cap: pairs differ from the brute force")
+      }
+    }
+  }
+
   test("duplicated passages match a brute-force sliding-window replay") {
     import org.apache.spark.sql.functions._
     val docToks = Tables.documents(spark, sf)

@@ -200,8 +200,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // 1-row × 1-row summary crossJoin (bounded by construction)
     val mb = plan(graft.dedup.Dedup.minhashBigPortable(spark, sf))
     assert(!mb.contains("CartesianProduct"), s"minhash_big cartesian:\n$mb")
-    // capped jaccard: the df cap is a semi-join on the already-shuffled
-    // shingle key — keyed end to end
+    // capped jaccard: the df cap is an anti-join inside the capped index
+    // memo's build (transparent here) — keyed end to end
     val cp = plan(graft.dedup.Dedup.ngramJaccardPairs(spark, sf,
       maxShingleDf = Some(3L)))
     assert(!cp.contains("CartesianProduct"), s"capped jaccard cartesian:\n$cp")
@@ -246,8 +246,8 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("round-6 operators keep their scale shapes") {
     withTransparentMemos {
-    // skew tier: inverted index, df semi-join cap, verify joins — all
-    // keyed; the only nested loops are the 1-row summary crossJoins
+    // skew tier: inverted index, df stats, capped index build, verify
+    // joins — all keyed; the only nested loops are the 1-row summary crossJoins
     // (bounded by construction, the minhashBigPortable shape)
     val sk = plan({
       Caches.releaseAll()
@@ -533,17 +533,27 @@ class PlanAuditSpec extends AnyFunSuite {
     // production memo mode deliberately (no transparent bracket): the
     // shingle index memos are repartitioned on (s, sl) with an explicit
     // count, and the truncated leaf advertises that placement — so every
-    // tier's df aggregate, cap anti-join and self-join sides (the right
-    // side renamed to s2, sl2) must plan ZERO per-rep exchanges keyed on
-    // the index's key. A lost placement re-exchanges the corpus-sized
-    // index every rep (the r15 AQE-coalescing bug).
+    // tier's self-join sides (the right side renamed to s2, sl2) and the
+    // skew tier's df stats aggregate must plan ZERO per-rep exchanges
+    // keyed on the index's key. A lost placement re-exchanges the
+    // corpus-sized index every rep (the r15 AQE-coalescing bug).
     val indexKeyed = "Exchange hashpartitioning\\(s2?#\\d+L?, sl2?#\\d+".r
+    // the stop-shingle cap runs once, inside the capped memo's build: no
+    // capped query's per-rep plan anti-joins or aggregates df over the
+    // index, except the skew tier's stats row over its FULL index
+    val indexAgg = "HashAggregate\\(keys=\\[s#\\d+L, sl#\\d+\\]".r
     Caches.releaseAll()
     try {
       Seq("dedup_ngram_jaccard", "dedup_ngram_capped", "dedup_overlap_pairs",
         "dedup_ngram_skew", "dedup_ngram_capped_big").foreach { name =>
         val p = plan(SparkEntry.queries(name)(spark, sf))
         assert(indexKeyed.findFirstIn(p).isEmpty, s"$name re-exchanges the index:\n$p")
+        assert(!p.contains("LeftAnti"), s"$name anti-joins per rep:\n$p")
+        val statsAggs = if (name != "dedup_ngram_skew") 0 else
+          indexAgg.findAllIn(plan(graft.dedup.Dedup.skewIndex(spark, sf)
+            .groupBy("s", "sl").count())).size
+        assert(indexAgg.findAllIn(p).size == statsAggs,
+          s"$name aggregates df over the index per rep:\n$p")
       }
     } finally Caches.releaseAll()
   }
